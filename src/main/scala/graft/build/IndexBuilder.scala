@@ -34,20 +34,6 @@ final case class IndexConfig(
       * input-order mode avoids shuffling the full corpus just to
       * label it. */
     docIdsFromInputOrder: Boolean = false,
-    /** Posting build strategy:
-      *  - "segment" (default): map-side partial posting segments —
-      *    each input partition encodes complete partial posting lists
-      *    locally (the reference's segment/commit-batch model,
-      *    SegmentInfo.java:27-53, re-expressed); only the ENCODED
-      *    bytes shuffle (~10× less than raw occurrences) and, because
-      *    docIds are partition-contiguous, the reduce side merges by
-      *    pure concatenation in minDoc order — no re-sort.
-      *  - "sort": Tungsten shuffle of raw occurrence rows + radix
-      *    sort + streaming group encode.
-      *  - "agg": typed-Aggregator path (kryo buffers; slowest).
-      * All three must produce identical tables (cross-validated in
-      * tests). */
-    buildMode: String = "segment",
     /** Store the raw content column in the docs table. The reference
       * does NOT store analyzed fields (content was indexed, not
       * stored — AbstractHBaseneTest.java:99-113); at corpus scale the
@@ -126,12 +112,13 @@ object InvertedIndex {
 
 /** Index build DAG (SURVEY.md §3.1 "Spark shape"):
   *
-  *   Dataset[doc] → dense docIDs → flatMap(tokenize, doc-local tf/pos
-  *   aggregation) → groupBy(field, term, docRangeShard) →
-  *   PostingAggregator → postings/docs/termStats/stats.
+  *   Dataset[doc] → dense docIDs → mapPartitions(tokenize, doc-local
+  *   tf/pos aggregation, encode partial posting segments) →
+  *   mergeSegmentRows by (field, term, docRangeShard) →
+  *   postings/docs/termStats/stats.
   *
   * Everything is DataFrame/Dataset; the only wide shuffles are the
-  * docID range partitioning (code path) and the posting groupBy.
+  * docID range partitioning (code path) and the segment merge.
   */
 object IndexBuilder {
 
@@ -408,42 +395,6 @@ object IndexBuilder {
     }
   }
 
-  /** Doc-local analysis: one input row → TermDocOcc rows per distinct
-    * (field, term), tf/positions aggregated in-memory per doc (B2 with
-    * no shuffle). Untokenized fields get the reference's sentinel
-    * position [0] (HBaseIndexWriter.java:68-69,145-150).
-    * Allocation-lean: stopwords are filtered in the analyzer's scan
-    * buffer before term Strings exist; maps are keyed per field (no
-    * tuple key per token); positions accumulate unboxed. */
-  private[graft] def analyzeDoc(
-      docId: Long,
-      tokenized: Seq[(String, String)],
-      untokenized: Seq[(String, String)],
-      analyzer: graft.analysis.TextAnalyzer = Analyzer): Iterator[(String, String, Long, Int, Seq[Int])] = {
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Long, Int, Seq[Int])]
-    tokenized.foreach { case (field, text) =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, IntBuf]
-      analyzer.foreachEmitted(text) { (term, pos) =>
-        m.getOrElseUpdate(term, new IntBuf).add(pos)
-      }
-      m.foreach { case (t, ps) =>
-        val arr = ps.toArray
-        out += ((field, t, docId, arr.length,
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)))
-      }
-    }
-    untokenized.foreach { case (field, value) =>
-      if (value != null && value.nonEmpty)
-        out += ((field, value.toLowerCase(java.util.Locale.ROOT), docId, 1,
-          ZeroPos))
-    }
-    out.iterator
-  }
-
-  private val ZeroPos: Seq[Int] =
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(Array(0))
-
   /** Map-side partial posting segments: each input partition
     * tokenizes its docs and encodes COMPLETE partial posting lists
     * locally, emitting one compact row per (field, term, shard) with
@@ -587,67 +538,23 @@ object IndexBuilder {
     out.iterator
   }
 
-  /** Merge partial segments per (field, term, shard): pure block-list
-    * concatenation in minDoc order (partials are docId-range disjoint
-    * because docIds are contiguous per input partition) — the
-    * reference's segment merge with zero re-encode. */
-  private def mergeSegments(
-      spark: SparkSession,
-      partials: DataFrame,
-      cfg: IndexConfig): DataFrame = mergeSegmentRows(partials, cfg)
-
-  /** Public segment merge — also used by the streaming ingester to
-    * combine per-micro-batch partial postings. Default = the
-    * sort-based streaming merge (see mergeSegmentRowsSorted): measured
-    * 2× better thread-scaling on the merge increment than the hash
-    * aggregation (whose collect_list buffers every group's blobs in
-    * aggregation state) and no agg-spill risk for very-high-df terms.
-    * Concatenation can leave fragmented blocks (a df=1000 term across
-    * 100 partials → 100 ten-posting blocks), which wastes metadata and
-    * weakens block-max skipping — under-filled runs are decoded and
-    * re-encoded into full blocks. */
+  /** Segment merge: combines partial posting rows per (field, term,
+    * shard) — the build's map-side partials and the streaming
+    * ingester's per-micro-batch partials. Partials are docId-range
+    * disjoint (docIds are contiguous per input partition), so the
+    * merge is block-list concatenation in minDoc order with zero
+    * re-encode (see mergeBlobs for the verified fallback and the
+    * under-filled-block compaction).
+    *
+    * The partials are shuffled and RADIX-SORTED by (field, term,
+    * shard, firstDoc) and merged in one streaming pass: each blob is
+    * touched once on the reduce side and only ONE group's blobs are in
+    * flight at a time. A hash aggregation (collect_list + concat)
+    * buffers every group's blobs in aggregation state; this shape
+    * measured 2× better thread-scaling on the merge increment and has
+    * no agg-spill risk for very-high-df terms (a df=10^9 term has
+    * #input-partition partial rows). */
   def mergeSegmentRows(
-      partials: DataFrame,
-      cfg: IndexConfig): DataFrame = mergeSegmentRowsSorted(partials, cfg)
-
-  /** Hash-aggregation merge (collect_list + concat) — retained for
-    * cross-validation against the sort-based path (byte-identity
-    * asserted in Round3Spec). */
-  def mergeSegmentRowsAgg(
-      partials: DataFrame,
-      cfg: IndexConfig): DataFrame = {
-    val spark = partials.sparkSession
-    import spark.implicits._
-    val in =
-      if (cfg.buildPartitions > 0)
-        partials.repartition(cfg.buildPartitions, col("field"), col("term"), col("shard"))
-      else partials
-    // firstDoc orders the partials; reading it costs two header varints
-    val firstDocUdf = udf((b: Array[Byte]) => PostingsCodec.blobFirstMinDoc(b))
-    val merged = in.withColumn("firstDoc", firstDocUdf(col("blob")))
-      .groupBy("field", "term", "shard")
-      .agg(
-        sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"),
-        transform(
-          sort_array(collect_list(struct(col("firstDoc"), col("blob")))),
-          x => x.getField("blob")).as("parts"))
-    merged
-      .as[(String, String, Long, Long, Long, Int, Seq[Array[Byte]])]
-      .map { case (f, t, sh, df, cf, maxTf, parts) =>
-        (f, t, sh, df, cf, maxTf, mergeBlobs(parts, df))
-      }
-      .toDF("field", "term", "shard", "df", "cf", "maxTf", "blob")
-  }
-
-  /** Sort-based segment merge — same output as mergeSegmentRows, but
-    * instead of a hash aggregation whose collect_list buffers every
-    * group's partial blobs in the aggregation state, the partials are
-    * shuffled and RADIX-SORTED by (field, term, shard, firstDoc) and
-    * merged in one streaming pass: each blob is touched once on the
-    * reduce side and only ONE group's blobs are in flight at a time.
-    * At scale this also removes the hash-agg spill risk for terms with
-    * many partials (a df=10^9 term has #input-partition partial rows). */
-  def mergeSegmentRowsSorted(
       partials: DataFrame,
       cfg: IndexConfig): DataFrame = {
     val spark = partials.sparkSession
@@ -745,85 +652,6 @@ object IndexBuilder {
     }
   }
 
-  /** Sort-based posting build: one Tungsten hash shuffle of the raw
-    * occurrence rows on (field, term, shard), radix sort within
-    * partitions by (field, term, shard, docId), then a streaming
-    * group-encode in mapPartitions — memory bounded by one group
-    * (≤ shardSize postings), no serialized aggregation buffers.
-    * The classic MapReduce index build (≙ the reference's map →
-    * shuffle-by-term → reduce writes index,
-    * create/mapred/BuildTableIndex.java:80-136), expressed on
-    * Tungsten. */
-  private def sortBasedPostings(
-      spark: SparkSession,
-      occs: org.apache.spark.sql.DataFrame,
-      cfg: IndexConfig): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val nPart = if (cfg.buildPartitions > 0) cfg.buildPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val sorted = occs
-      .repartition(nPart, col("field"), col("term"), col("shard"))
-      .sortWithinPartitions("field", "term", "shard", "docId")
-      .select("field", "term", "shard", "docId", "tf", "positions")
-      .as[(String, String, Long, Long, Int, Seq[Int])]
-    sorted.mapPartitions { it =>
-      new Iterator[(String, String, Long, Long, Long, Int, Array[Byte])] {
-        private val buf = scala.collection.mutable.ArrayBuffer.empty[Posting]
-        private var cur: (String, String, Long) = null
-        private var pending: (String, String, Long, Long, Int, Seq[Int]) = null
-
-        private def emit() = {
-          val ps = buf.toIndexedSeq
-          val blob = PostingsCodec.encodePostingsBlob(ps)
-          var cf = 0L; var maxTf = 0
-          ps.foreach { p => cf += p.tf; if (p.tf > maxTf) maxTf = p.tf }
-          val out = (cur._1, cur._2, cur._3, ps.length.toLong, cf, maxTf, blob)
-          buf.clear()
-          out
-        }
-
-        def hasNext: Boolean = pending != null || it.hasNext || buf.nonEmpty
-
-        def next(): (String, String, Long, Long, Long, Int, Array[Byte]) = {
-          while (true) {
-            val row = if (pending != null) { val r = pending; pending = null; r }
-              else if (it.hasNext) it.next()
-              else { return emit() } // flush last group
-            val key = (row._1, row._2, row._3)
-            if (cur == null) cur = key
-            if (key == cur) {
-              buf += Posting(row._4, row._5, row._6.toArray)
-            } else {
-              pending = row
-              val out = emit()
-              cur = key
-              return out
-            }
-          }
-          throw new IllegalStateException("unreachable")
-        }
-      }
-    }.toDF("field", "term", "shard", "df", "cf", "maxTf", "blob")
-  }
-
-  /** Typed-Aggregator posting build (SURVEY.md §7.3) — retained for
-    * cross-validation against the sort-based path. */
-  private def aggBasedPostings(
-      occs: org.apache.spark.sql.DataFrame,
-      cfg: IndexConfig): org.apache.spark.sql.DataFrame = {
-    val agg = udaf(new PostingAggregator())
-    val in =
-      if (cfg.buildPartitions > 0)
-        occs.repartition(cfg.buildPartitions, col("field"), col("term"), col("shard"))
-      else occs
-    in.groupBy(col("field"), col("term"), col("shard"))
-      .agg(agg(col("docId"), col("tf"), col("positions")).as("p"))
-      .select(
-        col("field"), col("term"), col("shard"),
-        col("p.df").as("df"), col("p.cf").as("cf"),
-        col("p.maxTf").as("maxTf"), col("p.blob").as("blob"))
-  }
-
   /** Build straight from a parquet table of CodeDocs with docIDs
     * derived from FILE METADATA: per-file base offsets come from the
     * parquet footers (driver-side metadata reads, no Spark job) and
@@ -895,8 +723,8 @@ object IndexBuilder {
       Seq(TokenizedField), Seq("path", "lang"), cfg)
 
   /** The annotated code-corpus docs DataFrame (docId from file-offset
-    * metadata, docKey, sha256, dl) — shared by the build entry point
-    * and the scaling phase probe.
+    * metadata, docKey, sha256, dl) — the input of the parquet-table
+    * build entry points.
     *
     * The (file_name → base offset) table is BROADCAST-JOINED on
     * `_metadata.file_name`, not shipped as a UDF closure map: a
@@ -1050,8 +878,6 @@ object IndexBuilder {
       tokenized: Seq[String],
       untokenized: Seq[String],
       cfg: IndexConfig): InvertedIndex = {
-    import spark.implicits._
-
     val shardSize = cfg.shardSizeDocs
     val fieldCols = (tokenized ++ untokenized).distinct
     val slim = docs.select((Seq("docId") ++ fieldCols).map(col): _*)
@@ -1061,30 +887,10 @@ object IndexBuilder {
       if (cfg.storeContent) docs
       else docs.drop(TokenizedField)
 
-    // B1+B2 in one narrow pass: tokenize + doc-local (field,term) agg.
-    val tokSet = tokenized.toSet
-    val occs = slim
-      .map { row =>
-        val docId = row.getAs[Long]("docId")
-        val tok = tokenized.map(f => (f, row.getAs[String](f)))
-        val untok = untokenized.map(f => (f, row.getAs[String](f)))
-        (docId, tok, untok)
-      }
-      .flatMap { case (docId, tok, untok) =>
-        analyzeDoc(docId, tok.filter(t => tokSet.contains(t._1)), untok,
-          cfg.analyzer)
-      }
-      .toDF("field", "term", "docId", "tf", "positions")
-      .withColumn("shard", (col("docId") / lit(shardSize)).cast("long"))
-
-    val postings = cfg.buildMode match {
-      case "segment" =>
-        mergeSegments(spark,
-          segmentPartials(spark, slim, tokenized, untokenized, shardSize,
-            cfg.analyzer), cfg)
-      case "sort" => sortBasedPostings(spark, occs, cfg)
-      case _ => aggBasedPostings(occs, cfg)
-    }
+    // map-side partial posting segments, merged per (field, term, shard)
+    val postings = mergeSegmentRows(
+      segmentPartials(spark, slim, tokenized, untokenized, shardSize,
+        cfg.analyzer), cfg)
 
     // Global dictionary stats — shards merged by a light aggregation
     // (no payload movement; ≙ reference docFreq, HBaseIndexReader.java:135-155).

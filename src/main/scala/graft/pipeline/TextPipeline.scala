@@ -236,8 +236,8 @@ object TextPipeline {
     // order-invariant — and the (doc, term) tf pre-aggregation (a full
     // shuffle of the token stream) disappears; partial aggregation
     // reduces each task to 62 longs per doc before the one doc_id
-    // exchange. (SimAggProbe: 0.95-1.14 s → 0.73-1.00 warm, parity
-    // exact.)
+    // exchange. (0.95-1.14 s → 0.73-1.00 warm, parity exact:
+    // OPTIMIZATION_r06.md §17.)
     val bitSums = (0 until 62).map { b =>
       sum(shiftright(col("h"), b).bitwiseAND(1L) * 2 - 1).as(s"sb$b")
     }
@@ -329,7 +329,8 @@ object TextPipeline {
     // small corpora broadcast the probe side (~(maxHam+1) rows × ~40 B
     // per doc): the build recomputes one cheap explosion above the
     // checkpoint while the stream side skips its exchange entirely
-    // (SimBcastProbe: 2.19-6.47 s SMJ vs 1.84-2.46 bcast, 3/3 reps)
+    // (2.19-6.47 s SMJ vs 1.84-2.46 bcast, 3/3 reps: OPTIMIZATION_r06.md
+    // §13 gate, dedup_simhash_pairs row of the operator checklist)
     banded.as("x").join(
         bcastIfFits(banded.as("y"), nDocs, 40L * (maxHam + 1)),
         col("x.band") === col("y.band") && col("x.bval") === col("y.bval")
@@ -369,7 +370,9 @@ object TextPipeline {
     val (s, nDocs) = checkpointWithCount(simhash(docs))
     // reps is NOT checkpointed: its three consumers each recompute one
     // small groupBy over the checkpointed simhash result, which costs
-    // less than an extra eager materialization job (A/B'd: GroupsProbe)
+    // less than an extra eager materialization job (round-6 A/B; the
+    // same trade as the jaccard shingles in OPTIMIZATION_r06.md
+    // "Probed and deliberately left alone")
     val reps = s.groupBy("simhash").agg(min("doc_id").as("rep"))
     // |reps| ≤ nDocs, so the same measured-size gate as simhashPairs
     // covers the star join's build side and the banded probe side
@@ -427,7 +430,7 @@ object TextPipeline {
     // pair-generation DAG above its last exchange (exchange reuse only
     // dedupes below it) — the narrow explode doubles rows in ONE
     // evaluation; same row multiset, A/B'd faster on both pair sources
-    // (EdgeFlipProbe: union 2.8/3.8 s medians vs explode 2.1/2.5)
+    // (union 2.8/3.8 s medians vs explode 2.1/2.5: OPTIMIZATION_r06.md §14)
     val (edges, nEdges) = checkpointWithCount(
       pairsIn.select(explode(array(
           struct(col("a").as("a"), col("b").as("b")),
@@ -492,7 +495,7 @@ object TextPipeline {
         .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("nchg"))
         .localCheckpoint()
       // the eager localCheckpoint IS the action the observation rides
-      // (verified: metrics fire on it — tools/ObsProbe); the timed-out
+      // (verified: metrics fire on it — OPTIMIZATION_r06.md §13); the timed-out
       // count() fallback is defensive only
       changed =
         try {
@@ -818,7 +821,7 @@ object TextPipeline {
     // count fits the threshold (~512 B per (id, bucket, embedding)
     // row) — the same measured-size gate as the simhash banded joins;
     // big embedding tables keep the bucket-shuffle join
-    // (EmbBcastProbe: warm 1.37-1.55 s -> 1.16-1.48, parity exact)
+    // (warm 1.37-1.55 s -> 1.16-1.48, parity exact: OPTIMIZATION_r06.md §16)
     val (withB, nVec) = checkpointWithCount(
       emb.join(vectorBuckets(emb, nPlanes), "vec_id")
         .select("vec_id", "bucket", "embedding"))

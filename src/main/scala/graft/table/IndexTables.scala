@@ -29,12 +29,6 @@ object IndexTables {
     * are unchanged (each stage is still manifest-gated).
     * Returns total rows written. */
   def write(spark: SparkSession, idx: InvertedIndex, root: String): Long = {
-    // env-gated stage timing (GRAFT_WRITE_TIMING=1): attributes the
-    // full-build wall between the two chains' stages on stderr
-    val wt0 = System.nanoTime()
-    def logT(tag: String): Unit =
-      if (sys.env.contains("GRAFT_WRITE_TIMING"))
-        System.err.println(f"[write] $tag%-14s at ${(System.nanoTime() - wt0) / 1e9}%6.2f s")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       val fDocs = pool.submit(new java.util.concurrent.Callable[TableFormat.Manifest] {
@@ -56,7 +50,6 @@ object IndexTables {
             case None => idx.docs
           }
           val m = TableFormat.write(spark, docsDf, root, "docs")
-          logT("docs")
           if (needStats) {
             // observed metrics can overcount under speculative/retried
             // tasks (accumulator semantics); the manifest rowCount from
@@ -80,14 +73,12 @@ object IndexTables {
             Files.move(tmp, statsPath,
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           }
-          logT("stats.json")
           m
         }
       })
       val fPost = pool.submit(new java.util.concurrent.Callable[(TableFormat.Manifest, TableFormat.Manifest)] {
         def call(): (TableFormat.Manifest, TableFormat.Manifest) = {
           val mPost = TableFormat.write(spark, idx.postings, root, "postings")
-          logT("postings")
           val mStats = if (TableFormat.isCommitted(root, "termStats")) {
             TableFormat.readManifest(root, "termStats")
           } else {
@@ -96,7 +87,6 @@ object IndexTables {
               sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
             TableFormat.write(spark, ts, root, "termStats")
           }
-          logT("termStats")
           (mPost, mStats)
         }
       })

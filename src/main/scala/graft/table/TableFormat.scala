@@ -65,18 +65,8 @@ object TableFormat {
     if (Files.exists(dataDir)) deleteRecursively(dataDir)
     // snappy, not zstd (Spark 4 default): posting blocks are already
     // delta+varint packed — zstd burns ~2-8× write CPU for little gain.
-    // GRAFT_WRITE_REBALANCE=1 adds an AQE REBALANCE before the write
-    // (small tables → one file, large tables → advisory-size files).
-    // OFF by default: the A/B (OPTIMIZATION_r06.md) measured the extra
-    // exchange at 4-6% of the 800k index-build wall, while upstream
-    // partitioning (buildPartitions / shuffle.partitions) already
-    // governs index-table file sizing at scale — the hint only bought
-    // fewer tiny files on toy inputs. Use it for writes whose upstream
-    // partitioning is genuinely unknown.
-    val toWrite =
-      if (sys.env.get("GRAFT_WRITE_REBALANCE").contains("1")) df.hint("rebalance")
-      else df
-    toWrite.write.mode("overwrite")
+    // no REBALANCE hint: its exchange costs 4-6% of build wall (OPTIMIZATION_r06.md §9)
+    df.write.mode("overwrite")
       .option("compression", "snappy")
       .parquet(tmp.toString)
     // lineage: per-file row counts straight from the parquet footers

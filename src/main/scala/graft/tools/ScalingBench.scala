@@ -25,11 +25,74 @@ import graft.table.{IndexTables, TableFormat}
   */
 object ScalingBench {
 
-  // session/master/classpath construction shared with PhaseSplit —
-  // see BenchSessions (campaign and decomposition probe must measure
-  // the same configuration)
-  private def session(cpus: Int): SparkSession =
-    BenchSessions.build(s"graft-scaling-$cpus", cpus)
+  /** Master for `cpus` total cores. Default local[cpus]; with
+    * GRAFT_EXECUTORS=k set, local-cluster[k, cpus/k, mem] — REAL
+    * separate executor JVMs (own heap, own GC), the faithful sandbox
+    * instantiation of the north rule's "N vs 4N executors": adding
+    * executors adds heaps, exactly like adding cluster nodes, instead
+    * of multiplying allocating threads inside one shared heap. */
+  private def master(cpus: Int): String =
+    sys.env.get("GRAFT_EXECUTORS") match {
+      case Some(k) =>
+        val execs = k.toInt
+        // integer division would silently run fewer total cores than
+        // `cpus` while the run stays labeled graft-scaling-<cpus>,
+        // skewing per-core efficiency — fail fast instead
+        require(execs > 0 && cpus % execs == 0,
+          s"GRAFT_EXECUTORS=$execs must divide cpus=$cpus evenly " +
+            s"(would run ${execs * (cpus / math.max(execs, 1))} cores labeled $cpus)")
+        val memMb = sys.env.getOrElse("GRAFT_EXEC_MEM_MB", "6144").toInt
+        s"local-cluster[$execs,${cpus / execs},$memMb]"
+      case None => s"local[$cpus]"
+    }
+
+  /** Classes dir shipped to local-cluster executor JVMs — derived from
+    * the RUNNING JVM's classpath (sbt runMain puts target/classes on
+    * it), overridable via GRAFT_EXEC_CLASSPATH; a stale hardcoded path
+    * would fail with executor-side ClassNotFound silently swallowed
+    * into task retries. */
+  private def execClassPath: String =
+    sys.env.get("GRAFT_EXEC_CLASSPATH")
+      .orElse(System.getProperty("java.class.path")
+        .split(java.io.File.pathSeparator)
+        // the segment must BE "classes" — endsWith("classes") alone
+        // also matches target/scala-2.13/test-classes
+        .find(p => p.endsWith(java.io.File.separator + "classes")
+          && p.contains("target")))
+      .getOrElse(new java.io.File("target/scala-2.13/classes").getAbsolutePath)
+
+  /** The bench session: shuffle partitions 4×cores (AQE coalesces),
+    * shuffle/spill on tmpfs, fine input splits (cores-rich/data-small
+    * local regime — the 128m default stands on a real cluster). With
+    * GRAFT_EXECUTORS set, ships classes + memory + optional
+    * GRAFT_EXEC_JAVA_OPTS (e.g. a ParallelGC/AlwaysPreTouch A/B — by
+    * default executor JVMs run Spark's stock flags, i.e. G1, unlike
+    * the campaign driver's ParallelGC). */
+  private def session(cpus: Int): SparkSession = {
+    val b = SparkSession.builder()
+      .master(master(cpus))
+      .appName(s"graft-scaling-$cpus")
+    if (sys.env.contains("GRAFT_EXECUTORS")) {
+      b.config("spark.executor.extraClassPath", execClassPath)
+        .config("spark.executor.memory",
+          sys.env.getOrElse("GRAFT_EXEC_MEM_MB", "6144") + "m")
+      sys.env.get("GRAFT_EXEC_JAVA_OPTS").foreach(
+        b.config("spark.executor.extraJavaOptions", _))
+    }
+    val s = b
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("GRAFT_SHUF_PARTS", (cpus * 4).toString))
+      .config("spark.local.dir",
+        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
+      .config("spark.sql.files.maxPartitionBytes",
+        sys.env.getOrElse("GRAFT_MAXPART", "8m"))
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** One full index build at the given parallelism; returns
     * (wallSec, docs, shaMismatches). */

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.build.{IndexBuilder, IndexConfig}
+import graft.build.{IndexBuilder, IndexConfig, ReferenceBuilder}
 import graft.model.CodeDoc
 import graft.query.{BM25, LegacyTfIdf, Searcher}
 
@@ -168,22 +168,40 @@ class EndToEndSpec extends AnyFunSuite {
     assert(langRows.forall(_.positions === Seq(0)))
   }
 
-  test("segment, sort and Aggregator posting builds produce identical tables") {
-    val idxs = Seq("segment", "sort", "agg").map { mode =>
-      mode -> IndexBuilder.fromCodeDocs(spark, corpus.toDS(),
-        IndexConfig(shardSizeDocs = 2, buildMode = mode))
-    }
+  test("segment posting build ≡ test-scope Aggregator reference build") {
+    // the reference (ReferenceBuilder: doc-local analysis + typed
+    // Aggregator) rebuilds postings from the production docs table, so
+    // both sides see the same docIds and share only analyzer + codec
+    val untok = Seq("path", "lang")
     def canon(idx: graft.build.InvertedIndex) =
       idx.postings.select("field", "term", "shard", "df", "cf", "maxTf")
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
     def decoded(idx: graft.build.InvertedIndex) =
       new Searcher(spark, idx).matchesWithPositions(Seq("plays", "messi"))
         .collect().map(m => (m.term, m.docId, m.tf, m.positions)).sortBy(_.toString).toSeq
-    val (baseCanon, baseDec) = (canon(idxs.head._2), decoded(idxs.head._2))
-    idxs.tail.foreach { case (mode, idx) =>
-      assert(canon(idx) === baseCanon, s"mode=$mode")
-      assert(decoded(idx) === baseDec, s"mode=$mode")
-    }
+    // every blob of every row, fully decoded
+    def allPostings(idx: graft.build.InvertedIndex) =
+      idx.postings.select("field", "term", "shard", "blob")
+        .as[(String, String, Long, Array[Byte])].collect()
+        .map { case (f, t, sh, b) =>
+          (f, t, sh, graft.codec.PostingsCodec.decodeBlob(b).toSeq
+            .flatMap(graft.codec.PostingsCodec.decodeBlock)
+            .map(p => (p.docId, p.tf, p.positions.toSeq)))
+        }.sortBy(r => (r._1, r._2, r._3)).toSeq
+    val small = IndexBuilder.fromCodeDocs(spark, corpus.toDS(), IndexConfig(shardSizeDocs = 2))
+    val smallRef = ReferenceBuilder.index(small, Seq("content"), untok)
+    assert(canon(small) === canon(smallRef))
+    assert(decoded(small) === decoded(smallRef))
+    assert(allPostings(small) === allPostings(smallRef))
+    // multi-partial segments: 300 docs over 4 partitions, 64-doc shards
+    // (several partials per shard, shard splits inside a partition)
+    val code = IndexBuilder.fromCodeDocs(spark,
+      graft.tools.CodeCorpus.generate(spark, 300L).repartition(4),
+      IndexConfig(shardSizeDocs = 64))
+    val codeRef = ReferenceBuilder.index(code, Seq("content"), untok)
+    assert(canon(code) === canon(codeRef))
+    assert(allPostings(code) === allPostings(codeRef))
+    assert(code.postings.select("shard").distinct().count() === 5)
   }
 
   test("cross-field termEnum iterates the whole (field, term) keyspace") {
@@ -243,9 +261,11 @@ class EndToEndSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
       .repartition(5) // hash/round-robin: interleaves id ranges
     val interleaved = IndexBuilder.fromText(spark, docs, "doc_id", "text",
-      cfg = IndexConfig(shardSizeDocs = 1L << 20, buildMode = "segment"))
-    val sorted = IndexBuilder.fromText(spark, docs.orderBy("doc_id").coalesce(1),
-      "doc_id", "text", cfg = IndexConfig(shardSizeDocs = 1L << 20, buildMode = "sort"))
+      cfg = IndexConfig(shardSizeDocs = 1L << 20))
+    val sorted = ReferenceBuilder.index(
+      IndexBuilder.fromText(spark, docs.orderBy("doc_id").coalesce(1),
+        "doc_id", "text", cfg = IndexConfig(shardSizeDocs = 1L << 20)),
+      Seq("content"), Nil)
     def rows(idx: graft.build.InvertedIndex) = {
       val s = new Searcher(spark, idx)
       s.matches(Seq("gamma", "alpha")).collect()

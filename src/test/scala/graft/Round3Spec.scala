@@ -188,8 +188,8 @@ class Round3Spec extends AnyFunSuite {
       df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getInt(5),
         r.getAs[Array[Byte]](6).toSeq)).sortBy(t => (t._1, t._2, t._3))
-    val viaAgg = canon(IndexBuilder.mergeSegmentRowsAgg(partials, cfg))
-    val viaSort = canon(IndexBuilder.mergeSegmentRowsSorted(partials, cfg))
+    val viaAgg = canon(graft.build.ReferenceBuilder.mergeSegmentRowsAgg(partials, cfg))
+    val viaSort = canon(IndexBuilder.mergeSegmentRows(partials, cfg))
     assert(viaSort === viaAgg)
   }
 
