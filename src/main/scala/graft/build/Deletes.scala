@@ -25,15 +25,17 @@ import graft.model.CorpusStats
 object Deletes {
 
   /** The one per-row delete rewrite both physical shapes share:
-    * decode, drop deleted docIds, re-encode — the unchanged-row
-    * (kept == df) pass-through keeps untouched lists byte-identical. */
+    * decode, drop the docIds found in the SORTED `dels`, re-encode —
+    * the unchanged-row (kept == df) pass-through keeps untouched lists
+    * byte-identical. */
   private def rewriteRow(
       row: (String, String, Long, Long, Long, Int, Array[Byte]),
-      delSet: java.util.HashSet[java.lang.Long])
+      dels: Array[Long])
       : Iterator[(String, String, Long, Long, Long, Int, Array[Byte])] = {
     val (f, t, sh, df, _, _, blob) = row
     val view = new PostingsCodec.BlobView(blob)
-    val kept = view.allPostings.filterNot(pp => delSet.contains(pp.docId)).toArray
+    val kept = view.allPostings
+      .filterNot(pp => java.util.Arrays.binarySearch(dels, pp.docId) >= 0).toArray
     if (kept.length.toLong == df) {
       // no deleted doc in this list — row passes through unchanged
       Iterator.single(row)
@@ -82,35 +84,39 @@ object Deletes {
     // deleted drop out entirely. Two equivalent physical shapes around
     // the one shared per-row rewrite:
     //
-    //  - small delete set (fits autoBroadcastJoinThreshold): broadcast
-    //    the id set and stream the postings table IN PLACE — no
-    //    shuffle of the (blob-heavy) postings volume at all. A
-    //    shard-membership pre-check keeps the cogroup shape's
+    //  - small delete set (16 B/id fits autoBroadcastJoinThreshold):
+    //    broadcast the sorted ids and stream the postings table IN
+    //    PLACE — no shuffle of the (blob-heavy) postings volume at all.
+    //    A shard-membership pre-check keeps the cogroup shape's
     //    zero-decode pass-through for untouched shards: a posting row
     //    only holds docIds of its own shard, so ids from other shards
     //    can never match and the global set is membership-identical to
     //    the per-shard one (guide §3: broadcast the side that fits —
-    //    the common Lucene-style case of deletes ≪ corpus).
+    //    the common Lucene-style case of deletes ≪ corpus). ONE bounded
+    //    action decides and fetches: at most maxIds + 1 ids reach the
+    //    driver, and hitting that limit selects the cogroup instead.
     //  - otherwise: the original shard-cogroup — each task sees one
     //    shard's rows plus only that shard's deleted ids; nothing
     //    corpus-wide anywhere.
-    val bThresh = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val nDel = del.count()
-    val newPostings = if (bThresh > 0 && nDel * 16 <= bThresh) {
-      val ids = del.select("docId").as[Long].collect()
-      val delSet = new java.util.HashSet[java.lang.Long](ids.length * 2)
-      val shardSet = new java.util.HashSet[java.lang.Long]()
-      ids.foreach { id => delSet.add(id); shardSet.add(id / shardSize) }
-      val bcDel = spark.sparkContext.broadcast(delSet)
-      val bcShards = spark.sparkContext.broadcast(shardSet)
+    val maxIds = math.min(spark.sessionState.conf.autoBroadcastJoinThreshold / 16,
+      Int.MaxValue - 1L).toInt
+    val ids =
+      if (maxIds > 0) del.select("docId").limit(maxIds + 1).as[Long].collect()
+      else Array.empty[Long]
+    val newPostings = if (maxIds > 0 && ids.length <= maxIds) {
+      java.util.Arrays.sort(ids)
+      val bcDel = spark.sparkContext.broadcast(ids)
       idx.postings
         .select("field", "term", "shard", "df", "cf", "maxTf", "blob")
         .as[(String, String, Long, Long, Long, Int, Array[Byte])]
         .mapPartitions { rows =>
           val ds = bcDel.value
-          val ss = bcShards.value
           rows.flatMap { row =>
-            if (!ss.contains(row._3)) Iterator.single(row)
+            // pass through unless some deleted id falls in this row's
+            // docId range [shard·size, (shard+1)·size)
+            val i = java.util.Arrays.binarySearch(ds, row._3 * shardSize)
+            val at = if (i >= 0) i else -i - 1
+            if (at == ds.length || ds(at) >= (row._3 + 1) * shardSize) Iterator.single(row)
             else rewriteRow(row, ds)
           }
         }
@@ -122,10 +128,10 @@ object Deletes {
         .groupByKey(_._3)
       val d = del.as[(Long, Long)].groupByKey(_._2)
       p.cogroup(d) { (_, rows, dels) =>
-        val delSet = new java.util.HashSet[java.lang.Long]()
-        dels.foreach(t => delSet.add(t._1))
-        if (delSet.isEmpty) rows
-        else rows.flatMap(rewriteRow(_, delSet))
+        val shardIds = dels.map(_._1).toArray
+        java.util.Arrays.sort(shardIds)
+        if (shardIds.isEmpty) rows
+        else rows.flatMap(rewriteRow(_, shardIds))
       }.toDF("field", "term", "shard", "df", "cf", "maxTf", "blob")
     }
 

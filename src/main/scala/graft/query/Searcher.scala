@@ -1,6 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable.LongMap
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.build.InvertedIndex
@@ -114,10 +116,9 @@ final class Searcher(
     * from docId on both sides — so the query's shard pruning filter
     * propagates through the join's equality constraint to the deletes
     * side too. Stats/df stay stale until physical apply (Lucene delete
-    * semantics; Deletes.applied / compaction refreshes them). */
-  private def dlWithShard: DataFrame = dlWithShard(None)
-
-  /** `docFilter` — the Lucene Filter parameter of the reference's own
+    * semantics; Deletes.applied / compaction refreshes them).
+    *
+    * `docFilter` — the Lucene Filter parameter of the reference's own
     * search entry (HBaseIndexSearcher.java:61 `search(weight, filter,
     * nDocs, ...)`): an arbitrary predicate over the stored docs table
     * (e.g. `col("lang") === "en"`). Applied to the LIVE dl side, so a
@@ -156,6 +157,63 @@ final class Searcher(
     val prunedBytes = meta.shards.length.toLong * index.config.shardSizeDocs * 16L
     val slim = pruneShards(dlWithShard(docFilter), meta.shards).select("docId", "dl")
     if (prunedBytes <= dlBroadcastBytes) broadcast(slim) else slim
+  }
+
+  /** The one per-shard scaffold of every pruned query: the posting rows
+    * of `terms` and the live (docId, dl) side, both pruned to `shards`
+    * and cogrouped on the doc-range shard key — a hot term's blocks
+    * never congregate on one task, and the dl lookup is shard-local.
+    * `f` sees one shard's posting rows (never empty) and its live dl
+    * map; it must capture only locals (Searcher is not serializable). */
+  private def perShard[T: Encoder](terms: Seq[String], shards: Array[Long],
+      docFilter: Option[org.apache.spark.sql.Column] = None)(
+      f: (Array[PostingRow], LongMap[Double]) => Iterator[T]): Dataset[T] = {
+    val prows = pruneShards(postingRows(terms).toDF(), shards)
+      .as[PostingRow].groupByKey(_.shard)
+    val dls = pruneShards(dlWithShard(docFilter), shards)
+      .select(col("docId"), col("dl"), col("shard"))
+      .as[(Long, Double, Long)]
+      .groupByKey(_._3)
+    prows.cogroup(dls) {
+      (_: Long, ps: Iterator[PostingRow], ds: Iterator[(Long, Double, Long)]) =>
+        val rows = ps.toArray
+        if (rows.isEmpty) Iterator.empty
+        else {
+          val dlMap = new LongMap[Double]()
+          ds.foreach { case (d, dl, _) => dlMap.update(d, dl) }
+          f(rows, dlMap)
+        }
+    }
+  }
+
+  /** Positional tail of the phrase/NEAR/spanNot family on the shard
+    * scaffold: one TermIterator per (term, shard) row (no score bound —
+    * positional kernels never prune on score), `matcher` emits (docId,
+    * tf), and only LIVE docs survive — before the pseudo-term df count,
+    * so phrase idf reflects live matches only. Eagerly materialized
+    * (localCheckpoint, not pinned in the CacheManager): the cogroup runs
+    * ONCE for both the df count and the scoring plan. */
+  private def positionalMatchRows(terms: Seq[String], shards: Array[Long],
+      dfs: Map[String, Long], scorer: Scorer)(
+      matcher: Map[String, TermIterator] => Iterator[(Long, Int)]): DataFrame = {
+    if (shards.isEmpty)
+      return Seq.empty[(Long, Int, Double)].toDF("docId", "tf", "dl")
+    val st = stats
+    perShard(terms, shards) { (rows, dlMap) =>
+      // one row per (term, shard) is a merge-path invariant, and this
+      // toMap would SILENTLY keep one of the duplicates (undercounting
+      // tf on e.g. an un-merged union of segment partials) — fail
+      // loudly instead, like topKWand which keeps duplicates as
+      // separate iterators
+      require(rows.iterator.map(_.term).toSet.size == rows.length,
+        "duplicate posting rows for one (term, shard) — positional " +
+          "search requires merged postings (one row per term per shard)")
+      val iterOf = rows.map { r =>
+        r.term -> new TermIterator(r.term, dfs(r.term).toDouble, 0.0,
+          scorer, st, new PostingsCodec.BlobView(r.blob))
+      }.toMap
+      matcher(iterOf).collect { case (d, tf) if dlMap.contains(d) => (d, tf, dlMap(d)) }
+    }.toDF("docId", "tf", "dl").localCheckpoint()
   }
 
   /** Posting rows for the query terms — bucket/point-pruned scan
@@ -328,61 +386,19 @@ final class Searcher(
     val st = stats
     val scorerB = scorer
     val tbB = tieBreaker
-    val prows = pruneShards(postingRows(qTerms).toDF(), meta.shards)
-      .as[PostingRow].groupByKey(_.shard)
-    val dls = pruneShards(dlWithShard, meta.shards)
-      .select(col("docId"), col("dl"), col("shard"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._3)
-    val perShard: Dataset[ScoredDoc] = prows.cogroup(dls) {
-      (_: Long, ps: Iterator[PostingRow], ds: Iterator[(Long, Double, Long)]) =>
-        val rows = ps.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val dlMap = new scala.collection.mutable.LongMap[Double]()
-          ds.foreach { case (d, dl, _) => dlMap.update(d, dl) }
-          val iters = rows.map { r =>
-            val df = dfs.getOrElse(r.term, 0L).toDouble
-            new TermIterator(r.term, df,
-              scorerB.upperBound(r.maxTf.toDouble, df, st), scorerB, st,
-              new PostingsCodec.BlobView(r.blob))
-          }.toSeq
-          Wand.topK(iters, d => dlMap.getOrElse(d, Double.NaN),
-            scorerB, st, k, queryTermCount = nQueryTerms, queryDfsIn = queryDfs,
-            dismaxTieBreaker = tbB).iterator
-        }
-    }
-    perShard.toDF()
+    perShard[ScoredDoc](qTerms, meta.shards) { (rows, dlMap) =>
+      val iters = rows.map { r =>
+        val df = dfs.getOrElse(r.term, 0L).toDouble
+        new TermIterator(r.term, df,
+          scorerB.upperBound(r.maxTf.toDouble, df, st), scorerB, st,
+          new PostingsCodec.BlobView(r.blob))
+      }.toSeq
+      Wand.topK(iters, d => dlMap.getOrElse(d, Double.NaN),
+        scorerB, st, k, queryTermCount = nQueryTerms, queryDfsIn = queryDfs,
+        dismaxTieBreaker = tbB).iterator
+    }.toDF()
       .orderBy(desc("score"), asc("docId"))
       .limit(k)
-  }
-
-  /** Exhaustive dismax cross-validation path (fixed-order fold like
-    * `scoredDocs`, then max + tb·rest per doc). */
-  def dismaxTopKExhaustive(
-      terms: Seq[String],
-      k: Int,
-      tieBreaker: Double = 0.0,
-      scorer: Scorer = BM25()): DataFrame = {
-    require(tieBreaker >= 0.0 && tieBreaker <= 1.0)
-    val qTerms = terms.distinct.sorted
-    val meta = collectMeta(qTerms)
-    val dfLookup = typedlit(meta.dfs.map { case (t, d) => t -> d.toDouble })
-    val m = matches(qTerms).toDF()
-      .join(dlLookup(meta), Seq("docId"))
-      .withColumn("df", element_at(dfLookup, col("term")))
-      .withColumn("tscore",
-        scorer.contributionCol(col("tf").cast("double"), col("df"), col("dl"), stats))
-    m.groupBy("docId")
-      .agg(sort_array(collect_list(struct(col("term"), col("tscore")))).as("cs"))
-      .withColumn("sm",
-        aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("tscore")))
-      .withColumn("mx",
-        aggregate(col("cs"), lit(Double.MinValue),
-          (acc, x) => greatest(acc, x.getField("tscore"))))
-      .withColumn("score", col("mx") + lit(tieBreaker) * (col("sm") - col("mx")))
-      .orderBy(desc("score"), asc("docId")).limit(k)
-      .select("docId", "score")
   }
 
   /** Total hit count (reference totalHits, TestHBaseIndexReader.java:50).
@@ -459,35 +475,24 @@ final class Searcher(
       else if (mustArr.nonEmpty) meta.shardsWithAll(mustArr) // mixed: all MUSTs or bust
       else if (exTerms.isEmpty) meta.shards
       else meta.shardsWith(qTerms)
-    val prows = pruneShards(postingRows(qTerms ++ exTerms).toDF(), touched)
-      .as[PostingRow].groupByKey(_.shard)
-    val dls = pruneShards(dlWithShard(docFilter), touched)
-      .select(col("docId"), col("dl"), col("shard"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._3)
-
-    val perShard: Dataset[ScoredDoc] = prows.cogroup(dls) {
-      (_: Long, ps: Iterator[PostingRow], ds: Iterator[(Long, Double, Long)]) =>
-        val (exRows, rows) = ps.toArray.partition(r => exSet(r.term))
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val dlMap = new scala.collection.mutable.LongMap[Double]()
-          ds.foreach { case (d, dl, _) => dlMap.update(d, dl) }
-          def mkIter(r: PostingRow): TermIterator = {
-            val df = dfs.getOrElse(r.term, 0L).toDouble
-            val b = boostsB.getOrElse(r.term, 1.0)
-            new TermIterator(r.term, df,
-              b * scorerB.upperBound(r.maxTf.toDouble, df, st), scorerB, st,
-              new PostingsCodec.BlobView(r.blob), boost = b)
-          }
-          // NaN = "not live" (deleted or unknown): Wand skips the doc
-          Wand.topK(rows.map(mkIter).toSeq, d => dlMap.getOrElse(d, Double.NaN),
-            scorerB, st, k, allMustB, nQueryTerms, queryDfs,
-            excludeIters = exRows.map(mkIter).toSeq,
-            requiredTerms = mustSet, minShouldMatch = mmB).iterator
+    perShard[ScoredDoc](qTerms ++ exTerms, touched, docFilter) { (all, dlMap) =>
+      val (exRows, rows) = all.partition(r => exSet(r.term))
+      if (rows.isEmpty) Iterator.empty
+      else {
+        def mkIter(r: PostingRow): TermIterator = {
+          val df = dfs.getOrElse(r.term, 0L).toDouble
+          val b = boostsB.getOrElse(r.term, 1.0)
+          new TermIterator(r.term, df,
+            b * scorerB.upperBound(r.maxTf.toDouble, df, st), scorerB, st,
+            new PostingsCodec.BlobView(r.blob), boost = b)
         }
-    }
-    perShard.toDF()
+        // NaN = "not live" (deleted or unknown): Wand skips the doc
+        Wand.topK(rows.map(mkIter).toSeq, d => dlMap.getOrElse(d, Double.NaN),
+          scorerB, st, k, allMustB, nQueryTerms, queryDfs,
+          excludeIters = exRows.map(mkIter).toSeq,
+          requiredTerms = mustSet, minShouldMatch = mmB).iterator
+      }
+    }.toDF()
       .orderBy(desc("score"), asc("docId"))
       .limit(k)
   }
@@ -503,24 +508,25 @@ final class Searcher(
     * per doc-range shard, docId leapfrog intersection of the distinct
     * terms with block skipping on header metadata, positions decoded
     * LAZILY only for docs where all terms aligned
-    * (Wand.phraseMatches / TermIterator.curPositions) — a phrase
-    * containing one common term shuffles only the matched docs, not
-    * O(cf) position rows. Shards missing any query term are pruned
-    * from BOTH cogroup sides via the single metadata collect.
-    * Rank/hash-identical to phraseTopKExhaustive (asserted in tests).
+    * (Wand.multiPhraseMatches with singleton slots /
+    * TermIterator.curPositions) — a phrase containing one common term
+    * shuffles only the matched docs, not O(cf) position rows. Shards
+    * missing any query term are pruned from BOTH cogroup sides via the
+    * single metadata collect. Rank/score-identical to the test-scope
+    * explode-join oracle (asserted in tests).
     *
     * `slop` — Lucene PhraseQuery.setSlop via the `"..."~N` parser
     * suffix, with IN-ORDER window semantics: a start position p₀
     * matches when slots appear at strictly increasing positions whose
-    * span exceeds the exact span by ≤ slop (Wand.phraseMatches greedy
-    * chain). slop 0 ≡ exact consecutive. Divergence, documented:
+    * span exceeds the exact span by ≤ slop (Wand.multiPhraseMatches
+    * greedy chain). slop 0 ≡ exact consecutive. Divergence, documented:
     * Lucene's SloppyPhraseScorer also permits REORDERED terms when the
     * slop affords the moves, and weights tf by 1/(distance+1); this
     * engine keeps matches ordered and counts them whole — the same
     * simplification as the ordered SpanNearQuery form. */
   def phraseTopK(terms: Seq[String], k: Int, scorer: Scorer = BM25(),
       slop: Int = 0): DataFrame =
-    scorePhraseMatched(phraseMatchRows(terms, scorer, slop), scorer, k)
+    scorePhraseMatched(multiPhraseMatchRows(terms.map(Seq(_)), scorer, slop), scorer, k)
 
   /** Score eagerly-materialized phrase match rows (docId, tf, dl) as
     * ONE pseudo-term whose df = number of matching live docs. */
@@ -549,6 +555,9 @@ final class Searcher(
       scorer: Scorer = BM25(), slop: Int = 0): DataFrame =
     scorePhraseMatched(multiPhraseMatchRows(slotAlts, scorer, slop), scorer, k)
 
+  /** (docId, tf, dl) for every LIVE doc matching the slot sequence —
+    * the one phrase kernel behind phraseTopK (singleton slots),
+    * multiPhraseTopK and boolean queries' phrase clauses. */
   private def multiPhraseMatchRows(slotAlts: Seq[Seq[String]],
       scorer: Scorer, slop: Int): DataFrame = {
     require(slotAlts.nonEmpty && slotAlts.forall(_.nonEmpty),
@@ -560,35 +569,8 @@ final class Searcher(
     val shards =
       if (groups.exists(g => !g.exists(meta.dfs.contains))) Array.empty[Long]
       else meta.shardsWithGroups(groups)
-    if (shards.isEmpty)
-      return Seq.empty[(Long, Int, Double)].toDF("docId", "tf", "dl")
-    val dfs = meta.dfs
-    val st = stats
-    val scorerB = scorer
-    val slopB = slop
-    val groupsB = groups
-    val prows = pruneShards(postingRows(qTerms).toDF(), shards)
-      .as[PostingRow].groupByKey(_.shard)
-    val dls = pruneShards(dlWithShard, shards)
-      .select(col("docId"), col("dl"), col("shard"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._3)
-    prows.cogroup(dls) {
-      (_: Long, ps: Iterator[PostingRow], ds: Iterator[(Long, Double, Long)]) =>
-        val rows = ps.toArray
-        require(rows.iterator.map(_.term).toSet.size == rows.length,
-          "duplicate posting rows for one (term, shard) — phrase search " +
-            "requires merged postings (one row per term per shard)")
-        val iterOf = rows.map { r =>
-          r.term -> new TermIterator(r.term, dfs(r.term).toDouble, 0.0,
-            scorerB, st, new PostingsCodec.BlobView(r.blob))
-        }.toMap
-        val dlMap = new scala.collection.mutable.LongMap[Double]()
-        ds.foreach { case (d, dl, _) => dlMap.update(d, dl) }
-        Wand.multiPhraseMatches(groupsB, iterOf, slopB)
-          .collect { case (d, tf) if dlMap.contains(d) => (d, tf, dlMap(d)) }
-    }.toDF("docId", "tf", "dl")
-      .localCheckpoint() // one cogroup for both the df count and scoring
+    positionalMatchRows(qTerms, shards, meta.dfs, scorer)(
+      iterOf => Wand.multiPhraseMatches(groups, iterOf, slop))
   }
 
   /** Span-first query (Lucene SpanFirstQuery over a SpanTermQuery):
@@ -622,7 +604,7 @@ final class Searcher(
     * family. Same pruned plan as `phraseTopK`: shards lacking either
     * term are dropped from BOTH cogroup sides, docId leapfrog with
     * block skipping, positions decoded lazily only on intersection
-    * docs, two-pointer window count (Wand.nearMatches). */
+    * docs, two-pointer window count (Wand.nearAllMatches). */
   def nearTopK(a: String, b: String, window: Int, k: Int,
       scorer: Scorer = BM25()): DataFrame =
     nearAllTopK(a, Seq(b), window, k, scorer)
@@ -635,11 +617,7 @@ final class Searcher(
     * minimal-cover n-clause semantics documented at
     * Wand.nearAllMatches). Same pruned plan as the phrase family. */
   def nearAllTopK(anchor: String, others: Seq[String], window: Int,
-      k: Int, scorer: Scorer = BM25()): DataFrame =
-    scorePhraseMatched(nearMatchRows(anchor, others, window, scorer), scorer, k)
-
-  private def nearMatchRows(anchor: String, others: Seq[String],
-      window: Int, scorer: Scorer): DataFrame = {
+      k: Int, scorer: Scorer = BM25()): DataFrame = {
     val rest = others.distinct
     require(rest.nonEmpty && !rest.contains(anchor),
       "NEAR needs distinct terms with at least one non-anchor")
@@ -649,37 +627,11 @@ final class Searcher(
     val shards =
       if (qTerms.exists(t => !meta.dfs.contains(t))) Array.empty[Long]
       else meta.shardsWithAll(qTerms)
-    if (shards.isEmpty)
-      return Seq.empty[(Long, Int, Double)].toDF("docId", "tf", "dl")
-    val dfs = meta.dfs
-    val st = stats
-    val scorerB = scorer
-    val (aB, restB, wB) = (anchor, rest, window)
-    val prows = pruneShards(postingRows(qTerms).toDF(), shards)
-      .as[PostingRow].groupByKey(_.shard)
-    val dls = pruneShards(dlWithShard, shards)
-      .select(col("docId"), col("dl"), col("shard"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._3)
-    prows.cogroup(dls) {
-      (_: Long, ps: Iterator[PostingRow], ds: Iterator[(Long, Double, Long)]) =>
-        val rows = ps.toArray
-        require(rows.iterator.map(_.term).toSet.size == rows.length,
-          "duplicate posting rows for one (term, shard) — NEAR search " +
-            "requires merged postings (one row per term per shard)")
-        val iterOf = rows.map { r =>
-          r.term -> new TermIterator(r.term, dfs(r.term).toDouble, 0.0,
-            scorerB, st, new PostingsCodec.BlobView(r.blob))
-        }.toMap
-        if (!iterOf.contains(aB) || !restB.forall(iterOf.contains)) Iterator.empty
-        else {
-          val dlMap = new scala.collection.mutable.LongMap[Double]()
-          ds.foreach { case (d, dl, _) => dlMap.update(d, dl) }
-          Wand.nearAllMatches(iterOf(aB), restB.map(iterOf).toArray, wB)
-            .collect { case (d, tf) if dlMap.contains(d) => (d, tf, dlMap(d)) }
-        }
-    }.toDF("docId", "tf", "dl")
-      .localCheckpoint() // one cogroup for both the df count and scoring
+    val matched = positionalMatchRows(qTerms, shards, meta.dfs, scorer) { iterOf =>
+      if (!iterOf.contains(anchor) || !rest.forall(iterOf.contains)) Iterator.empty
+      else Wand.nearAllMatches(iterOf(anchor), rest.map(iterOf).toArray, window)
+    }
+    scorePhraseMatched(matched, scorer, k)
   }
 
   /** Span exclusion (Lucene SpanNotQuery(include, exclude, pre, post)
@@ -700,82 +652,12 @@ final class Searcher(
     val shards = meta.shardsWithAll(Seq(a))
     if (shards.isEmpty) return emptyHits
     val qTerms = if (meta.dfs.contains(b)) Seq(a, b).sorted else Seq(a)
-    val dfs = meta.dfs
-    val st = stats
-    val scorerB = scorer
-    val (aB, bB, preB, postB) = (a, b, pre, post)
-    val prows = pruneShards(postingRows(qTerms).toDF(), shards)
-      .as[PostingRow].groupByKey(_.shard)
-    val dls = pruneShards(dlWithShard, shards)
-      .select(col("docId"), col("dl"), col("shard"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._3)
-    val matched = prows.cogroup(dls) {
-      (_: Long, ps: Iterator[PostingRow], ds: Iterator[(Long, Double, Long)]) =>
-        val rows = ps.toArray
-        require(rows.iterator.map(_.term).toSet.size == rows.length,
-          "duplicate posting rows for one (term, shard) — spanNot search " +
-            "requires merged postings (one row per term per shard)")
-        val iterOf = rows.map { r =>
-          r.term -> new TermIterator(r.term, dfs(r.term).toDouble, 0.0,
-            scorerB, st, new PostingsCodec.BlobView(r.blob))
-        }.toMap
-        iterOf.get(aB) match {
-          case None => Iterator.empty
-          case Some(ia) =>
-            val dlMap = new scala.collection.mutable.LongMap[Double]()
-            ds.foreach { case (d, dl, _) => dlMap.update(d, dl) }
-            Wand.spanNotMatches(ia, iterOf.getOrElse(bB, null), preB, postB)
-              .collect { case (d, tf) if dlMap.contains(d) => (d, tf, dlMap(d)) }
-        }
-    }.toDF("docId", "tf", "dl")
-      .localCheckpoint() // one cogroup for both the df count and scoring
-    scorePhraseMatched(matched, scorer, k)
-  }
-
-  /** Exhaustive spanNot cross-validation oracle: positional explode of
-    * `a`, anti-join against `b` positions in the exclusion window.
-    * Do not use at scale. */
-  def spanNotTopKExhaustive(a: String, b: String, k: Int,
-      pre: Int = 0, post: Int = 0, scorer: Scorer = BM25()): DataFrame = {
-    require(a != b && pre >= 0 && post >= 0)
-    val m = matchesWithPositions(Seq(a, b).distinct).toDF()
-    def pos(t: String) = m.where(col("term") === t)
-      .select(col("docId"), explode(col("positions")).as("p"))
-    val matched = pos(a).as("pa")
-      .join(pos(b).as("pb"), col("pa.docId") === col("pb.docId") &&
-        col("pb.p") >= col("pa.p") - lit(pre) &&
-        col("pb.p") <= col("pa.p") + lit(post), "left_anti")
-      .groupBy("docId").agg(count(lit(1)).cast("int").as("tf"))
-      .join(dlLookup(collectMeta(Seq(a, b).distinct.sorted)), Seq("docId"))
-      .localCheckpoint()
-    scorePhraseMatched(matched, scorer, k)
-  }
-
-  /** Exhaustive NEAR cross-validation oracle: corpus-wide positional
-    * explode, one |Δpos| ≤ window semi-join per non-anchor term (each
-    * anchor occurrence counts once however many partner occurrences
-    * sit in its window). Do not use at scale. */
-  def nearTopKExhaustive(a: String, b: String, window: Int, k: Int,
-      scorer: Scorer = BM25()): DataFrame =
-    nearAllTopKExhaustive(a, Seq(b), window, k, scorer)
-
-  def nearAllTopKExhaustive(anchor: String, others: Seq[String],
-      window: Int, k: Int, scorer: Scorer = BM25()): DataFrame = {
-    val rest = others.distinct
-    require(rest.nonEmpty && !rest.contains(anchor) && window >= 1)
-    val m = matchesWithPositions((anchor +: rest)).toDF()
-    def pos(t: String) = m.where(col("term") === t)
-      .select(col("docId"), explode(col("positions")).as("p"))
-    val survivors = rest.foldLeft(pos(anchor)) { (acc, t) =>
-      acc.as("pa").join(pos(t).as("pb"),
-        col("pa.docId") === col("pb.docId") &&
-          abs(col("pb.p") - col("pa.p")) <= lit(window), "left_semi")
+    val matched = positionalMatchRows(qTerms, shards, meta.dfs, scorer) { iterOf =>
+      iterOf.get(a) match {
+        case None => Iterator.empty
+        case Some(ia) => Wand.spanNotMatches(ia, iterOf.getOrElse(b, null), pre, post)
+      }
     }
-    val matched = survivors
-      .groupBy("docId").agg(count(lit(1)).cast("int").as("tf"))
-      .join(dlLookup(collectMeta((anchor +: rest).sorted)), Seq("docId"))
-      .localCheckpoint()
     scorePhraseMatched(matched, scorer, k)
   }
 
@@ -817,162 +699,6 @@ final class Searcher(
       s"phrase-prefix '$prefix'", maxExpansions)
     if (ts.isEmpty) emptyHits
     else multiPhraseTopK(terms.map(Seq(_)) :+ ts, k, scorer, slop)
-  }
-
-  /** Exhaustive multi-phrase cross-validation oracle: per slot, the
-    * union of its alternatives' exploded positions (distinct — a start
-    * must count once however many alternatives could continue it),
-    * then the same equi-join (exact) / greedy min-fold (sloppy) as
-    * `phraseTopKExhaustive`. Do not use at scale. */
-  def multiPhraseTopKExhaustive(slotAlts: Seq[Seq[String]], k: Int,
-      scorer: Scorer = BM25(), slop: Int = 0): DataFrame = {
-    require(slotAlts.nonEmpty && slotAlts.forall(_.nonEmpty) && slop >= 0)
-    val groups = slotAlts.map(_.distinct)
-    val m = matchesWithPositions(groups.flatten.distinct).toDF()
-    def slotPos(g: Seq[String]): DataFrame =
-      m.where(col("term").isin(g: _*))
-        .select(col("docId"), explode(col("positions")).as("p"))
-        .distinct()
-    val starts =
-      if (slop == 0)
-        groups.zipWithIndex.map { case (g, i) =>
-          slotPos(g).select(col("docId"), (col("p") - lit(i)).as("start"))
-        }.reduce((a, b) => a.join(b, Seq("docId", "start")))
-      else {
-        val init = slotPos(groups.head)
-          .select(col("docId"), col("p").as("start"), col("p").as("prev"))
-        val chained = groups.drop(1).foldLeft(init) { (acc, g) =>
-          acc.join(slotPos(g), Seq("docId"))
-            .where(col("p") > col("prev"))
-            .groupBy("docId", "start").agg(min(col("p")).as("prev"))
-        }
-        chained
-          .where(col("prev") - col("start") <= lit(groups.length - 1 + slop))
-          .select("docId", "start")
-      }
-    val phraseTf = starts.groupBy("docId").agg(count(lit(1)).as("tf"))
-      .join(dlLookup(collectMeta(groups.flatten.distinct)), Seq("docId"))
-      .localCheckpoint()
-    val df = phraseTf.count().toDouble
-    phraseTf
-      .withColumn("score", scorer.contributionCol(
-        col("tf").cast("double"), lit(df), col("dl"), stats))
-      .orderBy(desc("score"), asc("docId")).limit(k)
-      .select("docId", "score")
-  }
-
-  /** Pruned positional phrase matching, factored for reuse by boolean
-    * queries with phrase clauses: (docId, tf, dl) for every LIVE doc
-    * containing the exact slot sequence. Eagerly materialized
-    * (localCheckpoint) so the cogroup runs ONCE for both the phrase-df
-    * count and any downstream scoring plan. */
-  private def phraseMatchRows(terms: Seq[String], scorer: Scorer,
-      slop: Int = 0): DataFrame = {
-    require(terms.nonEmpty)
-    require(slop >= 0, "negative slop")
-    val slots = terms
-    val qTerms = terms.distinct.sorted
-    val meta = collectMeta(qTerms)
-    val shards =
-      if (qTerms.exists(t => !meta.dfs.contains(t))) Array.empty[Long]
-      else meta.shardsWithAll(qTerms)
-    if (shards.isEmpty)
-      return Seq.empty[(Long, Int, Double)].toDF("docId", "tf", "dl")
-    val dfs = meta.dfs
-    val st = stats
-    val scorerB = scorer
-    val slopB = slop
-    val prows = pruneShards(postingRows(qTerms).toDF(), shards)
-      .as[PostingRow].groupByKey(_.shard)
-    val dls = pruneShards(dlWithShard, shards)
-      .select(col("docId"), col("dl"), col("shard"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._3)
-    val matched = prows.cogroup(dls) {
-      (_: Long, ps: Iterator[PostingRow], ds: Iterator[(Long, Double, Long)]) =>
-        val rows = ps.toArray
-        // one row per (term, shard) is a merge-path invariant, and this
-        // toMap would SILENTLY keep one of the duplicates (undercounting
-        // phrase tf on e.g. an un-merged union of segment partials) —
-        // fail loudly instead, like topKWand which keeps duplicates as
-        // separate iterators
-        require(rows.iterator.map(_.term).toSet.size == rows.length,
-          "duplicate posting rows for one (term, shard) — phrase search " +
-            "requires merged postings (one row per term per shard)")
-        val iterOf = rows.map { r =>
-          r.term -> new TermIterator(r.term, dfs(r.term).toDouble, 0.0,
-            scorerB, st, new PostingsCodec.BlobView(r.blob))
-        }.toMap
-        if (iterOf.size < slots.distinct.length) Iterator.empty
-        else {
-          val dlMap = new scala.collection.mutable.LongMap[Double]()
-          ds.foreach { case (d, dl, _) => dlMap.update(d, dl) }
-          // docs absent from the live dl side (tombstoned) are dropped
-          // BEFORE the phrase-df count, so phrase idf reflects live
-          // matches only
-          Wand.phraseMatches(slots, iterOf, slopB)
-            .collect { case (d, tf) if dlMap.contains(d) => (d, tf, dlMap(d)) }
-        }
-    }.toDF("docId", "tf", "dl")
-      // eager materialization: the cogroup runs ONCE for both the df
-      // count and the scoring plan; not pinned in the CacheManager
-      .localCheckpoint()
-    matched
-  }
-
-  /** Exhaustive phrase path (corpus-wide positional explode + equi-join
-    * on (docId, start)) — retained as the cross-validation oracle for
-    * the pruned path; do not use at scale. */
-  def phraseTopKExhaustive(terms: Seq[String], k: Int, scorer: Scorer = BM25(),
-      slop: Int = 0): DataFrame = {
-    require(terms.nonEmpty && slop >= 0)
-    val m = matchesWithPositions(terms.distinct).toDF()
-    // explode positions per term
-    def posDf(t: String, i: Int): DataFrame =
-      m.where(col("term") === t)
-        .select(col("docId"), explode(col("positions")).as("p"))
-        .select(col("docId"), (col("p") - lit(i)).as("start"))
-    val starts =
-      if (slop == 0)
-        terms.zipWithIndex
-          .map { case (t, i) => posDf(t, i) }
-          .reduce((a, b) => a.join(b, Seq("docId", "start")))
-      else {
-        // sloppy: the same greedy minimal chain as Wand.phraseMatches,
-        // as a relational fold — each step joins slot j's positions
-        // strictly above prev and keeps min(p) per (docId, start), so
-        // the fold carries the minimal chain end; the window filter at
-        // the end is then exact ("some chain fits" ⇔ "greedy fits").
-        def posRaw(t: String): DataFrame =
-          m.where(col("term") === t)
-            .select(col("docId"), explode(col("positions")).as("p"))
-        val init = posRaw(terms.head)
-          .select(col("docId"), col("p").as("start"), col("p").as("prev"))
-        val chained = terms.drop(1).foldLeft(init) { (acc, t) =>
-          acc.join(posRaw(t), Seq("docId"))
-            .where(col("p") > col("prev"))
-            .groupBy("docId", "start").agg(min(col("p")).as("prev"))
-        }
-        chained
-          .where(col("prev") - col("start") <= lit(terms.length - 1 + slop))
-          .select("docId", "start")
-      }
-    // localCheckpoint (eager): the positions join runs ONCE, its result
-    // is materialized for both the df count and the scoring plan, and —
-    // unlike cache() — it is NOT pinned in the session CacheManager, so
-    // the blocks free once this query's DataFrames are unreferenced.
-    // The live dl join comes BEFORE the phrase-df count so tombstoned
-    // docs don't inflate df — same contract as the pruned path (which
-    // filters inside the cogroup before counting).
-    val phraseTf = starts.groupBy("docId").agg(count(lit(1)).as("tf"))
-      .join(dlLookup(collectMeta(terms.distinct)), Seq("docId"))
-      .localCheckpoint()
-    val df = phraseTf.count().toDouble // LIVE docs containing the phrase
-    val withDl = phraseTf
-      .withColumn("score", scorer.contributionCol(
-        col("tf").cast("double"), lit(df), col("dl"), stats))
-    withDl.orderBy(desc("score"), asc("docId")).limit(k)
-      .select("docId", "score")
   }
 
   /** Field-sorted top-k (reference C5, HBaseTopFieldCollector): match
@@ -1441,7 +1167,8 @@ final class Searcher(
   /** Boolean query whose clauses mix terms and phrases (Lucene
     * BooleanQuery with PhraseQuery sub-clauses): per-clause
     * contribution rows — term clauses from the postings join, each
-    * phrase clause from the PRUNED positional path (`phraseMatchRows`;
+    * phrase clause from the PRUNED positional path
+    * (`multiPhraseMatchRows` with singleton slots;
     * positions never explode corpus-wide) scored against the phrase's
     * own live df like `phraseTopK` — unioned and folded per doc in a
     * fixed clause order. MUST semantics count matched MUST clauses
@@ -1496,7 +1223,7 @@ final class Searcher(
     // df = live docs containing the phrase (same contract as phraseTopK)
     val phraseRows: Seq[(DataFrame, Double)] = phrases.zipWithIndex.map {
       case ((pc, isMust), i) =>
-        val m = phraseMatchRows(pc.slots, sc, pc.slop)
+        val m = multiPhraseMatchRows(pc.slots.map(Seq(_)), sc, pc.slop)
         val pdf = m.count().toDouble
         (m.select(
           lit(s"p:$i").as("clause"),
@@ -1541,7 +1268,8 @@ final class Searcher(
     val notDfs =
       (if (pq.mustNot.nonEmpty)
         Seq(matches(pq.mustNot.distinct).toDF().select("docId")) else Nil) ++
-        pq.notPhrases.map(p => phraseMatchRows(p.slots, sc, p.slop).select("docId"))
+        pq.notPhrases.map(p =>
+          multiPhraseMatchRows(p.slots.map(Seq(_)), sc, p.slop).select("docId"))
     if (notDfs.isEmpty) scored
     else scored.join(notDfs.reduce(_ union _).distinct(), Seq("docId"), "left_anti")
   }

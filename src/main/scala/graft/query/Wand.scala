@@ -442,21 +442,38 @@ object Wand {
     drain()
   }
 
-  /** Pruned MULTI-phrase matching over one shard (Lucene
-    * MultiPhraseQuery: each slot holds one or more alternative terms;
-    * a slot matches where ANY of its alternatives occurs). Doc-level:
-    * a leapfrog where slot j's virtual cursor is min over its
-    * alternatives' curDoc — the candidate is the smallest doc every
-    * slot can reach (OR within a slot, AND across slots). Positions of
-    * a slot at the candidate = ascending merge of its matching
-    * alternatives' position lists, then the same exact-intersection /
-    * greedy-chain verification as `phraseMatches`.
+  /** Pruned phrase matching over one shard — the one phrase kernel
+    * (Lucene MultiPhraseQuery: each slot holds one or more alternative
+    * terms and matches where ANY of them occurs; a plain PhraseQuery is
+    * the singleton-slot case). Doc-level: a LEAPFROG where slot j's
+    * virtual cursor is min over its alternatives' curDoc — the
+    * candidate is the smallest doc every slot can reach (OR within a
+    * slot, AND across slots), block-skipping on maxDoc metadata like
+    * the conjunctive WAND mode. Positional verification runs ONLY for
+    * candidates: positions decode lazily per block
+    * (TermIterator.curPositions), so a common term co-occurring with a
+    * rare one pays docId-level block headers, not a corpus-wide
+    * positional explode. Positions of a slot at the candidate =
+    * ascending merge of its matching alternatives' position lists.
     *
-    * @param slotAlts per-slot alternative terms, in phrase order;
-    *   alternatives absent from this shard's iterator map are dropped
-    *   (a slot with NO present alternative matches nothing here —
-    *   callers prune such shards).
-    * @return (docId, tf = matching start positions), docId ascending.
+    * @param slotAlts per-slot alternative terms, in phrase order
+    *   (repeated slots allowed: "a b a"); alternatives absent from this
+    *   shard's iterator map are dropped (a slot with NO present
+    *   alternative matches nothing here — callers prune such shards).
+    * @param iterOf distinct term → its iterator.
+    * @param slop Lucene `"..."~N`: a start position p₀ of slot 0
+    *   matches when an IN-ORDER chain p₀ < p₁ < … < p_{k−1} exists
+    *   (slot j matching at p_j) with span p_{k−1} − p₀ ≤ (k−1) + slop.
+    *   slop 0 forces every gap to exactly 1 — identical to exact mode
+    *   (start = ∩_j (positions of slot j − j); asserted in tests).
+    *   Verified per start by a GREEDY minimal chain (each slot takes
+    *   its smallest position > prev, by binary search): the greedy
+    *   chain minimizes the final position, so "some chain fits the
+    *   window" ⇔ "the greedy chain does".
+    * @return (docId, phrase tf = number of matching start positions),
+    *   docId ascending. Identical contract to the exhaustive
+    *   explode-join (positions strictly increasing per doc, so start
+    *   counts match).
     */
   def multiPhraseMatches(
       slotAlts: Seq[Seq[String]],
@@ -561,20 +578,6 @@ object Wand {
     }
     r
   }
-
-  /** Unordered proximity (NEAR/w — Lucene SpanNearQuery with
-    * inOrder=false over two terms): per doc where BOTH terms occur,
-    * tf = number of positions of term A with SOME position of term B
-    * within |Δ| ≤ window (direction-free). Two-pointer over the two
-    * ascending position arrays — O(|A| + |B|) per doc. Iterators
-    * leapfrog on docId with block skipping like the phrase path;
-    * positions decode lazily only for docs where both terms aligned.
-    * @return (docId, tf), docId ascending. */
-  def nearMatches(
-      itA: TermIterator,
-      itB: TermIterator,
-      window: Int): Iterator[(Long, Int)] =
-    nearAllMatches(itA, Array(itB), window)
 
   /** N-ary anchored proximity: per doc where the anchor AND every
     * other term occur, tf = anchor positions p such that EACH other
@@ -708,7 +711,7 @@ object Wand {
       }
       math.max(nStarts, 0)
     } else {
-      // greedy minimal chain per start (see phraseMatches scaladoc)
+      // greedy minimal chain per start (see multiPhraseMatches scaladoc)
       val p0s = posPerSlot(0)
       var tf = 0
       var a = 0
@@ -732,70 +735,4 @@ object Wand {
       }
       tf
     }
-
-  /** Pruned phrase matching over one shard: docId LEAPFROG intersection
-    * of the distinct query terms (block-skip on maxDoc metadata, like
-    * the conjunctive WAND mode), then positional verification ONLY for
-    * docs where every term aligned — positions decode lazily per block
-    * (TermIterator.curPositions), so a common term co-occurring with a
-    * rare one pays docId-level block headers, not a corpus-wide
-    * positional explode.
-    *
-    * @param slots the phrase's term sequence IN ORDER (duplicates
-    *   allowed: "a b a"); slot j requires its term at position start+j
-    *   (exact mode) or at strictly increasing positions within the
-    *   slop window (sloppy mode).
-    * @param iterOf distinct term → its iterator (all terms must be
-    *   present — callers prune shards missing any term).
-    * @param slop Lucene `"..."~N`: a start position p₀ of slot 0
-    *   matches when an IN-ORDER chain p₀ < p₁ < … < p_{k−1} exists
-    *   (slot j's term at p_j) with span p_{k−1} − p₀ ≤ (k−1) + slop.
-    *   slop 0 forces every gap to exactly 1 — identical to exact mode
-    *   (asserted in tests). Verified per start by a GREEDY minimal
-    *   chain (each slot takes its smallest position > prev, by binary
-    *   search): the greedy chain minimizes the final position, so
-    *   "some chain fits the window" ⇔ "the greedy chain does".
-    * @return (docId, phrase tf = number of matching start positions),
-    *   docId ascending. Identical contract to the exhaustive
-    *   explode-join (positions strictly increasing per doc, so start
-    *   counts match).
-    */
-  def phraseMatches(
-      slots: Seq[String],
-      iterOf: Map[String, TermIterator],
-      slop: Int = 0): Iterator[(Long, Int)] = {
-    val its: Array[TermIterator] = slots.distinct.map(iterOf).toArray
-    val slotIters: Array[TermIterator] = slots.map(iterOf).toArray
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-    var done = its.isEmpty
-    while (!done) {
-      var maxDoc = Long.MinValue
-      var minDoc = Long.MaxValue
-      var i = 0
-      while (i < its.length) {
-        val d = its(i).curDoc
-        if (d > maxDoc) maxDoc = d
-        if (d < minDoc) minDoc = d
-        i += 1
-      }
-      if (maxDoc == Long.MaxValue) done = true // some term exhausted
-      else if (minDoc == maxDoc) {
-        // all terms contain maxDoc — positional verification (exact
-        // intersection or greedy sloppy chain, shared with the
-        // multi-phrase path)
-        val tf = countStarts(slotIters.map(_.curPositions),
-          slots.length - 1 + slop, slop)
-        if (tf > 0) out += ((maxDoc, tf))
-        i = 0
-        while (i < its.length) { its(i).next(); i += 1 }
-      } else {
-        i = 0
-        while (i < its.length) {
-          if (its(i).curDoc < maxDoc) its(i).advanceTo(maxDoc)
-          i += 1
-        }
-      }
-    }
-    out.iterator
-  }
 }

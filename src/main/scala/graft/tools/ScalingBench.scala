@@ -232,14 +232,12 @@ object ScalingBench {
           must = Seq("public")).collect()),
         // full parser dispatch (classic syntax → ReqOpt + exclusion)
         "qstring_mixed" -> (() => s.search("+id999 public import -x7", 10).collect()),
-        // phrase: pruned positional path vs the exhaustive explode-join
-        // on the same phrases — "public class" opens every java/scala
-        // doc (common-common), "return x5" pairs a corpus-wide term
-        // with a 1-in-13 tail marker (common+rare, the pruning case)
+        // phrase: pruned positional path — "public class" opens every
+        // java/scala doc (common-common), "return x5" pairs a
+        // corpus-wide term with a 1-in-13 tail marker (common+rare, the
+        // pruning case)
         "phrase_sel" -> (() => s.phraseTopK(Seq("return", "x5"), 10).collect()),
         "phrase_skew" -> (() => s.phraseTopK(Seq("public", "class"), 10).collect()),
-        "phrase_exh_sel" -> (() => s.phraseTopKExhaustive(Seq("return", "x5"), 10).collect()),
-        "phrase_exh_skew" -> (() => s.phraseTopKExhaustive(Seq("public", "class"), 10).collect()),
         // round-5 family: sloppy window on both phrase shapes, slot
         // alternatives over the two commonest keywords, a common-term
         // phrase whose FINAL slot is a 111-term dictionary prefix

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.{Deletes, IndexBuilder, IndexConfig}
 import graft.codec.PostingsCodec
-import graft.query.{BM25, LegacyTfIdf, Searcher}
+import graft.query.{BM25, ExhaustiveOracle, LegacyTfIdf, Searcher}
 
 /** Document deletion (round-5 gate; reference intent:
   * HBaseIndexReader.java:115-132 deleteDocument/undeleteAll stubs).
@@ -90,7 +90,7 @@ class DeleteSpec extends AnyFunSuite {
       // phrase df counts live matches in both paths (score equality
       // would break if either counted tombstoned matches)
       for (p <- Seq(Seq("alpha", "beta"), Seq("omega", "alpha"))) {
-        val ex = s1.phraseTopKExhaustive(p, 50).collect()
+        val ex = ExhaustiveOracle.multiPhraseTopK(idx, p.map(Seq(_)), 50).collect()
           .map(r => (r.getLong(0), r.getDouble(1)))
         val pr = s1.phraseTopK(p, 50).collect()
           .map(r => (r.getLong(0), r.getDouble(1)))

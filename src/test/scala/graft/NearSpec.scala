@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.{IndexBuilder, IndexConfig}
-import graft.query.Searcher
+import graft.query.{ExhaustiveOracle, Searcher}
 
 /** Unordered proximity NEAR/w (Lucene SpanNearQuery inOrder=false over
   * two terms): hand-computed micro-cases pin direction-free window
@@ -65,7 +65,7 @@ class NearSpec extends AnyFunSuite {
       val idx = index(corpus, shardSize)
       val s = new Searcher(spark, idx)
       val pr = hits(s.nearTopK(a, b, w, 200))
-      val ex = hits(s.nearTopKExhaustive(a, b, w, 200))
+      val ex = hits(ExhaustiveOracle.nearAllTopK(idx, a, Seq(b), w, 200))
       assert(pr.nonEmpty, s"window=$w produced no matches — test is vacuous")
       assert(pr.map(_._1) === ex.map(_._1), s"shard=$shardSize w=$w $a/$b")
       pr.zip(ex).foreach { case (x, y) =>
@@ -109,7 +109,7 @@ class NearSpec extends AnyFunSuite {
       val idx = index(corpus, shardSize)
       val s = new Searcher(spark, idx)
       val pr = hits(s.spanNotTopK("alpha", "kappa", 200, pre, post))
-      val ex = hits(s.spanNotTopKExhaustive("alpha", "kappa", 200, pre, post))
+      val ex = hits(ExhaustiveOracle.spanNotTopK(idx, "alpha", "kappa", 200, pre, post))
       assert(pr.nonEmpty, s"pre=$pre post=$post no matches — vacuous")
       assert(pr.map(_._1) === ex.map(_._1), s"shard=$shardSize pre=$pre post=$post")
       pr.zip(ex).foreach { case (x, y) =>
@@ -143,7 +143,7 @@ class NearSpec extends AnyFunSuite {
       val idx = index(corpus, shardSize)
       val s = new Searcher(spark, idx)
       val pr = hits(s.nearAllTopK("alpha", Seq("beta", "gamma"), w, 200))
-      val ex = hits(s.nearAllTopKExhaustive("alpha", Seq("beta", "gamma"), w, 200))
+      val ex = hits(ExhaustiveOracle.nearAllTopK(idx, "alpha", Seq("beta", "gamma"), w, 200))
       assert(pr.nonEmpty, s"w=$w no matches — vacuous")
       assert(pr.map(_._1) === ex.map(_._1), s"shard=$shardSize w=$w")
       pr.zip(ex).foreach { case (x, y) =>

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.build.{IndexBuilder, IndexConfig}
 import graft.codec.PostingsCodec
 import graft.model.{CodeDoc, CorpusStats, Posting}
-import graft.query.{BM25, Searcher, TermIterator, Wand}
+import graft.query.{BM25, ExhaustiveOracle, Searcher, TermIterator, Wand}
 
 /** Round-4 gates: pruned positional phrase path (rank identity vs the
   * exhaustive explode-join + lazy-positions skip observable) and the
@@ -42,7 +42,7 @@ class Round4Spec extends AnyFunSuite {
         Seq("alpha", "zzz_missing"))
       for (p <- phrases; k <- Seq(1, 5, 20)) {
         val tag = s"seed=$seed shard=$shardSize phrase=$p k=$k"
-        val ex = s.phraseTopKExhaustive(p, k).collect()
+        val ex = ExhaustiveOracle.multiPhraseTopK(idx, p.map(Seq(_)), k).collect()
           .map(r => (r.getLong(0), r.getDouble(1)))
         val pr = s.phraseTopK(p, k).collect()
           .map(r => (r.getLong(0), r.getDouble(1)))
@@ -70,7 +70,7 @@ class Round4Spec extends AnyFunSuite {
       new PostingsCodec.BlobView(PostingsCodec.encodePostingsBlob(ps)))
     val ci = iter(common.toIndexedSeq, "common")
     val ri = iter(rare, "rare")
-    val hits = Wand.phraseMatches(Seq("common", "rare"),
+    val hits = Wand.multiPhraseMatches(Seq(Seq("common"), Seq("rare")),
       Map("common" -> ci, "rare" -> ri)).toSeq
     assert(hits.map(_._1) === rareDocs) // common@1, rare@2 consecutive
     val totalBlocks = (nDocs + PostingsCodec.BlockSize - 1) / PostingsCodec.BlockSize
@@ -88,29 +88,57 @@ class Round4Spec extends AnyFunSuite {
       IndexConfig(shardSizeDocs = 64)).cache()
     idx.postings.count(); idx.docs.count(); idx.stats // warm + force lazy stats
     val s = new Searcher(spark, idx)
-    s.topKWand(Seq("alpha", "rare1"), 5).collect() // warm codegen paths
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val dels = Seq(3L, 70L, 140L).toDF("docId")
+    // (shape, max jobs, run): each cap is the count measured before the
+    // pruned query paths shared one shard cogroup; the small-set delete
+    // apply is one action below that measurement (one bounded collect
+    // replaced a count followed by a collect)
+    val pins: Seq[(String, Int, () => Unit)] = Seq(
+      ("topKWand", 2, () => s.topKWand(Seq("alpha", "rare2"), 5).collect()),
+      ("phraseTopK", 4, () => s.phraseTopK(Seq("alpha", "beta"), 5).collect()),
+      ("multiPhraseTopK", 4, () =>
+        s.multiPhraseTopK(Seq(Seq("alpha"), Seq("beta", "gamma")), 5).collect()),
+      ("nearTopK", 4, () => s.nearTopK("alpha", "beta", 3, 5).collect()),
+      ("spanNotTopK", 4, () => s.spanNotTopK("alpha", "beta", 5, 1, 1).collect()),
+      ("dismaxTopK", 2, () => s.dismaxTopK(Seq("alpha", "beta"), 5, 0.3).collect()),
+      ("Deletes.appliedWith small set", 1, () =>
+        graft.build.Deletes.appliedWith(spark, idx, dels)))
+    pins.foreach(_._3()) // warm codegen paths
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g != null) jobs.merge(g, 1, (a, b) => a + b)
+        ()
       }
     }
     // AQE submits each shuffle-stage materialization as its own job
     // inside the ONE main query — those are not extra driver actions.
     // Disable it here so the job count equals the action count being
-    // asserted: 1 metadata collect + 1 main query, nothing else.
+    // asserted (topKWand: 1 metadata collect + 1 main query).
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
     try {
-      s.topKWand(Seq("alpha", "rare2"), 5).collect()
-      // listener events are async — poll briefly for the bus to drain
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (System.nanoTime() < deadline && jobs.get() == 0) Thread.sleep(20)
-      Thread.sleep(200)
-      assert(jobs.get() <= 2, s"topKWand launched ${jobs.get()} jobs")
+      pins.foreach { case (name, _, run) =>
+        sc.setJobGroup(name, name)
+        run()
+      }
+      // the bus delivers in order: once the marker job's start arrived,
+      // every earlier job start has too
+      sc.setJobGroup("marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (System.nanoTime() < deadline && !jobs.containsKey("marker")) Thread.sleep(20)
+      assert(jobs.containsKey("marker"), "listener bus did not drain")
+      pins.foreach { case (name, cap, _) =>
+        val n = Option(jobs.get(name)).map(_.intValue).getOrElse(0)
+        assert(n <= cap, s"$name launched $n jobs (cap $cap)")
+      }
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     }
     idx.unpersist()

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.{IndexBuilder, IndexConfig}
-import graft.query.{PhraseClause, QueryParser, Searcher}
+import graft.query.{ExhaustiveOracle, PhraseClause, QueryParser, Searcher}
 
 /** Sloppy phrase (`"a b"~N`) and BooleanQuery minimumShouldMatch:
   * hand-computed micro-cases pin the semantics; the pruned positional
@@ -50,7 +50,7 @@ class SlopMmSpec extends AnyFunSuite {
       // phrase tf recovered from the score-free match rows via the
       // exhaustive path at k = corpus (scores positive, tf not exposed;
       // use matchesWithPositions-level truth instead: count starts)
-      s.phraseTopKExhaustive(terms, 10, slop = slop)
+      ExhaustiveOracle.multiPhraseTopK(idx, terms.map(Seq(_)), 10, slop = slop)
         .collect().map(_.getLong(0)).map(_ -> 1).toMap
     }
     assert(docs(Seq("alpha", "gamma"), 0).keySet === Set(1L))
@@ -90,7 +90,7 @@ class SlopMmSpec extends AnyFunSuite {
       val idx = index(corpus, shardSize)
       val s = new Searcher(spark, idx)
       val pr = hits(s.phraseTopK(terms, 200, slop = slop))
-      val ex = hits(s.phraseTopKExhaustive(terms, 200, slop = slop))
+      val ex = hits(ExhaustiveOracle.multiPhraseTopK(idx, terms.map(Seq(_)), 200, slop = slop))
       assert(pr.map(_._1) === ex.map(_._1),
         s"shard=$shardSize slop=$slop terms=$terms")
       pr.zip(ex).foreach { case (a, b) =>
@@ -143,7 +143,7 @@ class SlopMmSpec extends AnyFunSuite {
     // doc 4 has tf 2 (both variants start once) — it must outrank the
     // tf-1 docs despite being longer? dl penalty may flip that; pin
     // instead via the exhaustive oracle
-    val ex = hits(s.multiPhraseTopKExhaustive(Seq(Seq("alpha"), Seq("beta", "gamma")), 10))
+    val ex = hits(ExhaustiveOracle.multiPhraseTopK(idx, Seq(Seq("alpha"), Seq("beta", "gamma")), 10))
     assert(mp === ex)
     // slop widens across alternatives too: doc 2 "alpha delta x7" with
     // alternative set {beta, gamma, x7} at slop 1 matches via x7
@@ -162,7 +162,7 @@ class SlopMmSpec extends AnyFunSuite {
       for (slop <- Seq(0, 1)) {
         val slots = Seq(Seq("alpha"), Seq("beta", "kappa"), Seq("gamma", "eps"))
         val pr = hits(s.multiPhraseTopK(slots, 200, slop = slop))
-        val ex = hits(s.multiPhraseTopKExhaustive(slots, 200, slop = slop))
+        val ex = hits(ExhaustiveOracle.multiPhraseTopK(idx, slots, 200, slop = slop))
         assert(pr.map(_._1) === ex.map(_._1), s"shard=$shardSize slop=$slop")
         pr.zip(ex).foreach { case (a, b) =>
           assert(math.abs(a._2 - b._2) <= 1e-12 * math.max(1.0, math.abs(b._2)))
@@ -297,7 +297,7 @@ class SlopMmSpec extends AnyFunSuite {
       val n = idx.stats.numDocs.toInt
       for (tb <- Seq(0.0, 0.3, 1.0)) {
         val wand = hits(s.dismaxTopK(terms, n, tb))
-        val ex = hits(s.dismaxTopKExhaustive(terms, n, tb))
+        val ex = hits(ExhaustiveOracle.dismaxTopK(idx, terms, n, tb))
         assert(wand.map(_._1) === ex.map(_._1), s"shard=$shardSize tb=$tb")
         wand.zip(ex).foreach { case (a, b) =>
           assert(math.abs(a._2 - b._2) <= 1e-12 * math.max(1.0, math.abs(b._2)))

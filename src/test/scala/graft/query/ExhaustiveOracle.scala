@@ -1,0 +1,129 @@
+package graft.query
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.build.InvertedIndex
+
+/** Test-scope cross-validation oracles for the pruned query paths:
+  * corpus-wide decode, positional explode and relational joins — no
+  * shard cogroup, no Wand kernel. Built only on the public surface
+  * (`Searcher.matchesWithPositions` / `docFreqs`, the index's docs,
+  * deletes and stats, `Scorer.contributionCol`); live dl is computed
+  * here as docs anti-joined with the tombstones, independent of the
+  * production dl side it checks. Do not use at scale. */
+object ExhaustiveOracle {
+
+  private def searcher(index: InvertedIndex) =
+    new Searcher(index.docs.sparkSession, index)
+
+  /** Live (docId, dl): every stored doc minus the tombstones. */
+  private def liveDl(index: InvertedIndex): DataFrame = {
+    val dl = index.docs.select(col("docId"), col("dl").cast("double").as("dl"))
+    index.deletes.fold(dl)(del => dl.join(del.select("docId"), Seq("docId"), "left_anti"))
+  }
+
+  /** (docId, p) — every position of the given terms, exploded. */
+  private def positions(index: InvertedIndex, terms: Seq[String]): DataFrame =
+    searcher(index).matchesWithPositions(terms.distinct).toDF()
+      .select(col("docId"), explode(col("positions")).as("p"))
+
+  /** Score (docId, tf) matches as ONE pseudo-term whose df = number of
+    * matching LIVE docs — the phrase family's contract. */
+  private def scorePseudoTerm(index: InvertedIndex, matched: DataFrame,
+      k: Int, scorer: Scorer): DataFrame = {
+    val live = matched.join(liveDl(index), Seq("docId")).localCheckpoint()
+    val df = live.count().toDouble
+    live
+      .withColumn("score", scorer.contributionCol(
+        col("tf").cast("double"), lit(df), col("dl"), index.stats))
+      .orderBy(desc("score"), asc("docId")).limit(k)
+      .select("docId", "score")
+  }
+
+  /** Multi-phrase (and, with singleton slots, plain phrase) top-k: per
+    * slot, the union of its alternatives' positions (distinct — a start
+    * must count once however many alternatives could continue it),
+    * then an equi-join on (docId, start = p − slot) when exact, or a
+    * relational greedy fold when sloppy: each step joins slot j's
+    * positions strictly above prev and keeps min(p) per (docId, start),
+    * so the fold carries the minimal chain end and the final window
+    * filter is exact ("some chain fits" ⇔ "greedy fits"). */
+  def multiPhraseTopK(index: InvertedIndex, slotAlts: Seq[Seq[String]], k: Int,
+      scorer: Scorer = BM25(), slop: Int = 0): DataFrame = {
+    require(slotAlts.nonEmpty && slotAlts.forall(_.nonEmpty) && slop >= 0)
+    val groups = slotAlts.map(_.distinct)
+    def slotPos(g: Seq[String]): DataFrame = positions(index, g).distinct()
+    val starts =
+      if (slop == 0)
+        groups.zipWithIndex.map { case (g, i) =>
+          slotPos(g).select(col("docId"), (col("p") - lit(i)).as("start"))
+        }.reduce((a, b) => a.join(b, Seq("docId", "start")))
+      else {
+        val init = slotPos(groups.head)
+          .select(col("docId"), col("p").as("start"), col("p").as("prev"))
+        groups.drop(1).foldLeft(init) { (acc, g) =>
+          acc.join(slotPos(g), Seq("docId"))
+            .where(col("p") > col("prev"))
+            .groupBy("docId", "start").agg(min(col("p")).as("prev"))
+        }
+          .where(col("prev") - col("start") <= lit(groups.length - 1 + slop))
+          .select("docId", "start")
+      }
+    scorePseudoTerm(index,
+      starts.groupBy("docId").agg(count(lit(1)).as("tf")), k, scorer)
+  }
+
+  /** Anchored n-ary NEAR top-k: one |Δpos| ≤ window semi-join per
+    * non-anchor term (each anchor occurrence counts once however many
+    * partner occurrences sit in its window). */
+  def nearAllTopK(index: InvertedIndex, anchor: String, others: Seq[String],
+      window: Int, k: Int, scorer: Scorer = BM25()): DataFrame = {
+    val rest = others.distinct
+    require(rest.nonEmpty && !rest.contains(anchor) && window >= 1)
+    val survivors = rest.foldLeft(positions(index, Seq(anchor))) { (acc, t) =>
+      acc.as("pa").join(positions(index, Seq(t)).as("pb"),
+        col("pa.docId") === col("pb.docId") &&
+          abs(col("pb.p") - col("pa.p")) <= lit(window), "left_semi")
+    }
+    scorePseudoTerm(index,
+      survivors.groupBy("docId").agg(count(lit(1)).cast("int").as("tf")), k, scorer)
+  }
+
+  /** SpanNot top-k: occurrences of `a` anti-joined against `b`
+    * positions in the window [p − pre, p + post]. */
+  def spanNotTopK(index: InvertedIndex, a: String, b: String, k: Int,
+      pre: Int = 0, post: Int = 0, scorer: Scorer = BM25()): DataFrame = {
+    require(a != b && pre >= 0 && post >= 0)
+    val matched = positions(index, Seq(a)).as("pa")
+      .join(positions(index, Seq(b)).as("pb"), col("pa.docId") === col("pb.docId") &&
+        col("pb.p") >= col("pa.p") - lit(pre) &&
+        col("pb.p") <= col("pa.p") + lit(post), "left_anti")
+      .groupBy("docId").agg(count(lit(1)).cast("int").as("tf"))
+    scorePseudoTerm(index, matched, k, scorer)
+  }
+
+  /** Dismax top-k: per-(term, doc) contributions in a fixed term-order
+    * fold, then max + tieBreaker · (sum − max) per doc. */
+  def dismaxTopK(index: InvertedIndex, terms: Seq[String], k: Int,
+      tieBreaker: Double = 0.0, scorer: Scorer = BM25()): DataFrame = {
+    require(tieBreaker >= 0.0 && tieBreaker <= 1.0)
+    val qTerms = terms.distinct.sorted
+    val s = searcher(index)
+    val dfLookup = typedlit(s.docFreqs(qTerms).map { case (t, d) => t -> d.toDouble })
+    s.matchesWithPositions(qTerms).toDF()
+      .join(liveDl(index), Seq("docId"))
+      .withColumn("tscore", scorer.contributionCol(col("tf").cast("double"),
+        element_at(dfLookup, col("term")), col("dl"), index.stats))
+      .groupBy("docId")
+      .agg(sort_array(collect_list(struct(col("term"), col("tscore")))).as("cs"))
+      .withColumn("sm",
+        aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("tscore")))
+      .withColumn("mx",
+        aggregate(col("cs"), lit(Double.MinValue),
+          (acc, x) => greatest(acc, x.getField("tscore"))))
+      .withColumn("score", col("mx") + lit(tieBreaker) * (col("sm") - col("mx")))
+      .orderBy(desc("score"), asc("docId")).limit(k)
+      .select("docId", "score")
+  }
+}
