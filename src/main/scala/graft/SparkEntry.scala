@@ -33,7 +33,7 @@ object SparkEntry {
     "bm25_single" -> ((s, d) => E.bm25Single(s, d)),
     "bm25_or" -> ((s, d) => E.bm25Or(s, d)),
     "bm25_and" -> ((s, d) => E.bm25And(s, d)),
-    "bm25_wand" -> ((s, d) => E.bm25Wand(s, d)),
+    "bm25_wand" -> ((s, d) => E.bm25Or(s, d)), // frozen name; the same topK plan
     "bm25_not" -> ((s, d) => E.bm25Not(s, d)),
     "bm25_reqopt" -> ((s, d) => E.bm25ReqOpt(s, d)),
     "prefix_topk" -> ((s, d) => E.prefixTopK(s, d)),

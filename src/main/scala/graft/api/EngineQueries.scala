@@ -94,9 +94,6 @@ object EngineQueries {
   def bm25And(s: SparkSession, dir: String): DataFrame =
     asTopK(searcher(s, dir).topK(Seq("spark", "merge"), 10, BM25(), requireAll = true))
 
-  def bm25Wand(s: SparkSession, dir: String): DataFrame =
-    asTopK(searcher(s, dir).topKWand(Seq("spark", "merge", "window"), 10))
-
   def tfidfLegacy(s: SparkSession, dir: String): DataFrame =
     asTopK(searcher(s, dir).topK(Seq("dup"), 10, LegacyTfIdf))
 
@@ -127,7 +124,7 @@ object EngineQueries {
     * setMinimumNumberShouldMatch): docs matching at least 2 of the 3
     * terms, scored over their matched terms only. */
   def bm25MinShould(s: SparkSession, dir: String): DataFrame =
-    asTopK(searcher(s, dir).topKWand(Seq("spark", "merge", "window"), 10,
+    asTopK(searcher(s, dir).topK(Seq("spark", "merge", "window"), 10,
       minShouldMatch = 2))
 
   /** Classic-syntax multi-term MUST clause `+s* dup`: the s-prefixed
@@ -154,7 +151,7 @@ object EngineQueries {
     * BooleanQuery): 'merge' weighted 3x on the WAND path - the boost
     * scales contributions AND the pruning bounds. */
   def bm25Boosted(s: SparkSession, dir: String): DataFrame =
-    asTopK(searcher(s, dir).topKWand(Seq("spark", "merge"), 10,
+    asTopK(searcher(s, dir).topK(Seq("spark", "merge"), 10,
       boosts = Map("merge" -> 3.0)))
 
   /** Span-first (Lucene SpanFirstQuery): 'spark' within the first 5
@@ -265,7 +262,7 @@ object EngineQueries {
     * excluded term's postings ride the cogroup as exclusion-only
     * iterators. */
   def bm25Not(s: SparkSession, dir: String): DataFrame =
-    asTopK(searcher(s, dir).topKWand(Seq("spark", "merge"), 10,
+    asTopK(searcher(s, dir).topK(Seq("spark", "merge"), 10,
       mustNot = Seq("window")))
 
   /** Mixed MUST + SHOULD (Lucene ReqOptSumScorer, the `+spark merge
@@ -273,7 +270,7 @@ object EngineQueries {
     * and `window` add score when present. The WAND kernel leapfrogs
     * the required term and treats the rest as score-only optionals. */
   def bm25ReqOpt(s: SparkSession, dir: String): DataFrame =
-    asTopK(searcher(s, dir).topKWand(Seq("merge", "window"), 10,
+    asTopK(searcher(s, dir).topK(Seq("merge", "window"), 10,
       must = Seq("spark")))
 
   /** Classic query-string surface end-to-end through SQL: the TVF's
@@ -299,7 +296,7 @@ object EngineQueries {
     * the content). */
   def snippetTopK(s: SparkSession, dir: String): DataFrame = {
     val sr = searcher(s, dir)
-    sr.snippets(sr.topKWand(Seq("spark", "merge"), 5), Seq("spark", "merge"))
+    sr.snippets(sr.topK(Seq("spark", "merge"), 5), Seq("spark", "merge"))
       .select(col("docId").cast("long").as("doc_id"),
         round(col("score"), 4).as("score"), col("nMatches").as("n_matches"),
         col("snippet"))
@@ -346,13 +343,12 @@ object EngineQueries {
     asTopK(new Searcher(s, index(s, dir).withDeletes(deleteSet(s, dir)))
       .topK(Seq("spark"), 10))
 
-  /** Same tombstone semantics through the block-max WAND path — the
-    * per-shard cogroup skips docs absent from the live dl side; must
-    * be rank/score-identical to the exhaustive tombstone path (same
-    * oracle shape over the OR query set). */
+  /** Same tombstone semantics over the OR query set — the per-shard
+    * WAND cogroup skips docs absent from the live dl side (same oracle
+    * shape as bm25Tombstone). */
   def bm25WandTombstone(s: SparkSession, dir: String): DataFrame =
     asTopK(new Searcher(s, index(s, dir).withDeletes(deleteSet(s, dir)))
-      .topKWand(Seq("spark", "merge", "window"), 10))
+      .topK(Seq("spark", "merge", "window"), 10))
 
   /** PHYSICAL apply (the compaction path, Deletes.applied): postings
     * and docs rewritten without the deleted docs, df/cf/N/avgdl all
@@ -481,7 +477,7 @@ object EngineQueries {
 
   /** The SQL table-function surface: `SELECT * FROM match_query(root,
     * text, k)` over a PERSISTED index snapshot. Rank-identical to
-    * `bm25Wand` by construction (the TVF substitutes the same WAND
+    * `bm25Or` by construction (the TVF substitutes the same WAND
     * plan), but exercises the full persist → load → SQL path. */
   def matchSql(s: SparkSession, dir: String): DataFrame = {
     val root = ensureSqlRoot(s, dir)
@@ -506,7 +502,7 @@ object EngineQueries {
     * lexical recall = WAND top-M, semantic re-weighting over those M
     * candidates only. Here M = corpus size, which makes WAND return
     * EVERY matched doc with its exact score (identity with the
-    * exhaustive generator is also asserted in Round5Spec), so the
+    * all-hits scorer `scoredDocs` is also asserted in Round5Spec), so the
     * DuckDB oracle — which blends over all matches — stays exact. At
     * scale M is the recall knob (hybridTopKWand's default 10·k): a
     * doc outside the lexical top-M can only enter the blended top-k
@@ -524,7 +520,7 @@ object EngineQueries {
       m: Int = 0): DataFrame = {
     val mEff = if (m > 0) m else 10 * k
     val emb = TextPipeline.embeddings(s, dir)
-    val cand = searcher(s, dir).topKWand(terms, mEff)
+    val cand = searcher(s, dir).topK(terms, mEff)
     asTopK(TextPipeline.hybridTopK(
       cand, emb, TextPipeline.queryVec(emb, 0L), alpha = 0.5, k = k))
   }

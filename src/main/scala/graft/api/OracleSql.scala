@@ -168,7 +168,7 @@ WHERE term IN ('spark', 'merge', 'window', 'dup') GROUP BY 1"""),
     "bm25_single" -> bm25TopK(Seq("spark"), 10, requireAll = false),
     "bm25_or" -> bm25TopK(Seq("spark", "merge", "window"), 10, requireAll = false),
     "bm25_and" -> bm25TopK(Seq("spark", "merge"), 10, requireAll = true),
-    // WAND must be rank-identical to the exhaustive plan → same oracle
+    // bm25_or and bm25_wand run the same topK plan → same oracle
     "bm25_wand" -> bm25TopK(Seq("spark", "merge", "window"), 10, requireAll = false),
     "bm25_not" -> bm25TopK(Seq("spark", "merge"), 10, requireAll = false,
       mustNot = Seq("window")),
@@ -215,7 +215,7 @@ ORDER BY s DESC, doc_id LIMIT 10"""),
     "range_topk" -> expansionTopK("term >= 'h' AND term < 'k'", 10),
     "fuzzy_topk" -> expansionTopK("levenshtein(term, 'bag') <= 2", 10),
     // the SQL TVF surface substitutes the SAME analyzed WAND plan →
-    // rank-identical to the exhaustive oracle by construction
+    // rank-identical to bm25_or by construction
     "match_sql" -> bm25TopK(Seq("spark", "merge", "window"), 10, requireAll = false),
     // the TVF's phrase mode substitutes the pruned positional plan →
     // same oracle as phrase_bm25 (identical phrase, via SQL)
@@ -229,8 +229,7 @@ SELECT doc_id, round(s, 4) AS score FROM scored
 WHERE doc_id % 7 <> 3
 ORDER BY s DESC, doc_id LIMIT 10"""),
 
-    // same tombstone contract through the WAND path (OR query set) —
-    // rank/score-identical to the exhaustive tombstone plan
+    // same tombstone contract over the OR query set
     "bm25_wand_tombstone" -> (TOK + bm25Scored(Seq("spark", "merge", "window")) + """
 SELECT doc_id, round(s, 4) AS score FROM scored
 WHERE doc_id % 7 <> 3

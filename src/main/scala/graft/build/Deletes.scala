@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.PostingsCodec
-import graft.model.CorpusStats
 
 /** Physical delete application — turns an index's TOMBSTONES
   * (InvertedIndex.deletes, read-time anti-join) into a rewritten
@@ -135,13 +134,6 @@ object Deletes {
       }.toDF("field", "term", "shard", "df", "cf", "maxTf", "blob")
     }
 
-    val newTermStats = newPostings.groupBy("field", "term").agg(
-      sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
-
-    InvertedIndex.lazyStats(liveDocs, newPostings, newTermStats, () => {
-      val r = liveDocs.agg(
-        count(lit(1)), avg(col("dl").cast("double"))).collect()(0)
-      CorpusStats(r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
-    }, idx.config)
+    InvertedIndex.derived(liveDocs, newPostings, idx.config)
   }
 }

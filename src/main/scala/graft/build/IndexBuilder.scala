@@ -105,9 +105,32 @@ object InvertedIndex {
   def apply(docs: DataFrame, postings: DataFrame, termStats: DataFrame,
       stats: CorpusStats, config: IndexConfig): InvertedIndex =
     new InvertedIndex(docs, postings, termStats, () => stats, config)
-  def lazyStats(docs: DataFrame, postings: DataFrame, termStats: DataFrame,
-      statsThunk: () => CorpusStats, config: IndexConfig): InvertedIndex =
-    new InvertedIndex(docs, postings, termStats, statsThunk, config)
+
+  /** An index whose dictionary and corpus stats derive from its own
+    * tables: termStats from the postings (`termStatsOf`), corpus stats
+    * lazily on first query from the docs' dl column (`corpusStatsOf`)
+    * — no extra pass over the corpus at build time. */
+  def derived(docs: DataFrame, postings: DataFrame, config: IndexConfig): InvertedIndex =
+    new InvertedIndex(docs, postings, termStatsOf(postings), () => corpusStatsOf(docs), config)
+
+  /** Global dictionary stats — per-shard posting rows merged by a light
+    * aggregation (no payload movement; ≙ reference docFreq,
+    * HBaseIndexReader.java:135-155). */
+  def termStatsOf(postings: DataFrame): DataFrame =
+    postings.groupBy("field", "term").agg(
+      sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
+
+  /** The corpus stats aggregates over a docs table, `n` and `avgdl`
+    * (reference counter rows, HBaseIndexReader.java:231-266) — from the
+    * dl column only, so a scan or a write job can compute them. */
+  def corpusStatsCols: Seq[org.apache.spark.sql.Column] =
+    Seq(count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
+
+  /** (N, avgdl) of a docs table; an empty table has avgdl 0. */
+  def corpusStatsOf(docs: DataFrame): CorpusStats = {
+    val r = docs.agg(corpusStatsCols.head, corpusStatsCols.tail: _*).collect()(0)
+    CorpusStats(r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
+  }
 }
 
 /** Index build DAG (SURVEY.md §3.1 "Spark shape"):
@@ -892,20 +915,6 @@ object IndexBuilder {
       segmentPartials(spark, slim, tokenized, untokenized, shardSize,
         cfg.analyzer), cfg)
 
-    // Global dictionary stats — shards merged by a light aggregation
-    // (no payload movement; ≙ reference docFreq, HBaseIndexReader.java:135-155).
-    val termStats = postings.groupBy("field", "term").agg(
-      sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
-
-    // Corpus stats (reference counter rows, HBaseIndexReader.java:231-266)
-    // — computed lazily on first query access, from the dl column only.
-    val docsForStats = storedDocs
-    InvertedIndex.lazyStats(storedDocs, postings, termStats, () => {
-      val st = docsForStats.agg(
-        count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
-        .collect()(0)
-      CorpusStats(st.getLong(0),
-        if (st.isNullAt(1)) 0.0 else st.getDouble(1))
-    }, cfg)
+    InvertedIndex.derived(storedDocs, postings, cfg)
   }
 }

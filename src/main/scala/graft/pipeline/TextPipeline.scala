@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
@@ -306,16 +306,21 @@ object TextPipeline {
     if (t > 0 && n * bytesPerRow <= t) broadcast(df) else df
   }
 
-  /** Eager localCheckpoint with the row count observed on the
-    * checkpoint's own job — no extra action (the CC-loop pattern). */
-  private def checkpointWithCount(df: DataFrame): (DataFrame, Long) = {
+  /** Eager localCheckpoint with Row(row count, `extra` aggregates…)
+    * observed on the checkpoint's own job — no extra action (the
+    * CC-loop pattern); recomputed over the checkpoint only if the
+    * observation never arrives. */
+  private def checkpointWithCount(df: DataFrame, extra: Column*): (DataFrame, Row) = {
+    val aggs = count(lit(1)).as("n") +: extra
     val obs = org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-    val n =
+    val ck = df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint()
+    val row =
       try scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(30, "s")).getLong(0)
-      catch { case _: java.util.concurrent.TimeoutException => ck.count() }
-    (ck, n)
+        scala.concurrent.duration.Duration(30, "s"))
+      catch {
+        case _: java.util.concurrent.TimeoutException => ck.agg(aggs.head, aggs.tail: _*).head()
+      }
+    (ck, row)
   }
 
   def simhashPairs(docs: DataFrame, maxHam: Int): DataFrame = {
@@ -323,7 +328,7 @@ object TextPipeline {
     // localCheckpoint: both self-join sides read the one materialized
     // simhash result; unlike cache() it is not pinned in the session
     // CacheManager, so repeated calls don't accumulate storage
-    val (s, nDocs) = checkpointWithCount(simhash(docs))
+    val (s, Row(nDocs: Long)) = checkpointWithCount(simhash(docs))
     val banded = s.select(col("doc_id"), col("simhash"),
       posexplode(array(bandVals: _*)).as(Seq("band", "bval")))
     // small corpora broadcast the probe side (~(maxHam+1) rows × ~40 B
@@ -367,7 +372,7 @@ object TextPipeline {
     * the stars. Edge volume is linear in docs per duplicate value
     * instead of quadratic. */
   def simhashEdges(docs: DataFrame, maxHam: Int): DataFrame = {
-    val (s, nDocs) = checkpointWithCount(simhash(docs))
+    val (s, Row(nDocs: Long)) = checkpointWithCount(simhash(docs))
     // reps is NOT checkpointed: its three consumers each recompute one
     // small groupBy over the checkpointed simhash result, which costs
     // less than an extra eager materialization job (round-6 A/B; the
@@ -431,7 +436,7 @@ object TextPipeline {
     // dedupes below it) — the narrow explode doubles rows in ONE
     // evaluation; same row multiset, A/B'd faster on both pair sources
     // (union 2.8/3.8 s medians vs explode 2.1/2.5: OPTIMIZATION_r06.md §14)
-    val (edges, nEdges) = checkpointWithCount(
+    val (edges, Row(nEdges: Long)) = checkpointWithCount(
       pairsIn.select(explode(array(
           struct(col("a").as("a"), col("b").as("b")),
           struct(col("b").as("a"), col("a").as("b")))).as("e"))
@@ -817,15 +822,18 @@ object TextPipeline {
     * higher recall, more verify work). */
   def embedCosinePairs(emb: DataFrame, tau: Double, nPlanes: Int = 8): DataFrame = {
     // checkpoint once (both self-join sides read the one materialized
-    // bucket assignment) and broadcast the probe side when the vector
-    // count fits the threshold (~512 B per (id, bucket, embedding)
-    // row) — the same measured-size gate as the simhash banded joins;
-    // big embedding tables keep the bucket-shuffle join
-    // (warm 1.37-1.55 s -> 1.16-1.48, parity exact: OPTIMIZATION_r06.md §16)
-    val (withB, nVec) = checkpointWithCount(
+    // bucket assignment) and broadcast the probe side when the vectors
+    // fit the threshold — the same measured-size gate as the simhash
+    // banded joins; big embedding tables keep the bucket-shuffle join
+    // (warm 1.37-1.55 s -> 1.16-1.48, parity exact: OPTIMIZATION_r06.md §16).
+    // A (vec_id, bucket, embedding) row is 24 + 4·dim bytes (two longs,
+    // the array header, dim floats); count and widest dim are observed
+    // on the checkpoint's own job
+    val (withB, Row(nVec: Long, dim: Int)) = checkpointWithCount(
       emb.join(vectorBuckets(emb, nPlanes), "vec_id")
-        .select("vec_id", "bucket", "embedding"))
-    val pairs = withB.as("x").join(bcastIfFits(withB.as("y"), nVec, 512L),
+        .select("vec_id", "bucket", "embedding"),
+      coalesce(max(size(col("embedding"))), lit(0)).as("dim"))
+    val pairs = withB.as("x").join(bcastIfFits(withB.as("y"), nVec, 24L + 4L * dim),
       col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
     val dot = aggregate(
       zip_with(col("x.embedding"), col("y.embedding"),

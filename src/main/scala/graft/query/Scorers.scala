@@ -27,10 +27,6 @@ sealed trait Scorer extends Serializable {
   def upperBound(maxTf: Double, df: Double, stats: CorpusStats): Double
   /** Doc-level final factor given matched-term count (coord etc.). */
   def docFactor(nMatched: Int, queryDfs: Seq[Double], stats: CorpusStats): Double
-  /** True when docFactor ≡ 1.0 for every input — lets the exhaustive
-    * scoring plan skip the factor multiplication entirely (no UDF, no
-    * extra expression) without changing any score bit. */
-  def docFactorIdentity: Boolean = false
   /** docFactor as a Catalyst Column over the matched-term count —
     * MUST replicate docFactor's arithmetic order exactly (bit-for-bit
     * score parity between the Column and Scala paths is asserted in
@@ -42,8 +38,8 @@ sealed trait Scorer extends Serializable {
 /** Field-boost wrapper (reference: per-field boost config,
   * hbasene create/IndexConfiguration.java:142-148): scales every
   * per-(term, doc) contribution AND the WAND upper bounds by the same
-  * positive factor, so θ-pruning stays sound and the exhaustive/WAND
-  * rank identity is preserved for any boost > 0. */
+  * positive factor, so θ-pruning stays sound and WAND stays
+  * rank-identical to the all-hits scorer for any boost > 0. */
 final case class Boosted(inner: Scorer, boost: Double) extends Scorer {
   require(boost > 0.0, s"boost must be positive, got $boost")
   override def name: String = s"${inner.name}^$boost"
@@ -55,7 +51,6 @@ final case class Boosted(inner: Scorer, boost: Double) extends Scorer {
     inner.upperBound(maxTf, df, stats) * boost
   override def docFactor(nMatched: Int, queryDfs: Seq[Double], stats: CorpusStats): Double =
     inner.docFactor(nMatched, queryDfs, stats)
-  override def docFactorIdentity: Boolean = inner.docFactorIdentity
   override def docFactorCol(nMatched: Column, queryDfs: Seq[Double], stats: CorpusStats): Column =
     inner.docFactorCol(nMatched, queryDfs, stats)
 }
@@ -82,7 +77,6 @@ final case class BM25(k1: Double = 1.2, b: Double = 0.75) extends Scorer {
     idf(df, stats.numDocs.toDouble) * maxTf / (maxTf + k1 * (1.0 - b))
 
   override def docFactor(nMatched: Int, queryDfs: Seq[Double], stats: CorpusStats): Double = 1.0
-  override def docFactorIdentity: Boolean = true
   override def docFactorCol(nMatched: Column, queryDfs: Seq[Double], stats: CorpusStats): Column =
     lit(1.0)
 }

@@ -27,12 +27,17 @@ final case class MatchPosRow(term: String, docId: Long, tf: Int, positions: Seq[
 
 /** Query-side engine over a built InvertedIndex (SURVEY.md §2.C/§3.2).
   *
-  * Two top-k paths, required rank-identical (§7.4 #1):
-  *   - `topK` — exhaustive DataFrame path: decode → join dl → score
-  *     column → fixed-order sum → TakeOrderedAndProject.
-  *   - `topKWand` — block-max WAND per doc-range shard (cogroup of
-  *     postings and doc lengths on the shard key), per-shard bounded
-  *     heap, driver k-merge.
+  * One production path per operator:
+  *   - top-k queries run pruned per doc-range shard (`perShard`: a
+  *     cogroup of postings and doc lengths on the shard key) — `topK`
+  *     is block-max WAND with a per-shard bounded heap and a k-merge;
+  *     the phrase, NEAR, spanNot and dismax families share the same
+  *     scaffold.
+  *   - all-hits queries (field sort, grouping, hybrid, boolean phrase
+  *     mixes) run on one clause scorer, `scoredDocsBoolean`: decode →
+  *     join dl → score column → fixed clause-order sum per doc.
+  * Rank identity against corpus-wide explode-join references is
+  * asserted in tests (§7.4 #1); the references live in test scope.
   */
 final class Searcher(
     spark: SparkSession,
@@ -109,7 +114,7 @@ final class Searcher(
     }
 
   /** Live (docId, dl, shard) — the single place tombstones apply: a
-    * deleted doc is ABSENT from the dl side, so the exhaustive path
+    * deleted doc is ABSENT from the dl side, so the clause scorer
     * drops it at its inner scoring join and the cogroup paths skip it
     * when the shard-local dl map has no entry (Wand treats a NaN dl as
     * "not live"). The anti-join keys on (docId, shard) — shard derives
@@ -203,7 +208,7 @@ final class Searcher(
       // one row per (term, shard) is a merge-path invariant, and this
       // toMap would SILENTLY keep one of the duplicates (undercounting
       // tf on e.g. an un-merged union of segment partials) — fail
-      // loudly instead, like topKWand which keeps duplicates as
+      // loudly instead, like topK which keeps duplicates as
       // separate iterators
       require(rows.iterator.map(_.term).toSet.size == rows.length,
         "duplicate posting rows for one (term, shard) — positional " +
@@ -249,15 +254,15 @@ final class Searcher(
       .select("term", "df").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
-  /** Exhaustive exact top-k. Deterministic: per-(term,doc) contribution
-    * → collect_list sorted by term → fixed-order fold; order by
-    * (score desc, docId asc). Returns (docId, score, nMatched).
+  /** Every hit of a term query as (docId, score, nMatched): the
+    * all-hits form of `topK` (same arguments, same scores) on the one
+    * clause scorer, `scoredDocsBoolean`.
     *
-    * `mustNot` — Lucene BooleanQuery prohibited clauses (the reference
-    * inherits them through its reader SPI): docs containing ANY of the
-    * excluded terms are dropped via a left_anti join on docId, which
-    * reuses the aggregation's docId partitioning (no extra shuffle
-    * shape) and decodes only the excluded terms' own postings. */
+    * DUPLICATE-CLAUSE FOLD (here and in topK): a term passed in BOTH
+    * `terms` and `must` is ONE MUST clause — it scores once and does
+    * not count toward minShouldMatch, which counts OPTIONAL clauses.
+    * Lucene would keep two clauses; same deliberate fold as for
+    * duplicate boosts. */
   def scoredDocs(
       terms: Seq[String],
       scorer: Scorer = BM25(),
@@ -267,86 +272,20 @@ final class Searcher(
       minShouldMatch: Int = 0,
       boosts: Map[String, Double] = Map.empty,
       docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    // `must` — Lucene BooleanQuery mixed MUST + SHOULD (ReqOptSumScorer):
-    // a hit needs EVERY must term; the remaining (should) terms add
-    // score when present. must terms score too, so they join the query
-    // term set; must == all terms degenerates to requireAll.
-    // DUPLICATE-CLAUSE FOLD (here and in topKWand): a term passed in
-    // BOTH `terms` and `must` is folded into a single MUST clause — it
-    // scores once and, because minShouldMatch counts OPTIONAL clauses
-    // only, it does NOT count toward the mm tally. Lucene would keep
-    // the two clauses separate (score twice, SHOULD copy counts toward
-    // mm); same deliberate fold as documented for duplicate boosts.
-    val qTerms = (terms ++ must).distinct.sorted
-    val meta = collectMeta(qTerms)
-    val dfs = meta.dfs
-    val queryDfs = qTerms.map(t => dfs.getOrElse(t, 0L).toDouble)
-    val dfLookup = typedlit(dfs.map { case (t, d) => t -> d.toDouble })
-
-    // per-term query boost (Lucene TermQuery.setBoost): scales the
-    // term's contribution; absent terms default to 1
-    val boostCol =
-      if (boosts.isEmpty) lit(1.0)
-      else coalesce(element_at(typedlit(boosts), col("term")), lit(1.0))
-    val m = matches(qTerms).toDF()
-      .join(dlLookup(meta, docFilter), Seq("docId"))
-      .withColumn("df", element_at(dfLookup, col("term")))
-      .withColumn("tscore",
-        boostCol * scorer.contributionCol(
-          col("tf").cast("double"), col("df"), col("dl"), stats))
-
-    val mustArr = must.distinct.sorted
-    // Lucene setMinimumNumberShouldMatch: mm counts OPTIONAL clauses
-    // only; more required matches than SHOULD clauses exist → nothing
-    // matches (requireAll has zero SHOULD clauses).
-    val shouldCount =
-      if (requireAll) 0 else qTerms.count(t => !mustArr.contains(t))
-    if (minShouldMatch > shouldCount)
-      return Seq.empty[(Long, Double, Int)].toDF("docId", "score", "nMatched")
-    val perDoc = m.groupBy("docId")
-      .agg(sort_array(collect_list(struct(col("term"), col("tscore")))).as("cs"))
-      .withColumn("nMatched", size(col("cs")))
-      .withColumn("nMust",
-        if (mustArr.isEmpty) lit(0)
-        else size(filter(col("cs"),
-          x => array_contains(typedlit(mustArr), x.getField("term")))))
-      .withColumn("rawScore",
-        aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("tscore")))
-      .drop("cs")
-    val occurFiltered =
-      if (requireAll) perDoc.where(col("nMatched") === qTerms.length)
-      else if (mustArr.nonEmpty) perDoc.where(col("nMust") === mustArr.length)
-      else perDoc
-    // matched SHOULD clauses = matched terms minus matched MUST terms
-    val filtered =
-      if (minShouldMatch <= 0) occurFiltered
-      else occurFiltered.where(
-        col("nMatched") - col("nMust") >= minShouldMatch)
-    // doc-level factor (coord · queryNorm for the legacy scorer; 1 for
-    // BM25) as a CODEGEN'D column — the row-at-a-time Scala UDF this
-    // replaces broke WholeStageCodegen on the matched-doc frame (one
-    // row per hit; corpus-proportional for broad queries). BM25 skips
-    // the multiplication entirely; docFactorCol replicates docFactor's
-    // arithmetic order bit-for-bit (asserted by the existing
-    // exhaustive≡WAND identity tests and the tfidf_legacy oracle).
-    val scored = (
-      if (scorer.docFactorIdentity) filtered.withColumn("score", col("rawScore"))
-      else filtered.withColumn("score", col("rawScore") *
-        scorer.docFactorCol(col("nMatched"), queryDfs, stats)))
-      .select("docId", "score", "nMatched")
-    val exTerms = mustNot.distinct.filterNot(qTerms.contains)
-    // a term both required and prohibited matches nothing (Lucene
-    // BooleanQuery contract) — requireAll makes it literal; in OR mode
-    // the exclusion still wins, so just exclude the overlap too
-    val exAll = mustNot.distinct
-    if (exAll.isEmpty) scored
-    else if ((requireAll && exTerms.length != exAll.length) ||
-        mustArr.exists(exAll.contains)) // MUST ∧ MUST_NOT matches nothing
-      Seq.empty[(Long, Double, Int)].toDF("docId", "score", "nMatched")
-    else scored.join(
-      matches(exAll).toDF().select("docId").distinct(), Seq("docId"), "left_anti")
+    val qTerms = (terms ++ must).distinct
+    val mustTerms = if (requireAll) qTerms else must.distinct
+    scoredDocsBoolean(
+      ParsedQuery(must = mustTerms, should = qTerms.filterNot(mustTerms.contains),
+        mustNot = mustNot.distinct, boosts = boosts),
+      scorer, minShouldMatch = minShouldMatch, docFilter = docFilter)
   }
 
+  /** Term-query top-k (docId, score): block-max WAND sharded by docId
+    * range — postings and doc lengths cogrouped on the shard key,
+    * per-shard exact top-k with a bounded heap, then a k-merge. A hot
+    * term's blocks never congregate on one task; dl lookup is
+    * shard-local. `mustNot`: docs holding ANY excluded term drop out;
+    * `docFilter`: see `dlWithShard`. */
   def topK(
       terms: Seq[String],
       k: Int,
@@ -356,12 +295,66 @@ final class Searcher(
       must: Seq[String] = Nil,
       minShouldMatch: Int = 0,
       boosts: Map[String, Double] = Map.empty,
-      docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    scoredDocs(terms, scorer, requireAll, mustNot, must, minShouldMatch,
-      boosts, docFilter)
+      docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+    // `must` — mixed MUST + SHOULD (Lucene ReqOptSumScorer): the Wand
+    // kernel leapfrogs the must iterators and treats the rest as
+    // score-only optionals. must == all terms degenerates to the AND
+    // leapfrog; requireAll wins if both are given.
+    val qTerms = (terms ++ must).distinct.sorted
+    val allMust = requireAll || (must.nonEmpty && must.distinct.size == qTerms.size)
+    val mustArr = if (allMust) Array.empty[String] else must.distinct.sorted.toArray
+    // MUST_NOT terms ride the same cogroup as exclusion-only iterators
+    // (Lucene ReqExclScorer): their postings are fetched per shard but
+    // never scored and never contribute to shard pruning
+    val exTerms = mustNot.distinct.sorted
+    if ((allMust && exTerms.exists(qTerms.contains)) ||
+        mustArr.exists(exTerms.contains))
+      return Seq.empty[(Long, Double)].toDF("docId", "score") // MUST ∧ MUST_NOT
+    // Lucene setMinimumNumberShouldMatch counts OPTIONAL clauses only;
+    // mm above the SHOULD-clause count matches nothing (allMust ⇒ 0).
+    val shouldCount = if (allMust) 0 else qTerms.size - mustArr.length
+    if (minShouldMatch > shouldCount)
+      return Seq.empty[(Long, Double)].toDF("docId", "score")
+    val mm = math.max(minShouldMatch, 0)
+    val meta = collectMeta(qTerms ++ exTerms)
+    val dfs = meta.dfs
+    val queryDfs = qTerms.map(t => dfs.getOrElse(t, 0L).toDouble)
+    val nQueryTerms = qTerms.size
+    val st = stats // closure-local: Searcher itself is not serializable
+    val exSet = exTerms.toSet
+    val mustSet: Set[String] = if (mustArr.isEmpty) null else mustArr.toSet
+
+    // Only shards that actually hold postings for the query's REQUIRED
+    // terms can produce hits — and in AND mode only shards holding
+    // EVERY required term (one missing term posting row forecloses the
+    // whole shard). The shard set comes from the single metadata
+    // collect: no discovery job, and the postings scan itself is
+    // pruned in AND mode too.
+    val touched =
+      if (allMust) meta.shardsWithAll(qTerms)
+      else if (mustArr.nonEmpty) meta.shardsWithAll(mustArr) // mixed: all MUSTs or bust
+      else meta.shardsWith(qTerms)
+    perShard[ScoredDoc](qTerms ++ exTerms, touched, docFilter) { (all, dlMap) =>
+      val (exRows, rows) = all.partition(r => exSet(r.term))
+      if (rows.isEmpty) Iterator.empty
+      else {
+        def mkIter(r: PostingRow): TermIterator = {
+          val df = dfs.getOrElse(r.term, 0L).toDouble
+          val b = boosts.getOrElse(r.term, 1.0)
+          new TermIterator(r.term, df,
+            b * scorer.upperBound(r.maxTf.toDouble, df, st), scorer, st,
+            new PostingsCodec.BlobView(r.blob), boost = b)
+        }
+        // NaN = "not live" (deleted or unknown): Wand skips the doc
+        Wand.topK(rows.map(mkIter).toSeq, d => dlMap.getOrElse(d, Double.NaN),
+          scorer, st, k, allMust, nQueryTerms, queryDfs,
+          excludeIters = exRows.map(mkIter).toSeq,
+          requiredTerms = mustSet, minShouldMatch = mm).iterator
+      }
+    }.toDF()
       .orderBy(desc("score"), asc("docId"))
       .limit(k)
-      .select("docId", "score")
+  }
 
   /** Disjunction-max top-k (Lucene DisjunctionMaxQuery over term
     * sub-queries): score = best matching term's contribution +
@@ -384,18 +377,16 @@ final class Searcher(
     val queryDfs = qTerms.map(t => dfs.getOrElse(t, 0L).toDouble)
     val nQueryTerms = qTerms.size
     val st = stats
-    val scorerB = scorer
-    val tbB = tieBreaker
     perShard[ScoredDoc](qTerms, meta.shards) { (rows, dlMap) =>
       val iters = rows.map { r =>
         val df = dfs.getOrElse(r.term, 0L).toDouble
         new TermIterator(r.term, df,
-          scorerB.upperBound(r.maxTf.toDouble, df, st), scorerB, st,
+          scorer.upperBound(r.maxTf.toDouble, df, st), scorer, st,
           new PostingsCodec.BlobView(r.blob))
       }.toSeq
       Wand.topK(iters, d => dlMap.getOrElse(d, Double.NaN),
-        scorerB, st, k, queryTermCount = nQueryTerms, queryDfsIn = queryDfs,
-        dismaxTieBreaker = tbB).iterator
+        scorer, st, k, queryTermCount = nQueryTerms, queryDfsIn = queryDfs,
+        dismaxTieBreaker = tieBreaker).iterator
     }.toDF()
       .orderBy(desc("score"), asc("docId"))
       .limit(k)
@@ -403,98 +394,23 @@ final class Searcher(
 
   /** Total hit count (reference totalHits, TestHBaseIndexReader.java:50).
     * Counts LIVE matches only (tombstoned docs excluded). */
-  def totalHits(terms: Seq[String], requireAll: Boolean = false): Long = {
-    val qTerms = terms.distinct
-    val base = matches(qTerms).toDF()
-    val live = index.deletes match {
-      case None => base
-      case Some(del) => base.join(
-        del.select(col("docId").cast("long").as("docId")), Seq("docId"), "left_anti")
-    }
-    val m = live.groupBy("docId").agg(countDistinct("term").as("n"))
-    (if (requireAll) m.where(col("n") === qTerms.length) else m).count()
-  }
+  def totalHits(terms: Seq[String], requireAll: Boolean = false): Long =
+    liveMatchDocs(terms.distinct, requireAll).count()
 
-  /** Block-max WAND top-k, sharded by docId range: postings and doc
-    * lengths cogrouped on the shard key, per-shard exact top-k with a
-    * bounded heap, then a driver k-merge. Scales: a hot term's blocks
-    * never congregate on one task; dl lookup is shard-local. */
-  def topKWand(
-      terms: Seq[String],
-      k: Int,
-      scorer: Scorer = BM25(),
-      requireAll: Boolean = false,
-      mustNot: Seq[String] = Nil,
-      must: Seq[String] = Nil,
-      minShouldMatch: Int = 0,
-      boosts: Map[String, Double] = Map.empty,
-      docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    // `must` — mixed MUST + SHOULD (Lucene ReqOptSumScorer): the Wand
-    // kernel leapfrogs the must iterators and treats the rest as
-    // score-only optionals. must == all terms degenerates to the AND
-    // leapfrog; requireAll wins if both are given.
-    val qTerms = (terms ++ must).distinct.sorted
-    val mustArr =
-      if (requireAll || must.isEmpty) Array.empty[String]
-      else if (must.distinct.size == qTerms.size) Array.empty[String] // == AND
-      else must.distinct.sorted.toArray
-    val allMust = requireAll || (must.nonEmpty && must.distinct.size == qTerms.size)
-    // MUST_NOT terms ride the same cogroup as exclusion-only iterators
-    // (Lucene ReqExclScorer): their postings are fetched per shard but
-    // never scored and never contribute to shard pruning
-    val exTerms = mustNot.distinct.sorted
-    if ((allMust && exTerms.exists(qTerms.contains)) ||
-        mustArr.exists(exTerms.contains))
-      return Seq.empty[(Long, Double)].toDF("docId", "score") // MUST ∧ MUST_NOT
-    // Lucene setMinimumNumberShouldMatch counts OPTIONAL clauses only;
-    // mm above the SHOULD-clause count matches nothing (allMust ⇒ 0).
-    val shouldCount = if (allMust) 0 else qTerms.size - mustArr.length
-    if (minShouldMatch > shouldCount)
-      return Seq.empty[(Long, Double)].toDF("docId", "score")
-    val mm = math.max(minShouldMatch, 0)
-    val meta = collectMeta(qTerms ++ exTerms)
-    val dfs = meta.dfs
-    val queryDfs = qTerms.map(t => dfs.getOrElse(t, 0L).toDouble)
-    val nQueryTerms = qTerms.size
-    val st = stats
-    val scorerB = scorer
-    val exSet = exTerms.toSet
-    val allMustB = allMust
-    val mustSet: Set[String] = if (mustArr.isEmpty) null else mustArr.toSet
-    val mmB = mm // closure-local: Searcher itself is not serializable
-    val boostsB = boosts
-
-    // Only shards that actually hold postings for the query's REQUIRED
-    // terms can produce hits — and in AND mode only shards holding
-    // EVERY required term (one missing term posting row forecloses the
-    // whole shard). The shard set comes from the single metadata
-    // collect: no discovery job, and the postings scan itself is
-    // pruned in AND mode too.
-    val touched =
-      if (allMust) meta.shardsWithAll(qTerms)
-      else if (mustArr.nonEmpty) meta.shardsWithAll(mustArr) // mixed: all MUSTs or bust
-      else if (exTerms.isEmpty) meta.shards
-      else meta.shardsWith(qTerms)
-    perShard[ScoredDoc](qTerms ++ exTerms, touched, docFilter) { (all, dlMap) =>
-      val (exRows, rows) = all.partition(r => exSet(r.term))
-      if (rows.isEmpty) Iterator.empty
+  /** docIds of the LIVE docs holding ANY (`requireAll`: EVERY) query
+    * term. A single term's postings are docId-unique, so it skips the
+    * per-doc distinct/agg shuffle; tombstones drop from the matched
+    * side (a match-set-sized anti-join). */
+  private def liveMatchDocs(qTerms: Seq[String], requireAll: Boolean): DataFrame = {
+    val matched =
+      if (qTerms.length == 1) matches(qTerms).toDF().select("docId")
       else {
-        def mkIter(r: PostingRow): TermIterator = {
-          val df = dfs.getOrElse(r.term, 0L).toDouble
-          val b = boostsB.getOrElse(r.term, 1.0)
-          new TermIterator(r.term, df,
-            b * scorerB.upperBound(r.maxTf.toDouble, df, st), scorerB, st,
-            new PostingsCodec.BlobView(r.blob), boost = b)
-        }
-        // NaN = "not live" (deleted or unknown): Wand skips the doc
-        Wand.topK(rows.map(mkIter).toSeq, d => dlMap.getOrElse(d, Double.NaN),
-          scorerB, st, k, allMustB, nQueryTerms, queryDfs,
-          excludeIters = exRows.map(mkIter).toSeq,
-          requiredTerms = mustSet, minShouldMatch = mmB).iterator
+        val m0 = matches(qTerms).toDF().groupBy("docId")
+          .agg(countDistinct("term").as("nMatched"))
+        (if (requireAll) m0.where(col("nMatched") === qTerms.length) else m0)
+          .select("docId")
       }
-    }.toDF()
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+    index.deletes.fold(matched)(del => matched.join(del, Seq("docId"), "left_anti"))
   }
 
   /** Phrase top-k (consecutive positions): doc matches where the term
@@ -755,23 +671,7 @@ final class Searcher(
     val qTerms = terms.distinct
     require(qTerms.nonEmpty && topN > 0)
     val meta = collectMeta(qTerms)
-    // single-term: posting lists are docId-unique — the per-doc
-    // distinct/agg shuffle of the whole match set buys nothing
-    val matched0 =
-      if (qTerms.length == 1) matches(qTerms).toDF().select("docId")
-      else {
-        val m0 = matches(qTerms).toDF().groupBy("docId")
-          .agg(countDistinct("term").as("nMatched"))
-        (if (requireAll) m0.where(col("nMatched") === qTerms.length) else m0)
-          .select("docId")
-      }
-    // tombstones drop from the MATCHED side (match-set-sized anti-join)
-    val matched = index.deletes match {
-      case None => matched0
-      case Some(del) => matched0.join(
-        del.select(col(del.columns.head).cast("long").as("docId")),
-        Seq("docId"), "left_anti")
-    }
+    val matched = liveMatchDocs(qTerms, requireAll)
     // docFilter applies to the label scan directly (it is a predicate
     // over stored docs — same live semantics as the dl-side filter).
     // The label join is the scale decision: |matched| ≤ Σ df is KNOWN
@@ -887,7 +787,7 @@ final class Searcher(
     val dfs = docFreqs(tv.map(_._1).toSeq)
     val sel = tv.sortBy { case (t, tf) => (-tf, dfs.getOrElse(t, 0L), t) }
       .take(maxQueryTerms).map(_._1).toSeq.sorted
-    topKWand(sel, k, scorer,
+    topK(sel, k, scorer,
       docFilter = excludeDocId.map(id => col("docId") =!= id))
   }
 
@@ -961,7 +861,7 @@ final class Searcher(
   /** Score explanation for one (query, doc) — Lucene
     * IndexSearcher.explain(): per matching query term, the tf/df/dl
     * inputs and the scorer's contribution. Rows sum to the doc's
-    * topK/topKWand score for docFactor-free scorers (BM25). The scan
+    * topK score for docFactor-free scorers (BM25). The scan
     * prunes to the SINGLE doc-range shard the doc lives in and
     * decodes only the query terms' blobs there — a point debug call,
     * cost ∝ one shard, not the corpus. */
@@ -1135,101 +1035,96 @@ final class Searcher(
       mustExpansions = Nil, shouldExpansions = Nil, notExpansions = Nil,
       boosts = allBoosts)
     val phrases = pq.scoringPhrases
+    val noTerms = pq.must.isEmpty && pq.should.isEmpty
     if (!pq.hasScoring && multiGroups.isEmpty) emptyHits
-    else if (multiGroups.nonEmpty) {
-      // one multi-term MUST group and nothing else scoring ⇒ a plain
-      // disjunction over the expansion (the group's own rewrite)
-      if (multiGroups.length == 1 && pq.must.isEmpty && pq.should.isEmpty &&
-          phrases.isEmpty && pq.notPhrases.isEmpty)
-        topKWand(multiGroups.head, k, scorer, mustNot = pq.mustNot,
-          boosts = pq.boosts)
-      else scoredDocsBoolean(pq, scorer, multiGroups)
+    // one multi-term MUST group and nothing else scoring ⇒ a plain
+    // disjunction over the expansion (the group's own rewrite)
+    else if (multiGroups.length == 1 && noTerms && phrases.isEmpty && pq.notPhrases.isEmpty)
+      topK(multiGroups.head, k, scorer, mustNot = pq.mustNot, boosts = pq.boosts)
+    // exactly one scoring phrase and nothing else
+    else if (phrases.length == 1 && multiGroups.isEmpty && noTerms &&
+        pq.mustNot.isEmpty && pq.notPhrases.isEmpty) {
+      val pc = phrases.head._1
+      phraseTopK(pc.slots, k,
+        if (pc.boost == 1.0) scorer else Boosted(scorer, pc.boost), pc.slop)
+    } else if (multiGroups.nonEmpty || phrases.nonEmpty || pq.notPhrases.nonEmpty)
+      scoredDocsBoolean(pq, scorer, multiGroups)
         .orderBy(desc("score"), asc("docId")).limit(k)
         .select("docId", "score")
-    } else if (phrases.nonEmpty || pq.notPhrases.nonEmpty) {
-      // fast path: exactly one scoring phrase and nothing else
-      if (phrases.length == 1 && pq.must.isEmpty && pq.should.isEmpty &&
-          pq.mustNot.isEmpty && pq.notPhrases.isEmpty) {
-        val pc = phrases.head._1
-        phraseTopK(pc.slots, k,
-          if (pc.boost == 1.0) scorer else Boosted(scorer, pc.boost), pc.slop)
-      } else scoredDocsBoolean(pq, scorer)
-        .orderBy(desc("score"), asc("docId")).limit(k)
-        .select("docId", "score")
-    } else if (pq.must.isEmpty && pq.should.isEmpty) emptyHits
-    else if (pq.should.isEmpty)
-      topKWand(pq.must, k, scorer, requireAll = true, mustNot = pq.mustNot,
-        boosts = pq.boosts)
-    else topKWand(pq.must ++ pq.should, k, scorer,
+    // terms only: must == all terms is the conjunctive leapfrog
+    else topK(pq.must ++ pq.should, k, scorer,
       mustNot = pq.mustNot, must = pq.must, boosts = pq.boosts)
   }
 
-  /** Boolean query whose clauses mix terms and phrases (Lucene
-    * BooleanQuery with PhraseQuery sub-clauses): per-clause
-    * contribution rows — term clauses from the postings join, each
-    * phrase clause from the PRUNED positional path
-    * (`multiPhraseMatchRows` with singleton slots;
-    * positions never explode corpus-wide) scored against the phrase's
-    * own live df like `phraseTopK` — unioned and folded per doc in a
-    * fixed clause order. MUST semantics count matched MUST clauses
-    * (term or phrase); NOT drops docs matching any prohibited term or
-    * phrase via one docId anti-join. The aggregation reuses the
-    * docId-hash partitioning, so candidate volume is bounded by the
-    * clauses' own match volumes — the phrase side is already pruned,
-    * and a MUST phrase bounds the surviving set harder than any term.
-    */
+  /** The one clause scorer: every hit of a boolean query over term,
+    * phrase and MUST-group clauses (Lucene BooleanQuery with TermQuery /
+    * PhraseQuery sub-clauses) as (docId, score, nMatched). Term clause
+    * rows come from the postings ⋈ live-dl join, each phrase clause from
+    * the PRUNED positional path (`multiPhraseMatchRows`; positions never
+    * explode corpus-wide) scored against the phrase's own live df like
+    * `phraseTopK`; the rows are unioned and summed per doc in a fixed
+    * clause order ("t:<term>" labels sort like the terms). MUST counts
+    * matched MUST clauses; `minShouldMatch` counts matched OPTIONAL
+    * clauses (above the SHOULD-clause count nothing matches); NOT drops
+    * docs holding any prohibited term or phrase via one docId
+    * anti-join, and a term both required and prohibited matches
+    * nothing. `docFilter` narrows candidates like a tombstone (see
+    * `dlWithShard`); dfs stay corpus-wide.
+    *
+    * `mustGroups` — MUST multi-term clauses: a group matches when ANY
+    * member does and shares one clause label "g:<i>"; a term in several
+    * clauses contributes once per clause (Lucene's per-clause scoring of
+    * a rewritten multi-term query). */
   def scoredDocsBoolean(pq: ParsedQuery, scorer: Scorer = BM25(),
-      mustGroups: Seq[Seq[String]] = Nil): DataFrame = {
+      mustGroups: Seq[Seq[String]] = Nil, minShouldMatch: Int = 0,
+      docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val phrases = pq.scoringPhrases
-    require(pq.hasScoring || mustGroups.nonEmpty,
-      "boolean query needs at least one scoring clause")
     val plainTerms = (pq.must ++ pq.should).distinct.sorted
-    val qTerms = (plainTerms ++ mustGroups.flatten).distinct.sorted
     val mustTermSet = pq.must.distinct.toSet
-    val st = stats
-    val sc = scorer
+    val shouldCount = plainTerms.count(t => !mustTermSet(t)) + pq.shouldPhrases.size
+    if ((!pq.hasScoring && mustGroups.isEmpty) || minShouldMatch > shouldCount ||
+        pq.mustNot.exists(mustTermSet))
+      return Seq.empty[(Long, Double, Int)].toDF("docId", "score", "nMatched")
+    val qTerms = (plainTerms ++ mustGroups.flatten).distinct.sorted
     val meta = if (qTerms.isEmpty) null else collectMeta(qTerms)
 
-    // clause assignment: a plain term is its own clause "t:<term>"; a
-    // MUST group's members share one clause "g:<i>" (the group matches
-    // when ANY member does). A term can sit in several clauses — it
-    // then contributes once per clause, which is exactly Lucene's
-    // per-clause scoring of a rewritten multi-term query.
-    val clausePairs: Seq[(String, String, Boolean)] =
-      plainTerms.map(t => (t, "t:" + t, mustTermSet(t))) ++
-        mustGroups.zipWithIndex.flatMap { case (g, i) =>
-          g.distinct.map(t => (t, s"g:$i", true))
-        }
     // term clause rows: (clause, docId, tscore, isMust); per-term
     // boosts (`term^N` / boosted expansions) scale the contribution
     val termRows: Option[DataFrame] = if (qTerms.isEmpty) None else {
       val dfLookup = typedlit(meta.dfs.map { case (t, d) => t -> d.toDouble })
-      val clauseDf = clausePairs.toDF("term", "clause", "isMust")
+      val clausesOf = typedlit(
+        (plainTerms.map(t => (t, ("t:" + t, mustTermSet(t)))) ++
+          mustGroups.zipWithIndex.flatMap { case (g, i) =>
+            g.distinct.map(t => (t, (s"g:$i", true)))
+          }).groupMap(_._1)(_._2))
       val boostCol =
         if (pq.boosts.isEmpty) lit(1.0)
         else coalesce(element_at(typedlit(pq.boosts), col("term")), lit(1.0))
       Some(matches(qTerms).toDF()
-        .join(dlLookup(meta), Seq("docId"))
+        .join(dlLookup(meta, docFilter), Seq("docId"))
         .withColumn("df", element_at(dfLookup, col("term")))
-        .join(broadcast(clauseDf), Seq("term"))
+        .withColumn("c", explode(element_at(clausesOf, col("term"))))
         .select(
-          col("clause"),
+          col("c._1").as("clause"),
           col("docId"),
-          (boostCol * sc.contributionCol(
-            col("tf").cast("double"), col("df"), col("dl"), st)).as("tscore"),
-          col("isMust")))
+          (boostCol * scorer.contributionCol(
+            col("tf").cast("double"), col("df"), col("dl"), stats)).as("tscore"),
+          col("c._2").as("isMust")))
     }
     // phrase clause rows: one pruned positional match set per clause;
-    // df = live docs containing the phrase (same contract as phraseTopK)
+    // df = live docs containing the phrase (same contract as phraseTopK),
+    // counted before the doc filter narrows the candidates
     val phraseRows: Seq[(DataFrame, Double)] = phrases.zipWithIndex.map {
       case ((pc, isMust), i) =>
-        val m = multiPhraseMatchRows(pc.slots.map(Seq(_)), sc, pc.slop)
+        val m = multiPhraseMatchRows(pc.slots.map(Seq(_)), scorer, pc.slop)
         val pdf = m.count().toDouble
-        (m.select(
+        val kept = docFilter.fold(m)(f =>
+          m.join(index.docs.where(f).select("docId"), Seq("docId"), "left_semi"))
+        (kept.select(
           lit(s"p:$i").as("clause"),
           col("docId"),
-          (lit(pc.boost) * sc.contributionCol(
-            col("tf").cast("double"), lit(pdf), col("dl"), st)).as("tscore"),
+          (lit(pc.boost) * scorer.contributionCol(
+            col("tf").cast("double"), lit(pdf), col("dl"), stats)).as("tscore"),
           lit(isMust).as("isMust")), pdf)
     }
     val allRows = (termRows.toSeq ++ phraseRows.map(_._1)).reduce(_ union _)
@@ -1255,21 +1150,25 @@ final class Searcher(
       .withColumn("rawScore",
         aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("tscore")))
       .drop("cs")
-    val filtered =
-      if (nMustClauses == 0) perDoc
-      else perDoc.where(col("nMust") === nMustClauses)
-    // codegen'd doc factor, same fast-path/parity contract as scoredDocs
-    val scored = (
-      if (sc.docFactorIdentity) filtered.withColumn("score", col("rawScore"))
-      else filtered.withColumn("score", col("rawScore") *
-        sc.docFactorCol(col("nMatched"), queryDfs, st)))
-      .select("docId", "score", "nMatched")
+    // every MUST clause matched; matched SHOULD clauses = matched
+    // clauses minus matched MUST ones
+    val filtered = perDoc.where(col("nMust") === nMustClauses &&
+      col("nMatched") - col("nMust") >= minShouldMatch)
+    // doc-level factor (coord · queryNorm for the legacy scorer; 1 for
+    // BM25) as a CODEGEN'D column — a row-at-a-time Scala UDF would
+    // break WholeStageCodegen on the matched-doc frame (one row per
+    // hit); docFactorCol replicates docFactor's arithmetic order
+    // bit-for-bit (asserted by the oracle ≡ WAND identity tests and the
+    // tfidf_legacy oracle)
+    val scored = filtered.select(col("docId"),
+      (col("rawScore") * scorer.docFactorCol(col("nMatched"), queryDfs, stats)).as("score"),
+      col("nMatched"))
     // prohibited clauses: one anti-join over the union of their docIds
     val notDfs =
       (if (pq.mustNot.nonEmpty)
         Seq(matches(pq.mustNot.distinct).toDF().select("docId")) else Nil) ++
         pq.notPhrases.map(p =>
-          multiPhraseMatchRows(p.slots.map(Seq(_)), sc, p.slop).select("docId"))
+          multiPhraseMatchRows(p.slots.map(Seq(_)), scorer, p.slop).select("docId"))
     if (notDfs.isEmpty) scored
     else scored.join(notDfs.reduce(_ union _).distinct(), Seq("docId"), "left_anti")
   }
@@ -1288,7 +1187,7 @@ final class Searcher(
     require(prefix.nonEmpty, "empty prefix would expand the whole dictionary")
     val ts = expandTerms(col("term").startsWith(prefix), s"prefix '$prefix'",
       maxExpansions)
-    if (ts.isEmpty) emptyHits else topKWand(ts, k, scorer)
+    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
   }
 
   /** Wildcard query (Lucene WildcardQuery): `*` = any run, `?` = any
@@ -1306,7 +1205,7 @@ final class Searcher(
       s"wildcard pattern '$pattern' has no literal characters")
     val ts = expandTerms(wildcardPred(pattern), s"wildcard '$pattern'",
       maxExpansions)
-    if (ts.isEmpty) emptyHits else topKWand(ts, k, scorer)
+    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
   }
 
   /** Fuzzy query (Lucene FuzzyQuery): rank docs containing any
@@ -1332,7 +1231,7 @@ final class Searcher(
         col("term").startsWith(term.take(prefixLength)) && base
       else base
     val ts = expandTerms(pred, s"fuzzy '$term'~$maxEdits", maxExpansions)
-    if (ts.isEmpty) emptyHits else topKWand(ts, k, scorer)
+    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
   }
 
   /** Term-range query (Lucene TermRangeQuery; reference A6 range scan):
@@ -1352,7 +1251,7 @@ final class Searcher(
       hi.map(v => if (includeHi) col("term") <= v else col("term") < v)).flatten
     val ts = expandTerms(preds.reduce(_ && _),
       s"range [${lo.getOrElse("")}, ${hi.getOrElse("")}]", maxExpansions)
-    if (ts.isEmpty) emptyHits else topKWand(ts, k, scorer)
+    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
   }
 
   /** Regex query (Lucene 3.0 contrib RegexQuery — the same TermEnum
@@ -1369,7 +1268,7 @@ final class Searcher(
     require(pattern.nonEmpty, "empty regex pattern")
     val ts = expandTerms(col("term").rlike("^(?:" + pattern + ")$"),
       s"regex '$pattern'", maxExpansions)
-    if (ts.isEmpty) emptyHits else topKWand(ts, k, scorer)
+    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
   }
 
   /** docKey → docId point lookup (the reference's doc2int reverse map,

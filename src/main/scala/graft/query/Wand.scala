@@ -471,8 +471,8 @@ object Wand {
     *   chain minimizes the final position, so "some chain fits the
     *   window" ⇔ "the greedy chain does".
     * @return (docId, phrase tf = number of matching start positions),
-    *   docId ascending. Identical contract to the exhaustive
-    *   explode-join (positions strictly increasing per doc, so start
+    *   docId ascending. Identical contract to the test-scope
+    *   explode-join oracle (positions strictly increasing per doc, so start
     *   counts match).
     */
   def multiPhraseMatches(

@@ -27,7 +27,7 @@ import graft.table.IndexTables
   * operator is fully declarable (the repo's stated preference order:
   * compose existing plans before writing physical operators); the
   * per-shard WAND cogroup inside that subtree is the same plan
-  * `Searcher.topKWand` produces for the Dataset API, so SQL and
+  * `Searcher.topK` produces for the Dataset API, so SQL and
   * Dataset callers are rank-identical by construction.
   */
 object MatchQuery {
@@ -154,7 +154,7 @@ object MatchQuery {
         val searcher = new Searcher(spark, loadCached(spark, root))
         if (mode == "query") searcher.search(query, k)
         else if (mode == "phrase") searcher.phraseTopK(slots, k)
-        else searcher.topKWand(slots.distinct, k, BM25(), requireAll = mode == "and")
+        else searcher.topK(slots.distinct, k, BM25(), requireAll = mode == "and")
       }
     df.queryExecution.analyzed
   }

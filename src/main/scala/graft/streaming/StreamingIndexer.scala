@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.build.{IndexBuilder, IndexConfig, InvertedIndex}
-import graft.model.CorpusStats
 import graft.table.TableFormat
 
 /** Incremental index ingestion on Structured Streaming.
@@ -134,6 +133,17 @@ object StreamingIndexer {
     }
   }
 
+  /** `cfg` with the shard width + analyzer of the root's persisted
+    * ingest config, when one exists: the stored rows were produced with
+    * them, and a mismatched caller cfg would silently mis-prune /
+    * mis-tokenize. */
+  private def ingestConfigOr(root: String, cfg: IndexConfig): IndexConfig =
+    readIngestConfig(root).map { case (shard, analyzerName) =>
+      cfg.copy(shardSizeDocs = shard,
+        analyzer = analyzerName.map(graft.analysis.TextAnalyzers.byName)
+          .getOrElse(cfg.analyzer))
+    }.getOrElse(cfg)
+
   def start(
       stream: DataFrame,
       idCol: String,
@@ -191,11 +201,7 @@ object StreamingIndexer {
       textCol: String,
       untokenized: Seq[String] = Nil,
       cfg: IndexConfig = IndexConfig()): Long = {
-    val effCfg = readIngestConfig(root).map { case (shard, analyzerName) =>
-      cfg.copy(shardSizeDocs = shard,
-        analyzer = analyzerName.map(graft.analysis.TextAnalyzers.byName)
-          .getOrElse(cfg.analyzer))
-    }.getOrElse(cfg)
+    val effCfg = ingestConfigOr(root, cfg)
     val used = segmentTables(root, "docs-b").map(_.stripPrefix("docs-b").toLong) ++
       segmentTables(root, "postings-b").map(_.stripPrefix("postings-b").toLong)
     // floor: never recycle a pruned/compacted id (a fully-pruned root
@@ -567,14 +573,7 @@ object StreamingIndexer {
       compactedDir: Option[String],
       batches: Seq[Long],
       cfg: IndexConfig): InvertedIndex = {
-    // shard width + analyzer restored from ingest_config.json: the
-    // stored rows were produced with them, and a mismatched caller cfg
-    // would silently mis-prune / mis-tokenize
-    val effCfg = readIngestConfig(root).map { case (shard, analyzerName) =>
-      cfg.copy(shardSizeDocs = shard,
-        analyzer = analyzerName.map(graft.analysis.TextAnalyzers.byName)
-          .getOrElse(cfg.analyzer))
-    }.getOrElse(cfg)
+    val effCfg = ingestConfigOr(root, cfg)
     val base = compactedDir.map(n => s"$root/$n")
     require(batches.nonEmpty || base.nonEmpty,
       s"no committed segments under $root")
@@ -588,12 +587,6 @@ object StreamingIndexer {
     val postParts = base.map(TableFormat.read(spark, _, "postings")).toSeq ++
       batches.map(id => TableFormat.read(spark, root, s"postings-b$id"))
     val partials = postParts.reduce(_ unionByName _)
-    val postings = IndexBuilder.mergeSegmentRows(partials, effCfg)
-    val termStats = postings.groupBy("field", "term").agg(
-      sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
-    InvertedIndex.lazyStats(docs, postings, termStats, () => {
-      val r = docs.agg(count(lit(1)), avg(col("dl").cast("double"))).collect()(0)
-      CorpusStats(r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
-    }, effCfg)
+    InvertedIndex.derived(docs, IndexBuilder.mergeSegmentRows(partials, effCfg), effCfg)
   }
 }

@@ -3,7 +3,6 @@ package graft.table
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.build.{IndexConfig, InvertedIndex}
 import graft.model.CorpusStats
@@ -46,7 +45,7 @@ object IndexTables {
             else None
           val docsDf = obs match {
             case Some(o) => idx.docs.observe(o,
-              count(lit(1)).as("n"), avg(col("dl").cast("double")).as("avgdl"))
+              InvertedIndex.corpusStatsCols.head, InvertedIndex.corpusStatsCols.tail: _*)
             case None => idx.docs
           }
           val m = TableFormat.write(spark, docsDf, root, "docs")
@@ -57,17 +56,14 @@ object IndexTables {
             // observation only when its count matches, else rescan
             val observed = obs.map { o =>
               val row = o.get
-              (row("n").asInstanceOf[Long],
+              CorpusStats(row("n").asInstanceOf[Long],
                 Option(row("avgdl")).map(_.asInstanceOf[Double]).getOrElse(0.0))
-            }.filter(_._1 == m.rowCount)
-            val (n, avgdl) = observed.getOrElse {
-              val r = TableFormat.read(spark, root, "docs")
-                .agg(count(lit(1)), avg(col("dl").cast("double"))).collect()(0)
-              (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
-            }
+            }.filter(_.numDocs == m.rowCount)
+            val st = observed.getOrElse(
+              InvertedIndex.corpusStatsOf(TableFormat.read(spark, root, "docs")))
             val tmp = Paths.get(root, "_tmp_stats.json")
             Files.writeString(tmp,
-              s"""{"numDocs":$n,"avgDocLen":$avgdl,""" +
+              s"""{"numDocs":${st.numDocs},"avgDocLen":${st.avgDocLen},""" +
                 s""""shardSizeDocs":${idx.config.shardSizeDocs},""" +
                 s""""analyzer":"${idx.config.analyzer.name}"}""")
             Files.move(tmp, statsPath,
@@ -82,10 +78,9 @@ object IndexTables {
           val mStats = if (TableFormat.isCommitted(root, "termStats")) {
             TableFormat.readManifest(root, "termStats")
           } else {
-            val postings = TableFormat.read(spark, root, "postings")
-            val ts = postings.groupBy("field", "term").agg(
-              sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
-            TableFormat.write(spark, ts, root, "termStats")
+            TableFormat.write(spark,
+              InvertedIndex.termStatsOf(TableFormat.read(spark, root, "postings")),
+              root, "termStats")
           }
           (mPost, mStats)
         }

@@ -49,19 +49,16 @@ object Demo {
     }
     def show(tag: String, df: org.apache.spark.sql.DataFrame): Unit =
       println(s"[$tag] " + df.collect().map(_.toSeq.mkString(":")).mkString(" | "))
-    show("or/bm25 ", s.topK(terms, 5))
-    show("or/wand ", s.topKWand(terms, 5))
-    show("and/bm25", s.topK(terms, 5, BM25(), requireAll = true))
-    show("and/wand", s.topKWand(terms, 5, BM25(), requireAll = true))
+    show("or      ", s.topK(terms, 5))
+    show("and     ", s.topK(terms, 5, BM25(), requireAll = true))
     show("legacy  ", s.topK(terms, 5, LegacyTfIdf))
     show("phrase  ", s.phraseTopK(terms.take(2), 5))
     show("sorted  ", s.sortedTopK(terms.take(1), "lang", ascending = true, 5))
     show("fetch   ", s.fetch(s.topK(terms, 3), Seq("lang", "n_chars")))
     show("enumAll ", s.termEnumAll("lang", "", 5))
     show("boosted ", s.topK(terms, 3, graft.query.Boosted(BM25(), 2.0)))
-    // Boolean MUST_NOT (both paths must agree) + term-expansion family
-    show("not/bm25", s.topK(terms.take(1), 3, mustNot = terms.drop(1)))
-    show("not/wand", s.topKWand(terms.take(1), 3, mustNot = terms.drop(1)))
+    // Boolean MUST_NOT + term-expansion family
+    show("not     ", s.topK(terms.take(1), 3, mustNot = terms.drop(1)))
     show("prefix  ", s.prefixTopK(terms.head.take(2), 3))
     show("wildcard", s.wildcardTopK(terms.head.take(1) + "*", 3))
     show("range   ", s.rangeTopK(Some(terms.head.take(1)), None, 3))
@@ -70,12 +67,12 @@ object Demo {
     // classic query-string parser: mixed MUST+SHOULD (ReqOpt) dispatch —
     // must match the explicit must= API call row for row
     show("qstring ", s.search(s"+${terms.head} ${terms.drop(1).mkString(" ")}", 5))
-    show("reqopt  ", s.topKWand(terms, 5, BM25(), must = terms.take(1)))
+    show("reqopt  ", s.topK(terms, 5, BM25(), must = terms.take(1)))
     // phrase clause inside a boolean query (clause-level scorer)
     show("boolphr ", s.search(s"""+"${terms.take(2).mkString(" ")}" ${terms.head}""", 5))
     // sloppy phrase ("..."~N), minimumShouldMatch, multi-phrase
     show("slop    ", s.search(s""""${terms.take(2).mkString(" ")}"~2""", 5))
-    show("minshld ", s.topKWand(terms :+ "window", 5, minShouldMatch = 2))
+    show("minshld ", s.topK(terms :+ "window", 5, minShouldMatch = 2))
     show("mphrase ", s.multiPhraseTopK(
       Seq(Seq(terms.head), terms.drop(1) :+ "sort"), 5))
     show("pprefix ", s.phrasePrefixTopK(
@@ -95,8 +92,8 @@ object Demo {
       org.apache.spark.sql.functions.col("term") === terms.head, 3))
     show("explain ", s.explainDoc(terms, 0L))
     show("qexpand ", s.search(s"+${terms.head.take(2)}* ${terms(1)}", 5))
-    show("tboost  ", s.topKWand(terms, 5, boosts = Map(terms(1) -> 3.0)))
-    show("filtered", s.topKWand(terms, 5,
+    show("tboost  ", s.topK(terms, 5, boosts = Map(terms(1) -> 3.0)))
+    show("filtered", s.topK(terms, 5,
       docFilter = Some(org.apache.spark.sql.functions.col("lang") === "en")))
     // SQL surface: native analyzer expressions
     graft.sql.GraftFunctions.register(spark)
@@ -136,7 +133,7 @@ object Demo {
       topDoc.foreach { d =>
         val tomb = index.withDeletes(
           spark.range(d, d + 1).toDF("docId"))
-        show(s"del/tomb", new Searcher(spark, tomb).topKWand(terms, 3))
+        show(s"del/tomb", new Searcher(spark, tomb).topK(terms, 3))
         val applied = graft.build.Deletes.applied(spark, tomb)
         show(s"del/phys", new Searcher(spark, applied).topK(terms, 3))
         println(s"[del/stats] N ${index.stats.numDocs} -> ${applied.stats.numDocs}" +

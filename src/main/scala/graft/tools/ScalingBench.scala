@@ -209,26 +209,25 @@ object ScalingBench {
       val qvec = Array.tabulate(8)(j => ((31 + j * 7919) % 97) / 97.0 - 0.5)
       val queries: Seq[(String, () => Unit)] = Seq(
         "hybrid_wand" -> (() => graft.pipeline.TextPipeline.hybridTopK(
-          s.topKWand(Seq("id17", "return", "id999"), 100), emb, qvec,
+          s.topK(Seq("id17", "return", "id999"), 100), emb, qvec,
           alpha = 0.5, k = 10).collect()),
         "single_rare" -> (() => s.topK(Seq("id9423"), 10).collect()),
         // MultiTermQuery family at corpus scale: expansion cost is the
         // dictionary scan (∝ vocabulary) + WAND over the expansion
         "prefix_id94" -> (() => s.prefixTopK("id94", 10).collect()),
         "fuzzy_returm" -> (() => s.fuzzyTopK("returm", 10, maxEdits = 1).collect()),
-        "not_import" -> (() => s.topKWand(Seq("import"), 10,
+        "not_import" -> (() => s.topK(Seq("import"), 10,
           mustNot = Seq("x7")).collect()),
         "single_skew" -> (() => s.topK(Seq("public"), 10).collect()),
         "and_skew" -> (() => s.topK(Seq("import", "class"), 10, requireAll = true).collect()),
-        "or_mixed" -> (() => s.topK(Seq("id17", "return", "id999"), 10).collect()),
-        "wand_or" -> (() => s.topKWand(Seq("id17", "return", "id999"), 10).collect()),
-        "wand_skew" -> (() => s.topKWand(Seq("public", "import"), 10).collect()),
+        "wand_or" -> (() => s.topK(Seq("id17", "return", "id999"), 10).collect()),
+        "wand_skew" -> (() => s.topK(Seq("public", "import"), 10).collect()),
         // mixed MUST+SHOULD: a rare MUST term leapfrogs two corpus-wide
         // optionals (the pruning case ReqOpt exists for), and the same
         // shape with a common MUST (worst case: optionals rarely skip)
-        "reqopt_rare" -> (() => s.topKWand(Seq("public", "import"), 10,
+        "reqopt_rare" -> (() => s.topK(Seq("public", "import"), 10,
           must = Seq("id999")).collect()),
-        "reqopt_skew" -> (() => s.topKWand(Seq("id17", "id999"), 10,
+        "reqopt_skew" -> (() => s.topK(Seq("id17", "id999"), 10,
           must = Seq("public")).collect()),
         // full parser dispatch (classic syntax → ReqOpt + exclusion)
         "qstring_mixed" -> (() => s.search("+id999 public import -x7", 10).collect()),
@@ -248,7 +247,7 @@ object ScalingBench {
           Seq(Seq("public"), Seq("class", "static")), 10).collect()),
         "pprefix_id94" -> (() => s.phrasePrefixTopK(Seq("public"), "id94", 10,
           maxExpansions = 1024).collect()),
-        "minshould_mixed" -> (() => s.topKWand(Seq("id17", "return", "id999"), 10,
+        "minshould_mixed" -> (() => s.topK(Seq("id17", "return", "id999"), 10,
           minShouldMatch = 2).collect()),
         // unordered proximity + span exclusion on the same two shapes:
         // common+rare (leapfrog prunes to the rare side) and

@@ -3,11 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.{IndexBuilder, IndexConfig}
-import graft.query.Searcher
+import graft.query.{ExhaustiveOracle, Searcher}
 
 /** Boolean MUST_NOT (Lucene prohibited clauses) and the term-expansion
   * query family (prefix / wildcard / range — Lucene MultiTermQuery via
-  * the reference's TermEnum SPI): exhaustive ≡ WAND, exclusion drops
+  * the reference's TermEnum SPI): oracle ≡ WAND, exclusion drops
   * exactly the matching docs without changing survivors' scores, and
   * expansions match their explicit-term-list equivalents. */
 class BooleanQuerySpec extends AnyFunSuite {
@@ -40,9 +40,9 @@ class BooleanQuerySpec extends AnyFunSuite {
       val not = Seq("zeta")
       val k = idx.stats.numDocs.toInt // full ranking: set equality checkable
 
-      val plain = topMap(s.topK(terms, k))
-      val ex = topMap(s.topK(terms, k, mustNot = not))
-      val wand = topMap(s.topKWand(terms, k, mustNot = not))
+      val plain = topMap(ExhaustiveOracle.topK(idx, terms, k))
+      val ex = topMap(ExhaustiveOracle.topK(idx, terms, k, mustNot = not))
+      val wand = topMap(s.topK(terms, k, mustNot = not))
       val excluded = s.matches(not).toDF().select("docId")
         .collect().map(_.getLong(0)).toSet
 
@@ -63,16 +63,16 @@ class BooleanQuerySpec extends AnyFunSuite {
       cfg = IndexConfig(shardSizeDocs = 32)).cache()
     val s = new Searcher(spark, idx)
     val k = idx.stats.numDocs.toInt
-    val ex = topMap(s.topK(Seq("alpha", "beta"), k, requireAll = true,
+    val ex = topMap(ExhaustiveOracle.topK(idx, Seq("alpha", "beta"), k, requireAll = true,
       mustNot = Seq("gamma")))
-    val wand = topMap(s.topKWand(Seq("alpha", "beta"), k, requireAll = true,
+    val wand = topMap(s.topK(Seq("alpha", "beta"), k, requireAll = true,
       mustNot = Seq("gamma")))
     assert(ex === wand)
     assert(ex.nonEmpty) // corpus is dense enough that some doc has α∧β∧¬γ
     // contradiction: MUST ∧ MUST_NOT on the same term
+    assert(ExhaustiveOracle.topK(idx, Seq("alpha"), k, requireAll = true,
+      mustNot = Seq("alpha")).collect().isEmpty)
     assert(s.topK(Seq("alpha"), k, requireAll = true, mustNot = Seq("alpha"))
-      .collect().isEmpty)
-    assert(s.topKWand(Seq("alpha"), k, requireAll = true, mustNot = Seq("alpha"))
       .collect().isEmpty)
     idx.unpersist()
   }
@@ -84,23 +84,23 @@ class BooleanQuerySpec extends AnyFunSuite {
     val k = 25
 
     // prefix "e" → {eps, eta}
-    assert(topMap(s.prefixTopK("e", k)) === topMap(s.topKWand(Seq("eps", "eta"), k)))
+    assert(topMap(s.prefixTopK("e", k)) === topMap(s.topK(Seq("eps", "eta"), k)))
     // wildcard "?eta" → {beta, zeta} (one leading char, literal tail)
-    assert(topMap(s.wildcardTopK("?eta", k)) === topMap(s.topKWand(Seq("beta", "zeta"), k)))
+    assert(topMap(s.wildcardTopK("?eta", k)) === topMap(s.topK(Seq("beta", "zeta"), k)))
     // wildcard with literal prefix + star: "ka*" → {kappa}
-    assert(topMap(s.wildcardTopK("ka*", k)) === topMap(s.topKWand(Seq("kappa"), k)))
+    assert(topMap(s.wildcardTopK("ka*", k)) === topMap(s.topK(Seq("kappa"), k)))
     // range [beta, eta) → {beta, delta, eps}; [beta, eta] adds eta
     assert(topMap(s.rangeTopK(Some("beta"), Some("eta"), k)) ===
-      topMap(s.topKWand(Seq("beta", "delta", "eps"), k)))
+      topMap(s.topK(Seq("beta", "delta", "eps"), k)))
     assert(topMap(s.rangeTopK(Some("beta"), Some("eta"), k, includeHi = true)) ===
-      topMap(s.topKWand(Seq("beta", "delta", "eps", "eta"), k)))
+      topMap(s.topK(Seq("beta", "delta", "eps", "eta"), k)))
     // fuzzy "zeta"~1: vocab within 1 edit = {zeta (0), beta (1 sub),
     // eta (1 del)} — the exact term rides its own expansion
     assert(topMap(s.fuzzyTopK("zeta", k, maxEdits = 1)) ===
-      topMap(s.topKWand(Seq("beta", "eta", "zeta"), k)))
+      topMap(s.topK(Seq("beta", "eta", "zeta"), k)))
     // prefix-locked fuzzy: prefixLength=1 keeps only "z*" candidates
     assert(topMap(s.fuzzyTopK("zeta", k, maxEdits = 1, prefixLength = 1)) ===
-      topMap(s.topKWand(Seq("zeta"), k)))
+      topMap(s.topK(Seq("zeta"), k)))
     // empty expansion → empty hits, not an error
     assert(s.prefixTopK("zzz", k).collect().isEmpty)
     assert(s.fuzzyTopK("qqqqqqq", k, maxEdits = 1).collect().isEmpty)
@@ -117,9 +117,9 @@ class BooleanQuerySpec extends AnyFunSuite {
       val s = new Searcher(spark, idx)
       val k = idx.stats.numDocs.toInt // full ranking: set equality checkable
 
-      val mixed = topMap(s.topKWand(Seq("alpha", "kappa"), k, must = Seq("alpha")))
-      val mustOnly = topMap(s.topKWand(Seq("alpha"), k, requireAll = true))
-      val both = topMap(s.topKWand(Seq("alpha", "kappa"), k, requireAll = true))
+      val mixed = topMap(s.topK(Seq("alpha", "kappa"), k, must = Seq("alpha")))
+      val mustOnly = topMap(s.topK(Seq("alpha"), k, requireAll = true))
+      val both = topMap(s.topK(Seq("alpha", "kappa"), k, requireAll = true))
       // hit set: exactly the docs containing the MUST term
       assert(mixed.keySet === mustOnly.keySet, s"shard=$shardSize")
       // docs also containing the SHOULD term score strictly higher than
@@ -129,7 +129,7 @@ class BooleanQuerySpec extends AnyFunSuite {
         else assert(math.abs(sc - mustOnly(d)) < 1e-12, s"doc=$d shard=$shardSize")
       }
       // MUST ∧ MUST_NOT on the same term matches nothing
-      assert(s.topKWand(Seq("alpha", "kappa"), k, must = Seq("alpha"),
+      assert(s.topK(Seq("alpha", "kappa"), k, must = Seq("alpha"),
         mustNot = Seq("alpha")).collect().isEmpty)
       idx.unpersist()
     }
@@ -143,18 +143,18 @@ class BooleanQuerySpec extends AnyFunSuite {
 
     // pure OR
     assert(topMap(s.search("alpha kappa", k)) ===
-      topMap(s.topKWand(Seq("alpha", "kappa"), k)))
+      topMap(s.topK(Seq("alpha", "kappa"), k)))
     // all-MUST → conjunctive leapfrog
     assert(topMap(s.search("+alpha +kappa", k)) ===
-      topMap(s.topKWand(Seq("alpha", "kappa"), k, requireAll = true)))
+      topMap(s.topK(Seq("alpha", "kappa"), k, requireAll = true)))
     assert(topMap(s.search("alpha AND kappa", k)) ===
-      topMap(s.topKWand(Seq("alpha", "kappa"), k, requireAll = true)))
+      topMap(s.topK(Seq("alpha", "kappa"), k, requireAll = true)))
     // mixed → ReqOpt
     assert(topMap(s.search("+alpha kappa", k)) ===
-      topMap(s.topKWand(Seq("alpha", "kappa"), k, must = Seq("alpha"))))
+      topMap(s.topK(Seq("alpha", "kappa"), k, must = Seq("alpha"))))
     // MUST_NOT rides along
     assert(topMap(s.search("+alpha kappa -zeta", k)) ===
-      topMap(s.topKWand(Seq("alpha", "kappa"), k, must = Seq("alpha"),
+      topMap(s.topK(Seq("alpha", "kappa"), k, must = Seq("alpha"),
         mustNot = Seq("zeta"))))
     // quoted phrase dispatches to the positional plan
     assert(topMap(s.search("\"alpha kappa\"", k)) ===

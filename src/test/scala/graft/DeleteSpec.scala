@@ -65,9 +65,9 @@ class DeleteSpec extends AnyFunSuite {
         // every live pre-delete match is still returned
         assert(post.map(_._1).toSet === pre.keySet.filter(_ % 3 != 1), tag)
         // WAND path identical under deletes
-        val w = s1.topKWand(terms, 10, BM25(), requireAll).collect()
+        val w = s1.topK(terms, 10, BM25(), requireAll).collect()
           .map(r => (r.getLong(0), r.getDouble(1)))
-        val ex = s1.topK(terms, 10, BM25(), requireAll).collect()
+        val ex = ExhaustiveOracle.topK(idx, terms, 10, BM25(), requireAll).collect()
           .map(r => (r.getLong(0), r.getDouble(1)))
         assert(w.map(_._1).toSeq === ex.map(_._1).toSeq, tag)
         w.zip(ex).foreach { case (a, b) =>
@@ -75,9 +75,9 @@ class DeleteSpec extends AnyFunSuite {
         }
       }
       // legacy scorer too (docFactor path)
-      val wl = s1.topKWand(Seq("alpha", "beta"), 10, LegacyTfIdf).collect()
+      val wl = s1.topK(Seq("alpha", "beta"), 10, LegacyTfIdf).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
-      val el = s1.topK(Seq("alpha", "beta"), 10, LegacyTfIdf).collect()
+      val el = ExhaustiveOracle.topK(idx, Seq("alpha", "beta"), 10, LegacyTfIdf).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
       assert(wl.map(_._1).toSeq === el.map(_._1).toSeq, tag)
 
@@ -217,8 +217,8 @@ class DeleteSpec extends AnyFunSuite {
       cfg = IndexConfig(shardSizeDocs = 16))
     val idx = base.withDeletes((0L until 5L).toDF("docId"))
     val s = new Searcher(spark, idx)
+    assert(ExhaustiveOracle.topK(idx, Seq("needle"), 10).count() === 0L)
     assert(s.topK(Seq("needle"), 10).count() === 0L)
-    assert(s.topKWand(Seq("needle"), 10).count() === 0L)
     assert(s.phraseTopK(Seq("needle", "haystack"), 10).count() === 0L)
     assert(s.totalHits(Seq("needle")) === 0L)
     // stacking withDeletes unions

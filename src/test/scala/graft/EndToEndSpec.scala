@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.build.{IndexBuilder, IndexConfig, ReferenceBuilder}
 import graft.model.CodeDoc
-import graft.query.{BM25, LegacyTfIdf, Searcher}
+import graft.query.{BM25, ExhaustiveOracle, LegacyTfIdf, Searcher}
 
 /** The §7.2 minimum slice: F1 fixture corpus → build → search —
   * reproduces the reference behavioral suites
@@ -122,8 +122,8 @@ class EndToEndSpec extends AnyFunSuite {
       k <- Seq(1, 2, 4)
       scorer <- Seq(BM25(), LegacyTfIdf)
     } {
-      val exact = searcher.topK(terms, k, scorer).collect().map(r => (r.getLong(0), r.getDouble(1)))
-      val wand = searcher.topKWand(terms, k, scorer).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      val exact = ExhaustiveOracle.topK(index, terms, k, scorer).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      val wand = searcher.topK(terms, k, scorer).collect().map(r => (r.getLong(0), r.getDouble(1)))
       assert(wand.map(_._1).toSeq === exact.map(_._1).toSeq,
         s"terms=$terms k=$k scorer=${scorer.name}")
       wand.zip(exact).foreach { case (w, e) =>
@@ -133,10 +133,10 @@ class EndToEndSpec extends AnyFunSuite {
   }
 
   test("conjunctive AND requires all terms") {
-    val hits = searcher.topK(Seq("messi", "plays"), 10, BM25(), requireAll = true)
+    val hits = ExhaustiveOracle.topK(index, Seq("messi", "plays"), 10, BM25(), requireAll = true)
       .collect().map(_.getLong(0)).toSet
     assert(hits === Set(docIdOf("FactTimes"), docIdOf("FourthTimes")))
-    val wand = searcher.topKWand(Seq("messi", "plays"), 10, BM25(), requireAll = true)
+    val wand = searcher.topK(Seq("messi", "plays"), 10, BM25(), requireAll = true)
       .collect().map(_.getLong(0)).toSet
     assert(wand === hits)
   }
@@ -231,21 +231,21 @@ class EndToEndSpec extends AnyFunSuite {
   test("field boost scales scores and preserves exhaustive/WAND identity") {
     import graft.query.Boosted
     val terms = Seq("plays", "messi", "manchester")
-    val base = searcher.topK(terms, 4).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val boosted = searcher.topK(terms, 4, Boosted(BM25(), 2.5))
+    val base = ExhaustiveOracle.topK(index, terms, 4).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val boosted = ExhaustiveOracle.topK(index, terms, 4, Boosted(BM25(), 2.5))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(base.map(_._1).toSeq === boosted.map(_._1).toSeq) // same ranking
     base.zip(boosted).foreach { case ((_, s0), (_, s1)) =>
       assert(math.abs(s1 - s0 * 2.5) < 1e-12)
     }
     // WAND with a boosted scorer stays rank- and score-identical
-    val wand = searcher.topKWand(terms, 4, Boosted(BM25(), 2.5))
+    val wand = searcher.topK(terms, 4, Boosted(BM25(), 2.5))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(wand.toSeq === boosted.toSeq)
     // and for the legacy scorer too (non-trivial docFactor)
-    val lb = searcher.topK(terms, 4, Boosted(LegacyTfIdf, 0.3))
+    val lb = ExhaustiveOracle.topK(index, terms, 4, Boosted(LegacyTfIdf, 0.3))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val lw = searcher.topKWand(terms, 4, Boosted(LegacyTfIdf, 0.3))
+    val lw = searcher.topK(terms, 4, Boosted(LegacyTfIdf, 0.3))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(lb === lw)
   }
@@ -272,10 +272,11 @@ class EndToEndSpec extends AnyFunSuite {
         .map(m => (m.term, m.docId, m.tf)).sortBy(_.toString).toSeq
     }
     assert(rows(interleaved) === rows(sorted))
-    // WAND ≡ exhaustive on the interleaved build (block skip intact)
+    // WAND ≡ oracle on the interleaved build (block skip intact)
     val s = new Searcher(spark, interleaved)
-    assert(s.topKWand(Seq("gamma", "alpha"), 10).collect().map(_.toSeq).toSeq
-      === s.topK(Seq("gamma", "alpha"), 10).collect().map(_.toSeq).toSeq)
+    assert(s.topK(Seq("gamma", "alpha"), 10).collect().map(_.toSeq).toSeq
+      === ExhaustiveOracle.topK(interleaved, Seq("gamma", "alpha"), 10)
+        .collect().map(_.toSeq).toSeq)
     // and every stored blob ends up docId-ordered
     val blobs = interleaved.postings.select("blob").collect()
       .map(_.getAs[Array[Byte]](0))

@@ -8,7 +8,7 @@ import graft.query.Searcher
 /** Facet counts, grouped top-k, MoreLikeThis, regex expansion, and
   * explain() — the collector/contrib surface layered over the reader
   * SPI. Hand-pinned micro-cases plus cross-path identities against
-  * the already-verified topK/topKWand plans. */
+  * the already-verified topK plan. */
 class FacetMltSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -106,7 +106,7 @@ class FacetMltSpec extends AnyFunSuite {
     val got = hits(s.moreLikeThisTopK(0L, 10, maxQueryTerms = 2))
     assert(got.map(_._1).toSet === Set(1L, 2L)) // seed excluded, 3/4 unmatched
     // identity with the explicit scoring-OR over the selection
-    val viaWand = hits(s.topKWand(Seq("gamma", "zeta"), 10,
+    val viaWand = hits(s.topK(Seq("gamma", "zeta"), 10,
       docFilter = Some(org.apache.spark.sql.functions.col("docId") =!= 0L)))
     assert(got === viaWand)
     // includeSeed brings doc 0 back (it matches its own terms best)
@@ -201,12 +201,12 @@ class FacetMltSpec extends AnyFunSuite {
     // (alpha|beta|eta) — note 'eta' also suffixes beta/theta/zeta; the
     // anchored match must NOT pull those in
     val got = hits(s.regexpTopK("(alpha|beta|eta)", 20))
-    val explicit = hits(s.topKWand(Seq("alpha", "beta", "eta"), 20))
+    val explicit = hits(s.topK(Seq("alpha", "beta", "eta"), 20))
     assert(got.nonEmpty)
     assert(got === explicit)
     // character-class + quantifier form: [gz]a?mma? → gamma only
     val cls = hits(s.regexpTopK("[gz]a?mma?", 20))
-    val gammaOnly = hits(s.topKWand(Seq("gamma"), 20))
+    val gammaOnly = hits(s.topK(Seq("gamma"), 20))
     assert(cls === gammaOnly)
   }
 

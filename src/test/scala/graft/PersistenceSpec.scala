@@ -33,7 +33,8 @@ class PersistenceSpec extends AnyFunSuite {
     val a = s1.topK(Seq("merge", "spark"), 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
     val b = s2.topK(Seq("merge", "spark"), 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(a.toSeq === b.toSeq)
-    val w = s2.topKWand(Seq("merge", "spark"), 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val w = graft.query.ExhaustiveOracle.topK(loaded, Seq("merge", "spark"), 10).collect()
+      .map(r => (r.getLong(0), r.getDouble(1)))
     assert(w.toSeq === a.toSeq)
   }
 

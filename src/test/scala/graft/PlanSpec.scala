@@ -88,7 +88,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("WAND doc-length side is pruned to touched shards") {
     val s = new Searcher(spark, diskIndex)
-    val df = s.topKWand(Seq("merge"), 5)
+    val df = s.topK(Seq("merge"), 5)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     // small touched sets prune via a codegen In-filter on the computed
@@ -101,7 +101,7 @@ class PlanSpec extends AnyFunSuite {
   test("tombstoned index keeps pushdown and plans deletes as an anti-join") {
     val idx = diskIndex.withDeletes(Seq(1L, 2L).toDF("docId"))
     val s = new Searcher(spark, idx)
-    val df = s.topK(Seq("merge"), 5)
+    val df = s.scoredDocs(Seq("merge"))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     // postings scan still term-pruned; deletes enter as LeftAnti (no
@@ -109,7 +109,7 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters"), plan.take(2000))
     assert(plan.contains("LeftAnti"), plan.take(3000))
     assert(!plan.contains("CartesianProduct"))
-    val wdf = s.topKWand(Seq("merge"), 5)
+    val wdf = s.topK(Seq("merge"), 5)
     wdf.collect()
     val wplan = wdf.queryExecution.executedPlan.toString
     assert(wplan.contains("LeftAnti"), wplan.take(3000))

@@ -73,7 +73,7 @@ class QueryExpansionSpec extends AnyFunSuite {
       hits(s.fuzzyTopK("kappo", 50, maxEdits = 1)))
     // SHOULD expansion beside a plain term = OR over expansion + term
     assert(hits(s.search("e* kappa", 200)) ===
-      hits(s.topKWand(Seq("eps", "eta", "kappa"), 200)))
+      hits(s.topK(Seq("eps", "eta", "kappa"), 200)))
   }
 
   test("MUST expansion: single-term group degrades; multi group gates on ≥1 member") {
@@ -82,7 +82,7 @@ class QueryExpansionSpec extends AnyFunSuite {
     val n = idx.stats.numDocs.toInt
     // 'ka*' expands to exactly {kappa} → plain MUST (ReqOpt dispatch)
     assert(hits(s.search("+ka* beta", n)) ===
-      hits(s.topKWand(Seq("beta", "kappa"), n, must = Seq("kappa"))))
+      hits(s.topK(Seq("beta", "kappa"), n, must = Seq("kappa"))))
     // 'e*' expands to {eps, eta}: doc must contain ≥1; scores sum the
     // matched among {eps, eta, kappa}
     val got = hits(s.search("+e* kappa", n))
@@ -99,9 +99,9 @@ class QueryExpansionSpec extends AnyFunSuite {
       assert(math.abs(a._2 - b._2) <= 1e-12 * math.max(1.0, math.abs(b._2)))
     }
     // the gate bites: some doc scored by kappa alone is excluded
-    assert(got.size < hits(s.topKWand(Seq("eps", "eta", "kappa"), n)).size)
+    assert(got.size < hits(s.topK(Seq("eps", "eta", "kappa"), n)).size)
     // a MUST group alone = disjunction over its expansion
-    assert(hits(s.search("+e*", n)) === hits(s.topKWand(Seq("eps", "eta"), n)))
+    assert(hits(s.search("+e*", n)) === hits(s.topK(Seq("eps", "eta"), n)))
     // empty MUST rewrite matches nothing, even beside a live term
     assert(s.search("+zz* kappa", 10).count() === 0L)
   }
@@ -123,10 +123,10 @@ class QueryExpansionSpec extends AnyFunSuite {
     val n = idx.stats.numDocs.toInt
     // term boost through the parser ≡ the explicit boosts map
     assert(hits(s.search("alpha^2 kappa", n)) ===
-      hits(s.topKWand(Seq("alpha", "kappa"), n, boosts = Map("alpha" -> 2.0))))
+      hits(s.topK(Seq("alpha", "kappa"), n, boosts = Map("alpha" -> 2.0))))
     // boosted expansion: every expanded term carries the boost
     assert(hits(s.search("e*^3 kappa", n)) ===
-      hits(s.topKWand(Seq("eps", "eta", "kappa"), n,
+      hits(s.topK(Seq("eps", "eta", "kappa"), n,
         boosts = Map("eps" -> 3.0, "eta" -> 3.0))))
     // single boosted phrase = Boosted scorer over the phrase (2× scores)
     val plainP = hits(s.phraseTopK(Seq("alpha", "kappa"), n)).toMap
@@ -148,9 +148,9 @@ class QueryExpansionSpec extends AnyFunSuite {
     val idx = index(randomDocs(130, 101L))
     val s = new Searcher(spark, idx)
     assert(hits(s.search("alpha -e*", 200)) ===
-      hits(s.topKWand(Seq("alpha"), 200, mustNot = Seq("eps", "eta"))))
+      hits(s.topK(Seq("alpha"), 200, mustNot = Seq("eps", "eta"))))
     // empty NOT rewrite excludes nothing
     assert(hits(s.search("alpha -zz*", 200)) ===
-      hits(s.topKWand(Seq("alpha"), 200)))
+      hits(s.topK(Seq("alpha"), 200)))
   }
 }

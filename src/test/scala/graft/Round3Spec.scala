@@ -10,7 +10,7 @@ import graft.build.{IndexBuilder, IndexConfig}
 import graft.codec.PostingsCodec
 import graft.model.{CorpusStats, Posting}
 import graft.pipeline.TextPipeline
-import graft.query.{BM25, Searcher, TermIterator, Wand}
+import graft.query.{BM25, ExhaustiveOracle, Searcher, TermIterator, Wand}
 import graft.table.TableFormat
 
 /** Round-3 regression gates: PPJoin prefix-filtered Jaccard (exact
@@ -107,21 +107,35 @@ class Round3Spec extends AnyFunSuite {
     // identical rows
     val docs = TextPipeline.documents(spark, "/root/testdata/sf0.001")
     val emb = TextPipeline.embeddings(spark, "/root/testdata/sf0.001")
-    def results(threshold: String): Seq[Seq[(Long, Long)]] = {
+    // 768-dim vectors: 3500 rows fit the 10 MiB threshold at a flat
+    // 512 B/row but not at their real 24 + 4·768 B/row, so the gate must
+    // not hint a broadcast there (Catalyst may still pick one from its
+    // own estimate); rows i and i + 1750 share a base vector (planted
+    // near-duplicates)
+    val wide = spark.range(3500).select(col("id").as("vec_id"),
+      expr("transform(sequence(0, 767), j -> cast((pmod(hash(id % 1750, j), 2001) - 1000 + " +
+        "pmod(hash(id, j), 21) - 10) / 1000.0 as float))").as("embedding"))
+    def results(threshold: String): (Seq[Seq[(Long, Long)]], String) = {
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-      try Seq(
-        TextPipeline.dedupGroups(docs, 8)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
-        TextPipeline.simhashPairs(docs, 8)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
-        TextPipeline.embedCosinePairs(emb, 0.4)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
-      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      try {
+        val widePairs = TextPipeline.embedCosinePairs(wide, 0.9, nPlanes = 16)
+        (Seq(
+          TextPipeline.dedupGroups(docs, 8)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
+          TextPipeline.simhashPairs(docs, 8)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
+          TextPipeline.embedCosinePairs(emb, 0.4)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
+          widePairs.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq),
+          widePairs.queryExecution.analyzed.toString)
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
-    val viaShuffle = results("-1")
-    val viaBroadcast = results("10485760")
+    val (viaShuffle, _) = results("-1")
+    val (viaBroadcast, widePlan) = results("10485760")
     assert(viaShuffle === viaBroadcast)
+    assert(viaBroadcast.last.nonEmpty, "no planted 768-dim near-duplicate found")
+    assert(!widePlan.contains("strategy=broadcast"), widePlan.take(2000))
   }
 
   test("pipeline ops leave the session CacheManager empty (no pinned plans)") {
@@ -169,9 +183,9 @@ class Round3Spec extends AnyFunSuite {
     val idx = IndexBuilder.fromText(spark, boilerplateDocs(20), "doc_id", "text",
       Nil, IndexConfig(shardSizeDocs = 16))
     val s = new Searcher(spark, idx)
-    val a = s.topK(Seq("license", "u3_7"), 10, BM25(), requireAll = true)
+    val a = ExhaustiveOracle.topK(idx, Seq("license", "u3_7"), 10, BM25(), requireAll = true)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val w = s.topKWand(Seq("license", "u3_7"), 10, BM25(), requireAll = true)
+    val w = s.topK(Seq("license", "u3_7"), 10, BM25(), requireAll = true)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(w.toSeq === a.toSeq)
     assert(a.map(_._1).toSet === Set(3L, 1003L))

@@ -83,7 +83,7 @@ class Round4Spec extends AnyFunSuite {
     assert(ci.decodedPosBlocks < ci.decodedBlocks)
   }
 
-  test("topKWand runs at most 2 jobs (one metadata collect + one main job)") {
+  test("topK runs at most 2 jobs (one metadata collect + one main job)") {
     val idx = IndexBuilder.fromCodeDocs(spark, corpus(11L, 200).toDS(),
       IndexConfig(shardSizeDocs = 64)).cache()
     idx.postings.count(); idx.docs.count(); idx.stats // warm + force lazy stats
@@ -92,9 +92,13 @@ class Round4Spec extends AnyFunSuite {
     // (shape, max jobs, run): each cap is the count measured before the
     // pruned query paths shared one shard cogroup; the small-set delete
     // apply is one action below that measurement (one bounded collect
-    // replaced a count followed by a collect)
+    // replaced a count followed by a collect); the field-sorted and
+    // boolean phrase-mix caps are the counts measured before topK and
+    // the all-hits scorer each became one path
     val pins: Seq[(String, Int, () => Unit)] = Seq(
-      ("topKWand", 2, () => s.topKWand(Seq("alpha", "rare2"), 5).collect()),
+      ("topK", 2, () => s.topK(Seq("alpha", "rare2"), 5).collect()),
+      ("sortedTopK", 4, () => s.sortedTopK(Seq("alpha", "rare2"), "path", true, 5).collect()),
+      ("search phrase mix", 7, () => s.search("+\"alpha beta\" gamma", 5).collect()),
       ("phraseTopK", 4, () => s.phraseTopK(Seq("alpha", "beta"), 5).collect()),
       ("multiPhraseTopK", 4, () =>
         s.multiPhraseTopK(Seq(Seq("alpha"), Seq("beta", "gamma")), 5).collect()),
@@ -116,7 +120,7 @@ class Round4Spec extends AnyFunSuite {
     // AQE submits each shuffle-stage materialization as its own job
     // inside the ONE main query — those are not extra driver actions.
     // Disable it here so the job count equals the action count being
-    // asserted (topKWand: 1 metadata collect + 1 main query).
+    // asserted (topK: 1 metadata collect + 1 main query).
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.addSparkListener(listener)
@@ -227,7 +231,7 @@ class Round4Spec extends AnyFunSuite {
     assert(terms.contains("the") && terms.contains("for") && terms.contains("in"))
     val s = new Searcher(spark, idx)
     assert(s.topK(Seq("case"), 5).collect().map(_.getLong(0)).toSeq === Seq(0L))
-    assert(s.topKWand(Seq("for"), 5).collect().map(_.getLong(0)).toSeq === Seq(1L))
+    assert(s.topK(Seq("for"), 5).collect().map(_.getLong(0)).toSeq === Seq(1L))
     // dl matches the analyzer's own token count (UDF path, not the
     // default's native expression)
     val dls = idx.docs.select("docId", "dl").collect()

@@ -37,7 +37,7 @@ class Round5Spec extends AnyFunSuite {
       for (terms <- Seq(Seq("alpha"), Seq("alpha", "beta", "kappa"))) {
         val ex = s.scoredDocs(terms).collect()
           .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        val wand = s.topKWand(terms, idx.stats.numDocs.toInt).collect()
+        val wand = s.topK(terms, idx.stats.numDocs.toInt).collect()
           .map(r => r.getLong(0) -> r.getDouble(1)).toMap
         assert(wand.keySet === ex.keySet, s"terms=$terms shard=$shardSize")
         wand.foreach { case (d, sc) =>
@@ -67,7 +67,7 @@ class Round5Spec extends AnyFunSuite {
       s.scoredDocs(terms).select("docId", "score"), emb, q, 0.5, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val viaWand = TextPipeline.hybridTopK(
-      s.topKWand(terms, idx.stats.numDocs.toInt), emb, q, 0.5, 10)
+      s.topK(terms, idx.stats.numDocs.toInt), emb, q, 0.5, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(viaWand.map(_._1) === viaExhaustive.map(_._1))
     viaWand.zip(viaExhaustive).foreach { case (a, b) =>

@@ -9,7 +9,8 @@ import graft.query.{ExhaustiveOracle, PhraseClause, QueryParser, Searcher}
   * hand-computed micro-cases pin the semantics; the pruned positional
   * path is cross-checked rank/score-identical to the exhaustive
   * relational fold at several slops; WAND mm is cross-checked against
-  * the exhaustive scorer at every feasible mm.
+  * the explode-join oracle at every feasible mm, and so is the
+  * all-hits clause scorer (`scoredDocs`).
   */
 class SlopMmSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -35,6 +36,10 @@ class SlopMmSpec extends AnyFunSuite {
 
   private def hits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  /** All-hits `scoredDocs` output in top-k order. */
+  private def ranked(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    hits(df.orderBy($"score".desc, $"docId").select("docId", "score"))
 
   // ---- sloppy phrase: hand-pinned semantics ----
 
@@ -200,26 +205,26 @@ class SlopMmSpec extends AnyFunSuite {
     val terms = Seq("alpha", "kappa")
     val even = Some(col("docId") % 2 === 0)
     for (mode <- Seq("or", "and")) {
-      def call(wand: Boolean) =
-        if (wand) s.topKWand(terms, n, requireAll = mode == "and", docFilter = even)
-        else s.topK(terms, n, requireAll = mode == "and", docFilter = even)
-      val wand = hits(call(true))
-      val ex = hits(call(false))
+      val wand = hits(s.topK(terms, n, requireAll = mode == "and", docFilter = even))
+      val ex = hits(ExhaustiveOracle.topK(idx, terms, n, requireAll = mode == "and",
+        docFilter = even))
       assert(wand === ex, s"mode=$mode")
+      assert(ranked(s.scoredDocs(terms, requireAll = mode == "and", docFilter = even)) === ex,
+        s"mode=$mode")
       assert(wand.nonEmpty && wand.forall(_._1 % 2 == 0), s"mode=$mode")
       // Lucene filter semantics: the filter narrows candidates but does
       // NOT re-weight — surviving docs keep their unfiltered scores
       val unfiltered = hits(
-        if (mode == "and") s.topKWand(terms, n, requireAll = true)
-        else s.topKWand(terms, n)).toMap
+        if (mode == "and") s.topK(terms, n, requireAll = true)
+        else s.topK(terms, n)).toMap
       wand.foreach { case (d, sc) =>
         assert(math.abs(sc - unfiltered(d)) <= 1e-12 * math.max(1.0, math.abs(sc)))
       }
       assert(wand.size < unfiltered.size, "filter removed nothing — degenerate")
     }
     // all-false filter → no hits on either path
-    assert(s.topKWand(terms, n, docFilter = Some(lit(false))).count() === 0L)
     assert(s.topK(terms, n, docFilter = Some(lit(false))).count() === 0L)
+    assert(ExhaustiveOracle.topK(idx, terms, n, docFilter = Some(lit(false))).count() === 0L)
   }
 
   // ---- per-term query boosts ----
@@ -233,12 +238,12 @@ class SlopMmSpec extends AnyFunSuite {
       val s = new Searcher(spark, idx)
       val n = idx.stats.numDocs.toInt
       def call(b: Map[String, Double]) = mode match {
-        case "or" => (s.topKWand(terms, n, boosts = b),
-          s.topK(terms, n, boosts = b))
-        case "and" => (s.topKWand(terms, n, requireAll = true, boosts = b),
-          s.topK(terms, n, requireAll = true, boosts = b))
-        case _ => (s.topKWand(terms, n, must = Seq("alpha"), boosts = b),
-          s.topK(terms, n, must = Seq("alpha"), boosts = b))
+        case "or" => (s.topK(terms, n, boosts = b),
+          ExhaustiveOracle.topK(idx, terms, n, boosts = b))
+        case "and" => (s.topK(terms, n, requireAll = true, boosts = b),
+          ExhaustiveOracle.topK(idx, terms, n, requireAll = true, boosts = b))
+        case _ => (s.topK(terms, n, must = Seq("alpha"), boosts = b),
+          ExhaustiveOracle.topK(idx, terms, n, must = Seq("alpha"), boosts = b))
       }
       val (wandDf, exDf) = call(boosts)
       val (wand, ex) = (hits(wandDf), hits(exDf))
@@ -246,6 +251,12 @@ class SlopMmSpec extends AnyFunSuite {
       wand.zip(ex).foreach { case (a, b) =>
         assert(math.abs(a._2 - b._2) <= 1e-12 * math.max(1.0, math.abs(b._2)))
       }
+      val all = ranked(mode match {
+        case "or" => s.scoredDocs(terms, boosts = boosts)
+        case "and" => s.scoredDocs(terms, requireAll = true, boosts = boosts)
+        case _ => s.scoredDocs(terms, must = Seq("alpha"), boosts = boosts)
+      })
+      assert(all === ex, s"scoredDocs shard=$shardSize mode=$mode")
       // boost ≡ 1 everywhere is exactly the unboosted query
       val (w1, _) = call(Map("alpha" -> 1.0, "beta" -> 1.0))
       assert(hits(w1) === hits(call(Map.empty)._1), s"mode=$mode")
@@ -255,8 +266,8 @@ class SlopMmSpec extends AnyFunSuite {
     val idx = index(corpus, 32L)
     val s = new Searcher(spark, idx)
     val n = idx.stats.numDocs.toInt
-    val plain = hits(s.topKWand(terms, n)).map(_._1)
-    val boosted = hits(s.topKWand(terms, n, boosts = boosts)).map(_._1)
+    val plain = hits(s.topK(terms, n)).map(_._1)
+    val boosted = hits(s.topK(terms, n, boosts = boosts)).map(_._1)
     assert(plain !== boosted, "boosts changed nothing — test corpus degenerate")
   }
 
@@ -304,13 +315,13 @@ class SlopMmSpec extends AnyFunSuite {
         }
       }
       // tb = 1: dismax degenerates to the plain OR sum (BM25 docFactor ≡ 1)
-      val or = hits(s.topKWand(terms, n)).toMap
+      val or = hits(s.topK(terms, n)).toMap
       hits(s.dismaxTopK(terms, n, 1.0)).foreach { case (d, sc) =>
         assert(math.abs(sc - or(d)) <= 1e-12 * math.max(1.0, math.abs(or(d))))
       }
       // tb = 0: per-doc score = the best of the three single-term scores
       val singles = terms.map(t =>
-        hits(s.topKWand(Seq(t), n)).toMap.withDefaultValue(0.0))
+        hits(s.topK(Seq(t), n)).toMap.withDefaultValue(0.0))
       hits(s.dismaxTopK(terms, n, 0.0)).foreach { case (d, sc) =>
         val best = singles.map(_(d)).max
         assert(math.abs(sc - best) <= 1e-12 * math.max(1.0, best), s"doc=$d")
@@ -327,11 +338,13 @@ class SlopMmSpec extends AnyFunSuite {
       val idx = index(corpus, shardSize)
       val s = new Searcher(spark, idx)
       val n = idx.stats.numDocs.toInt
-      val orHits = hits(s.topKWand(terms, n))
+      val orHits = hits(s.topK(terms, n))
       for (mm <- 0 to terms.length) {
-        val wand = hits(s.topKWand(terms, n, minShouldMatch = mm))
-        val ex = hits(s.topK(terms, n, minShouldMatch = mm))
+        val wand = hits(s.topK(terms, n, minShouldMatch = mm))
+        val ex = hits(ExhaustiveOracle.topK(idx, terms, n, minShouldMatch = mm))
         assert(wand === ex, s"shard=$shardSize mm=$mm")
+        assert(ranked(s.scoredDocs(terms, minShouldMatch = mm)) === ex,
+          s"scoredDocs shard=$shardSize mm=$mm")
         // mm only FILTERS: every surviving (doc, score) appears in the
         // unfiltered OR result with the identical score
         val orMap = orHits.toMap
@@ -340,13 +353,15 @@ class SlopMmSpec extends AnyFunSuite {
         }
       }
       // mm = #terms ≡ conjunctive AND
-      assert(hits(s.topKWand(terms, n, minShouldMatch = terms.length)) ===
-        hits(s.topKWand(terms, n, requireAll = true)))
+      assert(hits(s.topK(terms, n, minShouldMatch = terms.length)) ===
+        hits(s.topK(terms, n, requireAll = true)))
       // mm above the SHOULD-clause count matches nothing (Lucene contract)
-      assert(s.topKWand(terms, n, minShouldMatch = terms.length + 1).count() === 0L)
       assert(s.topK(terms, n, minShouldMatch = terms.length + 1).count() === 0L)
+      assert(ExhaustiveOracle.topK(idx, terms, n, minShouldMatch = terms.length + 1)
+        .count() === 0L)
+      assert(s.scoredDocs(terms, minShouldMatch = terms.length + 1).count() === 0L)
       // a result set strictly shrinks somewhere between mm=0 and mm=n
-      assert(hits(s.topKWand(terms, n, minShouldMatch = 2)).size < orHits.size,
+      assert(hits(s.topK(terms, n, minShouldMatch = 2)).size < orHits.size,
         "corpus produced no partial-match docs — mm untested")
     }
   }
@@ -358,15 +373,20 @@ class SlopMmSpec extends AnyFunSuite {
     val must = Seq("alpha")
     val should = Seq("beta", "kappa")
     for (mm <- 0 to should.length) {
-      val wand = hits(s.topKWand(should ++ must, n, must = must, minShouldMatch = mm))
-      val ex = hits(s.topK(should ++ must, n, must = must, minShouldMatch = mm))
+      val wand = hits(s.topK(should ++ must, n, must = must, minShouldMatch = mm))
+      val ex = hits(ExhaustiveOracle.topK(idx, should ++ must, n, must = must,
+        minShouldMatch = mm))
       assert(wand === ex, s"mm=$mm")
+      assert(ranked(s.scoredDocs(should ++ must, must = must, minShouldMatch = mm)) === ex,
+        s"scoredDocs mm=$mm")
     }
     // mm beyond the optionals → empty even though MUST alone matches
-    assert(s.topKWand(should ++ must, n, must = must,
+    assert(s.topK(should ++ must, n, must = must,
       minShouldMatch = should.length + 1).count() === 0L)
     // requireAll has zero SHOULD clauses: any mm > 0 matches nothing
-    assert(s.topKWand(must, n, requireAll = true, minShouldMatch = 1).count() === 0L)
     assert(s.topK(must, n, requireAll = true, minShouldMatch = 1).count() === 0L)
+    assert(ExhaustiveOracle.topK(idx, must, n, requireAll = true, minShouldMatch = 1)
+      .count() === 0L)
+    assert(s.scoredDocs(must, requireAll = true, minShouldMatch = 1).count() === 0L)
   }
 }

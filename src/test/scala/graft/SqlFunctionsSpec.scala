@@ -109,7 +109,7 @@ class SqlFunctionsSpec extends AnyFunSuite {
     val loaded = graft.table.IndexTables.load(spark, dir)
     val s = new graft.query.Searcher(spark, loaded)
     def viaApi(terms: Seq[String], k: Int, and: Boolean): Seq[(Long, Double)] =
-      s.topKWand(terms, k, graft.query.BM25(), requireAll = and)
+      s.topK(terms, k, graft.query.BM25(), requireAll = and)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
     assert(viaSql(s"SELECT * FROM match_query('$dir', 'Spark, merge window!', 10)")
@@ -128,7 +128,7 @@ class SqlFunctionsSpec extends AnyFunSuite {
     val s2 = new graft.query.Searcher(spark,
       graft.table.IndexTables.load(spark, dir))
     assert(viaSql(s"SELECT * FROM match_query('$dir', '+spark merge -window', 10, 'query')")
-      === s2.topKWand(Seq("spark", "merge"), 10, graft.query.BM25(),
+      === s2.topK(Seq("spark", "merge"), 10, graft.query.BM25(),
         must = Seq("spark"), mustNot = Seq("window"))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     // 'query' mode with a quoted phrase = the phrase plan

@@ -50,8 +50,9 @@ class StreamingSpec extends AnyFunSuite {
       val a = sM.topK(terms, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
       val b = sB.topK(terms, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
       assert(a.toSeq === b.toSeq, s"terms=$terms")
-      val w = sM.topKWand(terms, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
-      assert(w.toSeq === a.toSeq, s"wand terms=$terms")
+      val w = graft.query.ExhaustiveOracle.topK(merged, terms, 10).collect()
+        .map(r => (r.getLong(0), r.getDouble(1)))
+      assert(w.toSeq === a.toSeq, s"oracle terms=$terms")
     }
 
     // idempotent replay: re-running a committed batch is a no-op
@@ -85,8 +86,8 @@ class StreamingSpec extends AnyFunSuite {
     val defaultLoaded = StreamingIndexer.loadMerged(spark, root)
     assert(defaultLoaded.config.shardSizeDocs === 32L)
     val sD = new Searcher(spark, defaultLoaded)
-    assert(sD.topKWand(Seq("merge"), 10).collect().map(_.getLong(0)).toSeq
-      === sM.topKWand(Seq("merge"), 10).collect().map(_.getLong(0)).toSeq)
+    assert(sD.topK(Seq("merge"), 10).collect().map(_.getLong(0)).toSeq
+      === sM.topK(Seq("merge"), 10).collect().map(_.getLong(0)).toSeq)
 
     // compaction FRESHNESS: a new segment after a compact must produce
     // a new compacted snapshot, not silently return the stale one

@@ -4,10 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.{IndexBuilder, IndexConfig}
 import graft.model.CodeDoc
-import graft.query.{BM25, Boosted, LegacyTfIdf, Searcher, Scorer}
+import graft.query.{BM25, Boosted, ExhaustiveOracle, LegacyTfIdf, Searcher, Scorer}
 
 /** Randomized rank-identity fuzz: on seeded random corpora, the
-  * block-max WAND path must return exactly the exhaustive path's
+  * block-max WAND path must return exactly the explode-join oracle's
   * (docId, score) sequence for every query shape × scorer × k —
   * θ-pruning, block-max filtering, shard merging, tie-breaks and the
   * legacy docFactor scaling all have to be sound at once. */
@@ -49,9 +49,9 @@ class WandFuzzSpec extends AnyFunSuite {
     } {
       val tag = s"seed=$seed shard=$shardSize terms=$terms k=$k " +
         s"scorer=${scorer.name} and=$requireAll"
-      val exact = s.topK(terms, k, scorer, requireAll).collect()
+      val exact = ExhaustiveOracle.topK(idx, terms, k, scorer, requireAll).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
-      val wand = s.topKWand(terms, k, scorer, requireAll).collect()
+      val wand = s.topK(terms, k, scorer, requireAll).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
       assert(wand.map(_._1).toSeq === exact.map(_._1).toSeq, tag)
       wand.zip(exact).foreach { case (w, e) =>
@@ -68,8 +68,8 @@ class WandFuzzSpec extends AnyFunSuite {
   }
 
   /** Mixed MUST + SHOULD (ReqOptSumScorer): the WAND leapfrog-over-
-    * required path must be rank/score-identical to the exhaustive
-    * plan's must-filter for every must-subset shape, including a
+    * required path must be rank/score-identical to the oracle's
+    * must-filter for every must-subset shape, including a
     * missing MUST term (→ empty) and must == all terms (≡ AND). */
   private def runReqOpt(seed: Long, nDocs: Int, shardSize: Long): Unit = {
     val idx = IndexBuilder.fromCodeDocs(spark, corpus(seed, nDocs).toDS(),
@@ -89,16 +89,16 @@ class WandFuzzSpec extends AnyFunSuite {
     } {
       val tag = s"reqopt seed=$seed shard=$shardSize terms=$terms must=$must " +
         s"k=$k scorer=${scorer.name}"
-      val exact = s.topK(terms, k, scorer, must = must).collect()
+      val exact = ExhaustiveOracle.topK(idx, terms, k, scorer, must = must).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
-      val wand = s.topKWand(terms, k, scorer, must = must).collect()
+      val wand = s.topK(terms, k, scorer, must = must).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
       assert(wand.map(_._1).toSeq === exact.map(_._1).toSeq, tag)
       wand.zip(exact).foreach { case (w, e) =>
         assert(math.abs(w._2 - e._2) <= 1e-12 * math.max(1.0, math.abs(e._2)), tag)
       }
       if (must == terms) { // degenerate mixed mode ≡ the AND leapfrog
-        val and = s.topKWand(terms, k, scorer, requireAll = true).collect()
+        val and = s.topK(terms, k, scorer, requireAll = true).collect()
           .map(r => (r.getLong(0), r.getDouble(1))).toSeq
         assert(wand.toSeq === and, tag)
       }

@@ -134,7 +134,7 @@ object ReferenceBuilder {
     val p = postings(prod.docs, tokenized, untokenized, prod.config)
     val termStats = p.groupBy("field", "term").agg(
       sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
-    InvertedIndex.lazyStats(prod.docs, p, termStats, () => prod.stats, prod.config)
+    new InvertedIndex(prod.docs, p, termStats, () => prod.stats, prod.config)
   }
 
   /** Hash-aggregation segment merge: collect each (field, term, shard)

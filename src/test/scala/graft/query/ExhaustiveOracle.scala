@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.build.InvertedIndex
@@ -8,19 +8,66 @@ import graft.build.InvertedIndex
 /** Test-scope cross-validation oracles for the pruned query paths:
   * corpus-wide decode, positional explode and relational joins — no
   * shard cogroup, no Wand kernel. Built only on the public surface
-  * (`Searcher.matchesWithPositions` / `docFreqs`, the index's docs,
-  * deletes and stats, `Scorer.contributionCol`); live dl is computed
-  * here as docs anti-joined with the tombstones, independent of the
-  * production dl side it checks. Do not use at scale. */
+  * (`Searcher.matches` / `matchesWithPositions` / `docFreqs`, the
+  * index's docs, deletes and stats, `Scorer.contributionCol` /
+  * `docFactorCol`); live dl is computed here as docs anti-joined with
+  * the tombstones, independent of the production dl side it checks.
+  * Do not use at scale. */
 object ExhaustiveOracle {
 
   private def searcher(index: InvertedIndex) =
     new Searcher(index.docs.sparkSession, index)
 
-  /** Live (docId, dl): every stored doc minus the tombstones. */
-  private def liveDl(index: InvertedIndex): DataFrame = {
-    val dl = index.docs.select(col("docId"), col("dl").cast("double").as("dl"))
+  /** Live (docId, dl): every stored doc (passing `docFilter`) minus
+    * the tombstones. */
+  private def liveDl(index: InvertedIndex, docFilter: Option[Column] = None): DataFrame = {
+    val dl = docFilter.fold(index.docs)(index.docs.where)
+      .select(col("docId"), col("dl").cast("double").as("dl"))
     index.deletes.fold(dl)(del => dl.join(del.select("docId"), Seq("docId"), "left_anti"))
+  }
+
+  /** (docId, cs): per live doc, its (term, tscore) contributions sorted
+    * by term — the explode-join every term-scoring oracle folds. */
+  private def termScores(index: InvertedIndex, dfs: Map[String, Long], scorer: Scorer,
+      boosts: Map[String, Double] = Map.empty, docFilter: Option[Column] = None): DataFrame =
+    searcher(index).matches(dfs.keys.toSeq).toDF()
+      .join(liveDl(index, docFilter), Seq("docId"))
+      .withColumn("tscore",
+        coalesce(element_at(typedlit(boosts), col("term")), lit(1.0)) *
+          scorer.contributionCol(col("tf").cast("double"),
+            element_at(typedlit(dfs.map { case (t, d) => t -> d.toDouble }), col("term")),
+            col("dl"), index.stats))
+      .groupBy("docId")
+      .agg(sort_array(collect_list(struct(col("term"), col("tscore")))).as("cs"))
+
+  private def sumOf(cs: Column): Column =
+    aggregate(cs, lit(0.0), (acc, x) => acc + x.getField("tscore"))
+
+  /** Term-query top-k: the term-ordered sum per doc, the occur filters
+    * as plain counts (every required term, ≥ `minShouldMatch` optional
+    * ones), the doc factor, and an anti-join on docs holding any
+    * prohibited term. `Searcher.topK`'s empty-result rules (MUST ∧
+    * MUST_NOT, mm above the SHOULD count) fall out of the counts. */
+  def topK(index: InvertedIndex, terms: Seq[String], k: Int,
+      scorer: Scorer = BM25(), requireAll: Boolean = false,
+      mustNot: Seq[String] = Nil, must: Seq[String] = Nil,
+      minShouldMatch: Int = 0, boosts: Map[String, Double] = Map.empty,
+      docFilter: Option[Column] = None): DataFrame = {
+    val s = searcher(index)
+    val qTerms = (terms ++ must).distinct.sorted
+    val required = if (requireAll) qTerms else must.distinct
+    val dfs = s.docFreqs(qTerms)
+    val scored = termScores(index, dfs, scorer, boosts, docFilter)
+      .select(col("docId"), col("cs"), size(col("cs")).as("nMatched"),
+        size(filter(col("cs"),
+          x => array_contains(typedlit(required), x.getField("term")))).as("nMust"))
+      .where(col("nMust") === required.length &&
+        col("nMatched") - col("nMust") >= minShouldMatch)
+      .select(col("docId"), (sumOf(col("cs")) * scorer.docFactorCol(col("nMatched"),
+        qTerms.map(t => dfs.getOrElse(t, 0L).toDouble), index.stats)).as("score"))
+    (if (mustNot.isEmpty) scored
+     else scored.join(s.matches(mustNot.distinct).toDF().select("docId"), Seq("docId"), "left_anti"))
+      .orderBy(desc("score"), asc("docId")).limit(k)
   }
 
   /** (docId, p) — every position of the given terms, exploded. */
@@ -108,17 +155,8 @@ object ExhaustiveOracle {
   def dismaxTopK(index: InvertedIndex, terms: Seq[String], k: Int,
       tieBreaker: Double = 0.0, scorer: Scorer = BM25()): DataFrame = {
     require(tieBreaker >= 0.0 && tieBreaker <= 1.0)
-    val qTerms = terms.distinct.sorted
-    val s = searcher(index)
-    val dfLookup = typedlit(s.docFreqs(qTerms).map { case (t, d) => t -> d.toDouble })
-    s.matchesWithPositions(qTerms).toDF()
-      .join(liveDl(index), Seq("docId"))
-      .withColumn("tscore", scorer.contributionCol(col("tf").cast("double"),
-        element_at(dfLookup, col("term")), col("dl"), index.stats))
-      .groupBy("docId")
-      .agg(sort_array(collect_list(struct(col("term"), col("tscore")))).as("cs"))
-      .withColumn("sm",
-        aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("tscore")))
+    termScores(index, searcher(index).docFreqs(terms.distinct), scorer)
+      .withColumn("sm", sumOf(col("cs")))
       .withColumn("mx",
         aggregate(col("cs"), lit(Double.MinValue),
           (acc, x) => greatest(acc, x.getField("tscore"))))
