@@ -2,7 +2,6 @@ package graft.build
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 import graft.analysis.Analyzer
 import graft.codec.PostingsCodec
@@ -687,34 +686,12 @@ object IndexBuilder {
       spark: SparkSession,
       path: String,
       cfg: IndexConfig = IndexConfig()): InvertedIndex = {
-    val files = {
-      val s = java.nio.file.Files.list(java.nio.file.Paths.get(path))
-      try s.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toSeq.sorted
-      finally s.close()
-    }
     // local-FS fallback path: no catalog manifest, so per-file row
-    // counts come from the parquet footers — read CONCURRENTLY (a
-    // serial loop would be O(#files) driver latency); with a real
-    // catalog use fromTableSnapshot / fromParquetManifest instead,
-    // which skip footer I/O entirely
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(files.size, 16)))
-    val fileRows =
-      try {
-        files.map { f =>
-          pool.submit(new java.util.concurrent.Callable[(String, Long)] {
-            def call(): (String, Long) = {
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-              val n = try r.getRecordCount finally r.close()
-              (java.nio.file.Paths.get(f).getFileName.toString, n)
-            }
-          })
-        }.map(_.get())
-      } finally pool.shutdown()
+    // counts come from the parquet footers; with a real catalog use
+    // fromTableSnapshot / fromParquetManifest instead, which skip
+    // footer I/O entirely
+    val fileRows = graft.table.TableFormat.footerRowCounts(java.nio.file.Paths.get(path))
+      .map(f => (f.file, f.rows))
     fromParquetManifest(spark, path, fileRows, cfg)
   }
 

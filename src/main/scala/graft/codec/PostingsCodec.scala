@@ -272,13 +272,6 @@ object PostingsCodec {
     if (n == 0) 0L else r.readVarLong()
   }
 
-  /** Materialize a blob back into standalone PostingBlocks (payload
-    * copies — use BlobView for the read hot path). */
-  def decodeBlob(blob: Array[Byte]): Array[PostingBlock] = {
-    val v = new BlobView(blob)
-    Array.tabulate(v.nBlocks)(v.block)
-  }
-
   /** Concatenate shard blobs in the given order into one blob —
     * header-only rewrite plus raw payload copy, ZERO payload decode.
     * Callers must ensure the concatenated block sequence is docId-
@@ -345,11 +338,6 @@ object PostingsCodec {
     def payloadLen(i: Int): Int = lens(i)
     def lastMaxDoc: Long = maxDocs(nBlocks - 1)
     def firstMinDoc: Long = minDocs(0)
-    def totalN: Long = {
-      var s = 0L; var i = 0
-      while (i < nBlocks) { s += ns(i); i += 1 }
-      s
-    }
     /** Blocks strictly docId-ordered and range-disjoint? */
     def isDocOrdered: Boolean = {
       var i = 1
@@ -365,9 +353,5 @@ object PostingsCodec {
       decodePostingsAt(new Reader(blob, offs(i), offs(i) + lens(i)), minDocs(i), ns(i))
     def allPostings: Iterator[Posting] =
       (0 until nBlocks).iterator.flatMap(decodePostings)
-    /** Materialize block i as a standalone PostingBlock (payload copy). */
-    def block(i: Int): PostingBlock =
-      PostingBlock(minDocs(i), maxDocs(i), ns(i), maxTfs(i),
-        java.util.Arrays.copyOfRange(blob, offs(i), offs(i) + lens(i)))
   }
 }

@@ -293,17 +293,18 @@ object TextPipeline {
     }
   }
 
-  /** Broadcast-hint gate for a frame of ~`bytesPerRow`-sized rows and
+  /** Join-strategy gate for a frame of ~`bytesPerRow`-sized rows and
     * a measured `n` rows against the session's own
     * autoBroadcastJoinThreshold (guide §3.1: decide the strategy from
-    * runtime size, not a local-mode constant). Checkpointed frames
-    * carry DEFAULT (EiB) stats, so without the hint Catalyst plans
-    * their joins as full-shuffle SortMergeJoins however small they are;
-    * big inputs fail the gate and keep the shuffle shape. Hints never
-    * change results. */
+    * runtime size, not a local-mode constant). Catalyst's own size
+    * estimate of a checkpointed frame is no guide either way, so the
+    * gate decides BOTH ways: frames that fit get a `broadcast` hint,
+    * big ones an explicit `merge` (shuffle sort-merge) hint — without
+    * it Catalyst (AQE included) may still broadcast a frame the gate
+    * rejected. Hints never change results. */
   private def bcastIfFits(df: DataFrame, n: Long, bytesPerRow: Long): DataFrame = {
     val t = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (t > 0 && n * bytesPerRow <= t) broadcast(df) else df
+    if (t > 0 && n * bytesPerRow <= t) broadcast(df) else df.hint("merge")
   }
 
   /** Eager localCheckpoint with Row(row count, `extra` aggregates…)
@@ -861,11 +862,8 @@ object TextPipeline {
   def ivfTopK(emb: DataFrame, queryVecId: Long, k: Int): DataFrame = {
     val qLabel = emb.where(col("vec_id") === queryVecId)
       .select("label").head().getInt(0)
-    cosineTopKWithin(emb.where(col("label") === qLabel), queryVecId, k)
+    cosineTopK(emb.where(col("label") === qLabel), queryVecId, k)
   }
-
-  private def cosineTopKWithin(emb: DataFrame, queryVecId: Long, k: Int): DataFrame =
-    cosineTopK(emb, queryVecId, k)
 
   // ---- IVF with a real coarse quantizer (seeded k-means) -------------------
 
@@ -943,13 +941,12 @@ object TextPipeline {
       nIter: Int = 3,
       nProbe: Int = 1): DataFrame = {
     val cents = kmeansCentroids(emb, nClusters, nIter)
-    val q = emb.where(col("vec_id") === queryVecId)
-      .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray
+    val q = queryVec(emb, queryVecId)
     val probe = clustersByDistance(cents, q)
       .take(math.min(nProbe, cents.length)).toSeq
     val assignU = nearestUdf(cents)
-    cosineTopK(emb.where(assignU(col("embedding")).isin(probe: _*)),
-      queryVecId, k)
+    cosineTopKVec(emb.where(assignU(col("embedding")).isin(probe: _*)), q, k,
+      excludeId = Some(queryVecId))
   }
 
   /** Rank cluster ids by squared distance of their centroid to q. */

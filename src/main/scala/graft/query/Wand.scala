@@ -3,7 +3,7 @@ package graft.query
 import scala.collection.mutable
 
 import graft.codec.PostingsCodec
-import graft.model.{CorpusStats, PostingBlock, ScoredDoc}
+import graft.model.{CorpusStats, ScoredDoc}
 
 /** Posting-list iterator over an encoded shard blob with block
   * skipping — the fixed version of the reference's
@@ -24,13 +24,6 @@ final class TermIterator(
       * BooleanQuery): scales this term's contributions AND its block
       * bounds; callers must fold it into `ub` too. */
     val boost: Double = 1.0) {
-
-  /** Convenience for callers holding standalone blocks (tests/tools). */
-  def this(term: String, df: Double, ub: Double, scorer: Scorer,
-      stats: CorpusStats, blocks: Array[PostingBlock]) =
-    this(term, df, ub, scorer, stats,
-      new PostingsCodec.BlobView(PostingsCodec.encodeBlob(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(blocks))))
 
   private var bi = 0
   private var di = 0

@@ -37,38 +37,16 @@ object MatchQuery {
 
   /** Loaded indexes are build-once/query-many artifacts — memoized per
     * root like EngineQueries' per-dir cache. The cache key carries a
-    * SNAPSHOT VERSION (manifest + stats.json mtimes): a root rewritten
-    * in place (e.g. by a later compaction at the same path) changes its
-    * manifests' timestamps, so the stale entry simply stops being hit
+    * SNAPSHOT VERSION (`IndexTables.snapshotVersion`: manifest +
+    * stats.json mtimes and sizes): a root rewritten in place (e.g. by
+    * a later compaction at the same path) changes its manifests'
+    * timestamps, so the stale entry simply stops being hit
     * instead of serving old data for the JVM lifetime. Stale entries
     * are evicted on replacement (same root, new version). */
   private val indexCache = TrieMap.empty[String, (String, InvertedIndex)]
 
-  /** Cheap filesystem fingerprint of a committed snapshot: (mtime,
-    * size) of the three table manifests plus stats.json (four stat
-    * calls — no data I/O). An in-place rewrite commits new manifests;
-    * size rides along because mtime alone has filesystem-dependent
-    * granularity (1 s on some filesystems) and a rewrite landing
-    * within one tick — or a copy preserving timestamps — would
-    * otherwise serve the stale cached index for the JVM lifetime.
-    * A rewrite changing neither mtime nor manifest byte size (same
-    * snapshot id, same file set, same second) is indistinguishable
-    * from no change — and content-identical for our writers, which
-    * never reuse a snapshot id. */
-  private def snapshotVersion(root: String): String = {
-    def mt(name: String): String = {
-      val p = java.nio.file.Paths.get(root, name)
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.getLastModifiedTime(p).toMillis.toString +
-          ":" + java.nio.file.Files.size(p)
-      else "-1"
-    }
-    Seq("docs.manifest.json", "postings.manifest.json",
-      "termStats.manifest.json", "stats.json").map(mt).mkString(",")
-  }
-
   private def loadCached(spark: SparkSession, root: String): InvertedIndex = {
-    val ver = snapshotVersion(root)
+    val ver = IndexTables.snapshotVersion(root)
     indexCache.get(root) match {
       case Some((v, idx)) if v == ver => idx
       case _ =>

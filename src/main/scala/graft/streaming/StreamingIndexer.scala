@@ -1,14 +1,13 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.build.{IndexBuilder, IndexConfig, InvertedIndex}
-import graft.table.TableFormat
+import graft.table.{IndexTables, TableFormat}
 
 /** Incremental index ingestion on Structured Streaming.
   *
@@ -97,41 +96,21 @@ object StreamingIndexer {
             s"was configured with '${cfg.analyzer.name}'; mixed analyzers " +
             "produce incompatible token streams — reuse the original " +
             "analyzer or a fresh root")
-        if (analyzerName.isEmpty) {
-          val tmp = Paths.get(root, s"_tmp_ingest_config_${System.nanoTime()}.json")
-          Files.writeString(tmp,
-            s"""{"shardSizeDocs":$shard,"analyzer":"$prior"}""")
-          Files.move(tmp, Paths.get(root, "ingest_config.json"),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          ()
-        }
+        if (analyzerName.isEmpty)
+          TableFormat.commitJson(root, IngestConfigFile, IndexTables.configFields(cfg),
+            replace = true)
       case None =>
-        val p = Paths.get(root, "ingest_config.json")
         Files.createDirectories(Paths.get(root))
-        val tmp = Paths.get(root, s"_tmp_ingest_config_${System.nanoTime()}.json")
-        Files.writeString(tmp,
-          s"""{"shardSizeDocs":${cfg.shardSizeDocs},""" +
-            s""""analyzer":"${cfg.analyzer.name}"}""")
-        try Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp); ()
-        }
+        TableFormat.commitJson(root, IngestConfigFile, IndexTables.configFields(cfg),
+          replace = false)
     }
+
+  private val IngestConfigFile = "ingest_config.json"
 
   /** (shardSizeDocs, analyzer name) from ingest_config.json; analyzer
     * is None for pre-round-4 roots (standard was the only analyzer). */
-  private def readIngestConfig(root: String): Option[(Long, Option[String])] = {
-    val p = Paths.get(root, "ingest_config.json")
-    if (!Files.exists(p)) None
-    else {
-      val txt = Files.readString(p)
-      "\"shardSizeDocs\":([0-9]+)".r.findFirstMatchIn(txt).map { m =>
-        (m.group(1).toLong,
-          "\"analyzer\":\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1)))
-      }
-    }
-  }
+  private def readIngestConfig(root: String): Option[(Long, Option[String])] =
+    TableFormat.readJson(root, IngestConfigFile).flatMap(IndexTables.configOf)
 
   /** `cfg` with the shard width + analyzer of the root's persisted
     * ingest config, when one exists: the stored rows were produced with
@@ -156,16 +135,9 @@ object StreamingIndexer {
       .option("checkpointLocation", checkpoint)
       .start()
 
-  private def segmentTables(root: String, prefix: String): Seq[String] = {
-    val s = Files.list(Paths.get(root))
-    try s.iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case n if n.startsWith(prefix) && n.endsWith(".manifest.json") =>
-        n.stripSuffix(".manifest.json")
-      }
-      .toSeq.sortBy(n => n.stripPrefix(prefix).toLong)
-    finally s.close()
-  }
+  private def segmentTables(root: String, prefix: String): Seq[String] =
+    TableFormat.committedTables(root).filter(_.startsWith(prefix))
+      .sortBy(_.stripPrefix(prefix).toLong)
 
   /** Batch ids with BOTH docs and postings manifests committed. A
     * crash between a batch's two table writes (the sequential window
@@ -288,43 +260,25 @@ object StreamingIndexer {
     * load path then re-attaches already-applied delete tables as
     * tombstones, and anti-joining ids that are already gone is a
     * no-op. */
-  private def appliedDeletesThrough(compactionDir: String): Long = {
-    val p = Paths.get(compactionDir, "deletes_applied.json")
-    if (!Files.exists(p)) -1L
-    else "\"appliedThrough\":(-?[0-9]+)".r
-      .findFirstMatchIn(Files.readString(p)).map(_.group(1).toLong).getOrElse(-1L)
-  }
+  private def appliedDeletesThrough(compactionDir: String): Long =
+    TableFormat.readJson(compactionDir, "deletes_applied.json")
+      .flatMap(TableFormat.jsonField(_, "appliedThrough")).map(_.toLong).getOrElse(-1L)
 
-  private def writeAppliedDeletes(compactionDir: String, through: Long): Unit = {
-    val tmp = Paths.get(compactionDir, s"_tmp_deletes_applied_${System.nanoTime()}.json")
-    Files.writeString(tmp, s"""{"appliedThrough":$through}""")
-    Files.move(tmp, Paths.get(compactionDir, "deletes_applied.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def writeAppliedDeletes(compactionDir: String, through: Long): Unit =
+    TableFormat.commitJson(compactionDir, "deletes_applied.json",
+      Seq("appliedThrough" -> through.toString), replace = true)
 
-  private def prunedBelow(root: String): Option[Long] = {
-    val p = Paths.get(root, "pruned_watermark.json")
-    if (!Files.exists(p)) None
-    else "\"prunedBelow\":([0-9]+)".r
-      .findFirstMatchIn(Files.readString(p)).map(_.group(1).toLong)
-  }
+  private def prunedBelow(root: String): Option[Long] =
+    TableFormat.readJson(root, "pruned_watermark.json")
+      .flatMap(TableFormat.jsonField(_, "prunedBelow")).map(_.toLong)
 
-  private def writePrunedBelow(root: String, n: Long): Unit = {
-    val cur = prunedBelow(root).getOrElse(-1L)
-    if (n > cur) {
-      val tmp = Paths.get(root, s"_tmp_pruned_${System.nanoTime()}.json")
-      Files.writeString(tmp, s"""{"prunedBelow":$n}""")
-      // same-directory atomic rename, like every other JSON commit
-      // here — a REPLACE_EXISTING copy could be observed half-written,
-      // silently bypassing the recycled-id guard
-      Files.move(tmp, Paths.get(root, "pruned_watermark.json"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
+  private def writePrunedBelow(root: String, n: Long): Unit =
+    if (n > prunedBelow(root).getOrElse(-1L)) {
+      // atomic rename like every other JSON commit — a copy could be
+      // observed half-written, silently bypassing the recycled-id guard
+      TableFormat.commitJson(root, "pruned_watermark.json",
+        Seq("prunedBelow" -> n.toString), replace = true)
     }
-  }
 
   /** Compact all committed segment snapshots into ONE persisted
     * docs/postings/termStats/stats snapshot set under
@@ -369,12 +323,12 @@ object StreamingIndexer {
       if (newApplied >= 0) s"compacted-$latestBatch-d$newApplied"
       else s"compacted-$latestBatch"
     val out = s"$root/$name"
-    graft.table.IndexTables.write(spark, applied, out)
+    IndexTables.write(spark, applied, out)
     // marker AFTER the tables commit: if it is lost to a crash, loads
     // re-attach the covered delete tables as tombstones (idempotent
     // no-op anti-join) until the next compaction rewrites it
     if (newApplied >= 0) writeAppliedDeletes(out, newApplied)
-    graft.table.IndexTables.load(spark, out)
+    IndexTables.load(spark, out)
   }
 
   /** A committed compaction snapshot: directory name under the root,
@@ -390,26 +344,18 @@ object StreamingIndexer {
     * half-written compaction is invisible, exactly like a half-written
     * segment. Ordered by (batch, delSeq): a deletes-only compaction
     * of the same batch set supersedes its base. */
-  def latestCompactionInfo(root: String): Option[Compaction] = {
-    if (!Files.isDirectory(Paths.get(root))) return None
-    val s = Files.list(Paths.get(root))
-    val cands =
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .flatMap {
-          case n @ CompactionName(b, d) =>
-            Iterator.single(Compaction(n, b.toLong,
-              Option(d).map(_.toLong).getOrElse(-1L)))
-          case _ => Iterator.empty
-        }.toSeq
-      finally s.close()
-    cands.sortBy(c => (c.batch, c.delSeq))(Ordering.Tuple2[Long, Long].reverse)
-      .find { c =>
-        val dir = s"$root/${c.dir}"
-        Seq("docs", "postings", "termStats").forall(TableFormat.isCommitted(dir, _)) &&
-          Files.exists(Paths.get(dir, "stats.json"))
-      }
-  }
+  def latestCompactionInfo(root: String): Option[Compaction] =
+    compactions(root)
+      .sortBy(c => (c.batch, c.delSeq))(Ordering.Tuple2[Long, Long].reverse)
+      .find(c => IndexTables.isComplete(s"$root/${c.dir}"))
+
+  /** Every compaction directory under the root, committed or not. */
+  private def compactions(root: String): Seq[Compaction] =
+    if (!Files.isDirectory(Paths.get(root))) Seq.empty
+    else TableFormat.listChildren(Paths.get(root)).map(_.getFileName.toString).collect {
+      case n @ CompactionName(b, d) =>
+        Compaction(n, b.toLong, Option(d).map(_.toLong).getOrElse(-1L))
+    }
 
   /** Newest compacted batch id (back-compat surface). */
   def latestCompaction(root: String): Option[Long] =
@@ -419,9 +365,10 @@ object StreamingIndexer {
     * committed compaction (batchId ≤ N for compacted-N). Per segment
     * the manifest goes FIRST — manifest removal atomically removes the
     * segment from every load path (a table is visible iff its manifest
-    * exists) — then the data directory; a crash between the two leaves
-    * an invisible orphan dir that the next prune sweeps. No-op when no
-    * compaction is committed. Returns the pruned batch ids. */
+    * exists) — then the data directory (`TableFormat.drop`); a crash
+    * between the two leaves an invisible orphan dir that the next
+    * prune sweeps. No-op when no compaction is committed. Returns the
+    * pruned batch ids. */
   def pruneSegments(root: String): Seq[Long] =
     latestCompactionInfo(root) match {
       case None => Seq.empty
@@ -445,85 +392,33 @@ object StreamingIndexer {
           tbl <- segmentTables(root, prefix)
           id = tbl.stripPrefix(prefix).toLong
           if complete.contains(id)
-        } yield {
-          val manifest = Paths.get(root, s"$tbl.manifest.json")
-          val dataDirs = {
-            val s = Files.list(Paths.get(root))
-            try s.iterator().asScala
-              .filter(_.getFileName.toString.startsWith(s"$tbl.snap-")).toSeq
-            finally s.close()
-          }
-          Files.deleteIfExists(manifest)
-          dataDirs.foreach(deleteRecursively)
-          id
-        }
+        } yield { TableFormat.drop(root, tbl); id }
         // applied delete tables: tombstones the newest compaction has
-        // PHYSICALLY absorbed — manifest first (atomic removal from
-        // every load path), then data
-        for {
-          tbl <- segmentTables(root, "deletes-d")
-          if tbl.stripPrefix("deletes-d").toLong <= delApplied
-        } {
-          Files.deleteIfExists(Paths.get(root, s"$tbl.manifest.json"))
-          val sD = Files.list(Paths.get(root))
-          val dirs = try sD.iterator().asScala
-            .filter(_.getFileName.toString.startsWith(s"$tbl.snap-")).toSeq
-            finally sD.close()
-          dirs.foreach(deleteRecursively)
-        }
+        // PHYSICALLY absorbed
+        segmentTables(root, "deletes-d")
+          .filter(_.stripPrefix("deletes-d").toLong <= delApplied)
+          .foreach(TableFormat.drop(root, _))
         // orphan sweep: data dirs whose manifest vanished in an earlier
         // crashed prune (segment id ≤ N / delete seq ≤ applied,
         // invisible to all load paths)
-        val s2 = Files.list(Paths.get(root))
-        val orphans =
-          try s2.iterator().asScala.filter { p =>
-            val name = p.getFileName.toString
-            "^(docs|postings)-b([0-9]+)\\.snap-".r.findFirstMatchIn(name) match {
-              case Some(m) =>
-                m.group(2).toLong <= n &&
-                  !Files.exists(Paths.get(root,
-                    s"${m.group(1)}-b${m.group(2)}.manifest.json"))
-              case None =>
-                "^deletes-d([0-9]+)\\.snap-".r.findFirstMatchIn(name) match {
-                  case Some(m) =>
-                    m.group(1).toLong <= delApplied &&
-                      !Files.exists(Paths.get(root,
-                        s"deletes-d${m.group(1)}.manifest.json"))
-                  case None => false
-                }
-            }
-          }.toSeq
-          finally s2.close()
-        orphans.foreach(deleteRecursively)
+        TableFormat.listChildren(Paths.get(root)).map(_.getFileName.toString)
+          .collect { case SnapName(kind, id)
+              if id.toLong <= (if (kind == "deletes-d") delApplied else n) => kind + id }
+          .distinct.filterNot(TableFormat.isCommitted(root, _))
+          .foreach(TableFormat.drop(root, _))
         // superseded compactions: every committed compaction ordering
         // strictly BEFORE (batch, delSeq) of the newest is a full index
         // copy the newest replaces — without this, each compact cycle
         // leaks O(index size) on disk. The newest complete compaction
         // is never touched, so a crash mid-delete cannot change what
         // latestCompactionInfo resolves to.
-        val s3 = Files.list(Paths.get(root))
-        val oldCompactions =
-          try s3.iterator().asScala.filter { p =>
-            p.getFileName.toString match {
-              case CompactionName(b, d) =>
-                val key = (b.toLong, Option(d).map(_.toLong).getOrElse(-1L))
-                Ordering.Tuple2[Long, Long].lt(key, (comp.batch, comp.delSeq))
-              case _ => false
-            }
-          }.toSeq
-          finally s3.close()
-        oldCompactions.foreach(deleteRecursively)
+        compactions(root)
+          .filter(c => Ordering.Tuple2[Long, Long].lt((c.batch, c.delSeq), (comp.batch, comp.delSeq)))
+          .foreach(c => TableFormat.deleteRecursively(Paths.get(root, c.dir)))
         pruned.distinct.sorted
     }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      val children = try s.iterator().asScala.toSeq finally s.close()
-      children.foreach(deleteRecursively)
-    }
-    Files.deleteIfExists(p)
-  }
+  private val SnapName = "^(docs-b|postings-b|deletes-d)([0-9]+)\\.snap-.*".r
 
   /** Merge the newest committed compaction (if any) with every segment
     * ingested after it into one queryable index — the single load path
@@ -544,7 +439,7 @@ object StreamingIndexer {
     // them is a full-pass no-op; load the snapshot directly.
     val idx =
       if (newBatches.isEmpty && base.nonEmpty)
-        graft.table.IndexTables.load(spark, s"$root/${base.get.dir}")
+        IndexTables.load(spark, s"$root/${base.get.dir}")
       else mergeSnapshot(spark, root, base.map(_.dir), newBatches, cfg)
     // delete tables newer than what the base compaction physically
     // applied ride along as TOMBSTONES: every query path anti-joins

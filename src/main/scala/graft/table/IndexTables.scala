@@ -14,6 +14,9 @@ import graft.model.CorpusStats
   */
 object IndexTables {
 
+  private val Tables = Seq("docs", "postings", "termStats")
+  private val StatsFile = "stats.json"
+
   /** Write all index tables; stages already committed are skipped.
     * termStats/stats derive from the WRITTEN postings/docs (no
     * recompute of the build pipeline).
@@ -32,8 +35,7 @@ object IndexTables {
     try {
       val fDocs = pool.submit(new java.util.concurrent.Callable[TableFormat.Manifest] {
         def call(): TableFormat.Manifest = {
-          val statsPath = Paths.get(root, "stats.json")
-          val needStats = !Files.exists(statsPath)
+          val needStats = !Files.exists(Paths.get(root, StatsFile))
           // corpus stats ride the docs WRITE job as observed metrics —
           // no second scan of the docs table (at corpus scale that
           // second pass re-reads the whole table just for (N, avgdl)).
@@ -61,13 +63,9 @@ object IndexTables {
             }.filter(_.numDocs == m.rowCount)
             val st = observed.getOrElse(
               InvertedIndex.corpusStatsOf(TableFormat.read(spark, root, "docs")))
-            val tmp = Paths.get(root, "_tmp_stats.json")
-            Files.writeString(tmp,
-              s"""{"numDocs":${st.numDocs},"avgDocLen":${st.avgDocLen},""" +
-                s""""shardSizeDocs":${idx.config.shardSizeDocs},""" +
-                s""""analyzer":"${idx.config.analyzer.name}"}""")
-            Files.move(tmp, statsPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            TableFormat.commitJson(root, StatsFile,
+              Seq("numDocs" -> st.numDocs.toString, "avgDocLen" -> st.avgDocLen.toString) ++
+                configFields(idx.config), replace = false)
           }
           m
         }
@@ -95,19 +93,55 @@ object IndexTables {
     * table data. Lets callers tokenize/validate a query against the
     * snapshot's analyzer before paying the table load. */
   def loadStatsAndConfig(root: String): (CorpusStats, IndexConfig) = {
-    val txt = Files.readString(Paths.get(root, "stats.json"))
-    val num = "\"numDocs\":([0-9]+)".r.findFirstMatchIn(txt).get.group(1).toLong
-    val avg = "\"avgDocLen\":([0-9.Ee+-]+)".r.findFirstMatchIn(txt).get.group(1).toDouble
-    val shard = "\"shardSizeDocs\":([0-9]+)".r.findFirstMatchIn(txt).get.group(1).toLong
+    val txt = Files.readString(Paths.get(root, StatsFile))
+    val (shard, analyzerName) = configOf(txt).get
     // the analyzer the index was BUILT with is part of the snapshot:
     // a reader tokenizing queries with a different analyzer gets
     // silently wrong/empty matches (pre-round-4 snapshots carry no
     // field → standard, the only analyzer that existed then)
-    val analyzer = "\"analyzer\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-      .map(m => graft.analysis.TextAnalyzers.byName(m.group(1)))
+    val analyzer = analyzerName.map(graft.analysis.TextAnalyzers.byName)
       .getOrElse(graft.analysis.Analyzer)
-    (CorpusStats(num, avg), IndexConfig(shardSizeDocs = shard, analyzer = analyzer))
+    (CorpusStats(TableFormat.jsonField(txt, "numDocs").get.toLong,
+      TableFormat.jsonField(txt, "avgDocLen").get.toDouble),
+      IndexConfig(shardSizeDocs = shard, analyzer = analyzer))
   }
+
+  /** The (shardSizeDocs, analyzer) pair as JSON fields — the one
+    * mapping stats.json and the streaming ingest_config.json share. */
+  private[graft] def configFields(cfg: IndexConfig): Seq[(String, String)] =
+    Seq("shardSizeDocs" -> cfg.shardSizeDocs.toString,
+      "analyzer" -> TableFormat.str(cfg.analyzer.name))
+
+  /** (shardSizeDocs, analyzer name) back from `configFields`' JSON;
+    * the analyzer is None in files written before it was recorded
+    * (standard was the only analyzer then). */
+  private[graft] def configOf(text: String): Option[(Long, Option[String])] =
+    TableFormat.jsonField(text, "shardSizeDocs")
+      .map(s => (s.toLong, TableFormat.jsonField(text, "analyzer")))
+
+  /** Cheap filesystem fingerprint of a committed snapshot: (mtime,
+    * size) of the three table manifests plus stats.json (four stat
+    * calls — no data I/O). An in-place rewrite commits new manifests;
+    * size rides along because mtime alone has filesystem-dependent
+    * granularity (1 s on some filesystems) and a rewrite landing
+    * within one tick — or a copy preserving timestamps — would
+    * otherwise serve a stale cached index for the JVM lifetime.
+    * A rewrite changing neither mtime nor manifest byte size (same
+    * snapshot id, same file set, same second) is indistinguishable
+    * from no change — and content-identical for our writers, which
+    * never reuse a snapshot id. */
+  private[graft] def snapshotVersion(root: String): String =
+    (Tables.map(TableFormat.manifestPath(root, _)) :+ Paths.get(root, StatsFile))
+      .map { p =>
+        if (Files.exists(p))
+          Files.getLastModifiedTime(p).toMillis.toString + ":" + Files.size(p)
+        else "-1"
+      }.mkString(",")
+
+  /** Every file of a complete snapshot is committed: the three table
+    * manifests and stats.json. */
+  private[graft] def isComplete(root: String): Boolean =
+    Tables.forall(TableFormat.isCommitted(root, _)) && Files.exists(Paths.get(root, StatsFile))
 
   def load(spark: SparkSession, root: String): InvertedIndex = {
     val (stats, cfg) = loadStatsAndConfig(root)

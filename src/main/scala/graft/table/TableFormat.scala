@@ -1,21 +1,26 @@
 package graft.table
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Iceberg-style table layout we own (SURVEY.md §7.0 — no Iceberg
   * runtime ships in this sandbox): immutable Parquet data directories
   * plus a JSON snapshot manifest per table, committed atomically via
   * write-temp-then-rename. A table write is visible iff its manifest
-  * exists; a crashed/killed write leaves only an orphan temp dir.
+  * exists; a crashed/killed write leaves only unreferenced entries,
+  * which the next write of the same table reclaims.
   * Manifests carry row counts and per-file lineage (the north rule's
   * per-partition lineage + metrics), and a monotonically increasing
   * snapshot id (≙ the reference's segmentId counter,
   * hbasene HBaseIndexStore.java:269-272). The interface stays thin so
   * a real Iceberg catalog can replace it.
+  *
+  * This is the one module that commits, reads, lists and removes the
+  * files graft writes: table snapshots and the small JSON sidecars
+  * (stats.json, ingest_config.json, deletes_applied.json,
+  * pruned_watermark.json) all go through `commitJson`/`readJson`.
   */
 object TableFormat {
 
@@ -27,20 +32,17 @@ object TableFormat {
       rowCount: Long,
       files: Seq[FileLineage])
 
-  private def manifestPath(root: String, table: String): Path =
-    Paths.get(root, s"$table.manifest.json")
+  private val ManifestSuffix = ".manifest.json"
+
+  private[graft] def manifestPath(root: String, table: String): Path =
+    Paths.get(root, s"$table$ManifestSuffix")
 
   def isCommitted(root: String, table: String): Boolean =
     Files.exists(manifestPath(root, table))
 
   def readManifest(root: String, table: String): Manifest = {
     val txt = Files.readString(manifestPath(root, table))
-    // minimal JSON parse (format is ours)
-    def field(k: String): String = {
-      val m = ("\"" + k + "\"\\s*:\\s*(\"[^\"]*\"|[0-9]+)").r
-        .findFirstMatchIn(txt).get.group(1)
-      m.stripPrefix("\"").stripSuffix("\"")
-    }
+    def field(k: String): String = jsonField(txt, k).get
     val files = ("\\{\"file\":\"([^\"]+)\",\"rows\":([0-9]+)\\}").r
       .findAllMatchIn(txt)
       .map(m => FileLineage(m.group(1), m.group(2).toLong)).toSeq
@@ -55,14 +57,15 @@ object TableFormat {
       snapshotId: Long = 0L): Manifest = {
     if (isCommitted(root, table)) return readManifest(root, table)
     Files.createDirectories(Paths.get(root))
+    // Crash window: an earlier write of this table died before its
+    // manifest commit and left its temp dir, its moved data dir and/or
+    // its manifest temp file. No manifest references them (visible iff
+    // manifest exists), so reclaim them before allocating an id —
+    // otherwise every crash leaks O(table size) for good
+    drop(root, table)
     val snap = if (snapshotId > 0) snapshotId else nextSnapshotId(root)
     val tmp = Paths.get(root, s"_tmp_${table}_$snap")
     val dataDir = Paths.get(root, s"$table.snap-$snap")
-    // Crash window: died after the data-dir ATOMIC_MOVE but before the
-    // manifest commit → manifest absent, dataDir present. The snapshot
-    // is unreferenced (visible iff manifest exists), so delete the
-    // stale dir and redo the write — keeps resume idempotent.
-    if (Files.exists(dataDir)) deleteRecursively(dataDir)
     // snappy, not zstd (Spark 4 default): posting blocks are already
     // delta+varint packed — zstd burns ~2-8× write CPU for little gain.
     // no REBALANCE hint: its exchange costs 4-6% of build wall (OPTIMIZATION_r06.md §9)
@@ -74,28 +77,55 @@ object TableFormat {
     val fileRows = footerRowCounts(tmp)
     val total = fileRows.map(_.rows).sum
     Files.move(tmp, dataDir, StandardCopyOption.ATOMIC_MOVE)
-    val m = Manifest(table, snap, dataDir.toString, total, fileRows.toSeq)
+    val m = Manifest(table, snap, dataDir.toString, total, fileRows)
     commitManifest(root, m)
     m
   }
 
+  /** Does root entry `name` belong to `table`: a data dir
+    * `<table>.snap-*`, a write temp dir `_tmp_<table>_*`, or a manifest
+    * temp file (`_tmp_<table>.manifest.json.*`, or the
+    * `_tmp_manifest_<table>_*` name of earlier versions). Exact
+    * `<table>.` / `<table>_` prefixes: `docs-b1` never owns `docs-b10`. */
+  private def owns(table: String, name: String): Boolean =
+    name.startsWith(s"$table.snap-") ||
+      Seq("_tmp_", "_tmp_manifest_").exists { p =>
+        name.startsWith(s"$p${table}_") || name.startsWith(s"$p$table.")
+      }
+
+  /** Remove `table` from `root`: the manifest FIRST — that atomically
+    * removes the table from every load path — then every entry the
+    * table owns. A crash in between leaves only unreferenced entries,
+    * which the next drop or write of the table reclaims. */
+  private[graft] def drop(root: String, table: String): Unit = {
+    Files.deleteIfExists(manifestPath(root, table))
+    listChildren(Paths.get(root))
+      .filter(p => owns(table, p.getFileName.toString))
+      .foreach(deleteRecursively)
+  }
+
+  /** Names of the tables committed under `root` (one per manifest). */
+  private[graft] def committedTables(root: String): Seq[String] =
+    listChildren(Paths.get(root)).map(_.getFileName.toString)
+      .collect { case n if n.endsWith(ManifestSuffix) => n.stripSuffix(ManifestSuffix) }
+
   /** Directory children, with the Files.list stream CLOSED (each open
     * stream holds a directory fd; deep recursion / many rewrites in a
     * long-lived driver would otherwise exhaust fds). */
-  private def listChildren(p: Path): Seq[Path] = {
+  private[graft] def listChildren(p: Path): Seq[Path] = {
     val s = Files.list(p)
     try s.iterator().asScala.toSeq finally s.close()
   }
 
-  private def deleteRecursively(p: Path): Unit = {
+  private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) listChildren(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
 
-  /** Row count per data file from parquet footer metadata — read
-    * CONCURRENTLY: a serial loop is O(#files) driver latency appended
-    * to every snapshot commit. */
-  private def footerRowCounts(dir: Path): Seq[FileLineage] = {
+  /** Row count per data file from parquet footer metadata, sorted by
+    * file name — read CONCURRENTLY: a serial loop is O(#files) driver
+    * latency appended to every snapshot commit. */
+  private[graft] def footerRowCounts(dir: Path): Seq[FileLineage] = {
     val conf = new org.apache.hadoop.conf.Configuration()
     val files = listChildren(dir)
       .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -120,14 +150,43 @@ object TableFormat {
     val files = m.files
       .map(f => s"""{"file":"${f.file}","rows":${f.rows}}""")
       .mkString("[", ",", "]")
-    val json =
-      s"""{"table":"${m.table}","snapshotId":${m.snapshotId},""" +
-        s""""dataPath":"${m.dataPath}","rowCount":${m.rowCount},""" +
-        s""""files":$files}"""
-    val tmp = Paths.get(root, s"_tmp_manifest_${m.table}_${m.snapshotId}.json")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifestPath(root, m.table), StandardCopyOption.ATOMIC_MOVE)
+    commitJson(root, s"${m.table}$ManifestSuffix", Seq(
+      "table" -> str(m.table), "snapshotId" -> m.snapshotId.toString,
+      "dataPath" -> str(m.dataPath), "rowCount" -> m.rowCount.toString,
+      "files" -> files), replace = false)
   }
+
+  /** JSON string literal (our values never hold quotes or escapes). */
+  private[graft] def str(s: String): String = "\"" + s + "\""
+
+  /** Commit `{"k":v,…}` (values are JSON literals, in order) as
+    * `dir/name`: write a same-directory temp file, then ATOMIC_MOVE it
+    * into place — a reader sees the old file or the whole new one,
+    * never a half-written one. `replace = false` omits
+    * REPLACE_EXISTING: where the filesystem refuses to rename onto an
+    * existing file, the commit yields to the one already there. */
+  private[graft] def commitJson(dir: String, name: String,
+      fields: Seq[(String, String)], replace: Boolean): Unit = {
+    val json = fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val tmp = Paths.get(dir, s"_tmp_$name.${System.nanoTime()}")
+    Files.writeString(tmp, json)
+    val opts = StandardCopyOption.ATOMIC_MOVE +:
+      (if (replace) Seq(StandardCopyOption.REPLACE_EXISTING) else Nil)
+    try { Files.move(tmp, Paths.get(dir, name), opts: _*); () }
+    catch { case _: FileAlreadyExistsException if !replace => Files.deleteIfExists(tmp); () }
+  }
+
+  /** Text of the JSON file `dir/name`, if it exists. */
+  private[graft] def readJson(dir: String, name: String): Option[String] = {
+    val p = Paths.get(dir, name)
+    if (Files.exists(p)) Some(Files.readString(p)) else None
+  }
+
+  /** Value of top-level `key` in a JSON object graft wrote: a string
+    * (unquoted here) or a bare number. */
+  private[graft] def jsonField(text: String, key: String): Option[String] =
+    ("\"" + key + "\"\\s*:\\s*(\"[^\"]*\"|[^,}\\s]+)").r
+      .findFirstMatchIn(text).map(_.group(1).stripPrefix("\"").stripSuffix("\""))
 
   /** Snapshot-id allocation: the driver is the table format's single
     * writer (manifest commits are driver-side atomic renames), but one

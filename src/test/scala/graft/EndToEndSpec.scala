@@ -184,8 +184,7 @@ class EndToEndSpec extends AnyFunSuite {
       idx.postings.select("field", "term", "shard", "blob")
         .as[(String, String, Long, Array[Byte])].collect()
         .map { case (f, t, sh, b) =>
-          (f, t, sh, graft.codec.PostingsCodec.decodeBlob(b).toSeq
-            .flatMap(graft.codec.PostingsCodec.decodeBlock)
+          (f, t, sh, new graft.codec.PostingsCodec.BlobView(b).allPostings.toSeq
             .map(p => (p.docId, p.tf, p.positions.toSeq)))
         }.sortBy(r => (r._1, r._2, r._3)).toSeq
     val small = IndexBuilder.fromCodeDocs(spark, corpus.toDS(), IndexConfig(shardSizeDocs = 2))

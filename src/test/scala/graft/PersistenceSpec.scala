@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -49,15 +50,51 @@ class PersistenceSpec extends AnyFunSuite {
     val manifestBefore = Files.readString(Paths.get(dir, "docs.manifest.json"))
     // leave an orphan temp dir from the "crashed" postings write
     Files.createDirectories(Paths.get(dir, "_tmp_postings_99"))
+    // …and what a postings write that died after its data-dir move
+    // leaves: the moved data dir (here a copy of committed parquet) and
+    // a manifest temp file — no manifest references either
+    val docsM = TableFormat.readManifest(dir, "docs")
+    val crashedSnap = docsM.snapshotId + 1
+    val moved = Files.createDirectories(Paths.get(dir, s"postings.snap-$crashedSnap"))
+    docsM.files.foreach(f => Files.copy(Paths.get(docsM.dataPath, f.file), moved.resolve(f.file)))
+    Files.writeString(Paths.get(dir, s"_tmp_manifest_postings_$crashedSnap.json"), "{")
+    def children(): Seq[String] = {
+      val s = Files.list(Paths.get(dir))
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq finally s.close()
+    }
     // full resume
     IndexTables.write(spark, idx, dir)
     assert(TableFormat.isCommitted(dir, "postings"))
     assert(TableFormat.isCommitted(dir, "termStats"))
+    // the crashed write's leftovers are reclaimed, not leaked
+    assert(children().count(_.startsWith("postings.snap-")) === 1, children())
+    assert(!children().exists(_.startsWith("_tmp_")), children())
     // docs stage untouched (same manifest bytes → not rewritten)
     assert(Files.readString(Paths.get(dir, "docs.manifest.json")) === manifestBefore)
     // loaded index answers queries
     val loaded = IndexTables.load(spark, dir)
     assert(new Searcher(spark, loaded).totalHits(Seq("merge")) === 100)
+
+    // kill-point: stats.json lost after a full write → the resume's
+    // rescan fallback rewrites the clean corpus stats bit for bit
+    val statsBefore = Files.readString(Paths.get(dir, "stats.json"))
+    Files.delete(Paths.get(dir, "stats.json"))
+    IndexTables.write(spark, idx, dir)
+    assert(Files.readString(Paths.get(dir, "stats.json")) === statsBefore)
+    val (rescanned, _) = IndexTables.loadStatsAndConfig(dir)
+    assert(rescanned.numDocs === idx.stats.numDocs)
+    assert(java.lang.Double.doubleToRawLongBits(rescanned.avgDocLen)
+      === java.lang.Double.doubleToRawLongBits(idx.stats.avgDocLen))
+
+    // kill-point: the termStats manifest lost → the resume rewrites the
+    // same rows and reclaims the unreferenced old data dir
+    def termStatsRows() =
+      TableFormat.read(spark, dir, "termStats").collect().toSeq.sortBy(_.toString)
+    val termStatsBefore = termStatsRows()
+    Files.delete(Paths.get(dir, "termStats.manifest.json"))
+    IndexTables.write(spark, idx, dir)
+    assert(termStatsRows() === termStatsBefore)
+    assert(children().count(_.startsWith("termStats.snap-")) === 1, children())
   }
 
   test("lineage: manifest row counts match data") {

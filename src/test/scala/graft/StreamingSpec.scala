@@ -344,6 +344,19 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(qc.toSeq === qf.toSeq)
 
+    // kill-point: the applied-deletes marker lost after the compaction
+    // tables committed → loads re-attach the applied delete table as
+    // tombstones, an idempotent no-op on the answers
+    val marker = P(root, "compacted-1-d0", "deletes_applied.json")
+    val aside = P(root, "compacted-1-d0", "deletes_applied.json.aside")
+    Files.move(marker, aside)
+    val noMarker = StreamingIndexer.loadMerged(spark, root, cfg)
+    assert(noMarker.deletes.isDefined)
+    def mergeTop(idx: graft.build.InvertedIndex) = new Searcher(spark, idx)
+      .topK(Seq("merge"), 200).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(mergeTop(noMarker) === mergeTop(compacted))
+    Files.move(aside, marker)
+
     // 3) post-compact load attaches NO tombstones (applied marker read)
     val merged2 = StreamingIndexer.loadMerged(spark, root, cfg)
     assert(merged2.deletes.isEmpty && merged2.stats.numDocs === 97)
