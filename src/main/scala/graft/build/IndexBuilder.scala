@@ -25,14 +25,6 @@ import graft.model.{CodeDoc, CorpusStats, Posting}
 final case class IndexConfig(
     shardSizeDocs: Long = 1L << 20,
     buildPartitions: Int = 0, // 0 = leave to spark.sql.shuffle.partitions
-    /** docID order: false = canonical docKey sort (range shuffle;
-      * stable across any input layout); true = input order (ZERO
-      * shuffle — ids from per-partition offsets, deterministic for a
-      * deterministic source layout; ≙ the reference's insertion-order
-      * ++documentId, HBaseIndexStore.java:138). At 10^12 files the
-      * input-order mode avoids shuffling the full corpus just to
-      * label it. */
-    docIdsFromInputOrder: Boolean = false,
     /** Store the raw content column in the docs table. The reference
       * does NOT store analyzed fields (content was indexed, not
       * stored — AbstractHBaseneTest.java:99-113); at corpus scale the
@@ -767,16 +759,6 @@ object IndexBuilder {
       .withColumn("dl", docLenCol(col("content"), analyzer))
   }
 
-  /** Dense docIDs in INPUT order — zero shuffle. Per-partition local
-    * ordinals from monotonically_increasing_id + broadcast offsets;
-    * deterministic for a deterministic source partitioning (parquet
-    * splits, range()); NOT cached — the two passes (offset count +
-    * downstream) recompute the narrow source, which is cheaper than
-    * materializing the corpus as objects. */
-  def assignDocIdsInputOrder(df: DataFrame): DataFrame =
-    addOffsets(df.withColumn("_mid", monotonically_increasing_id()),
-      cache = false)
-
   /** Dense, deterministic docID assignment without a single-point sort
     * (SURVEY.md §7.4 #2): range-partition by the natural key, sort
     * within partitions, take the intra-partition ordinal from
@@ -785,14 +767,10 @@ object IndexBuilder {
     * the shuffled data, no global bottleneck; stable under re-runs for
     * fixed input. */
   def assignDocIds(df: DataFrame, keyCols: Seq[String], nPartitions: Int): DataFrame = {
-    addOffsets(df
+    val withCols = df
       .repartitionByRange(math.max(nPartitions, 1), keyCols.map(col): _*)
       .sortWithinPartitions(keyCols.map(col): _*)
-      .withColumn("_mid", monotonically_increasing_id()), cache = true)
-  }
-
-  private def addOffsets(withMid: DataFrame, cache: Boolean): DataFrame = {
-    val withCols = withMid
+      .withColumn("_mid", monotonically_increasing_id())
       .withColumn("_pid", shiftright(col("_mid"), 33))
       .withColumn("_local", col("_mid").bitwiseAND(lit((1L << 33) - 1)))
     // localCheckpoint, NOT cache(): both passes (offset count +
@@ -801,7 +779,7 @@ object IndexBuilder {
     // CacheManager — repeated pipeline queries (termIds/shingleIds
     // call this per query) must not accumulate storage in a
     // long-lived session
-    val sorted = if (cache) withCols.localCheckpoint() else withCols
+    val sorted = withCols.localCheckpoint()
     val counts = sorted.groupBy("_pid").count().collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     var off = 0L
@@ -831,10 +809,7 @@ object IndexBuilder {
     val keyed = ds.toDF()
       .withColumn("docKey",
         concat_ws("", col("repo"), lit("/"), col("path"), lit("@"), col("commit")))
-    val withIds =
-      if (cfg.docIdsFromInputOrder) assignDocIdsInputOrder(keyed)
-      else assignDocIds(keyed, Seq("docKey"), nPart)
-    val docs = withIds
+    val docs = assignDocIds(keyed, Seq("docKey"), nPart)
       .withColumn("content_sha256", sha2(col("content"), 256))
       .withColumn("dl", docLenCol(col("content"), cfg.analyzer))
     build(spark, docs,

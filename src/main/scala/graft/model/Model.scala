@@ -1,5 +1,8 @@
 package graft.model
 
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.functions.{count, lit}
+
 /** Core data model for the graft inverted-index engine.
   *
   * Shapes derive from the reference's intended data model (see
@@ -49,3 +52,24 @@ final case class ScoredDoc(docId: Long, score: Double)
 /** Per-document length row (dl = token count incl. stopword gaps is NOT
   * used; dl counts emitted tokens, i.e. sum of tf over terms). */
 final case class DocLen(docId: Long, dl: Long)
+
+object Checkpoints {
+
+  /** Eager localCheckpoint of `df` with Row(row count, `extra`
+    * aggregates…) observed on the checkpoint's own job — no second
+    * action. The observation sits directly under the checkpoint (no
+    * exchange after it), so each row is counted exactly once; if it
+    * never arrives, the aggregates are recomputed over the checkpoint. */
+  private[graft] def checkpointWithCount(df: DataFrame, extra: Column*): (DataFrame, Row) = {
+    val aggs = count(lit(1)).as("n") +: extra
+    val obs = Observation()
+    val ck = df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint()
+    val row =
+      try scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(30, "s"))
+      catch {
+        case _: java.util.concurrent.TimeoutException => ck.agg(aggs.head, aggs.tail: _*).head()
+      }
+    (ck, row)
+  }
+}

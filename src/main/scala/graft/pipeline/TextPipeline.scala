@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
+import graft.model.Checkpoints.checkpointWithCount
 
 /** Training-data pipeline operators over the `documents` /
   * `embeddings` tables: dedup (exact / MinHash-LSH / SimHash /
@@ -307,23 +308,6 @@ object TextPipeline {
     if (t > 0 && n * bytesPerRow <= t) broadcast(df) else df.hint("merge")
   }
 
-  /** Eager localCheckpoint with Row(row count, `extra` aggregates…)
-    * observed on the checkpoint's own job — no extra action (the
-    * CC-loop pattern); recomputed over the checkpoint only if the
-    * observation never arrives. */
-  private def checkpointWithCount(df: DataFrame, extra: Column*): (DataFrame, Row) = {
-    val aggs = count(lit(1)).as("n") +: extra
-    val obs = org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint()
-    val row =
-      try scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(30, "s"))
-      catch {
-        case _: java.util.concurrent.TimeoutException => ck.agg(aggs.head, aggs.tail: _*).head()
-      }
-    (ck, row)
-  }
-
   def simhashPairs(docs: DataFrame, maxHam: Int): DataFrame = {
     val bandVals = simhashBandCols(maxHam)
     // localCheckpoint: both self-join sides read the one materialized
@@ -495,23 +479,12 @@ object TextPipeline {
       // round is recomputed ~4× by the second round's join references
       // (s1 self-join + nbrMin + comp side), which outweighs the one
       // saved ~1 s action on this graph class (3-4 rounds total).
-      val obs = org.apache.spark.sql.Observation()
-      val next = propagate(comp)
-        .select(col("doc_id"), col("comp"), (col("old") =!= col("comp")).as("chg"))
-        .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("nchg"))
-        .localCheckpoint()
       // the eager localCheckpoint IS the action the observation rides
-      // (verified: metrics fire on it — OPTIMIZATION_r06.md §13); the timed-out
-      // count() fallback is defensive only
-      changed =
-        try {
-          val row = scala.concurrent.Await.result(obs.future,
-            scala.concurrent.duration.Duration(30, "s"))
-          if (row.isNullAt(0)) 0L else row.getLong(0)
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            next.where(col("chg")).count()
-        }
+      // (verified: metrics fire on it — OPTIMIZATION_r06.md §13)
+      val (next, Row(_, nchg)) = checkpointWithCount(propagate(comp)
+        .select(col("doc_id"), col("comp"), (col("old") =!= col("comp")).as("chg")),
+        sum(when(col("chg"), 1L).otherwise(0L)).as("nchg"))
+      changed = if (nchg == null) 0L else nchg.asInstanceOf[Long]
       comp = next.select("doc_id", "comp")
       iters += 1
     }

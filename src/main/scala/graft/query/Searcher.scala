@@ -2,11 +2,12 @@ package graft.query
 
 import scala.collection.mutable.LongMap
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.build.InvertedIndex
 import graft.model.ScoredDoc
+import graft.model.Checkpoints.checkpointWithCount
 import graft.codec.PostingsCodec
 
 /** One postings row as stored (field, term, shard, df, cf, maxTf, blob).
@@ -73,14 +74,10 @@ final class Searcher(
       rows.iterator.collect { case (t, s, _) if want(t) => s }
         .toArray.distinct.sorted
     }
-    /** Shards holding postings for EVERY given term (conjunctive /
-      * phrase pruning: a shard missing one term can't produce a hit). */
-    def shardsWithAll(terms: Seq[String]): Array[Long] = {
-      val need = terms.toSet
-      rows.groupBy(_._2).collect {
-        case (s, rs) if need.subsetOf(rs.iterator.map(_._1).toSet) => s
-      }.toArray.sorted
-    }
+    /** Shards holding postings for EVERY given term (conjunctive
+      * pruning: a shard missing one term can't produce a hit). */
+    def shardsWithAll(terms: Seq[String]): Array[Long] =
+      shardsWithGroups(terms.map(Seq(_)))
     /** Shards holding ≥1 alternative of EVERY slot group (multi-phrase
       * pruning: a shard missing a whole slot can't produce a hit). */
     def shardsWithGroups(groups: Seq[Seq[String]]): Array[Long] =
@@ -147,23 +144,6 @@ final class Searcher(
     }
   }
 
-  /** Slim (docId, dl) lookup for scoring joins, pruned to the doc-range
-    * shards that actually hold postings for the query's terms — for
-    * selective queries this shrinks the dl side from N to
-    * |touched shards|·shardSize rows in BOTH regimes (smaller
-    * broadcast below the gate; less shuffled data above it). The
-    * broadcast gate is sized on the PRUNED estimate — |touched
-    * shards|·shardSize·16 B from the already-collected metadata, NO
-    * extra job — not the corpus-wide numDocs, so a selective query on
-    * an arbitrarily large corpus still broadcasts while an every-shard
-    * query near the gate never ships a ~200 MB copy to the driver. */
-  private def dlLookup(meta: QueryMeta,
-      docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val prunedBytes = meta.shards.length.toLong * index.config.shardSizeDocs * 16L
-    val slim = pruneShards(dlWithShard(docFilter), meta.shards).select("docId", "dl")
-    if (prunedBytes <= dlBroadcastBytes) broadcast(slim) else slim
-  }
-
   /** The one per-shard scaffold of every pruned query: the posting rows
     * of `terms` and the live (docId, dl) side, both pruned to `shards`
     * and cogrouped on the doc-range shard key — a hot term's blocks
@@ -191,20 +171,23 @@ final class Searcher(
     }
   }
 
-  /** Positional tail of the phrase/NEAR/spanNot family on the shard
-    * scaffold: one TermIterator per (term, shard) row (no score bound —
-    * positional kernels never prune on score), `matcher` emits (docId,
-    * tf), and only LIVE docs survive — before the pseudo-term df count,
-    * so phrase idf reflects live matches only. Eagerly materialized
-    * (localCheckpoint, not pinned in the CacheManager): the cogroup runs
-    * ONCE for both the df count and the scoring plan. */
+  /** Positional tail of the phrase/NEAR/spanNot/spanFirst family on the
+    * shard scaffold: one TermIterator per (term, shard) row (no score
+    * bound — positional kernels never prune on score; each term the
+    * caller pruned `shards` on has one), `matcher` emits (docId, tf),
+    * and only LIVE docs survive — before the pseudo-term df count, so
+    * phrase idf reflects live matches only. Returns the match rows
+    * (docId, tf, dl), eagerly materialized (localCheckpoint, not pinned
+    * in the CacheManager), with their count — the pseudo-term df —
+    * observed on the checkpoint's own job: the cogroup runs ONCE and no
+    * second action counts it. */
   private def positionalMatchRows(terms: Seq[String], shards: Array[Long],
       dfs: Map[String, Long], scorer: Scorer)(
-      matcher: Map[String, TermIterator] => Iterator[(Long, Int)]): DataFrame = {
+      matcher: Map[String, TermIterator] => Iterator[(Long, Int)]): (DataFrame, Long) = {
     if (shards.isEmpty)
-      return Seq.empty[(Long, Int, Double)].toDF("docId", "tf", "dl")
+      return (Seq.empty[(Long, Int, Double)].toDF("docId", "tf", "dl"), 0L)
     val st = stats
-    perShard(terms, shards) { (rows, dlMap) =>
+    val (matched, Row(n: Long)) = checkpointWithCount(perShard(terms, shards) { (rows, dlMap) =>
       // one row per (term, shard) is a merge-path invariant, and this
       // toMap would SILENTLY keep one of the duplicates (undercounting
       // tf on e.g. an un-merged union of segment partials) — fail
@@ -218,7 +201,8 @@ final class Searcher(
           scorer, st, new PostingsCodec.BlobView(r.blob))
       }.toMap
       matcher(iterOf).collect { case (d, tf) if dlMap.contains(d) => (d, tf, dlMap(d)) }
-    }.toDF("docId", "tf", "dl").localCheckpoint()
+    }.toDF("docId", "tf", "dl"))
+    (matched, n)
   }
 
   /** Posting rows for the query terms — bucket/point-pruned scan
@@ -298,62 +282,20 @@ final class Searcher(
       docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     // `must` — mixed MUST + SHOULD (Lucene ReqOptSumScorer): the Wand
     // kernel leapfrogs the must iterators and treats the rest as
-    // score-only optionals. must == all terms degenerates to the AND
-    // leapfrog; requireAll wins if both are given.
+    // score-only optionals; requireAll makes every term a MUST (the
+    // conjunctive leapfrog).
     val qTerms = (terms ++ must).distinct.sorted
-    val allMust = requireAll || (must.nonEmpty && must.distinct.size == qTerms.size)
-    val mustArr = if (allMust) Array.empty[String] else must.distinct.sorted.toArray
+    val mustTerms = if (requireAll) qTerms else must.distinct.sorted
     // MUST_NOT terms ride the same cogroup as exclusion-only iterators
     // (Lucene ReqExclScorer): their postings are fetched per shard but
     // never scored and never contribute to shard pruning
     val exTerms = mustNot.distinct.sorted
-    if ((allMust && exTerms.exists(qTerms.contains)) ||
-        mustArr.exists(exTerms.contains))
-      return Seq.empty[(Long, Double)].toDF("docId", "score") // MUST ∧ MUST_NOT
-    // Lucene setMinimumNumberShouldMatch counts OPTIONAL clauses only;
-    // mm above the SHOULD-clause count matches nothing (allMust ⇒ 0).
-    val shouldCount = if (allMust) 0 else qTerms.size - mustArr.length
-    if (minShouldMatch > shouldCount)
-      return Seq.empty[(Long, Double)].toDF("docId", "score")
-    val mm = math.max(minShouldMatch, 0)
-    val meta = collectMeta(qTerms ++ exTerms)
-    val dfs = meta.dfs
-    val queryDfs = qTerms.map(t => dfs.getOrElse(t, 0L).toDouble)
-    val nQueryTerms = qTerms.size
-    val st = stats // closure-local: Searcher itself is not serializable
-    val exSet = exTerms.toSet
-    val mustSet: Set[String] = if (mustArr.isEmpty) null else mustArr.toSet
-
-    // Only shards that actually hold postings for the query's REQUIRED
-    // terms can produce hits — and in AND mode only shards holding
-    // EVERY required term (one missing term posting row forecloses the
-    // whole shard). The shard set comes from the single metadata
-    // collect: no discovery job, and the postings scan itself is
-    // pruned in AND mode too.
-    val touched =
-      if (allMust) meta.shardsWithAll(qTerms)
-      else if (mustArr.nonEmpty) meta.shardsWithAll(mustArr) // mixed: all MUSTs or bust
-      else meta.shardsWith(qTerms)
-    perShard[ScoredDoc](qTerms ++ exTerms, touched, docFilter) { (all, dlMap) =>
-      val (exRows, rows) = all.partition(r => exSet(r.term))
-      if (rows.isEmpty) Iterator.empty
-      else {
-        def mkIter(r: PostingRow): TermIterator = {
-          val df = dfs.getOrElse(r.term, 0L).toDouble
-          val b = boosts.getOrElse(r.term, 1.0)
-          new TermIterator(r.term, df,
-            b * scorer.upperBound(r.maxTf.toDouble, df, st), scorer, st,
-            new PostingsCodec.BlobView(r.blob), boost = b)
-        }
-        // NaN = "not live" (deleted or unknown): Wand skips the doc
-        Wand.topK(rows.map(mkIter).toSeq, d => dlMap.getOrElse(d, Double.NaN),
-          scorer, st, k, allMust, nQueryTerms, queryDfs,
-          excludeIters = exRows.map(mkIter).toSeq,
-          requiredTerms = mustSet, minShouldMatch = mm).iterator
-      }
-    }.toDF()
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+    // MUST ∧ MUST_NOT matches nothing; so does mm above the SHOULD-clause
+    // count (Lucene setMinimumNumberShouldMatch counts OPTIONAL clauses)
+    if (mustTerms.exists(exTerms.contains) || minShouldMatch > qTerms.size - mustTerms.size)
+      return emptyHits
+    wandTopK(qTerms, k, scorer, mustTerms, exTerms, math.max(minShouldMatch, 0),
+      boosts, docFilter)
   }
 
   /** Disjunction-max top-k (Lucene DisjunctionMaxQuery over term
@@ -371,22 +313,52 @@ final class Searcher(
       tieBreaker: Double = 0.0,
       scorer: Scorer = BM25()): DataFrame = {
     require(tieBreaker >= 0.0 && tieBreaker <= 1.0, "tieBreaker must be in [0,1]")
-    val qTerms = terms.distinct.sorted
-    val meta = collectMeta(qTerms)
+    wandTopK(terms.distinct.sorted, k, scorer, tieBreaker = tieBreaker)
+  }
+
+  /** The one WAND plan behind topK and dismaxTopK over sorted `qTerms`:
+    * one metadata collect, then the shard cogroup with a per-shard
+    * Wand.topK (MUST terms `mustTerms`, exclusion-only `exTerms`,
+    * minShouldMatch `mm`, dismax when `tieBreaker` is not NaN) and a
+    * k-merge. */
+  private def wandTopK(qTerms: Seq[String], k: Int, scorer: Scorer,
+      mustTerms: Seq[String] = Nil, exTerms: Seq[String] = Nil, mm: Int = 0,
+      boosts: Map[String, Double] = Map.empty, docFilter: Option[Column] = None,
+      tieBreaker: Double = Double.NaN): DataFrame = {
+    val meta = collectMeta(qTerms ++ exTerms)
     val dfs = meta.dfs
     val queryDfs = qTerms.map(t => dfs.getOrElse(t, 0L).toDouble)
     val nQueryTerms = qTerms.size
-    val st = stats
-    perShard[ScoredDoc](qTerms, meta.shards) { (rows, dlMap) =>
-      val iters = rows.map { r =>
-        val df = dfs.getOrElse(r.term, 0L).toDouble
-        new TermIterator(r.term, df,
-          scorer.upperBound(r.maxTf.toDouble, df, st), scorer, st,
-          new PostingsCodec.BlobView(r.blob))
-      }.toSeq
-      Wand.topK(iters, d => dlMap.getOrElse(d, Double.NaN),
-        scorer, st, k, queryTermCount = nQueryTerms, queryDfsIn = queryDfs,
-        dismaxTieBreaker = tieBreaker).iterator
+    val st = stats // closure-local: Searcher itself is not serializable
+    val exSet = exTerms.toSet
+    val mustSet = mustTerms.toSet
+
+    // Only shards that actually hold postings for the query's terms can
+    // produce hits — and with MUST terms only shards holding EVERY one
+    // of them (one missing term posting row forecloses the whole
+    // shard). The shard set comes from the single metadata collect: no
+    // discovery job, and the postings scan itself is pruned too.
+    val touched =
+      if (mustTerms.nonEmpty) meta.shardsWithAll(mustTerms)
+      else meta.shardsWith(qTerms)
+    perShard[ScoredDoc](qTerms ++ exTerms, touched, docFilter) { (all, dlMap) =>
+      val (exRows, rows) = all.partition(r => exSet(r.term))
+      if (rows.isEmpty) Iterator.empty
+      else {
+        def mkIter(r: PostingRow): TermIterator = {
+          val df = dfs.getOrElse(r.term, 0L).toDouble
+          val b = boosts.getOrElse(r.term, 1.0)
+          new TermIterator(r.term, df,
+            b * scorer.upperBound(r.maxTf.toDouble, df, st), scorer, st,
+            new PostingsCodec.BlobView(r.blob), boost = b)
+        }
+        // NaN = "not live" (deleted or unknown): Wand skips the doc
+        Wand.topK(rows.map(mkIter).toSeq, d => dlMap.getOrElse(d, Double.NaN),
+          scorer, st, k, nQueryTerms, queryDfs,
+          excludeIters = exRows.map(mkIter).toSeq,
+          requiredTerms = mustSet, minShouldMatch = mm,
+          dismaxTieBreaker = tieBreaker).iterator
+      }
     }.toDF()
       .orderBy(desc("score"), asc("docId"))
       .limit(k)
@@ -442,19 +414,17 @@ final class Searcher(
     * simplification as the ordered SpanNearQuery form. */
   def phraseTopK(terms: Seq[String], k: Int, scorer: Scorer = BM25(),
       slop: Int = 0): DataFrame =
-    scorePhraseMatched(multiPhraseMatchRows(terms.map(Seq(_)), scorer, slop), scorer, k)
+    multiPhraseTopK(terms.map(Seq(_)), k, scorer, slop)
 
-  /** Score eagerly-materialized phrase match rows (docId, tf, dl) as
-    * ONE pseudo-term whose df = number of matching live docs. */
+  /** Score counted phrase match rows (`positionalMatchRows`) as ONE
+    * pseudo-term whose df = number of matching live docs. */
   private def scorePhraseMatched(
-      matched: DataFrame, scorer: Scorer, k: Int): DataFrame = {
-    val phraseDf = matched.count().toDouble // docs containing the phrase
-    matched
+      matched: (DataFrame, Long), scorer: Scorer, k: Int): DataFrame =
+    matched._1
       .withColumn("score", scorer.contributionCol(
-        col("tf").cast("double"), lit(phraseDf), col("dl"), stats))
+        col("tf").cast("double"), lit(matched._2.toDouble), col("dl"), stats))
       .orderBy(desc("score"), asc("docId")).limit(k)
       .select("docId", "score")
-  }
 
   /** Multi-phrase top-k (Lucene MultiPhraseQuery): slot j matches where
     * ANY of `slotAlts(j)` occurs — "hash (join|probe)" finds both
@@ -469,23 +439,21 @@ final class Searcher(
     * collect. Singleton slots ≡ phraseTopK (asserted in tests). */
   def multiPhraseTopK(slotAlts: Seq[Seq[String]], k: Int,
       scorer: Scorer = BM25(), slop: Int = 0): DataFrame =
-    scorePhraseMatched(multiPhraseMatchRows(slotAlts, scorer, slop), scorer, k)
+    scorePhraseMatched(multiPhraseMatchRows(slotAlts, slop,
+      collectMeta(slotAlts.flatten.distinct), scorer), scorer, k)
 
-  /** (docId, tf, dl) for every LIVE doc matching the slot sequence —
-    * the one phrase kernel behind phraseTopK (singleton slots),
-    * multiPhraseTopK and boolean queries' phrase clauses. */
-  private def multiPhraseMatchRows(slotAlts: Seq[Seq[String]],
-      scorer: Scorer, slop: Int): DataFrame = {
+  /** Counted (docId, tf, dl) rows of every LIVE doc matching the slot
+    * sequence — the one phrase kernel behind phraseTopK (singleton
+    * slots), multiPhraseTopK and boolean queries' phrase clauses.
+    * `meta` covers at least the slot terms (a boolean query passes its
+    * one collect for all clauses). */
+  private def multiPhraseMatchRows(slotAlts: Seq[Seq[String]], slop: Int,
+      meta: QueryMeta, scorer: Scorer): (DataFrame, Long) = {
     require(slotAlts.nonEmpty && slotAlts.forall(_.nonEmpty),
       "every slot needs at least one alternative term")
     require(slop >= 0, "negative slop")
     val groups = slotAlts.map(_.distinct)
-    val qTerms = groups.flatten.distinct.sorted
-    val meta = collectMeta(qTerms)
-    val shards =
-      if (groups.exists(g => !g.exists(meta.dfs.contains))) Array.empty[Long]
-      else meta.shardsWithGroups(groups)
-    positionalMatchRows(qTerms, shards, meta.dfs, scorer)(
+    positionalMatchRows(groups.flatten.distinct, meta.shardsWithGroups(groups), meta.dfs, scorer)(
       iterOf => Wand.multiPhraseMatches(groups, iterOf, slop))
   }
 
@@ -495,20 +463,15 @@ final class Searcher(
     * the engine's convention throughout); tf counts only the
     * qualifying occurrences and the match set is scored as one
     * pseudo-term with df = qualifying docs, like the phrase family.
-    * One shard-pruned pass over the term's postings; the position
-    * filter runs inside codegen on the decoded arrays. */
+    * Same shard scaffold as the phrase family (Wand.spanFirstMatches
+    * per shard). */
   def spanFirstTopK(term: String, end: Int, k: Int,
       scorer: Scorer = BM25()): DataFrame = {
     require(end > 0, "end must be positive")
     val meta = collectMeta(Seq(term))
-    if (!meta.dfs.contains(term)) return emptyHits
-    val matched = matchesWithPositions(Seq(term)).toDF()
-      .select(col("docId"),
-        size(filter(col("positions"), p => p <= lit(end))).as("tf"))
-      .where(col("tf") > 0)
-      .join(dlLookup(meta), Seq("docId")) // live docs only (tombstones out)
-      .localCheckpoint() // one pass for both the df count and scoring
-    scorePhraseMatched(matched, scorer, k)
+    scorePhraseMatched(positionalMatchRows(Seq(term), meta.shards, meta.dfs, scorer) {
+      iterOf => Wand.spanFirstMatches(iterOf(term), end)
+    }, scorer, k)
   }
 
   /** Unordered proximity NEAR (Lucene SpanNearQuery(a, b,
@@ -540,12 +503,9 @@ final class Searcher(
     require(window >= 1, "window must be >= 1")
     val qTerms = (anchor +: rest).sorted
     val meta = collectMeta(qTerms)
-    val shards =
-      if (qTerms.exists(t => !meta.dfs.contains(t))) Array.empty[Long]
-      else meta.shardsWithAll(qTerms)
+    val shards = meta.shardsWithAll(qTerms)
     val matched = positionalMatchRows(qTerms, shards, meta.dfs, scorer) { iterOf =>
-      if (!iterOf.contains(anchor) || !rest.forall(iterOf.contains)) Iterator.empty
-      else Wand.nearAllMatches(iterOf(anchor), rest.map(iterOf).toArray, window)
+      Wand.nearAllMatches(iterOf(anchor), rest.map(iterOf).toArray, window)
     }
     scorePhraseMatched(matched, scorer, k)
   }
@@ -563,16 +523,10 @@ final class Searcher(
       pre: Int = 0, post: Int = 0, scorer: Scorer = BM25()): DataFrame = {
     require(a != b, "spanNot needs distinct include/exclude terms")
     require(pre >= 0 && post >= 0, "negative exclusion window")
-    val meta = collectMeta(Seq(a, b).distinct.sorted)
-    if (!meta.dfs.contains(a)) return emptyHits
-    val shards = meta.shardsWithAll(Seq(a))
-    if (shards.isEmpty) return emptyHits
-    val qTerms = if (meta.dfs.contains(b)) Seq(a, b).sorted else Seq(a)
-    val matched = positionalMatchRows(qTerms, shards, meta.dfs, scorer) { iterOf =>
-      iterOf.get(a) match {
-        case None => Iterator.empty
-        case Some(ia) => Wand.spanNotMatches(ia, iterOf.getOrElse(b, null), pre, post)
-      }
+    val meta = collectMeta(Seq(a, b))
+    val shards = meta.shardsWith(Seq(a))
+    val matched = positionalMatchRows(Seq(a, b), shards, meta.dfs, scorer) { iterOf =>
+      Wand.spanNotMatches(iterOf(a), iterOf.getOrElse(b, null), pre, post)
     }
     scorePhraseMatched(matched, scorer, k)
   }
@@ -611,8 +565,8 @@ final class Searcher(
       scorer: Scorer = BM25(), slop: Int = 0,
       maxExpansions: Int = 128): DataFrame = {
     require(prefix.nonEmpty, "empty phrase-prefix")
-    val ts = expandTerms(col("term").startsWith(prefix),
-      s"phrase-prefix '$prefix'", maxExpansions)
+    val ts = expandTerms((prefixTerms(prefix)._1, s"phrase-prefix '$prefix'"),
+      maxExpansions)
     if (ts.isEmpty) emptyHits
     else multiPhraseTopK(terms.map(Seq(_)) :+ ts, k, scorer, slop)
   }
@@ -719,12 +673,17 @@ final class Searcher(
     require(kPerGroup > 0)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("value")).orderBy(desc("score"), asc("docId"))
+    // the scoring plan's own touched shards prune the group side: one
+    // metadata collect for both
+    val qTerms = terms.distinct
+    val (hits, shards) = booleanHits(ParsedQuery(
+      must = if (requireAll) qTerms else Nil,
+      should = if (requireAll) Nil else qTerms, mustNot = Nil),
+      scorer, Nil, 0, docFilter)
     // row_number + rank<=k is the WindowGroupLimit shape — Spark
     // inserts per-partition group limits BEFORE the window shuffle,
     // so each map task forwards at most k rows per group
-    scoredDocs(terms, scorer, requireAll, docFilter = docFilter)
-      .join(facetSide(groupField, collectMeta(terms.distinct).shards),
-        Seq("docId"))
+    hits.join(facetSide(groupField, shards), Seq("docId"))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= kPerGroup)
       .orderBy(asc("value"), asc("rank"))
@@ -850,13 +809,8 @@ final class Searcher(
       k: Int,
       includeLo: Boolean = true,
       includeHi: Boolean = false,
-      boost: Double = 1.0): DataFrame = {
-    require(lo.nonEmpty || hi.nonEmpty, "unbounded on both ends")
-    val preds = Seq(
-      lo.map(v => if (includeLo) col("term") >= v else col("term") > v),
-      hi.map(v => if (includeHi) col("term") <= v else col("term") < v)).flatten
-    constantScoreTopK(preds.reduce(_ && _), k, boost)
-  }
+      boost: Double = 1.0): DataFrame =
+    constantScoreTopK(rangeTerms(lo, hi, includeLo, includeHi)._1, k, boost)
 
   /** Score explanation for one (query, doc) — Lucene
     * IndexSearcher.explain(): per matching query term, the tf/df/dl
@@ -945,12 +899,12 @@ final class Searcher(
   /** Expand dictionary terms matching a predicate, term-ascending,
     * bounded: the scale contract of every Lucene MultiTermQuery the
     * reference inherits through its TermEnum SPI (BooleanQuery
-    * rewrite throws TooManyClauses past the clause cap). The collect
-    * is ≤ maxExpansions+1 strings — driver-bounded by construction. */
-  private def expandTerms(
-      pred: org.apache.spark.sql.Column,
-      label: String,
-      maxExpansions: Int): Seq[String] = {
+    * rewrite throws TooManyClauses past the clause cap). `q` is the
+    * (predicate, label) pair of one of the per-kind functions below.
+    * The collect is ≤ maxExpansions+1 strings — driver-bounded by
+    * construction. */
+  private def expandTerms(q: (Column, String), maxExpansions: Int): Seq[String] = {
+    val (pred, label) = q
     val ts = index.termStats
       .where(col("field") === field && pred)
       .orderBy(asc("term")).limit(maxExpansions + 1)
@@ -962,38 +916,67 @@ final class Searcher(
     ts
   }
 
+  /** The one multi-term rewrite behind prefix, wildcard, fuzzy, range
+    * and regexp top-k: expand the dictionary, then rank the expansion
+    * as a disjunctive WAND query (Lucene SCORING_BOOLEAN_QUERY_REWRITE
+    * semantics: per-term idf, not constant-score). An empty expansion
+    * matches nothing. */
+  private def expansionTopK(q: (Column, String), maxExpansions: Int,
+      k: Int, scorer: Scorer): DataFrame = {
+    val ts = expandTerms(q, maxExpansions)
+    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
+  }
+
   private def emptyHits: DataFrame =
     Seq.empty[(Long, Double)].toDF("docId", "score")
 
-  /** Dictionary predicate of a wildcard pattern: leading literal run
-    * pushes down as a prefix scan, the full pattern applies as an
-    * anchored regex (shared by wildcardTopK and the parser's wildcard
-    * clauses). */
-  private def wildcardPred(pattern: String): org.apache.spark.sql.Column = {
+  // Dictionary predicate + TooManyClauses label of each multi-term
+  // kind, shared by the explicit *TopK calls and the parser's clauses.
+
+  private def prefixTerms(prefix: String): (Column, String) =
+    (col("term").startsWith(prefix), s"prefix '$prefix'")
+
+  /** Leading literal run pushes down as a prefix scan, the full pattern
+    * applies as an anchored regex. */
+  private def wildcardTerms(pattern: String): (Column, String) = {
     val litPrefix = pattern.takeWhile(c => c != '*' && c != '?')
     val rx = "^" + pattern.map {
       case '*' => ".*"
       case '?' => "."
       case c => java.util.regex.Pattern.quote(c.toString)
     }.mkString + "$"
-    if (litPrefix.isEmpty) col("term").rlike(rx)
-    else col("term").startsWith(litPrefix) && col("term").rlike(rx)
+    (if (litPrefix.isEmpty) col("term").rlike(rx)
+    else col("term").startsWith(litPrefix) && col("term").rlike(rx),
+      s"wildcard '$pattern'")
   }
+
+  private def fuzzyTerms(term: String, maxEdits: Int,
+      prefixLength: Int): (Column, String) = {
+    val base = levenshtein(col("term"), lit(term)) <= maxEdits
+    (if (prefixLength > 0) col("term").startsWith(term.take(prefixLength)) && base
+    else base, s"fuzzy '$term'~$maxEdits")
+  }
+
+  private def rangeTerms(lo: Option[String], hi: Option[String],
+      includeLo: Boolean, includeHi: Boolean): (Column, String) = {
+    require(lo.nonEmpty || hi.nonEmpty, "unbounded on both ends")
+    val preds = Seq(
+      lo.map(v => if (includeLo) col("term") >= v else col("term") > v),
+      hi.map(v => if (includeHi) col("term") <= v else col("term") < v)).flatten
+    (preds.reduce(_ && _), s"range [${lo.getOrElse("")}, ${hi.getOrElse("")}]")
+  }
+
+  private def regexpTerms(pattern: String): (Column, String) =
+    (col("term").rlike("^(?:" + pattern + ")$"), s"regex '$pattern'")
 
   /** Resolve a parsed multi-term clause against the dictionary
     * (TooManyClauses-bounded, like the explicit API calls). */
   private def expandClause(e: ExpansionClause,
-      maxExpansions: Int = 1024): Seq[String] = e.kind match {
-    case ExpansionKind.Prefix =>
-      expandTerms(col("term").startsWith(e.pattern),
-        s"prefix '${e.pattern}'", maxExpansions)
-    case ExpansionKind.Wildcard =>
-      expandTerms(wildcardPred(e.pattern), s"wildcard '${e.pattern}'",
-        maxExpansions)
-    case ExpansionKind.Fuzzy =>
-      expandTerms(levenshtein(col("term"), lit(e.pattern)) <= e.maxEdits,
-        s"fuzzy '${e.pattern}'~${e.maxEdits}", maxExpansions)
-  }
+      maxExpansions: Int = 1024): Seq[String] = expandTerms(e.kind match {
+    case ExpansionKind.Prefix => prefixTerms(e.pattern)
+    case ExpansionKind.Wildcard => wildcardTerms(e.pattern)
+    case ExpansionKind.Fuzzy => fuzzyTerms(e.pattern, e.maxEdits, 0)
+  }, maxExpansions)
 
   /** Parse a classic Lucene query string (the reference's entire search
     * surface goes through `new QueryParser(field, analyzer).parse(q)`,
@@ -1077,21 +1060,32 @@ final class Searcher(
     * a rewritten multi-term query). */
   def scoredDocsBoolean(pq: ParsedQuery, scorer: Scorer = BM25(),
       mustGroups: Seq[Seq[String]] = Nil, minShouldMatch: Int = 0,
-      docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    booleanHits(pq, scorer, mustGroups, minShouldMatch, docFilter)._1
+
+  /** `scoredDocsBoolean`'s hits plus the shards its term clauses touch
+    * (sorted; empty without term clauses). ONE metadata collect serves
+    * every term, group and phrase clause, scoring or prohibited. */
+  private def booleanHits(pq: ParsedQuery, scorer: Scorer,
+      mustGroups: Seq[Seq[String]], minShouldMatch: Int,
+      docFilter: Option[Column]): (DataFrame, Array[Long]) = {
     val phrases = pq.scoringPhrases
     val plainTerms = (pq.must ++ pq.should).distinct.sorted
     val mustTermSet = pq.must.distinct.toSet
     val shouldCount = plainTerms.count(t => !mustTermSet(t)) + pq.shouldPhrases.size
     if ((!pq.hasScoring && mustGroups.isEmpty) || minShouldMatch > shouldCount ||
         pq.mustNot.exists(mustTermSet))
-      return Seq.empty[(Long, Double, Int)].toDF("docId", "score", "nMatched")
+      return (Seq.empty[(Long, Double, Int)].toDF("docId", "score", "nMatched"),
+        Array.empty[Long])
     val qTerms = (plainTerms ++ mustGroups.flatten).distinct.sorted
-    val meta = if (qTerms.isEmpty) null else collectMeta(qTerms)
+    val meta = collectMeta((qTerms ++
+      (phrases.map(_._1) ++ pq.notPhrases).flatMap(_.slots)).distinct)
+    val termShards = meta.shardsWith(qTerms)
 
     // term clause rows: (clause, docId, tscore, isMust); per-term
     // boosts (`term^N` / boosted expansions) scale the contribution
     val termRows: Option[DataFrame] = if (qTerms.isEmpty) None else {
-      val dfLookup = typedlit(meta.dfs.map { case (t, d) => t -> d.toDouble })
+      val dfLookup = typedlit(qTerms.flatMap(t => meta.dfs.get(t).map(t -> _.toDouble)).toMap)
       val clausesOf = typedlit(
         (plainTerms.map(t => (t, ("t:" + t, mustTermSet(t)))) ++
           mustGroups.zipWithIndex.flatMap { case (g, i) =>
@@ -1100,8 +1094,18 @@ final class Searcher(
       val boostCol =
         if (pq.boosts.isEmpty) lit(1.0)
         else coalesce(element_at(typedlit(pq.boosts), col("term")), lit(1.0))
+      // slim (docId, dl) side pruned to the term clauses' shards: for
+      // selective queries it shrinks from N to |touched shards|·shardSize
+      // rows in BOTH regimes (smaller broadcast below the gate; less
+      // shuffled data above it). The gate is sized on that PRUNED
+      // estimate (16 B a row, from the collected metadata: NO extra job),
+      // not on numDocs, so a selective query on an arbitrarily large
+      // corpus still broadcasts while an every-shard query near the gate
+      // never ships a ~200 MB copy to the driver
+      val dl = pruneShards(dlWithShard(docFilter), termShards).select("docId", "dl")
+      val prunedBytes = termShards.length.toLong * index.config.shardSizeDocs * 16L
       Some(matches(qTerms).toDF()
-        .join(dlLookup(meta, docFilter), Seq("docId"))
+        .join(if (prunedBytes <= dlBroadcastBytes) broadcast(dl) else dl, Seq("docId"))
         .withColumn("df", element_at(dfLookup, col("term")))
         .withColumn("c", explode(element_at(clausesOf, col("term"))))
         .select(
@@ -1116,8 +1120,8 @@ final class Searcher(
     // counted before the doc filter narrows the candidates
     val phraseRows: Seq[(DataFrame, Double)] = phrases.zipWithIndex.map {
       case ((pc, isMust), i) =>
-        val m = multiPhraseMatchRows(pc.slots.map(Seq(_)), scorer, pc.slop)
-        val pdf = m.count().toDouble
+        val (m, n) = multiPhraseMatchRows(pc.slots.map(Seq(_)), pc.slop, meta, scorer)
+        val pdf = n.toDouble
         val kept = docFilter.fold(m)(f =>
           m.join(index.docs.where(f).select("docId"), Seq("docId"), "left_semi"))
         (kept.select(
@@ -1168,9 +1172,11 @@ final class Searcher(
       (if (pq.mustNot.nonEmpty)
         Seq(matches(pq.mustNot.distinct).toDF().select("docId")) else Nil) ++
         pq.notPhrases.map(p =>
-          multiPhraseMatchRows(p.slots.map(Seq(_)), scorer, p.slop).select("docId"))
-    if (notDfs.isEmpty) scored
-    else scored.join(notDfs.reduce(_ union _).distinct(), Seq("docId"), "left_anti")
+          multiPhraseMatchRows(p.slots.map(Seq(_)), p.slop, meta, scorer)._1.select("docId"))
+    val hits =
+      if (notDfs.isEmpty) scored
+      else scored.join(notDfs.reduce(_ union _).distinct(), Seq("docId"), "left_anti")
+    (hits, termShards)
   }
 
   /** Prefix query (Lucene PrefixQuery via the reference's TermEnum
@@ -1185,9 +1191,7 @@ final class Searcher(
       scorer: Scorer = BM25(),
       maxExpansions: Int = 1024): DataFrame = {
     require(prefix.nonEmpty, "empty prefix would expand the whole dictionary")
-    val ts = expandTerms(col("term").startsWith(prefix), s"prefix '$prefix'",
-      maxExpansions)
-    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
+    expansionTopK(prefixTerms(prefix), maxExpansions, k, scorer)
   }
 
   /** Wildcard query (Lucene WildcardQuery): `*` = any run, `?` = any
@@ -1203,9 +1207,7 @@ final class Searcher(
       maxExpansions: Int = 1024): DataFrame = {
     require(pattern.exists(c => c != '*' && c != '?'),
       s"wildcard pattern '$pattern' has no literal characters")
-    val ts = expandTerms(wildcardPred(pattern), s"wildcard '$pattern'",
-      maxExpansions)
-    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
+    expansionTopK(wildcardTerms(pattern), maxExpansions, k, scorer)
   }
 
   /** Fuzzy query (Lucene FuzzyQuery): rank docs containing any
@@ -1225,13 +1227,7 @@ final class Searcher(
       scorer: Scorer = BM25(),
       maxExpansions: Int = 1024): DataFrame = {
     require(term.nonEmpty && maxEdits >= 0 && prefixLength >= 0)
-    val base = levenshtein(col("term"), lit(term)) <= maxEdits
-    val pred =
-      if (prefixLength > 0)
-        col("term").startsWith(term.take(prefixLength)) && base
-      else base
-    val ts = expandTerms(pred, s"fuzzy '$term'~$maxEdits", maxExpansions)
-    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
+    expansionTopK(fuzzyTerms(term, maxEdits, prefixLength), maxExpansions, k, scorer)
   }
 
   /** Term-range query (Lucene TermRangeQuery; reference A6 range scan):
@@ -1244,15 +1240,8 @@ final class Searcher(
       includeLo: Boolean = true,
       includeHi: Boolean = false,
       scorer: Scorer = BM25(),
-      maxExpansions: Int = 1024): DataFrame = {
-    require(lo.nonEmpty || hi.nonEmpty, "unbounded on both ends")
-    val preds = Seq(
-      lo.map(v => if (includeLo) col("term") >= v else col("term") > v),
-      hi.map(v => if (includeHi) col("term") <= v else col("term") < v)).flatten
-    val ts = expandTerms(preds.reduce(_ && _),
-      s"range [${lo.getOrElse("")}, ${hi.getOrElse("")}]", maxExpansions)
-    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
-  }
+      maxExpansions: Int = 1024): DataFrame =
+    expansionTopK(rangeTerms(lo, hi, includeLo, includeHi), maxExpansions, k, scorer)
 
   /** Regex query (Lucene 3.0 contrib RegexQuery — the same TermEnum
     * full-scan MultiTermQuery the reference inherits; modern
@@ -1266,9 +1255,7 @@ final class Searcher(
       scorer: Scorer = BM25(),
       maxExpansions: Int = 1024): DataFrame = {
     require(pattern.nonEmpty, "empty regex pattern")
-    val ts = expandTerms(col("term").rlike("^(?:" + pattern + ")$"),
-      s"regex '$pattern'", maxExpansions)
-    if (ts.isEmpty) emptyHits else topK(ts, k, scorer)
+    expansionTopK(regexpTerms(pattern), maxExpansions, k, scorer)
   }
 
   /** docKey → docId point lookup (the reference's doc2int reverse map,

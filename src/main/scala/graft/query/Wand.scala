@@ -126,13 +126,11 @@ object Wand {
     *   docs). Double.NaN marks a NON-LIVE doc (tombstoned / absent
     *   from the live dl side): such docs are skipped as candidates —
     *   θ-pruning stays sound because skipping only removes hits.
-    * @param requireAll conjunctive (AND) semantics when true.
-    * @param requiredTerms mixed-mode (Lucene ReqOptSumScorer): when
-    *   non-null and a strict non-empty subset of the query terms, a
-    *   candidate must contain EVERY required term (leapfrog over the
-    *   required iterators) and the remaining SHOULD iterators add
-    *   score when they also contain it. null/empty → pure OR;
-    *   equal to all terms → same as requireAll.
+    * @param requiredTerms MUST terms (Lucene ReqOptSumScorer): when
+    *   non-null and non-empty, a candidate must contain EVERY required
+    *   term (leapfrog over the required iterators) and the remaining
+    *   SHOULD iterators add score when they also contain it. null/empty
+    *   → pure OR; all terms → conjunctive (AND).
     * @param excludeIters MUST_NOT postings (Lucene ReqExclScorer
     *   semantics, BooleanQuery prohibited clauses the reference
     *   inherits through its reader SPI): a candidate present in ANY of
@@ -147,9 +145,8 @@ object Wand {
     *   this many OPTIONAL (SHOULD) terms — all terms in pure-OR mode,
     *   the non-required terms in mixed mode. A pure filter at scoring
     *   time: θ-pruning stays sound because the filter only removes
-    *   hits (θ is never raised by an unqualified doc). Ignored in
-    *   requireAll mode (no SHOULD clauses exist — callers map
-    *   mm > #should to an empty result per the Lucene contract).
+    *   hits (θ is never raised by an unqualified doc). Callers map
+    *   mm > #should to an empty result per the Lucene contract.
     * @param dismaxTieBreaker when not NaN, score candidates with
     *   Lucene DisjunctionMaxQuery semantics instead of the sum:
     *   max contribution + tieBreaker · (sum of the others). Requires
@@ -163,16 +160,14 @@ object Wand {
       scorer: Scorer,
       stats: CorpusStats,
       k: Int,
-      requireAll: Boolean = false,
       queryTermCount: Int = -1,
       queryDfsIn: Seq[Double] = null,
-      initialThreshold: Double = Double.NegativeInfinity,
       excludeIters: Seq[TermIterator] = Nil,
       requiredTerms: Set[String] = null,
       minShouldMatch: Int = 0,
       dismaxTieBreaker: Double = Double.NaN): Seq[ScoredDoc] = {
     require(dismaxTieBreaker.isNaN ||
-      (dismaxTieBreaker >= 0.0 && dismaxTieBreaker <= 1.0 && !requireAll &&
+      (dismaxTieBreaker >= 0.0 && dismaxTieBreaker <= 1.0 &&
         (requiredTerms == null || requiredTerms.isEmpty)),
       "dismax: tieBreaker must be in [0,1] and mode must be pure OR")
 
@@ -196,11 +191,7 @@ object Wand {
     // just the terms present in this shard
     val queryDfs =
       if (queryDfsIn != null) queryDfsIn else byTerm.map(_.df).toSeq
-    // AND semantics must count against the QUERY's term count, not the
-    // iterators present locally — a doc-range shard missing one term's
-    // posting row can never produce a conjunctive hit.
     val nTerms = if (queryTermCount > 0) queryTermCount else byTerm.length
-    if (requireAll && byTerm.length < nTerms) return Seq.empty
     // docFactor is monotone in nMatched (coord); its max (full match)
     // scales the upper bounds so θ-pruning stays sound for scorers with
     // docFactor ≠ 1 (LegacyTfIdf queryNorm·coord).
@@ -209,7 +200,7 @@ object Wand {
     val heap = mutable.PriorityQueue.empty[Hit](worstFirst)
 
     def theta: Double =
-      if (heap.size >= k) heap.head.score else initialThreshold
+      if (heap.size >= k) heap.head.score else Double.NegativeInfinity
 
     def offer(docId: Long, score: Double): Unit = {
       if (heap.size < k) heap.enqueue(Hit(docId, score))
@@ -226,80 +217,26 @@ object Wand {
       drained.reverse.map(h => ScoredDoc(h.docId, h.score))
     }
 
-    // Conjunctive (AND) mode: leapfrog intersection, not OR-pivoting —
-    // every term must contain the doc, so the sound-and-faster move is
-    // to advance every lagging iterator straight to max(curDoc); block
-    // skipping then jumps whole block runs of the common terms past the
-    // rare term's gaps, instead of decoding them block by block.
-    if (requireAll) {
-      // static θ-termination bound: a doc matching every term at its
-      // term-level ub can't beat θ once the heap is full and θ ≥ Σub
-      var ubSum = 0.0
-      var s = 0
-      while (s < byTerm.length) { ubSum += byTerm(s).ub * ubScale; s += 1 }
-      var done = false
-      while (!done) {
-        var maxDoc = Long.MinValue
-        var minDoc = Long.MaxValue
-        var i = 0
-        while (i < byTerm.length) {
-          val d = byTerm(i).curDoc // Long.MaxValue when exhausted
-          if (d > maxDoc) maxDoc = d
-          if (d < minDoc) minDoc = d
-          i += 1
-        }
-        if (maxDoc == Long.MaxValue) done = true // some term exhausted
-        else if (heap.size >= k && ubSum <= theta) done = true
-        else if (minDoc == maxDoc) {
-          // all terms aligned on maxDoc — candidate; block-max filter
-          var blockSum = 0.0
-          i = 0
-          while (i < byTerm.length) { blockSum += byTerm(i).blockUb * ubScale; i += 1 }
-          if (blockSum > theta || heap.size < k) {
-            val dl = dlOf(maxDoc)
-            // NaN dl = not live (tombstoned); MUST_NOT match → skip
-            if (!dl.isNaN && !isExcluded(maxDoc)) {
-              var score = 0.0
-              i = 0
-              while (i < byTerm.length) { // byTerm is term-ascending: fixed order
-                val it = byTerm(i)
-                score += it.boost * scorer.contribution(it.curTf.toDouble, it.df, dl, stats)
-                i += 1
-              }
-              score *= scorer.docFactor(nTerms, queryDfs, stats)
-              offer(maxDoc, score)
-            }
-          }
-          i = 0
-          while (i < byTerm.length) { byTerm(i).next(); i += 1 }
-        } else {
-          i = 0
-          while (i < byTerm.length) {
-            if (byTerm(i).curDoc < maxDoc) byTerm(i).advanceTo(maxDoc)
-            i += 1
-          }
-        }
-      }
-      return drain()
-    }
-
-    // Mixed MUST + SHOULD (Lucene ReqOptSumScorer): leapfrog the
-    // REQUIRED iterators exactly like AND mode — candidates are docs
-    // containing every required term — and advance the optional
-    // iterators to each candidate, adding their contributions when
-    // aligned. θ-termination uses the ub sum over ALL terms (sound:
-    // it bounds any candidate's score from above).
-    val reqSet = if (requiredTerms == null) Set.empty[String] else requiredTerms
-    if (reqSet.nonEmpty) {
-      val req = byTerm.filter(it => reqSet(it.term))
-      if (req.length < reqSet.size) return drain() // shard missing a required term
+    // MUST + SHOULD (Lucene ReqOptSumScorer; all terms required = AND):
+    // leapfrog intersection of the REQUIRED iterators, not OR-pivoting —
+    // advance every lagging one straight to max(curDoc), so block
+    // skipping jumps whole block runs of the common terms past the rare
+    // term's gaps. Candidates are docs containing every required term;
+    // the optional iterators advance to each candidate and add their
+    // contributions when aligned. θ-termination uses the ub sum over ALL
+    // terms (sound: it bounds any candidate's score from above).
+    val nReq = if (requiredTerms == null) 0 else requiredTerms.size
+    if (nReq > 0) {
+      val isReq = byTerm.map(it => requiredTerms(it.term)) // aligned with byTerm
+      val req = byTerm.filter(it => requiredTerms(it.term))
+      if (req.length < nReq) return drain() // shard missing a required term
       var ubSum = 0.0
       var optUbSum = 0.0 // optional terms' FULL ub (their blocks lag the candidate)
       var s = 0
       while (s < byTerm.length) {
         val u = byTerm(s).ub * ubScale
         ubSum += u
-        if (!reqSet(byTerm(s).term)) optUbSum += u
+        if (!isReq(s)) optUbSum += u
         s += 1
       }
       var doneR = false
@@ -329,7 +266,7 @@ object Wand {
               var t = 0
               while (t < byTerm.length) { // term-ascending: fixed order
                 val it = byTerm(t)
-                if (!reqSet(it.term) && !it.exhausted && it.curDoc < maxDoc)
+                if (!isReq(t) && !it.exhausted && it.curDoc < maxDoc)
                   it.advanceTo(maxDoc) // optionals advance lazily, forward-only
                 if (!it.exhausted && it.curDoc == maxDoc) {
                   score += it.boost * scorer.contribution(it.curTf.toDouble, it.df, dl, stats)
@@ -339,7 +276,7 @@ object Wand {
               }
               // matched optionals = matched terms minus the (always
               // fully matched) required set
-              if (m - reqSet.size >= minShouldMatch) {
+              if (m - nReq >= minShouldMatch) {
                 score *= scorer.docFactor(m, queryDfs, stats)
                 offer(maxDoc, score)
               }
@@ -383,37 +320,34 @@ object Wand {
           while (j < iters.length && iters(j).curDoc == pivotDoc) {
             blockSum += iters(j).blockUb * ubScale; j += 1
           }
-          val nMatched = j
           val dlPivot = dlOf(pivotDoc)
           // NaN dl = not live (tombstoned); MUST_NOT match → never a
           // candidate (isExcluded last: advances exclusion iterators
           // only for candidates that pass the cheaper gates)
           if ((blockSum > theta || heap.size < k) && !dlPivot.isNaN
               && !isExcluded(pivotDoc)) {
-            if (!requireAll || nMatched == nTerms) {
-              // deterministic order: byTerm is term-ascending
-              var sum = 0.0
-              var maxC = 0.0
-              var m = 0
-              var t = 0
-              val dl = dlPivot
-              while (t < byTerm.length) {
-                val it = byTerm(t)
-                if (!it.exhausted && it.curDoc == pivotDoc) {
-                  val c = it.boost * scorer.contribution(it.curTf.toDouble, it.df, dl, stats)
-                  sum += c
-                  if (c > maxC) maxC = c
-                  m += 1
-                }
-                t += 1
+            // deterministic order: byTerm is term-ascending
+            var sum = 0.0
+            var maxC = 0.0
+            var m = 0
+            var t = 0
+            val dl = dlPivot
+            while (t < byTerm.length) {
+              val it = byTerm(t)
+              if (!it.exhausted && it.curDoc == pivotDoc) {
+                val c = it.boost * scorer.contribution(it.curTf.toDouble, it.df, dl, stats)
+                sum += c
+                if (c > maxC) maxC = c
+                m += 1
               }
-              if (m >= minShouldMatch) { // pure-OR: every term is a SHOULD
-                val score =
-                  if (dismaxTieBreaker.isNaN)
-                    sum * scorer.docFactor(m, queryDfs, stats)
-                  else maxC + dismaxTieBreaker * (sum - maxC)
-                offer(pivotDoc, score)
-              }
+              t += 1
+            }
+            if (m >= minShouldMatch) { // pure-OR: every term is a SHOULD
+              val score =
+                if (dismaxTieBreaker.isNaN)
+                  sum * scorer.docFactor(m, queryDfs, stats)
+                else maxC + dismaxTieBreaker * (sum - maxC)
+              offer(pivotDoc, score)
             }
           }
           j = 0
@@ -669,6 +603,21 @@ object Wand {
         if (tf > 0) out += ((da, tf))
       } else out += ((da, itA.curTf)) // exclude term absent: raw tf
       itA.next()
+    }
+    out.iterator
+  }
+
+  /** Span-first (Lucene SpanFirstQuery over a term span): per doc, tf =
+    * positions ≤ `end`; docs with none drop out. */
+  def spanFirstMatches(it: TermIterator, end: Int): Iterator[(Long, Int)] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
+    while (it.curDoc != Long.MaxValue) {
+      val ps = it.curPositions
+      var tf = 0
+      var i = 0
+      while (i < ps.length) { if (ps(i) <= end) tf += 1; i += 1 }
+      if (tf > 0) out += ((it.curDoc, tf))
+      it.next()
     }
     out.iterator
   }

@@ -101,8 +101,10 @@ object StreamingIndexer {
             replace = true)
       case None =>
         Files.createDirectories(Paths.get(root))
-        TableFormat.commitJson(root, IngestConfigFile, IndexTables.configFields(cfg),
-          replace = false)
+        // yielded to a concurrent first ingest: validate against its config
+        if (!TableFormat.commitJson(root, IngestConfigFile,
+            IndexTables.configFields(cfg), replace = false))
+          writeIngestConfig(root, cfg)
     }
 
   private val IngestConfigFile = "ingest_config.json"

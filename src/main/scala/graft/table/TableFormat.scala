@@ -78,8 +78,11 @@ object TableFormat {
     val total = fileRows.map(_.rows).sum
     Files.move(tmp, dataDir, StandardCopyOption.ATOMIC_MOVE)
     val m = Manifest(table, snap, dataDir.toString, total, fileRows)
-    commitManifest(root, m)
-    m
+    if (commitManifest(root, m)) m
+    else { // another writer committed this table first: yield to it
+      deleteRecursively(dataDir)
+      readManifest(root, table)
+    }
   }
 
   /** Does root entry `name` belong to `table`: a data dir
@@ -146,7 +149,7 @@ object TableFormat {
     } finally pool.shutdown()
   }
 
-  private def commitManifest(root: String, m: Manifest): Unit = {
+  private def commitManifest(root: String, m: Manifest): Boolean = {
     val files = m.files
       .map(f => s"""{"file":"${f.file}","rows":${f.rows}}""")
       .mkString("[", ",", "]")
@@ -160,20 +163,25 @@ object TableFormat {
   private[graft] def str(s: String): String = "\"" + s + "\""
 
   /** Commit `{"k":v,…}` (values are JSON literals, in order) as
-    * `dir/name`: write a same-directory temp file, then ATOMIC_MOVE it
-    * into place — a reader sees the old file or the whole new one,
-    * never a half-written one. `replace = false` omits
-    * REPLACE_EXISTING: where the filesystem refuses to rename onto an
-    * existing file, the commit yields to the one already there. */
+    * `dir/name` from a same-directory temp file — a reader sees the old
+    * file or the whole new one, never a half-written one. `replace`:
+    * ATOMIC_MOVE over any existing file. Otherwise a hard link, which
+    * fails atomically if `dir/name` exists (a rename would overwrite
+    * it): the commit then yields to the file already there. Returns
+    * whether this call's content was committed. */
   private[graft] def commitJson(dir: String, name: String,
-      fields: Seq[(String, String)], replace: Boolean): Unit = {
+      fields: Seq[(String, String)], replace: Boolean): Boolean = {
     val json = fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val tmp = Paths.get(dir, s"_tmp_$name.${System.nanoTime()}")
     Files.writeString(tmp, json)
-    val opts = StandardCopyOption.ATOMIC_MOVE +:
-      (if (replace) Seq(StandardCopyOption.REPLACE_EXISTING) else Nil)
-    try { Files.move(tmp, Paths.get(dir, name), opts: _*); () }
-    catch { case _: FileAlreadyExistsException if !replace => Files.deleteIfExists(tmp); () }
+    val dst = Paths.get(dir, name)
+    try {
+      if (replace) Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+      else Files.createLink(dst, tmp)
+      true
+    } catch { case _: FileAlreadyExistsException if !replace => false }
+    finally Files.deleteIfExists(tmp)
   }
 
   /** Text of the JSON file `dir/name`, if it exists. */

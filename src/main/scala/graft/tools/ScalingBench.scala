@@ -110,8 +110,7 @@ object ScalingBench {
     })
     try {
       import spark.implicits._
-      val cfg = IndexConfig(shardSizeDocs = 1L << 16, docIdsFromInputOrder = true,
-        storeContent = false)
+      val cfg = IndexConfig(shardSizeDocs = 1L << 16, storeContent = false)
       // the north-rule input is a TABLE of source files — materialize
       // the deterministic corpus as parquet once (shared across levels
       // and reps), so the timed section measures table → index only

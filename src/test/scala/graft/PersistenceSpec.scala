@@ -95,6 +95,14 @@ class PersistenceSpec extends AnyFunSuite {
     IndexTables.write(spark, idx, dir)
     assert(termStatsRows() === termStatsBefore)
     assert(children().count(_.startsWith("termStats.snap-")) === 1, children())
+
+    // a no-replace commit onto an existing file yields to it: the
+    // committed bytes stay and no temp file is left behind
+    val statsBytes = Files.readAllBytes(Paths.get(dir, "stats.json")).toSeq
+    TableFormat.commitJson(dir, "stats.json",
+      Seq("numDocs" -> "1", "avgDocLen" -> "2.0"), replace = false)
+    assert(Files.readAllBytes(Paths.get(dir, "stats.json")).toSeq === statsBytes)
+    assert(!children().exists(_.startsWith("_tmp_")), children())
   }
 
   test("lineage: manifest row counts match data") {

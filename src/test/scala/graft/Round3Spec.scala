@@ -177,7 +177,7 @@ class Round3Spec extends AnyFunSuite {
       val itC = mkIter("common", common, scorer)
       val itR = mkIter("rare", rare, scorer)
       val hits = Wand.topK(Seq(itC, itR), _ => 10.0, scorer, wandStats,
-        k = 5, requireAll = requireAll)
+        k = 5, requiredTerms = if (requireAll) Set("common", "rare") else null)
       (hits.map(h => (h.docId, h.score)), itC.decodedBlocks + itR.decodedBlocks)
     }
     val (andHits, andDecoded) = run(requireAll = true)
