@@ -181,9 +181,9 @@ object IndexBuilder {
       * stays proportional to THIS doc's distinct terms. Rebuilt on
       * growTable alongside the rehash. */
     private var slots = new Array[Int](128)
-    /** Partition-level TermTable entry index per doc-local entry (−1
-      * on the non-interned paths) — lets the per-doc flush reach the
-      * term's partition accumulator by array index, zero hash probes. */
+    /** Partition-level TermTable entry index per doc-local entry —
+      * lets the per-doc flush reach the term's partition accumulator
+      * by array index, zero hash probes. */
     private var tidxs = new Array[Int](128)
     private var n = 0
 
@@ -191,20 +191,6 @@ object IndexBuilder {
       var i = 0
       while (i < n) { keys(slots(i)) = null; i += 1 }
       n = 0
-    }
-
-    def add(term: String, pos: Int): Unit = {
-      var s = term.hashCode & mask
-      while (true) {
-        val k = keys(s)
-        if (k == null) {
-          insertNew(term, -1, s, pos)
-          return
-        } else if ((k eq term) || k.equals(term)) {
-          pool(idxs(s)).add(pos)
-          return
-        } else s = (s + 1) & mask
-      }
     }
 
     private def insertNew(term: String, tidx: Int, slot: Int, pos: Int): Unit = {
@@ -224,28 +210,6 @@ object IndexBuilder {
       slots(n) = slot
       n += 1
       if (n * 4 > cap * 3) growTable()
-    }
-
-    /** Buffer-keyed add: probes by char content (hash identical to
-      * String.hashCode) and materializes the term String only on its
-      * FIRST occurrence in the doc — repeat occurrences allocate
-      * nothing. `buf` is the analyzer's reused scan buffer, valid only
-      * for this call. */
-    def addBuf(buf: Array[Char], len: Int, pos: Int): Unit = {
-      var h = 0
-      var i = 0
-      while (i < len) { h = h * 31 + buf(i); i += 1 }
-      var s = h & mask
-      while (true) {
-        val k = keys(s)
-        if (k == null) {
-          add(new String(buf, 0, len), pos)
-          return
-        } else if (k.length == len && regionEq(k, buf, len)) {
-          pool(idxs(s)).add(pos)
-          return
-        } else s = (s + 1) & mask
-      }
     }
 
     /** Interned buffer-keyed add — the segment-partials hot path: on a

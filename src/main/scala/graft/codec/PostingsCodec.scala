@@ -353,5 +353,8 @@ object PostingsCodec {
       decodePostingsAt(new Reader(blob, offs(i), offs(i) + lens(i)), minDocs(i), ns(i))
     def allPostings: Iterator[Posting] =
       (0 until nBlocks).iterator.flatMap(decodePostings)
+    /** Every (docId, tf), block by block — no positions decoded. */
+    def allDocTfs: Iterator[(Long, Int)] =
+      (0 until nBlocks).iterator.flatMap(i => decodeDocTf(i))
   }
 }

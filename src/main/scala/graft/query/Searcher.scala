@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSess
 import org.apache.spark.sql.functions._
 
 import graft.build.InvertedIndex
-import graft.model.ScoredDoc
+import graft.model.{CorpusStats, ScoredDoc}
 import graft.model.Checkpoints.checkpointWithCount
 import graft.codec.PostingsCodec
 
@@ -28,28 +28,29 @@ final case class MatchPosRow(term: String, docId: Long, tf: Int, positions: Seq[
 
 /** Query-side engine over a built InvertedIndex (SURVEY.md §2.C/§3.2).
   *
-  * One production path per operator:
-  *   - top-k queries run pruned per doc-range shard (`perShard`: a
-  *     cogroup of postings and doc lengths on the shard key) — `topK`
-  *     is block-max WAND with a per-shard bounded heap and a k-merge;
-  *     the phrase, NEAR, spanNot and dismax families share the same
-  *     scaffold.
+  * One production path per operator, and every query reads its
+  * postings once, on one per-shard scaffold (`perShard`: a cogroup of
+  * postings and live doc lengths on the doc-range shard key):
+  *   - top-k term queries: `topK` is block-max WAND with a per-shard
+  *     bounded heap and a k-merge; the phrase, NEAR, spanNot, spanFirst
+  *     and dismax families share the same scaffold.
   *   - all-hits queries (field sort, grouping, hybrid, boolean phrase
-  *     mixes) run on one clause scorer, `scoredDocsBoolean`: decode →
-  *     join dl → score column → fixed clause-order sum per doc.
+  *     mixes, hit counts, facets) run on one clause scorer,
+  *     `scoredDocsBoolean`: one scaffold pass emits a row per live
+  *     (clause, doc) → score column → fixed clause-order sum per doc.
   * Rank identity against corpus-wide explode-join references is
   * asserted in tests (§7.4 #1); the references live in test scope.
   */
 final class Searcher(
     spark: SparkSession,
     index: InvertedIndex,
-    field: String = "content",
-    /** Max estimated size of the PRUNED (docId, dl) side the scoring
-      * join will hint-broadcast; above it Catalyst plans a shuffle
-      * join on docId, which shares its partitioning with the
-      * downstream per-doc aggregation. */
-    dlBroadcastBytes: Long = 192L << 20) {
+    field: String = "content") {
   import spark.implicits._
+
+  /** Max estimated size (16 B a doc, from the collected dfs) of a match
+    * set that facetCounts and constantScoreTopK hint-broadcast into
+    * their semi-join; above it Catalyst plans a shuffle join. */
+  private val matchBroadcastBytes = 192L << 20
 
   private def stats = index.stats
 
@@ -111,14 +112,16 @@ final class Searcher(
     }
 
   /** Live (docId, dl, shard) — the single place tombstones apply: a
-    * deleted doc is ABSENT from the dl side, so the clause scorer
-    * drops it at its inner scoring join and the cogroup paths skip it
-    * when the shard-local dl map has no entry (Wand treats a NaN dl as
-    * "not live"). The anti-join keys on (docId, shard) — shard derives
-    * from docId on both sides — so the query's shard pruning filter
-    * propagates through the join's equality constraint to the deletes
-    * side too. Stats/df stay stale until physical apply (Lucene delete
-    * semantics; Deletes.applied / compaction refreshes them).
+    * deleted doc is ABSENT from the dl side, so every `perShard` kernel
+    * (the clause scorer behind totalHits and facetCounts included)
+    * skips it when the shard-local dl map has no entry (Wand treats a
+    * NaN dl as "not live"), and matchAllTopK / constantScoreTopK read
+    * this side directly. The anti-join keys on (docId, shard) — shard
+    * derives from docId on both sides — so the query's shard pruning
+    * filter propagates through the join's equality constraint to the
+    * deletes side too. Stats/df stay stale until physical apply
+    * (Lucene delete semantics; Deletes.applied / compaction refreshes
+    * them).
     *
     * `docFilter` — the Lucene Filter parameter of the reference's own
     * search entry (HBaseIndexSearcher.java:61 `search(weight, filter,
@@ -172,35 +175,23 @@ final class Searcher(
   }
 
   /** Positional tail of the phrase/NEAR/spanNot/spanFirst family on the
-    * shard scaffold: one TermIterator per (term, shard) row (no score
-    * bound — positional kernels never prune on score; each term the
-    * caller pruned `shards` on has one), `matcher` emits (docId, tf),
-    * and only LIVE docs survive — before the pseudo-term df count, so
-    * phrase idf reflects live matches only. Returns the match rows
-    * (docId, tf, dl), eagerly materialized (localCheckpoint, not pinned
-    * in the CacheManager), with their count — the pseudo-term df —
-    * observed on the checkpoint's own job: the cogroup runs ONCE and no
-    * second action counts it. */
-  private def positionalMatchRows(terms: Seq[String], shards: Array[Long],
-      dfs: Map[String, Long], scorer: Scorer)(
+    * shard scaffold: `matcher` gets one iterator per term the shard
+    * holds (`Searcher.positionalIterators`; each term the caller pruned
+    * `shards` on has one) and emits (docId, tf), and only LIVE docs
+    * survive — before the pseudo-term df count, so phrase idf reflects
+    * live matches only. Returns the match rows (docId, tf, dl),
+    * eagerly materialized (localCheckpoint, not pinned in the
+    * CacheManager), with their count — the pseudo-term df — observed
+    * on the checkpoint's own job: the cogroup runs ONCE and no second
+    * action counts it. */
+  private def positionalMatchRows(terms: Seq[String], shards: Array[Long], scorer: Scorer)(
       matcher: Map[String, TermIterator] => Iterator[(Long, Int)]): (DataFrame, Long) = {
     if (shards.isEmpty)
       return (Seq.empty[(Long, Int, Double)].toDF("docId", "tf", "dl"), 0L)
     val st = stats
     val (matched, Row(n: Long)) = checkpointWithCount(perShard(terms, shards) { (rows, dlMap) =>
-      // one row per (term, shard) is a merge-path invariant, and this
-      // toMap would SILENTLY keep one of the duplicates (undercounting
-      // tf on e.g. an un-merged union of segment partials) — fail
-      // loudly instead, like topK which keeps duplicates as
-      // separate iterators
-      require(rows.iterator.map(_.term).toSet.size == rows.length,
-        "duplicate posting rows for one (term, shard) — positional " +
-          "search requires merged postings (one row per term per shard)")
-      val iterOf = rows.map { r =>
-        r.term -> new TermIterator(r.term, dfs(r.term).toDouble, 0.0,
-          scorer, st, new PostingsCodec.BlobView(r.blob))
-      }.toMap
-      matcher(iterOf).collect { case (d, tf) if dlMap.contains(d) => (d, tf, dlMap(d)) }
+      matcher(Searcher.positionalIterators(rows, scorer, st))
+        .collect { case (d, tf) if dlMap.contains(d) => (d, tf, dlMap(d)) }
     }.toDF("docId", "tf", "dl"))
     (matched, n)
   }
@@ -215,11 +206,8 @@ final class Searcher(
   /** Decoded (term, docId, tf) matches (reference C2 semantics). */
   def matches(terms: Seq[String]): Dataset[MatchRow] =
     postingRows(terms).flatMap { r =>
-      val v = new PostingsCodec.BlobView(r.blob)
-      (0 until v.nBlocks).iterator.flatMap { i =>
-        v.decodeDocTf(i).iterator.map { case (d, tf) =>
-          MatchRow(r.term, d, tf)
-        }
+      new PostingsCodec.BlobView(r.blob).allDocTfs.map { case (d, tf) =>
+        MatchRow(r.term, d, tf)
       }
     }
 
@@ -364,26 +352,16 @@ final class Searcher(
       .limit(k)
   }
 
-  /** Total hit count (reference totalHits, TestHBaseIndexReader.java:50).
-    * Counts LIVE matches only (tombstoned docs excluded). */
+  /** Total hit count (reference totalHits, TestHBaseIndexReader.java:50):
+    * LIVE docs holding ANY (`requireAll`: EVERY) query term, counted
+    * over the clause scorer's hits. */
   def totalHits(terms: Seq[String], requireAll: Boolean = false): Long =
-    liveMatchDocs(terms.distinct, requireAll).count()
+    booleanHits(termQuery(terms.distinct, requireAll), BM25(), Nil, 0, None)._1.count()
 
-  /** docIds of the LIVE docs holding ANY (`requireAll`: EVERY) query
-    * term. A single term's postings are docId-unique, so it skips the
-    * per-doc distinct/agg shuffle; tombstones drop from the matched
-    * side (a match-set-sized anti-join). */
-  private def liveMatchDocs(qTerms: Seq[String], requireAll: Boolean): DataFrame = {
-    val matched =
-      if (qTerms.length == 1) matches(qTerms).toDF().select("docId")
-      else {
-        val m0 = matches(qTerms).toDF().groupBy("docId")
-          .agg(countDistinct("term").as("nMatched"))
-        (if (requireAll) m0.where(col("nMatched") === qTerms.length) else m0)
-          .select("docId")
-      }
-    index.deletes.fold(matched)(del => matched.join(del, Seq("docId"), "left_anti"))
-  }
+  /** OR (`requireAll`: AND) of plain term clauses. */
+  private def termQuery(qTerms: Seq[String], requireAll: Boolean): ParsedQuery =
+    ParsedQuery(must = if (requireAll) qTerms else Nil,
+      should = if (requireAll) Nil else qTerms, mustNot = Nil)
 
   /** Phrase top-k (consecutive positions): doc matches where the term
     * of slot i occurs at start+i for every i. Phrase tf = number of
@@ -438,23 +416,21 @@ final class Searcher(
     * alternative of some slot are pruned via the single metadata
     * collect. Singleton slots ≡ phraseTopK (asserted in tests). */
   def multiPhraseTopK(slotAlts: Seq[Seq[String]], k: Int,
-      scorer: Scorer = BM25(), slop: Int = 0): DataFrame =
-    scorePhraseMatched(multiPhraseMatchRows(slotAlts, slop,
-      collectMeta(slotAlts.flatten.distinct), scorer), scorer, k)
+      scorer: Scorer = BM25(), slop: Int = 0): DataFrame = {
+    requirePhrase(slotAlts, slop)
+    val groups = slotAlts.map(_.distinct)
+    val terms = groups.flatten.distinct
+    val meta = collectMeta(terms)
+    scorePhraseMatched(positionalMatchRows(terms, meta.shardsWithGroups(groups), scorer)(
+      iterOf => Wand.multiPhraseMatches(groups, iterOf, slop)), scorer, k)
+  }
 
-  /** Counted (docId, tf, dl) rows of every LIVE doc matching the slot
-    * sequence — the one phrase kernel behind phraseTopK (singleton
-    * slots), multiPhraseTopK and boolean queries' phrase clauses.
-    * `meta` covers at least the slot terms (a boolean query passes its
-    * one collect for all clauses). */
-  private def multiPhraseMatchRows(slotAlts: Seq[Seq[String]], slop: Int,
-      meta: QueryMeta, scorer: Scorer): (DataFrame, Long) = {
+  /** Slot list and slop of every phrase kernel call (multi-phrase top-k
+    * and the clause scorer's phrase clauses). */
+  private def requirePhrase(slotAlts: Seq[Seq[String]], slop: Int): Unit = {
     require(slotAlts.nonEmpty && slotAlts.forall(_.nonEmpty),
       "every slot needs at least one alternative term")
     require(slop >= 0, "negative slop")
-    val groups = slotAlts.map(_.distinct)
-    positionalMatchRows(groups.flatten.distinct, meta.shardsWithGroups(groups), meta.dfs, scorer)(
-      iterOf => Wand.multiPhraseMatches(groups, iterOf, slop))
   }
 
   /** Span-first query (Lucene SpanFirstQuery over a SpanTermQuery):
@@ -469,7 +445,7 @@ final class Searcher(
       scorer: Scorer = BM25()): DataFrame = {
     require(end > 0, "end must be positive")
     val meta = collectMeta(Seq(term))
-    scorePhraseMatched(positionalMatchRows(Seq(term), meta.shards, meta.dfs, scorer) {
+    scorePhraseMatched(positionalMatchRows(Seq(term), meta.shards, scorer) {
       iterOf => Wand.spanFirstMatches(iterOf(term), end)
     }, scorer, k)
   }
@@ -504,7 +480,7 @@ final class Searcher(
     val qTerms = (anchor +: rest).sorted
     val meta = collectMeta(qTerms)
     val shards = meta.shardsWithAll(qTerms)
-    val matched = positionalMatchRows(qTerms, shards, meta.dfs, scorer) { iterOf =>
+    val matched = positionalMatchRows(qTerms, shards, scorer) { iterOf =>
       Wand.nearAllMatches(iterOf(anchor), rest.map(iterOf).toArray, window)
     }
     scorePhraseMatched(matched, scorer, k)
@@ -525,7 +501,7 @@ final class Searcher(
     require(pre >= 0 && post >= 0, "negative exclusion window")
     val meta = collectMeta(Seq(a, b))
     val shards = meta.shardsWith(Seq(a))
-    val matched = positionalMatchRows(Seq(a, b), shards, meta.dfs, scorer) { iterOf =>
+    val matched = positionalMatchRows(Seq(a, b), shards, scorer) { iterOf =>
       Wand.spanNotMatches(iterOf(a), iterOf.getOrElse(b, null), pre, post)
     }
     scorePhraseMatched(matched, scorer, k)
@@ -624,8 +600,10 @@ final class Searcher(
       docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val qTerms = terms.distinct
     require(qTerms.nonEmpty && topN > 0)
-    val meta = collectMeta(qTerms)
-    val matched = liveMatchDocs(qTerms, requireAll)
+    // the live match set, its shards and the term dfs all come from
+    // the clause scorer's one metadata collect
+    val (hits, shards, dfs) = booleanHits(termQuery(qTerms, requireAll), BM25(), Nil, 0, None)
+    val matched = hits.select("docId")
     // docFilter applies to the label scan directly (it is a predicate
     // over stored docs — same live semantics as the dl-side filter).
     // The label join is the scale decision: |matched| ≤ Σ df is KNOWN
@@ -634,9 +612,9 @@ final class Searcher(
     // shuffles (map-side semi-join + partial count; only |values| rows
     // move). Above the gate: plain shuffle join, the honest plan for a
     // corpus-wide facet.
-    val estBytes = qTerms.map(t => meta.dfs.getOrElse(t, 0L)).sum * 16L
-    val m = if (estBytes <= dlBroadcastBytes) broadcast(matched) else matched
-    facetSide(facetField, meta.shards, docFilter)
+    val estBytes = qTerms.map(t => dfs.getOrElse(t, 0L)).sum * 16L
+    val m = if (estBytes <= matchBroadcastBytes) broadcast(matched) else matched
+    facetSide(facetField, shards, docFilter)
       .join(m, Seq("docId"), "left_semi")
       .groupBy("value").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("value")).limit(topN)
@@ -675,11 +653,8 @@ final class Searcher(
       .partitionBy(col("value")).orderBy(desc("score"), asc("docId"))
     // the scoring plan's own touched shards prune the group side: one
     // metadata collect for both
-    val qTerms = terms.distinct
-    val (hits, shards) = booleanHits(ParsedQuery(
-      must = if (requireAll) qTerms else Nil,
-      should = if (requireAll) Nil else qTerms, mustNot = Nil),
-      scorer, Nil, 0, docFilter)
+    val (hits, shards, _) =
+      booleanHits(termQuery(terms.distinct, requireAll), scorer, Nil, 0, docFilter)
     // row_number + rank<=k is the WindowGroupLimit shape — Spark
     // inserts per-partition group limits BEFORE the window shuffle,
     // so each map task forwards at most k rows per group
@@ -783,9 +758,7 @@ final class Searcher(
     val shards = metaRow.getSeq[Long](0).toArray.sorted
     val totDf = metaRow.getLong(1)
     val matched = prows.as[PostingRow].flatMap { r =>
-      val v = new PostingsCodec.BlobView(r.blob)
-      (0 until v.nBlocks).iterator.flatMap(i => v.decodeDocTf(i).iterator)
-        .map(_._1)
+      new PostingsCodec.BlobView(r.blob).allDocTfs.map(_._1)
     }.toDF("docId").distinct()
     // bounded match set (Σ df known) broadcasts into a semi-join
     // against the live side — the second corpus-sized shuffle the
@@ -793,7 +766,7 @@ final class Searcher(
     // gate/fallback shape as facetCounts
     val live = pruneShards(dlWithShard(docFilter), shards).select("docId")
     val joined =
-      if (totDf * 16L <= dlBroadcastBytes)
+      if (totDf * 16L <= matchBroadcastBytes)
         live.join(broadcast(matched), Seq("docId"), "left_semi")
       else matched.join(live, Seq("docId"), "left_semi")
     joined
@@ -815,37 +788,35 @@ final class Searcher(
   /** Score explanation for one (query, doc) — Lucene
     * IndexSearcher.explain(): per matching query term, the tf/df/dl
     * inputs and the scorer's contribution. Rows sum to the doc's
-    * topK score for docFactor-free scorers (BM25). The scan
-    * prunes to the SINGLE doc-range shard the doc lives in and
-    * decodes only the query terms' blobs there — a point debug call,
-    * cost ∝ one shard, not the corpus. */
+    * topK score for docFactor-free scorers (BM25). Runs on the shard
+    * scaffold pruned to the SINGLE doc-range shard the doc lives in,
+    * with the doc itself as the filter: one pass returns its dl and
+    * each query term's tf (block-skipping to the doc) — a point debug
+    * call, cost ∝ one shard, not the corpus. A deleted or absent doc
+    * explains to nothing. */
   def explainDoc(
       terms: Seq[String],
       docId: Long,
       scorer: Scorer = BM25()): DataFrame = {
     val qTerms = terms.distinct.sorted
     require(qTerms.nonEmpty)
-    val shard = docId / index.config.shardSizeDocs
-    val dlRow = dlWithShard(None).where(col("docId") === docId)
-      .select("dl").limit(1).collect()
-    // deleted or absent doc explains to nothing
-    if (dlRow.isEmpty)
-      return Seq.empty[(String, Long, Long, Double)]
-        .toDF("term", "tf", "df", "contribution")
-    val dl = dlRow.head.getDouble(0)
     val dfs = collectMeta(qTerms).dfs
+    val st = stats
     val target = docId
-    val tfRows = pruneShards(postingRows(qTerms).toDF(), Array(shard))
-      .as[PostingRow].flatMap { r =>
-        val v = new PostingsCodec.BlobView(r.blob)
-        (0 until v.nBlocks).iterator.flatMap(i => v.decodeDocTf(i).iterator)
-          .collect { case (d, tf) if d == target => (r.term, tf) }
-      }.toDF("term", "tf")
-    val dfCol = coalesce(element_at(typedlit(dfs), col("term")), lit(0L))
-    tfRows
-      .withColumn("df", dfCol)
+    perShard(qTerms, Array(docId / index.config.shardSizeDocs),
+        Some(col("docId") === docId)) { (rows, dlMap) =>
+      dlMap.get(target).iterator.flatMap { dl =>
+        rows.iterator.flatMap { r =>
+          val it = new TermIterator(r.term, 0.0, 0.0, scorer, st,
+            new PostingsCodec.BlobView(r.blob))
+          it.advanceTo(target)
+          if (it.curDoc == target) Iterator((r.term, it.curTf, dl)) else Iterator.empty
+        }
+      }
+    }.toDF("term", "tf", "dl")
+      .withColumn("df", coalesce(element_at(typedlit(dfs), col("term")), lit(0L)))
       .withColumn("contribution", scorer.contributionCol(
-        col("tf").cast("double"), col("df").cast("double"), lit(dl), stats))
+        col("tf").cast("double"), col("df").cast("double"), col("dl"), stats))
       .orderBy(asc("term"))
       .select(col("term"), col("tf").cast("long").as("tf"), col("df"),
         col("contribution"))
@@ -1041,18 +1012,19 @@ final class Searcher(
 
   /** The one clause scorer: every hit of a boolean query over term,
     * phrase and MUST-group clauses (Lucene BooleanQuery with TermQuery /
-    * PhraseQuery sub-clauses) as (docId, score, nMatched). Term clause
-    * rows come from the postings ⋈ live-dl join, each phrase clause from
-    * the PRUNED positional path (`multiPhraseMatchRows`; positions never
-    * explode corpus-wide) scored against the phrase's own live df like
-    * `phraseTopK`; the rows are unioned and summed per doc in a fixed
-    * clause order ("t:<term>" labels sort like the terms). MUST counts
-    * matched MUST clauses; `minShouldMatch` counts matched OPTIONAL
-    * clauses (above the SHOULD-clause count nothing matches); NOT drops
-    * docs holding any prohibited term or phrase via one docId
-    * anti-join, and a term both required and prohibited matches
-    * nothing. `docFilter` narrows candidates like a tombstone (see
-    * `dlWithShard`); dfs stay corpus-wide.
+    * PhraseQuery sub-clauses) as (docId, score, nMatched). One
+    * `perShard` pass yields every clause's contribution rows: term
+    * clauses from their postings, each phrase clause from the PRUNED
+    * positional kernel (positions never explode corpus-wide) scored
+    * against the phrase's own live df like `phraseTopK`; the rows are
+    * summed per doc in a fixed clause order ("t:<term>" labels sort
+    * like the terms). MUST counts matched MUST clauses;
+    * `minShouldMatch` counts matched OPTIONAL clauses (above the
+    * SHOULD-clause count nothing matches); NOT drops docs holding any
+    * prohibited term or phrase in the same pass, and a term both
+    * required and prohibited matches nothing. `docFilter` narrows
+    * candidates like a tombstone (see `dlWithShard`); dfs stay
+    * corpus-wide.
     *
     * `mustGroups` — MUST multi-term clauses: a group matches when ANY
     * member does and shares one clause label "g:<i>"; a term in several
@@ -1063,12 +1035,25 @@ final class Searcher(
       docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame =
     booleanHits(pq, scorer, mustGroups, minShouldMatch, docFilter)._1
 
-  /** `scoredDocsBoolean`'s hits plus the shards its term clauses touch
-    * (sorted; empty without term clauses). ONE metadata collect serves
-    * every term, group and phrase clause, scoring or prohibited. */
+  /** `scoredDocsBoolean`'s hits plus the shards they were scored on
+    * (sorted) and the collected term dfs, for callers that prune or
+    * size a second side on them.
+    *
+    * ONE metadata collect (term, group and scoring-phrase terms), then
+    * ONE `perShard` pass over the union of the term clauses' shards and
+    * each scoring phrase's shards. Per shard the kernel emits one
+    * (key, docId, tf, dl, excluded) row per LIVE (clause, doc): key =
+    * the term for term and MUST-group rows (every posting row decoded,
+    * duplicates separately, like `matches`), "p:<i>" for scoring phrase
+    * i (Wand.multiPhraseMatches on fresh iterators; analyzer terms
+    * never contain ':'); `excluded` marks docs holding a NOT term or a
+    * NOT phrase in the shard. With a scoring phrase the rows are
+    * checkpointed and each phrase df — live matches, excluded or not —
+    * is observed on the checkpoint's own job BEFORE `docFilter` applies
+    * as one semi-join; without one, `docFilter` narrows the dl side. */
   private def booleanHits(pq: ParsedQuery, scorer: Scorer,
       mustGroups: Seq[Seq[String]], minShouldMatch: Int,
-      docFilter: Option[Column]): (DataFrame, Array[Long]) = {
+      docFilter: Option[Column]): (DataFrame, Array[Long], Map[String, Long]) = {
     val phrases = pq.scoringPhrases
     val plainTerms = (pq.must ++ pq.should).distinct.sorted
     val mustTermSet = pq.must.distinct.toSet
@@ -1076,67 +1061,80 @@ final class Searcher(
     if ((!pq.hasScoring && mustGroups.isEmpty) || minShouldMatch > shouldCount ||
         pq.mustNot.exists(mustTermSet))
       return (Seq.empty[(Long, Double, Int)].toDF("docId", "score", "nMatched"),
-        Array.empty[Long])
+        Array.empty[Long], Map.empty)
+    val phraseClauses = phrases.map(_._1)
+    val notPhrases = pq.notPhrases
+    (phraseClauses ++ notPhrases).foreach(p => requirePhrase(p.slots.map(Seq(_)), p.slop))
     val qTerms = (plainTerms ++ mustGroups.flatten).distinct.sorted
-    val meta = collectMeta((qTerms ++
-      (phrases.map(_._1) ++ pq.notPhrases).flatMap(_.slots)).distinct)
-    val termShards = meta.shardsWith(qTerms)
+    val meta = collectMeta((qTerms ++ phraseClauses.flatMap(_.slots)).distinct)
+    val shards = (meta.shardsWith(qTerms) ++ phraseClauses.flatMap(p =>
+      meta.shardsWithGroups(p.slots.map(Seq(_))))).distinct.sorted
+    val phraseKeys = phrases.indices.map(i => s"p:$i")
 
-    // term clause rows: (clause, docId, tscore, isMust); per-term
-    // boosts (`term^N` / boosted expansions) scale the contribution
-    val termRows: Option[DataFrame] = if (qTerms.isEmpty) None else {
-      val dfLookup = typedlit(qTerms.flatMap(t => meta.dfs.get(t).map(t -> _.toDouble)).toMap)
-      val clausesOf = typedlit(
-        (plainTerms.map(t => (t, ("t:" + t, mustTermSet(t)))) ++
-          mustGroups.zipWithIndex.flatMap { case (g, i) =>
-            g.distinct.map(t => (t, (s"g:$i", true)))
-          }).groupMap(_._1)(_._2))
-      val boostCol =
-        if (pq.boosts.isEmpty) lit(1.0)
-        else coalesce(element_at(typedlit(pq.boosts), col("term")), lit(1.0))
-      // slim (docId, dl) side pruned to the term clauses' shards: for
-      // selective queries it shrinks from N to |touched shards|·shardSize
-      // rows in BOTH regimes (smaller broadcast below the gate; less
-      // shuffled data above it). The gate is sized on that PRUNED
-      // estimate (16 B a row, from the collected metadata: NO extra job),
-      // not on numDocs, so a selective query on an arbitrarily large
-      // corpus still broadcasts while an every-shard query near the gate
-      // never ships a ~200 MB copy to the driver
-      val dl = pruneShards(dlWithShard(docFilter), termShards).select("docId", "dl")
-      val prunedBytes = termShards.length.toLong * index.config.shardSizeDocs * 16L
-      Some(matches(qTerms).toDF()
-        .join(if (prunedBytes <= dlBroadcastBytes) broadcast(dl) else dl, Seq("docId"))
-        .withColumn("df", element_at(dfLookup, col("term")))
-        .withColumn("c", explode(element_at(clausesOf, col("term"))))
-        .select(
-          col("c._1").as("clause"),
-          col("docId"),
-          (boostCol * scorer.contributionCol(
-            col("tf").cast("double"), col("df"), col("dl"), stats)).as("tscore"),
-          col("c._2").as("isMust")))
-    }
-    // phrase clause rows: one pruned positional match set per clause;
-    // df = live docs containing the phrase (same contract as phraseTopK),
-    // counted before the doc filter narrows the candidates
-    val phraseRows: Seq[(DataFrame, Double)] = phrases.zipWithIndex.map {
-      case ((pc, isMust), i) =>
-        val (m, n) = multiPhraseMatchRows(pc.slots.map(Seq(_)), pc.slop, meta, scorer)
-        val pdf = n.toDouble
-        val kept = docFilter.fold(m)(f =>
-          m.join(index.docs.where(f).select("docId"), Seq("docId"), "left_semi"))
-        (kept.select(
-          lit(s"p:$i").as("clause"),
-          col("docId"),
-          (lit(pc.boost) * scorer.contributionCol(
-            col("tf").cast("double"), lit(pdf), col("dl"), stats)).as("tscore"),
-          lit(isMust).as("isMust")), pdf)
-    }
-    val allRows = (termRows.toSeq ++ phraseRows.map(_._1)).reduce(_ union _)
+    // closure-locals: Searcher itself is not serializable
+    val termSet = qTerms.toSet
+    val notTerms = pq.mustNot.toSet
+    val st = stats
+    val rows = perShard(
+        (qTerms ++ pq.mustNot ++ (phraseClauses ++ notPhrases).flatMap(_.slots)).distinct,
+        shards, if (phrases.isEmpty) docFilter else None) { (rs, dlMap) =>
+      // (docId, tf) of one phrase, on fresh iterators over its own rows
+      def phraseMatches(p: PhraseClause): Iterator[(Long, Int)] =
+        Wand.multiPhraseMatches(p.slots.map(Seq(_)), Searcher.positionalIterators(
+          rs.filter(r => p.slots.contains(r.term)), scorer, st), p.slop)
+      val excluded = new LongMap[Unit]()
+      rs.iterator.filter(r => notTerms(r.term)).foreach(r =>
+        new PostingsCodec.BlobView(r.blob).allDocTfs.foreach(m => excluded.update(m._1, ())))
+      notPhrases.foreach(phraseMatches(_).foreach(m => excluded.update(m._1, ())))
+      val keyed = rs.iterator.filter(r => termSet(r.term)).flatMap(r =>
+        new PostingsCodec.BlobView(r.blob).allDocTfs.map(r.term -> _)) ++
+        phraseKeys.iterator.zip(phraseClauses).flatMap { case (k, p) =>
+          phraseMatches(p).map(k -> _)
+        }
+      keyed.collect { case (key, (d, tf)) if dlMap.contains(d) =>
+        (key, d, tf, dlMap(d), excluded.contains(d))
+      }
+    }.toDF("key", "docId", "tf", "dl", "excluded")
+    // df = live docs containing the phrase (same contract as
+    // phraseTopK), counted before NOT and the doc filter narrow the rows
+    val (live, phraseDfs) =
+      if (phrases.isEmpty) (rows, Nil)
+      else {
+        val (ck, Row(counts @ _*)) =
+          checkpointWithCount(rows, phraseKeys.map(k => count_if(col("key") === k)): _*)
+        (docFilter.fold(ck)(f =>
+          ck.join(index.docs.where(f).select("docId"), Seq("docId"), "left_semi")),
+          counts.tail.map(_.asInstanceOf[Long].toDouble))
+      }
+
+    // clause rows: (clause, docId, tscore, isMust); per-key boosts
+    // (`term^N` / boosted expansions / boosted phrases) scale the
+    // contribution
+    val dfOf = typedlit(qTerms.flatMap(t => meta.dfs.get(t).map(t -> _.toDouble)).toMap ++
+      phraseKeys.zip(phraseDfs))
+    val clausesOf = typedlit(
+      (plainTerms.map(t => (t, ("t:" + t, mustTermSet(t)))) ++
+        mustGroups.zipWithIndex.flatMap { case (g, i) =>
+          g.distinct.map(t => (t, (s"g:$i", true)))
+        } ++
+        phraseKeys.zip(phrases).map { case (k, (_, isMust)) => (k, (k, isMust)) }
+      ).groupMap(_._1)(_._2))
+    val boostOf = pq.boosts ++ phraseKeys.zip(phraseClauses.map(_.boost))
+    val boostCol =
+      if (boostOf.isEmpty) lit(1.0)
+      else coalesce(element_at(typedlit(boostOf), col("key")), lit(1.0))
+    val allRows = live.where(!col("excluded"))
+      .withColumn("c", explode(element_at(clausesOf, col("key"))))
+      .select(
+        col("c._1").as("clause"),
+        col("docId"),
+        (boostCol * scorer.contributionCol(
+          col("tf").cast("double"), element_at(dfOf, col("key")), col("dl"), stats)).as("tscore"),
+        col("c._2").as("isMust"))
 
     val nMustClauses = mustTermSet.size + pq.mustPhrases.size + mustGroups.size
     // docFactor inputs are order-free sums over per-clause dfs
-    val queryDfs =
-      qTerms.map(t => meta.dfs.getOrElse(t, 0L).toDouble) ++ phraseRows.map(_._2)
+    val queryDfs = qTerms.map(t => meta.dfs.getOrElse(t, 0L).toDouble) ++ phraseDfs
 
     // clause-match counts are over DISTINCT clause labels: a group
     // matching through two member terms is still ONE matched clause
@@ -1167,16 +1165,7 @@ final class Searcher(
     val scored = filtered.select(col("docId"),
       (col("rawScore") * scorer.docFactorCol(col("nMatched"), queryDfs, stats)).as("score"),
       col("nMatched"))
-    // prohibited clauses: one anti-join over the union of their docIds
-    val notDfs =
-      (if (pq.mustNot.nonEmpty)
-        Seq(matches(pq.mustNot.distinct).toDF().select("docId")) else Nil) ++
-        pq.notPhrases.map(p =>
-          multiPhraseMatchRows(p.slots.map(Seq(_)), p.slop, meta, scorer)._1.select("docId"))
-    val hits =
-      if (notDfs.isEmpty) scored
-      else scored.join(notDfs.reduce(_ union _).distinct(), Seq("docId"), "left_anti")
-    (hits, termShards)
+    (scored, shards, meta.dfs)
   }
 
   /** Prefix query (Lucene PrefixQuery via the reference's TermEnum
@@ -1337,5 +1326,24 @@ final class Searcher(
         }
       }
       .toDF("docId", "score", "nMatches", "snippet")
+  }
+}
+
+object Searcher {
+
+  /** One fresh TermIterator per (term, shard) posting row for a
+    * positional kernel — no df and no score bound: positional kernels
+    * never score or prune through the iterator. One row per (term,
+    * shard) is a merge-path invariant, and the map would SILENTLY keep
+    * one of the duplicates (undercounting tf on e.g. an un-merged union
+    * of segment partials) — fail loudly instead, like topK which keeps
+    * duplicates as separate iterators. */
+  private[query] def positionalIterators(rows: Array[PostingRow], scorer: Scorer,
+      st: CorpusStats): Map[String, TermIterator] = {
+    require(rows.iterator.map(_.term).toSet.size == rows.length,
+      "duplicate posting rows for one (term, shard) — positional " +
+        "search requires merged postings (one row per term per shard)")
+    rows.map(r => r.term -> new TermIterator(r.term, 0.0, 0.0, scorer, st,
+      new PostingsCodec.BlobView(r.blob))).toMap
   }
 }

@@ -215,4 +215,60 @@ class BooleanQuerySpec extends AnyFunSuite {
       idx.unpersist()
     }
   }
+
+  test("clause scorer under tombstones + docFilter ≡ per-clause references") {
+    import org.apache.spark.sql.functions.col
+    import graft.query.{ParsedQuery, PhraseClause}
+    // skewed vocabulary: the NOT term and NOT-phrase words are rarer than
+    // the scoring ones, so every exclusion leaves survivors
+    val skewed = Vector("alpha", "alpha", "alpha", "alpha", "beta", "beta",
+      "beta", "beta", "gamma", "gamma", "gamma", "delta", "delta", "eps",
+      "eps", "zeta", "kappa", "iota")
+    val docs = (0 until 160).map { i =>
+      val len = 3 + (mix(41L ^ i) & 0x7FFFFFFF).toInt % 10
+      val words = (0 until len).map { t =>
+        skewed(((mix(41L ^ (i * 131L + t)) & 0x7FFFFFFF) % skewed.length).toInt)
+      }
+      (i.toLong, words.mkString(" "))
+    }.toDF("doc_id", "text")
+    val deleted = (0L until 160L).filter(_ % 7 == 3).toSet
+    val passes = (d: Long) => d % 5 != 1
+    val docFilter = col("docId") % 5 =!= 1
+    val pq = ParsedQuery(must = Nil, should = Seq("gamma"), mustNot = Seq("zeta"),
+      mustPhrases = Seq(PhraseClause(Seq("alpha", "beta"))),
+      notPhrases = Seq(PhraseClause(Seq("kappa", "iota"))))
+    val group = Seq("delta", "eps")
+    for (shardSize <- Seq(2L, 16L, 1024L)) {
+      val tag = s"shard=$shardSize"
+      val base = IndexBuilder.fromText(spark, docs, "doc_id", "text",
+        cfg = IndexConfig(shardSizeDocs = shardSize)).cache()
+      val idx = base.withDeletes(deleted.toSeq.toDF("docId"))
+      val s = new Searcher(spark, idx)
+      val k = 160
+      // phrase reference on the UNFILTERED tombstoned index: its df counts
+      // live docs, before the filter narrows the candidates
+      val phrase = topMap(s.phraseTopK(Seq("alpha", "beta"), k))
+      val termScore = (Seq("gamma") ++ group).map(t => t -> topMap(s.topK(Seq(t), k))).toMap
+      val notDocs = topMap(s.topK(Seq("zeta"), k)).keySet ++
+        topMap(s.phraseTopK(Seq("kappa", "iota"), k)).keySet
+      val candidates = phrase.keySet.filter(d => group.exists(termScore(_).contains(d)))
+      val expected = candidates.filter(d => passes(d) && !notDocs(d)).map { d =>
+        d -> (phrase(d) + (Seq("gamma") ++ group).flatMap(termScore(_).get(d)).sum)
+      }.toMap
+      // every narrowing mechanism removes at least one candidate
+      assert(expected.nonEmpty, tag)
+      assert(candidates.exists(d => !passes(d)), tag)
+      assert(candidates.exists(d => passes(d) && notDocs(d)), tag)
+      assert(topMap(new Searcher(spark, base).phraseTopK(Seq("alpha", "beta"), k))
+        .keySet.exists(deleted), tag)
+
+      val got = topMap(s.scoredDocsBoolean(pq, mustGroups = Seq(group),
+        docFilter = Some(docFilter)).select("docId", "score"))
+      assert(got.keySet === expected.keySet, tag)
+      got.foreach { case (d, sc) =>
+        assert(math.abs(sc - expected(d)) <= 1e-12 * math.abs(expected(d)), s"$tag doc=$d")
+      }
+      base.unpersist()
+    }
+  }
 }

@@ -16,8 +16,7 @@ import graft.table.TableFormat
 /** Round-3 regression gates: PPJoin prefix-filtered Jaccard (exact
   * output, bounded hot-shingle fan-out), dedupGroups over persisted
   * pairs, CacheManager unpinning, conjunctive WAND leapfrog skipping,
-  * manifest-driven table source, pruned dl broadcast gate, streaming
-  * shard-width fail-fast. */
+  * manifest-driven table source, streaming shard-width fail-fast. */
 class Round3Spec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -238,37 +237,6 @@ class Round3Spec extends AnyFunSuite {
     assert(postA.toSeq === postB.toSeq)
   }
 
-  // ---- pruned dl broadcast gate ----
-
-  test("dl broadcast gate sizes on the pruned estimate, not corpus numDocs") {
-    val idx = IndexBuilder.fromText(spark, boilerplateDocs(50), "doc_id", "text",
-      Nil, IndexConfig(shardSizeDocs = 32))
-    val conf = spark.conf
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold").map(k =>
-      k -> conf.getOption(k))
-    try {
-      // disable size-based auto-broadcast so ONLY the explicit hint
-      // (the gate under test) can produce a broadcast join
-      saved.foreach { case (k, _) => conf.set(k, "-1") }
-      val tiny = new Searcher(spark, idx, dlBroadcastBytes = 0L)
-      val dfTiny = tiny.scoredDocs(Seq("license"))
-      dfTiny.collect()
-      val pTiny = dfTiny.queryExecution.executedPlan.toString
-      assert(pTiny.contains("SortMergeJoin") || pTiny.contains("ShuffledHashJoin"),
-        pTiny.take(3000))
-      val dflt = new Searcher(spark, idx)
-      val dfDflt = dflt.scoredDocs(Seq("license"))
-      dfDflt.collect()
-      val pDflt = dfDflt.queryExecution.executedPlan.toString
-      assert(!pDflt.contains("SortMergeJoin") && !pDflt.contains("ShuffledHashJoin"),
-        pDflt.take(3000))
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   // ---- streaming shard-width fail-fast ----
 
   test("restarting an ingest with a different shard width fails fast") {
@@ -302,6 +270,7 @@ class Round3Spec extends AnyFunSuite {
     val collide = Seq("Aa", "BB", "AaAa", "BBAa", "AaBB", "BBBB")
     val vocab = (collide ++ (0 until 3000).map(i => s"id$i")).toArray
     val scratch = new IndexBuilder.DocTermScratch
+    val table = new IndexBuilder.TermTable
     for (doc <- 1 to 40) {
       val nTok = 1 + rnd.nextInt(3000)
       val toks = (0 until nTok).map(_ => vocab(rnd.nextInt(vocab.length)))
@@ -312,7 +281,7 @@ class Round3Spec extends AnyFunSuite {
         ref.updateWith(t)(o => Some(o.getOrElse(Nil) :+ pos))
         // exercise the buffer-keyed path exactly as segmentPartials does
         val buf = t.toCharArray
-        scratch.addBuf(buf, buf.length, pos)
+        scratch.addBufInterned(buf, buf.length, pos, table)
       }
       val got = (0 until scratch.size).map(i =>
         scratch.term(i) -> scratch.buf(i).toArray.toList)
