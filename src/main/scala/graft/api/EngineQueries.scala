@@ -35,11 +35,11 @@ object EngineQueries {
           val idx = IndexBuilder.fromText(
             spark, TextPipeline.documents(spark, dir), "doc_id", "text",
             untokenized = Seq("lang", "source"),
-            IndexConfig(shardSizeDocs = 1024))
-          idx.cache()
-          // ONE materialization action: termStats aggregates over the
-          // cache-marked postings, so scanning it populates the
-          // postings cache en route AND materializes the dictionary
+            IndexConfig(shardSizeDocs = 1024)).cache()
+          // ONE materialization action: the cached index's termStats
+          // aggregates over its cache-marked postings (never the build
+          // lineage), so scanning it populates the postings cache en
+          // route AND materializes the dictionary
           // (the reference maintains the term dictionary at write
           // time; dict_terms then reads the cache) — the separate
           // postings.count() pass this replaces was a second cold
@@ -364,14 +364,12 @@ object EngineQueries {
       case Some(idx) => idx
       case None => appliedLock.synchronized {
         appliedCache.getOrElseUpdate(dir, {
-          val idx = graft.build.Deletes.applied(
-            s, index(s, dir).withDeletes(deleteSet(s, dir)))
           // cache-marked, NOT eagerly counted: the first query's own
           // postings scan (collectMeta) materializes the cache en
           // route — an eager count() here was one extra full
           // decode+re-encode pass inside the same timed query
-          idx.cache()
-          idx
+          graft.build.Deletes.applied(
+            s, index(s, dir).withDeletes(deleteSet(s, dir))).cache()
         })
       }
     }
@@ -410,12 +408,10 @@ object EngineQueries {
               concat(col("text"), lit(" graftupdated")).as("text")),
             "doc_id", "text")
           StreamingIndexer.compact(s, root)
-          val idx = StreamingIndexer.loadMerged(s, root)
           // cache-marked only — loadMerged now resolves to the
           // compacted snapshot (plain parquet reads), and the first
           // query's scan populates the cache without a separate pass
-          idx.cache()
-          idx
+          StreamingIndexer.loadMerged(s, root).cache()
         })
       }
     }

@@ -1,6 +1,6 @@
 package graft.build
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
@@ -53,13 +53,25 @@ final case class IndexConfig(
   *               applied PHYSICALLY (Deletes.applied / compaction),
   *               which rewrites postings/docs and refreshes stats.
   */
-final class InvertedIndex(
+final class InvertedIndex private (
     val docs: DataFrame,
     val postings: DataFrame,
     val termStats: DataFrame,
     statsThunk: () => CorpusStats,
     val config: IndexConfig,
-    val deletes: Option[DataFrame] = None) {
+    val deletes: Option[DataFrame],
+    /** termStats and corpus stats derive from docs and postings
+      * (`InvertedIndex.derived`) — `cache()` re-derives them from the
+      * cached frames. */
+    derived: Boolean,
+    /** Set by `cache()`: docs plus its shard column, hash-partitioned
+      * on it and cached; `docs` is this frame without the column. */
+    cachedShardDocs: Option[DataFrame]) {
+
+  def this(docs: DataFrame, postings: DataFrame, termStats: DataFrame,
+      statsThunk: () => CorpusStats, config: IndexConfig,
+      deletes: Option[DataFrame] = None) =
+    this(docs, postings, termStats, statsThunk, config, deletes, false, None)
 
   /** Corpus stats are LAZY: computed on first query, not at build
     * time — the build/write path derives them from the written docs
@@ -71,8 +83,7 @@ final class InvertedIndex(
     * `docId` long so callers can pass any one-column id frame. */
   def withDeletes(del: DataFrame): InvertedIndex = {
     val norm = del.select(col(del.columns.head).cast("long").as("docId"))
-    new InvertedIndex(docs, postings, termStats, statsThunk, config,
-      Some(deletes.map(_.union(norm)).getOrElse(norm)))
+    withDeleteSet(Some(deletes.map(_.union(norm)).getOrElse(norm)))
   }
 
   /** Drop every tombstone (the reference's `undeleteAll`,
@@ -81,15 +92,46 @@ final class InvertedIndex(
     * only BEFORE a physical apply/compaction rewrites the tables
     * (after that the docs are gone, same as Lucene post-merge). */
   def undeleteAll(): InvertedIndex =
-    if (deletes.isEmpty) this
-    else new InvertedIndex(docs, postings, termStats, statsThunk, config, None)
+    if (deletes.isEmpty) this else withDeleteSet(None)
 
-  def cache(): InvertedIndex = {
-    docs.cache(); postings.cache(); termStats.cache(); this
+  private def withDeleteSet(del: Option[DataFrame]): InvertedIndex =
+    new InvertedIndex(docs, postings, termStats, statsThunk, config, del, derived,
+      cachedShardDocs)
+
+  /** `docs` with its doc-range shard in column `InvertedIndex.ShardCol`:
+    * on a cached index the cached frame, hash-partitioned on it like
+    * `postings` is on `shard`; otherwise derived from docId. */
+  private[graft] def docsWithShard: DataFrame = cachedShardDocs.getOrElse(
+    docs.withColumn(InvertedIndex.ShardCol,
+      InvertedIndex.shardOf(col("docId"), config.shardSizeDocs)))
+
+  /** The cached form of this index; query the index it RETURNS (this
+    * handle stays uncached). Its postings, and its docs with their
+    * doc-range shard, are hash-partitioned on the shard into the
+    * session's default parallelism and cached, so the shard cogroup of
+    * every query on it reads both sides where they sit — no exchange.
+    * A derived index re-derives termStats and corpus stats from the
+    * cached frames (never from the build lineage); tombstones carry
+    * over. `docs` keeps its columns, so applying deletes or writing the
+    * cached index writes the same tables. On a cached index, re-marks
+    * its frames for caching and returns it. */
+  def cache(): InvertedIndex = cachedShardDocs match {
+    case Some(sd) =>
+      sd.cache(); postings.cache(); termStats.cache(); this
+    case None =>
+      val n = postings.sparkSession.sparkContext.defaultParallelism
+      val p = postings.withColumn("shard", InvertedIndex.nonNullShard(col("shard")))
+        .repartition(n, col("shard")).cache()
+      val sd = docsWithShard.repartition(n, col(InvertedIndex.ShardCol)).cache()
+      val d = sd.drop(InvertedIndex.ShardCol)
+      val (ts, st) =
+        if (derived) (InvertedIndex.termStatsOf(p), () => InvertedIndex.corpusStatsOf(d))
+        else (termStats, statsThunk)
+      new InvertedIndex(d, p, ts.cache(), st, config, deletes, derived, Some(sd))
   }
-  def unpersist(): Unit = {
-    docs.unpersist(); postings.unpersist(); termStats.unpersist()
-  }
+
+  def unpersist(): Unit =
+    (Seq(docs, postings, termStats) ++ cachedShardDocs).foreach(_.unpersist())
 }
 
 object InvertedIndex {
@@ -102,7 +144,21 @@ object InvertedIndex {
     * lazily on first query from the docs' dl column (`corpusStatsOf`)
     * — no extra pass over the corpus at build time. */
   def derived(docs: DataFrame, postings: DataFrame, config: IndexConfig): InvertedIndex =
-    new InvertedIndex(docs, postings, termStatsOf(postings), () => corpusStatsOf(docs), config)
+    new InvertedIndex(docs, postings, termStatsOf(postings), () => corpusStatsOf(docs), config,
+      None, true, None)
+
+  /** Shard column of `docsWithShard` — a name no source table uses, so
+    * a source column called `shard` keeps its values. */
+  private[graft] val ShardCol = "_graft_shard"
+
+  /** A shard key as a never-null long: both sides of the shard cogroup
+    * key on it, and a cogroup requires equal key schemas, nullability
+    * included. */
+  private[graft] def nonNullShard(shard: Column): Column = coalesce(shard, lit(0L))
+
+  /** Doc-range shard of a docId column: docId / shardSizeDocs. */
+  private[graft] def shardOf(docId: Column, shardSizeDocs: Long): Column =
+    nonNullShard((docId / lit(shardSizeDocs)).cast("long"))
 
   /** Global dictionary stats — per-shard posting rows merged by a light
     * aggregation (no payload movement; ≙ reference docFreq,

@@ -116,12 +116,16 @@ final class Searcher(
     * (the clause scorer behind totalHits and facetCounts included)
     * skips it when the shard-local dl map has no entry (Wand treats a
     * NaN dl as "not live"), and matchAllTopK / constantScoreTopK read
-    * this side directly. The anti-join keys on (docId, shard) — shard
+    * this side directly. `shard` is the index's own doc shard column
+    * (`InvertedIndex.docsWithShard`): on a cached index the attribute
+    * its docs are hash-partitioned on, so this side keeps that
+    * partitioning. The anti-join keys on (docId, shard) — shard
     * derives from docId on both sides — so the query's shard pruning
     * filter propagates through the join's equality constraint to the
-    * deletes side too. Stats/df stay stale until physical apply
-    * (Lucene delete semantics; Deletes.applied / compaction refreshes
-    * them).
+    * deletes side too, and a small tombstone set plans as a broadcast
+    * anti-join, which keeps the partitioning as well. Stats/df stay
+    * stale until physical apply (Lucene delete semantics;
+    * Deletes.applied / compaction refreshes them).
     *
     * `docFilter` — the Lucene Filter parameter of the reference's own
     * search entry (HBaseIndexSearcher.java:61 `search(weight, filter,
@@ -132,36 +136,44 @@ final class Searcher(
     * stats and df stay corpus-wide, Lucene filter semantics (a filter
     * narrows the candidate set, never re-weights idf). */
   private def dlWithShard(docFilter: Option[org.apache.spark.sql.Column]): DataFrame = {
-    val src = docFilter.map(index.docs.where).getOrElse(index.docs)
-    val base = src
-      .select(col("docId"), col("dl").cast("double").as("dl"))
-      .withColumn("shard",
-        (col("docId") / lit(index.config.shardSizeDocs)).cast("long"))
+    val base = docsWithShard(docFilter)
+      .select(col("docId"), col("dl").cast("double").as("dl"),
+        col(InvertedIndex.ShardCol).as("shard"))
     index.deletes match {
       case None => base
       case Some(del) =>
         val d = del.select(col("docId").cast("long").as("docId"))
-          .withColumn("shard",
-            (col("docId") / lit(index.config.shardSizeDocs)).cast("long"))
+          .withColumn("shard", InvertedIndex.shardOf(col("docId"), index.config.shardSizeDocs))
         base.join(d, Seq("docId", "shard"), "left_anti")
     }
+  }
+
+  /** The stored docs with their shard column, narrowed by `docFilter`. */
+  private def docsWithShard(docFilter: Option[org.apache.spark.sql.Column]): DataFrame = {
+    val src = index.docsWithShard
+    docFilter.map(src.where).getOrElse(src)
   }
 
   /** The one per-shard scaffold of every pruned query: the posting rows
     * of `terms` and the live (docId, dl) side, both pruned to `shards`
     * and cogrouped on the doc-range shard key — a hot term's blocks
     * never congregate on one task, and the dl lookup is shard-local.
-    * `f` sees one shard's posting rows (never empty) and its live dl
-    * map; it must capture only locals (Searcher is not serializable). */
+    * Both sides group on their `shard` COLUMN (a grouping lambda would
+    * hide the key from the planner), so on a cached index, whose
+    * postings and docs are hash-partitioned on it alike, the cogroup
+    * plans no exchange; an uncached index shuffles both sides to their
+    * shard. `f` sees one shard's posting rows (never empty) and its
+    * live dl map; it must capture only locals (Searcher is not
+    * serializable). */
   private def perShard[T: Encoder](terms: Seq[String], shards: Array[Long],
       docFilter: Option[org.apache.spark.sql.Column] = None)(
       f: (Array[PostingRow], LongMap[Double]) => Iterator[T]): Dataset[T] = {
     val prows = pruneShards(postingRows(terms).toDF(), shards)
-      .as[PostingRow].groupByKey(_.shard)
+      .withColumn("shard", InvertedIndex.nonNullShard(col("shard")))
+      .groupBy("shard").as[Long, PostingRow]
     val dls = pruneShards(dlWithShard(docFilter), shards)
       .select(col("docId"), col("dl"), col("shard"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._3)
+      .groupBy("shard").as[Long, (Long, Double, Long)]
     prows.cogroup(dls) {
       (_: Long, ps: Iterator[PostingRow], ds: Iterator[(Long, Double, Long)]) =>
         val rows = ps.toArray
@@ -626,12 +638,8 @@ final class Searcher(
     * them) with the optional doc predicate pushed into the scan. */
   private def facetSide(field0: String, shards: Array[Long],
       docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val src = docFilter.map(index.docs.where).getOrElse(index.docs)
-    pruneShards(
-      src.select(col("docId"), col(field0).as("value"))
-        .withColumn("shard",
-          (col("docId") / lit(index.config.shardSizeDocs)).cast("long")),
-      shards).drop("shard")
+    pruneShards(docsWithShard(docFilter).select(col("docId"), col(field0).as("value"),
+      col(InvertedIndex.ShardCol).as("shard")), shards).drop("shard")
   }
 
   /** Grouped top-k (the Lucene grouping module's
@@ -1040,18 +1048,19 @@ final class Searcher(
     * size a second side on them.
     *
     * ONE metadata collect (term, group and scoring-phrase terms), then
-    * ONE `perShard` pass over the union of the term clauses' shards and
-    * each scoring phrase's shards. Per shard the kernel emits one
-    * (key, docId, tf, dl, excluded) row per LIVE (clause, doc): key =
-    * the term for term and MUST-group rows (every posting row decoded,
-    * duplicates separately, like `matches`), "p:<i>" for scoring phrase
-    * i (Wand.multiPhraseMatches on fresh iterators; analyzer terms
-    * never contain ':'); `excluded` marks docs holding a NOT term or a
-    * NOT phrase in the shard. With a scoring phrase the rows are
-    * checkpointed and each phrase df — live matches, excluded or not —
-    * is observed on the checkpoint's own job BEFORE `docFilter` applies
-    * as one semi-join; without one, `docFilter` narrows the dl side. */
-  private def booleanHits(pq: ParsedQuery, scorer: Scorer,
+    * ONE `perShard` pass over the union of the term clauses' shards
+    * that hold every MUST clause and each scoring phrase's shards. Per
+    * shard the kernel emits one (key, docId, tf, dl, excluded) row per
+    * LIVE (clause, doc): key = the term for term and MUST-group rows
+    * (every posting row decoded, duplicates separately, like
+    * `matches`), "p:<i>" for scoring phrase i (Wand.multiPhraseMatches
+    * on fresh iterators; analyzer terms never contain ':'); `excluded`
+    * marks docs holding a NOT term or a NOT phrase in the shard. With a
+    * scoring phrase the rows are checkpointed and each phrase df — live
+    * matches, excluded or not — is observed on the checkpoint's own job
+    * BEFORE `docFilter` applies as one semi-join; without one,
+    * `docFilter` narrows the dl side. */
+  private[graft] def booleanHits(pq: ParsedQuery, scorer: Scorer,
       mustGroups: Seq[Seq[String]], minShouldMatch: Int,
       docFilter: Option[Column]): (DataFrame, Array[Long], Map[String, Long]) = {
     val phrases = pq.scoringPhrases
@@ -1067,7 +1076,16 @@ final class Searcher(
     (phraseClauses ++ notPhrases).foreach(p => requirePhrase(p.slots.map(Seq(_)), p.slop))
     val qTerms = (plainTerms ++ mustGroups.flatten).distinct.sorted
     val meta = collectMeta((qTerms ++ phraseClauses.flatMap(_.slots)).distinct)
-    val shards = (meta.shardsWith(qTerms) ++ phraseClauses.flatMap(p =>
+    // term rows can only hit in a shard holding every MUST clause (each
+    // MUST term, each slot of each MUST phrase, a member of each MUST
+    // group); every shard of a scoring phrase is read regardless, since
+    // its df counts all of its live matches
+    val required = pq.must.distinct.map(Seq(_)) ++
+      pq.mustPhrases.flatMap(_.slots.map(Seq(_))) ++ mustGroups
+    val termShards =
+      if (required.isEmpty) meta.shardsWith(qTerms)
+      else meta.shardsWith(qTerms).intersect(meta.shardsWithGroups(required))
+    val shards = (termShards ++ phraseClauses.flatMap(p =>
       meta.shardsWithGroups(p.slots.map(Seq(_))))).distinct.sorted
     val phraseKeys = phrases.indices.map(i => s"p:$i")
 

@@ -35,22 +35,26 @@ object MatchQuery {
   type TableDescription =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)
 
-  /** Loaded indexes are build-once/query-many artifacts — memoized per
-    * root like EngineQueries' per-dir cache. The cache key carries a
-    * SNAPSHOT VERSION (`IndexTables.snapshotVersion`: manifest +
-    * stats.json mtimes and sizes): a root rewritten in place (e.g. by
-    * a later compaction at the same path) changes its manifests'
-    * timestamps, so the stale entry simply stops being hit
-    * instead of serving old data for the JVM lifetime. Stale entries
-    * are evicted on replacement (same root, new version). */
+  /** Loaded indexes are build-once/query-many artifacts — memoized and
+    * cached per root like EngineQueries' per-dir cache
+    * (`InvertedIndex.cache`: the first query pays one shuffle of the
+    * postings and docs onto their shard, and every later query's shard
+    * cogroup reads them in place). The cache key carries a SNAPSHOT
+    * VERSION (`IndexTables.snapshotVersion`: manifest + stats.json
+    * mtimes and sizes): a root rewritten in place (e.g. by a later
+    * compaction at the same path) changes its manifests' timestamps,
+    * so the stale entry simply stops being hit instead of serving old
+    * data for the JVM lifetime. Stale entries are evicted and
+    * unpersisted on replacement (same root, new version). */
   private val indexCache = TrieMap.empty[String, (String, InvertedIndex)]
 
   private def loadCached(spark: SparkSession, root: String): InvertedIndex = {
     val ver = IndexTables.snapshotVersion(root)
     indexCache.get(root) match {
       case Some((v, idx)) if v == ver => idx
-      case _ =>
-        val idx = IndexTables.load(spark, root)
+      case stale =>
+        stale.foreach(_._2.unpersist())
+        val idx = IndexTables.load(spark, root).cache()
         indexCache.put(root, (ver, idx))
         idx
     }

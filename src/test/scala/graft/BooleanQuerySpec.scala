@@ -31,6 +31,22 @@ class BooleanQuerySpec extends AnyFunSuite {
   private def topMap(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
+  /** 160 docs over a skewed vocabulary: the NOT term and NOT-phrase
+    * words are rarer than the scoring ones, so every exclusion leaves
+    * survivors. */
+  private def skewedDocs = {
+    val skewed = Vector("alpha", "alpha", "alpha", "alpha", "beta", "beta",
+      "beta", "beta", "gamma", "gamma", "gamma", "delta", "delta", "eps",
+      "eps", "zeta", "kappa", "iota")
+    (0 until 160).map { i =>
+      val len = 3 + (mix(41L ^ i) & 0x7FFFFFFF).toInt % 10
+      val words = (0 until len).map { t =>
+        skewed(((mix(41L ^ (i * 131L + t)) & 0x7FFFFFFF) % skewed.length).toInt)
+      }
+      (i.toLong, words.mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
   test("MUST_NOT: exhaustive ≡ WAND; drops exactly the excluded docs; survivors' scores unchanged") {
     for (shardSize <- Seq(16L, 1024L)) {
       val idx = IndexBuilder.fromText(spark, docsDf(150, 11L), "doc_id", "text",
@@ -219,18 +235,7 @@ class BooleanQuerySpec extends AnyFunSuite {
   test("clause scorer under tombstones + docFilter ≡ per-clause references") {
     import org.apache.spark.sql.functions.col
     import graft.query.{ParsedQuery, PhraseClause}
-    // skewed vocabulary: the NOT term and NOT-phrase words are rarer than
-    // the scoring ones, so every exclusion leaves survivors
-    val skewed = Vector("alpha", "alpha", "alpha", "alpha", "beta", "beta",
-      "beta", "beta", "gamma", "gamma", "gamma", "delta", "delta", "eps",
-      "eps", "zeta", "kappa", "iota")
-    val docs = (0 until 160).map { i =>
-      val len = 3 + (mix(41L ^ i) & 0x7FFFFFFF).toInt % 10
-      val words = (0 until len).map { t =>
-        skewed(((mix(41L ^ (i * 131L + t)) & 0x7FFFFFFF) % skewed.length).toInt)
-      }
-      (i.toLong, words.mkString(" "))
-    }.toDF("doc_id", "text")
+    val docs = skewedDocs
     val deleted = (0L until 160L).filter(_ % 7 == 3).toSet
     val passes = (d: Long) => d % 5 != 1
     val docFilter = col("docId") % 5 =!= 1
@@ -270,5 +275,35 @@ class BooleanQuerySpec extends AnyFunSuite {
       }
       base.unpersist()
     }
+  }
+
+  test("clause scorer reads only shards that hold every MUST clause") {
+    import graft.query.{BM25, ParsedQuery, PhraseClause}
+    val idx = IndexBuilder.fromText(spark, skewedDocs, "doc_id", "text",
+      cfg = IndexConfig(shardSizeDocs = 2)).cache()
+    val s = new Searcher(spark, idx)
+    def shardsOf(terms: String*): Set[Long] =
+      s.postingRows(terms).select("term", "shard").collect()
+        .groupBy(_.getLong(1)).collect {
+          case (sh, rs) if terms.forall(t => rs.exists(_.getString(0) == t)) => sh
+        }.toSet
+    val phraseShards = shardsOf("alpha", "beta")
+    val union = phraseShards ++ s.postingRows(Seq("gamma")).select("shard")
+      .collect().map(_.getLong(0))
+    // +"alpha beta" gamma: 5 shards hold gamma but not both phrase terms
+    assert((union.size, phraseShards.size) === ((78, 73)))
+    val (hits, shards, _) = s.booleanHits(ParsedQuery(must = Nil, should = Seq("gamma"),
+      mustNot = Nil, mustPhrases = Seq(PhraseClause(Seq("alpha", "beta")))), BM25(), Nil, 0, None)
+    assert(shards.toSet === phraseShards)
+    // hits ≡ per-clause references: the phrase's hits, scored phrase + gamma
+    val phrase = topMap(s.phraseTopK(Seq("alpha", "beta"), 160))
+    val gamma = topMap(s.topK(Seq("gamma"), 160))
+    val got = topMap(hits.select("docId", "score"))
+    assert(got.keySet === phrase.keySet)
+    got.foreach { case (d, sc) =>
+      val want = phrase(d) + gamma.getOrElse(d, 0.0)
+      assert(math.abs(sc - want) <= 1e-12 * want, s"doc=$d")
+    }
+    idx.unpersist()
   }
 }

@@ -26,12 +26,8 @@ class EndToEndSpec extends AnyFunSuite {
     CodeDoc("ref", "FourthTimes", "c0", "text",
       "Messi plays for argentina as well. He plays as a mid-fielder and plays really well."))
 
-  private lazy val index = {
-    val idx = IndexBuilder.fromCodeDocs(spark, corpus.toDS(),
-      IndexConfig(shardSizeDocs = 2)) // 2 docs/shard → exercises sharding
-    idx.cache()
-    idx
-  }
+  private lazy val index = IndexBuilder.fromCodeDocs(spark, corpus.toDS(),
+    IndexConfig(shardSizeDocs = 2)).cache() // 2 docs/shard → exercises sharding
   private lazy val searcher = new Searcher(spark, index)
 
   private def docIdOf(path: String): Long =

@@ -16,15 +16,16 @@ class PlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private lazy val diskIndex = {
+  private lazy val diskDir = {
     val dir = Files.createTempDirectory("graft_plan").toString
     val docs = (0 until 300).map(i =>
       CodeDoc("r", s"f$i", "c", "scala", s"alpha beta id$i gamma merge"))
     val idx = IndexBuilder.fromCodeDocs(spark, docs.toDS(),
       IndexConfig(shardSizeDocs = 128))
     IndexTables.write(spark, idx, dir)
-    IndexTables.load(spark, dir)
+    dir
   }
+  private lazy val diskIndex = IndexTables.load(spark, diskDir)
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -96,6 +97,43 @@ class PlanSpec extends AnyFunSuite {
     // broadcast LeftSemi against a local relation
     assert(plan.contains(" IN ") || plan.contains("INSET")
       || plan.contains("LeftSemi"), plan.take(3000))
+  }
+
+  /** Shuffle exchanges of a query's final AQE plan (run first). */
+  private def shuffleExchanges(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    df.collect()
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => fail(s"AQE did not plan the query:\n$p")
+    }
+    (new AdaptiveSparkPlanHelper {}).collect(plan) { case e: ShuffleExchangeExec => e }
+  }
+
+  test("cached index: the shard cogroup plans no shuffle, tombstones broadcast") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val cached = diskIndex.cache()
+    try {
+      for ((name, idx) <- Seq("cached" -> cached,
+          "cached + deletes" -> cached.withDeletes(Seq(1L, 130L, 260L).toDF("docId")))) {
+        val df = new Searcher(spark, idx).topK(Seq("merge", "id7"), 5)
+        val ex = shuffleExchanges(df)
+        assert(ex.isEmpty, s"$name: ${ex.mkString("\n")}")
+        if (idx.deletes.nonEmpty) {
+          val plan = df.queryExecution.executedPlan.toString
+          assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"), plan)
+        }
+      }
+      // the SQL table function caches its loaded index the same way
+      graft.sql.MatchQuery.register(spark)
+      val sqlEx = shuffleExchanges(
+        spark.sql(s"SELECT * FROM match_query('$diskDir', 'merge id7', 5)"))
+      assert(sqlEx.isEmpty, sqlEx.mkString("\n"))
+      // the parquet-loaded index shuffles both cogroup sides to their shard
+      val ex = shuffleExchanges(new Searcher(spark, diskIndex).topK(Seq("merge", "id7"), 5))
+      assert(ex.size >= 2, ex.mkString("\n"))
+    } finally cached.unpersist()
   }
 
   test("tombstoned index keeps pushdown and plans deletes as an anti-join") {

@@ -118,45 +118,102 @@ class Round4Spec extends AnyFunSuite {
         graft.build.Deletes.appliedWith(spark, idx, dels)))
     pins.foreach(_._3()) // warm codegen paths
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null) jobs.merge(g, 1, (a, b) => a + b)
-        ()
+
+    /** Jobs each pin launched, run under its own job group. */
+    def jobCounts(aqe: Boolean): Map[String, Int] = {
+      val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+          if (g != null) jobs.merge(g, 1, (a, b) => a + b)
+          ()
+        }
+      }
+      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      sc.addSparkListener(listener)
+      try {
+        pins.foreach { case (name, _, run) =>
+          sc.setJobGroup(name, name)
+          run()
+        }
+        // the bus delivers in order: once the marker job's start arrived,
+        // every earlier job start has too
+        sc.setJobGroup("marker", "marker")
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 10_000_000_000L
+        while (System.nanoTime() < deadline && !jobs.containsKey("marker")) Thread.sleep(20)
+        assert(jobs.containsKey("marker"), "listener bus did not drain")
+        pins.map { case (name, _, _) =>
+          name -> Option(jobs.get(name)).map(_.intValue).getOrElse(0)
+        }.toMap
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
       }
     }
+
+    /** Every pin over its cap, named in one failure. */
+    def assertCaps(label: String, counts: Map[String, Int], caps: Seq[(String, Int)]): Unit = {
+      val over = caps.flatMap { case (name, cap) =>
+        if (counts(name) > cap) Some(s"$name launched ${counts(name)} jobs (cap $cap)")
+        else None
+      }
+      assert(over.isEmpty, s"$label: " + over.mkString("; "))
+    }
+
     // AQE submits each shuffle-stage materialization as its own job
     // inside the ONE main query — those are not extra driver actions.
-    // Disable it here so the job count equals the action count being
-    // asserted (topK: 1 metadata collect + 1 main query).
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.addSparkListener(listener)
-    try {
-      pins.foreach { case (name, _, run) =>
-        sc.setJobGroup(name, name)
-        run()
-      }
-      // the bus delivers in order: once the marker job's start arrived,
-      // every earlier job start has too
-      sc.setJobGroup("marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (System.nanoTime() < deadline && !jobs.containsKey("marker")) Thread.sleep(20)
-      assert(jobs.containsKey("marker"), "listener bus did not drain")
-      // every pin over its cap, named in one failure
-      val over = pins.flatMap { case (name, cap, _) =>
-        val n = Option(jobs.get(name)).map(_.intValue).getOrElse(0)
-        if (n > cap) Some(s"$name launched $n jobs (cap $cap)") else None
-      }
-      assert(over.isEmpty, over.mkString("; "))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    }
+    // With AQE off the job count equals the action count being asserted
+    // (topK: 1 metadata collect + 1 main query).
+    assertCaps("AQE off", jobCounts(aqe = false), pins.map(p => (p._1, p._2)))
+    // With AQE on, the shard cogroup of a cached index has no shuffle
+    // stage to materialize, so the scaffold's shapes hold the same caps
+    // (measured before the cached index was shard-partitioned: 4 jobs
+    // for topK and dismax, 5 for the positional shapes)
+    assertCaps("AQE on", jobCounts(aqe = true), Seq("topK" -> 2, "dismaxTopK" -> 2,
+      "phraseTopK" -> 3, "multiPhraseTopK" -> 3, "nearTopK" -> 3, "spanNotTopK" -> 3,
+      "spanFirstTopK" -> 3))
     idx.unpersist()
+  }
+
+  test("cached index ≡ uncached with more shards than partitions and with fewer") {
+    import org.apache.spark.sql.functions.col
+    val parts = spark.sparkContext.defaultParallelism
+    val filter = Some(col("repo") =!= "r1")
+    for (shardSize <- Seq(8L, 128L)) {
+      val uncached = IndexBuilder.fromCodeDocs(spark, corpus(13L, 200).toDS(),
+        IndexConfig(shardSizeDocs = shardSize))
+      val cached = uncached.cache()
+      val nShards = cached.postings.select("shard").distinct().count()
+      assert(cached.postings.rdd.getNumPartitions === parts)
+      assert(cached.docs.rdd.getNumPartitions === parts)
+      assert(if (shardSize == 8L) nShards > parts else nShards < parts, s"$nShards shards")
+      assert(cached.docs.columns.toSeq === uncached.docs.columns.toSeq)
+      val queries: Seq[(String, Searcher => org.apache.spark.sql.DataFrame)] = Seq(
+        "topK" -> (_.topK(Seq("alpha", "rare2"), 10)),
+        "topK docFilter" -> (_.topK(Seq("alpha", "rare2"), 10, docFilter = filter)),
+        "scoredDocs docFilter" -> (_.scoredDocs(Seq("beta", "rare1"), docFilter = filter)
+          .select("docId", "score").orderBy("docId")),
+        "phraseTopK" -> (_.phraseTopK(Seq("alpha", "beta"), 10)),
+        "phrase mix" -> (_.search("+\"alpha beta\" gamma", 10)),
+        "facetCounts" -> (_.facetCounts(Seq("rare1"), "repo", 4, docFilter = filter)))
+      for ((u, c) <- Seq(uncached -> cached,
+          uncached.withDeletes(Seq(5L, 90L).toDF("id")) ->
+            cached.withDeletes(Seq(5L, 90L).toDF("id"))); (name, q) <- queries) {
+        val tag = s"shard=$shardSize deletes=${c.deletes.nonEmpty} $name"
+        val want = q(new Searcher(spark, u)).collect().toSeq
+        val got = q(new Searcher(spark, c)).collect().toSeq
+        assert(want.nonEmpty, tag)
+        assert(got.map(_.get(0)) === want.map(_.get(0)), tag)
+        got.zip(want).foreach { case (g, w) =>
+          val (a, b) = (g.getAs[Number](1).doubleValue, w.getAs[Number](1).doubleValue)
+          assert(math.abs(a - b) <= 1e-12 * math.max(1.0, math.abs(b)), tag)
+        }
+      }
+      cached.unpersist()
+    }
   }
 
   test("metadata docIDs come from a broadcast join, not a closure map") {
