@@ -177,6 +177,20 @@ object Analyzer extends TextAnalyzer {
     out.iterator
   }
 
+  /** Distinct token 3-gram shingles ("a b c") over `rawTokens`, in
+    * first-occurrence order — the dedup pipelines' set unit, which the
+    * DuckDB oracle mirrors. Texts under 3 raw tokens have none. */
+  def shingles(text: String): Iterable[String] = {
+    val toks = rawTokens(text).toArray
+    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+    var i = 0
+    while (i + 2 < toks.length) {
+      seen += s"${toks(i)} ${toks(i + 1)} ${toks(i + 2)}"
+      i += 1
+    }
+    seen
+  }
+
   /** Tokenize one field value → (term, position) pairs, stop words
     * removed, positions 1-based counting stopword gaps. */
   def tokenize(text: String): Seq[(String, Int)] = {

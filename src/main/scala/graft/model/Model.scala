@@ -1,7 +1,7 @@
 package graft.model
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions.{broadcast, count, lit}
 
 /** Core data model for the graft inverted-index engine.
   *
@@ -71,5 +71,20 @@ object Checkpoints {
         case _: java.util.concurrent.TimeoutException => ck.agg(aggs.head, aggs.tail: _*).head()
       }
     (ck, row)
+  }
+
+  /** Join-strategy gate for a frame of ~`bytesPerRow`-sized rows and
+    * at most `n` rows (measured, or bounded like a query's Σ df)
+    * against the session's own
+    * autoBroadcastJoinThreshold (guide §3.1: decide the strategy from
+    * runtime size, not a local-mode constant). Catalyst's own size
+    * estimate of a checkpointed frame is no guide either way, so the
+    * gate decides BOTH ways: frames that fit get a `broadcast` hint,
+    * big ones an explicit `merge` (shuffle sort-merge) hint — without
+    * it Catalyst (AQE included) may still broadcast a frame the gate
+    * rejected. Hints never change results. */
+  private[graft] def bcastIfFits(df: DataFrame, n: Long, bytesPerRow: Long): DataFrame = {
+    val t = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (t > 0 && n * bytesPerRow <= t) broadcast(df) else df.hint("merge")
   }
 }

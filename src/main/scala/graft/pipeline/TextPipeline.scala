@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
-import graft.model.Checkpoints.checkpointWithCount
+import graft.model.Checkpoints.{bcastIfFits, checkpointWithCount}
 
 /** Training-data pipeline operators over the `documents` /
   * `embeddings` tables: dedup (exact / MinHash-LSH / SimHash /
@@ -68,16 +68,7 @@ object TextPipeline {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select("doc_id", "text").as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val toks = Analyzer.rawTokens(text).toArray
-        val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-        var i = 0
-        while (i + 2 < toks.length) {
-          seen += s"${toks(i)} ${toks(i + 1)} ${toks(i + 2)}"
-          i += 1
-        }
-        seen.iterator.map(sh => (id, sh))
-      }
+      .flatMap { case (id, text) => Analyzer.shingles(text).iterator.map(sh => (id, sh)) }
       .toDF("doc_id", "sh")
   }
 
@@ -294,38 +285,32 @@ object TextPipeline {
     }
   }
 
-  /** Join-strategy gate for a frame of ~`bytesPerRow`-sized rows and
-    * a measured `n` rows against the session's own
-    * autoBroadcastJoinThreshold (guide §3.1: decide the strategy from
-    * runtime size, not a local-mode constant). Catalyst's own size
-    * estimate of a checkpointed frame is no guide either way, so the
-    * gate decides BOTH ways: frames that fit get a `broadcast` hint,
-    * big ones an explicit `merge` (shuffle sort-merge) hint — without
-    * it Catalyst (AQE included) may still broadcast a frame the gate
-    * rejected. Hints never change results. */
-  private def bcastIfFits(df: DataFrame, n: Long, bytesPerRow: Long): DataFrame = {
-    val t = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (t > 0 && n * bytesPerRow <= t) broadcast(df) else df.hint("merge")
-  }
-
   def simhashPairs(docs: DataFrame, maxHam: Int): DataFrame = {
-    val bandVals = simhashBandCols(maxHam)
     // localCheckpoint: both self-join sides read the one materialized
     // simhash result; unlike cache() it is not pinned in the session
     // CacheManager, so repeated calls don't accumulate storage
     val (s, Row(nDocs: Long)) = checkpointWithCount(simhash(docs))
-    val banded = s.select(col("doc_id"), col("simhash"),
-      posexplode(array(bandVals: _*)).as(Seq("band", "bval")))
+    bandedHammingPairs(s, "doc_id", nDocs, maxHam)
+  }
+
+  /** Verified (a, b, ham) pairs, a < b, among the rows of `s` (id column
+    * `idCol`, `simhash`; at most `n` rows) whose simhashes lie within
+    * `maxHam` bits: a self-join on the pigeonhole bands, Hamming-checked,
+    * each pair kept on its first matching band only. */
+  private def bandedHammingPairs(s: DataFrame, idCol: String, n: Long,
+      maxHam: Int): DataFrame = {
+    val banded = s.select(col(idCol), col("simhash"),
+      posexplode(array(simhashBandCols(maxHam): _*)).as(Seq("band", "bval")))
     // small corpora broadcast the probe side (~(maxHam+1) rows × ~40 B
     // per doc): the build recomputes one cheap explosion above the
     // checkpoint while the stream side skips its exchange entirely
     // (2.19-6.47 s SMJ vs 1.84-2.46 bcast, 3/3 reps: OPTIMIZATION_r06.md
     // §13 gate, dedup_simhash_pairs row of the operator checklist)
     banded.as("x").join(
-        bcastIfFits(banded.as("y"), nDocs, 40L * (maxHam + 1)),
+        bcastIfFits(banded.as("y"), n, 40L * (maxHam + 1)),
         col("x.band") === col("y.band") && col("x.bval") === col("y.bval")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
+          && col(s"x.$idCol") < col(s"y.$idCol"))
+      .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"),
         col("x.simhash").as("sx"), col("y.simhash").as("sy"), col("x.band").as("band"))
       .withColumn("ham", bit_count(col("sx").bitwiseXOR(col("sy"))))
       // multi-band collisions dedupe by the first-match filter — a
@@ -369,20 +354,7 @@ object TextPipeline {
     val stars = s.join(bcastIfFits(reps, nDocs, 16L), "simhash")
       .where(col("doc_id") =!= col("rep"))
       .select(col("rep").as("a"), col("doc_id").as("b"))
-    val banded = reps.select(col("rep"), col("simhash"),
-      posexplode(array(simhashBandCols(maxHam): _*)).as(Seq("band", "bval")))
-    val valEdges = banded.as("x").join(
-        bcastIfFits(banded.as("y"), nDocs, 40L * (maxHam + 1)),
-        col("x.band") === col("y.band") && col("x.bval") === col("y.bval")
-          && col("x.rep") < col("y.rep"))
-      .select(col("x.rep").as("a"), col("y.rep").as("b"),
-        col("x.simhash").as("sx"), col("y.simhash").as("sy"), col("x.band").as("band"))
-      // Hamming + first-match-band filters colocated in the join task
-      // (no distinct() shuffle over the candidate volume)
-      .where(bit_count(col("sx").bitwiseXOR(col("sy"))) <= maxHam
-        && col("band") === simhashFirstMatchBand(col("sx"), col("sy"), maxHam))
-      .select("a", "b")
-    stars.union(valEdges)
+    stars.union(bandedHammingPairs(reps, "rep", nDocs, maxHam).select("a", "b"))
   }
 
   /** Dedup GROUP assignment: connected components over the simhash

@@ -1,8 +1,5 @@
 package graft.query
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 import graft.model.CorpusStats
 
 /** Pluggable scorers (≙ the reference's pluggable Lucene `Similarity`,
@@ -14,25 +11,20 @@ import graft.model.CorpusStats
   *     (HBaseIndexReader.java:72,236-240), needed for rank parity with
   *     the reference tests (TestHBaseIndexReader.java:66-68: the tf=3
   *     doc ranks first).
+  *
+  * Each formula has this one definition: WAND, the clause scorer, the
+  * phrase family and explainDoc all call it. The test-scope
+  * `ExhaustiveOracle` keeps its own Column form of each to check them.
   */
 sealed trait Scorer extends Serializable {
   def name: String
   /** Per-(term, doc) contribution, before doc-level factors. */
   def contribution(tf: Double, df: Double, dl: Double, stats: CorpusStats): Double
-  /** Same as a Catalyst Column (codegen'd; identical arithmetic shape
-    * so Column and Scala paths agree bit-for-bit). */
-  def contributionCol(tf: Column, df: Column, dl: Column, stats: CorpusStats): Column
   /** Upper bound of contribution over all dl for a given max tf —
     * drives WAND pruning. */
   def upperBound(maxTf: Double, df: Double, stats: CorpusStats): Double
   /** Doc-level final factor given matched-term count (coord etc.). */
   def docFactor(nMatched: Int, queryDfs: Seq[Double], stats: CorpusStats): Double
-  /** docFactor as a Catalyst Column over the matched-term count —
-    * MUST replicate docFactor's arithmetic order exactly (bit-for-bit
-    * score parity between the Column and Scala paths is asserted in
-    * tests). Keeps the per-doc factor inside WholeStageCodegen instead
-    * of a row-at-a-time Scala UDF on the matched-doc frame. */
-  def docFactorCol(nMatched: Column, queryDfs: Seq[Double], stats: CorpusStats): Column
 }
 
 /** Field-boost wrapper (reference: per-field boost config,
@@ -45,14 +37,10 @@ final case class Boosted(inner: Scorer, boost: Double) extends Scorer {
   override def name: String = s"${inner.name}^$boost"
   override def contribution(tf: Double, df: Double, dl: Double, stats: CorpusStats): Double =
     inner.contribution(tf, df, dl, stats) * boost
-  override def contributionCol(tf: Column, df: Column, dl: Column, stats: CorpusStats): Column =
-    inner.contributionCol(tf, df, dl, stats) * lit(boost)
   override def upperBound(maxTf: Double, df: Double, stats: CorpusStats): Double =
     inner.upperBound(maxTf, df, stats) * boost
   override def docFactor(nMatched: Int, queryDfs: Seq[Double], stats: CorpusStats): Double =
     inner.docFactor(nMatched, queryDfs, stats)
-  override def docFactorCol(nMatched: Column, queryDfs: Seq[Double], stats: CorpusStats): Column =
-    inner.docFactorCol(nMatched, queryDfs, stats)
 }
 
 final case class BM25(k1: Double = 1.2, b: Double = 0.75) extends Scorer {
@@ -66,19 +54,11 @@ final case class BM25(k1: Double = 1.2, b: Double = 0.75) extends Scorer {
     idf(df, n) * tf / (tf + k1 * (1.0 - b + b * dl / stats.avgDocLen))
   }
 
-  override def contributionCol(tf: Column, df: Column, dl: Column, stats: CorpusStats): Column = {
-    val n = lit(stats.numDocs.toDouble)
-    val idfC = log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
-    idfC * tf / (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / lit(stats.avgDocLen)))
-  }
-
   /** dl → 0 maximizes the tf normalization. */
   override def upperBound(maxTf: Double, df: Double, stats: CorpusStats): Double =
     idf(df, stats.numDocs.toDouble) * maxTf / (maxTf + k1 * (1.0 - b))
 
   override def docFactor(nMatched: Int, queryDfs: Seq[Double], stats: CorpusStats): Double = 1.0
-  override def docFactorCol(nMatched: Column, queryDfs: Seq[Double], stats: CorpusStats): Column =
-    lit(1.0)
 }
 
 /** Lucene 3.0 DefaultSimilarity with norms ≡ 1:
@@ -95,12 +75,6 @@ case object LegacyTfIdf extends Scorer {
     math.sqrt(tf) * i * i
   }
 
-  override def contributionCol(tf: Column, df: Column, dl: Column, stats: CorpusStats): Column = {
-    val n = lit(stats.numDocs.toDouble)
-    val idfC = lit(1.0) + log(n / (df + lit(1.0)))
-    sqrt(tf) * idfC * idfC
-  }
-
   override def upperBound(maxTf: Double, df: Double, stats: CorpusStats): Double =
     contribution(maxTf, df, 0.0, stats) // coord ≤ 1 folded into docFactor
 
@@ -110,15 +84,5 @@ case object LegacyTfIdf extends Scorer {
     val queryNorm = if (sumSq > 0) 1.0 / math.sqrt(sumSq) else 1.0
     val coord = nMatched.toDouble / queryDfs.length.toDouble
     coord * queryNorm
-  }
-
-  /** Same arithmetic, same order: queryNorm is a driver-side constant
-    * (identical Seq fold), coord = nMatched/|q| divides first, then
-    * multiplies by queryNorm — bit-for-bit the Scala path's value. */
-  override def docFactorCol(nMatched: Column, queryDfs: Seq[Double], stats: CorpusStats): Column = {
-    val n = stats.numDocs.toDouble
-    val sumSq = queryDfs.map { df => val i = idf(df, n); i * i }.sum
-    val queryNorm = if (sumSq > 0) 1.0 / math.sqrt(sumSq) else 1.0
-    (nMatched.cast("double") / lit(queryDfs.length.toDouble)) * lit(queryNorm)
   }
 }

@@ -1,13 +1,15 @@
 package graft.query
 
-import scala.collection.mutable.LongMap
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.collection.mutable.{ArrayBuffer, LongMap}
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.build.InvertedIndex
 import graft.model.{CorpusStats, ScoredDoc}
-import graft.model.Checkpoints.checkpointWithCount
+import graft.model.Checkpoints.{bcastIfFits, checkpointWithCount}
 import graft.codec.PostingsCodec
 
 /** One postings row as stored (field, term, shard, df, cf, maxTf, blob).
@@ -21,6 +23,15 @@ final case class PostingRow(
     cf: Long,
     maxTf: Int,
     blob: Array[Byte])
+
+/** One live doc of the clause scorer's shard pass: its dl, whether it
+  * holds a NOT clause, and its (key, tf) clause rows (`Searcher.booleanHits`). */
+private[query] final case class ClauseDocRow(
+    docId: Long,
+    dl: Double,
+    excluded: Boolean,
+    keys: Seq[String],
+    tfs: Seq[Int])
 
 /** Decoded match row. */
 final case class MatchRow(term: String, docId: Long, tf: Int)
@@ -36,21 +47,18 @@ final case class MatchPosRow(term: String, docId: Long, tf: Int, positions: Seq[
   *     and dismax families share the same scaffold.
   *   - all-hits queries (field sort, grouping, hybrid, boolean phrase
   *     mixes, hit counts, facets) run on one clause scorer,
-  *     `scoredDocsBoolean`: one scaffold pass emits a row per live
-  *     (clause, doc) → score column → fixed clause-order sum per doc.
-  * Rank identity against corpus-wide explode-join references is
-  * asserted in tests (§7.4 #1); the references live in test scope.
+  *     `scoredDocsBoolean`: one scaffold pass gathers each live doc's
+  *     clause rows in its shard, and a narrow map scores the doc with a
+  *     fixed clause-order sum — no per-doc shuffle.
+  * Every path scores with the one Scala formula of its `Scorer`. Rank
+  * identity against corpus-wide explode-join references is asserted in
+  * tests (§7.4 #1); the references live in test scope.
   */
 final class Searcher(
     spark: SparkSession,
     index: InvertedIndex,
     field: String = "content") {
   import spark.implicits._
-
-  /** Max estimated size (16 B a doc, from the collected dfs) of a match
-    * set that facetCounts and constantScoreTopK hint-broadcast into
-    * their semi-join; above it Catalyst plans a shuffle join. */
-  private val matchBroadcastBytes = 192L << 20
 
   private def stats = index.stats
 
@@ -409,12 +417,13 @@ final class Searcher(
   /** Score counted phrase match rows (`positionalMatchRows`) as ONE
     * pseudo-term whose df = number of matching live docs. */
   private def scorePhraseMatched(
-      matched: (DataFrame, Long), scorer: Scorer, k: Int): DataFrame =
-    matched._1
-      .withColumn("score", scorer.contributionCol(
-        col("tf").cast("double"), lit(matched._2.toDouble), col("dl"), stats))
+      matched: (DataFrame, Long), scorer: Scorer, k: Int): DataFrame = {
+    val (df, st) = (matched._2.toDouble, stats)
+    matched._1.as[(Long, Int, Double)]
+      .map { case (d, tf, dl) => (d, scorer.contribution(tf.toDouble, df, dl, st)) }
+      .toDF("docId", "score")
       .orderBy(desc("score"), asc("docId")).limit(k)
-      .select("docId", "score")
+  }
 
   /** Multi-phrase top-k (Lucene MultiPhraseQuery): slot j matches where
     * ANY of `slotAlts(j)` occurs — "hash (join|probe)" finds both
@@ -622,12 +631,11 @@ final class Searcher(
     // from the already-collected metadata, so a selective facet
     // broadcasts its match set and the 10^N-row stored-docs side never
     // shuffles (map-side semi-join + partial count; only |values| rows
-    // move). Above the gate: plain shuffle join, the honest plan for a
+    // move). Above the gate: sort-merge join, the honest plan for a
     // corpus-wide facet.
-    val estBytes = qTerms.map(t => dfs.getOrElse(t, 0L)).sum * 16L
-    val m = if (estBytes <= matchBroadcastBytes) broadcast(matched) else matched
     facetSide(facetField, shards, docFilter)
-      .join(m, Seq("docId"), "left_semi")
+      .join(bcastIfFits(matched, qTerms.map(t => dfs.getOrElse(t, 0L)).sum, 16L),
+        Seq("docId"), "left_semi")
       .groupBy("value").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("value")).limit(topN)
   }
@@ -771,13 +779,9 @@ final class Searcher(
     // bounded match set (Σ df known) broadcasts into a semi-join
     // against the live side — the second corpus-sized shuffle the
     // first cut paid (matched ⋈ live both exchanged) disappears; same
-    // gate/fallback shape as facetCounts
-    val live = pruneShards(dlWithShard(docFilter), shards).select("docId")
-    val joined =
-      if (totDf * 16L <= matchBroadcastBytes)
-        live.join(broadcast(matched), Seq("docId"), "left_semi")
-      else matched.join(live, Seq("docId"), "left_semi")
-    joined
+    // gate as facetCounts
+    pruneShards(dlWithShard(docFilter), shards).select("docId")
+      .join(bcastIfFits(matched, totDf, 16L), Seq("docId"), "left_semi")
       .withColumn("score", lit(boost))
       .orderBy(asc("docId")).limit(k)
       .select("docId", "score")
@@ -818,16 +822,16 @@ final class Searcher(
           val it = new TermIterator(r.term, 0.0, 0.0, scorer, st,
             new PostingsCodec.BlobView(r.blob))
           it.advanceTo(target)
-          if (it.curDoc == target) Iterator((r.term, it.curTf, dl)) else Iterator.empty
+          if (it.curDoc != target) Iterator.empty
+          else {
+            val df = dfs.getOrElse(r.term, 0L)
+            Iterator((r.term, it.curTf.toLong, df,
+              scorer.contribution(it.curTf.toDouble, df.toDouble, dl, st)))
+          }
         }
       }
-    }.toDF("term", "tf", "dl")
-      .withColumn("df", coalesce(element_at(typedlit(dfs), col("term")), lit(0L)))
-      .withColumn("contribution", scorer.contributionCol(
-        col("tf").cast("double"), col("df").cast("double"), col("dl"), stats))
+    }.toDF("term", "tf", "df", "contribution")
       .orderBy(asc("term"))
-      .select(col("term"), col("tf").cast("long").as("tf"), col("df"),
-        col("contribution"))
   }
 
   /** Term/tf/positions vector of ONE stored doc by re-analysis of its
@@ -1021,12 +1025,12 @@ final class Searcher(
   /** The one clause scorer: every hit of a boolean query over term,
     * phrase and MUST-group clauses (Lucene BooleanQuery with TermQuery /
     * PhraseQuery sub-clauses) as (docId, score, nMatched). One
-    * `perShard` pass yields every clause's contribution rows: term
+    * `perShard` pass yields every clause's rows per live doc: term
     * clauses from their postings, each phrase clause from the PRUNED
     * positional kernel (positions never explode corpus-wide) scored
-    * against the phrase's own live df like `phraseTopK`; the rows are
-    * summed per doc in a fixed clause order ("t:<term>" labels sort
-    * like the terms). MUST counts matched MUST clauses;
+    * against the phrase's own live df like `phraseTopK`; each doc's
+    * contributions are summed in a fixed clause order ("t:<term>"
+    * labels sort like the terms). MUST counts matched MUST clauses;
     * `minShouldMatch` counts matched OPTIONAL clauses (above the
     * SHOULD-clause count nothing matches); NOT drops docs holding any
     * prohibited term or phrase in the same pass, and a term both
@@ -1049,17 +1053,22 @@ final class Searcher(
     *
     * ONE metadata collect (term, group and scoring-phrase terms), then
     * ONE `perShard` pass over the union of the term clauses' shards
-    * that hold every MUST clause and each scoring phrase's shards. Per
-    * shard the kernel emits one (key, docId, tf, dl, excluded) row per
-    * LIVE (clause, doc): key = the term for term and MUST-group rows
-    * (every posting row decoded, duplicates separately, like
-    * `matches`), "p:<i>" for scoring phrase i (Wand.multiPhraseMatches
-    * on fresh iterators; analyzer terms never contain ':'); `excluded`
-    * marks docs holding a NOT term or a NOT phrase in the shard. With a
-    * scoring phrase the rows are checkpointed and each phrase df — live
-    * matches, excluded or not — is observed on the checkpoint's own job
-    * BEFORE `docFilter` applies as one semi-join; without one,
-    * `docFilter` narrows the dl side. */
+    * that hold every MUST clause and each scoring phrase's shards. A
+    * doc's rows all sit in its shard, so the kernel folds per doc: it
+    * gathers each LIVE doc's (key, tf) rows in a LongMap and emits one
+    * `ClauseDocRow` (docId, dl, excluded, keys, tfs). key = the term for
+    * term and MUST-group rows (every posting row decoded, duplicates
+    * separately, like `matches`), "p:<i>" for scoring phrase i
+    * (Wand.multiPhraseMatches on fresh iterators; analyzer terms never
+    * contain ':'); `excluded` marks docs holding a NOT term or a NOT
+    * phrase in the shard. A narrow typed map then scores each doc row:
+    * `Scorer.contribution` × boost per (key, clause) entry, summed in
+    * (clause label, tscore) order, times `Scorer.docFactor`. Without a
+    * scoring phrase that map runs in the cogroup's own stage and
+    * `docFilter` narrows the dl side. With one, the doc rows are
+    * checkpointed and each phrase df — doc rows whose keys hold
+    * "p:<i>", excluded or not — is observed on the checkpoint's own
+    * job; `docFilter` then applies as one semi-join before the map. */
   private[graft] def booleanHits(pq: ParsedQuery, scorer: Scorer,
       mustGroups: Seq[Seq[String]], minShouldMatch: Int,
       docFilter: Option[Column]): (DataFrame, Array[Long], Map[String, Long]) = {
@@ -1093,7 +1102,7 @@ final class Searcher(
     val termSet = qTerms.toSet
     val notTerms = pq.mustNot.toSet
     val st = stats
-    val rows = perShard(
+    val docs = perShard[ClauseDocRow](
         (qTerms ++ pq.mustNot ++ (phraseClauses ++ notPhrases).flatMap(_.slots)).distinct,
         shards, if (phrases.isEmpty) docFilter else None) { (rs, dlMap) =>
       // (docId, tf) of one phrase, on fresh iterators over its own rows
@@ -1109,80 +1118,81 @@ final class Searcher(
         phraseKeys.iterator.zip(phraseClauses).flatMap { case (k, p) =>
           phraseMatches(p).map(k -> _)
         }
-      keyed.collect { case (key, (d, tf)) if dlMap.contains(d) =>
-        (key, d, tf, dlMap(d), excluded.contains(d))
+      val perDoc = new LongMap[(ArrayBuffer[String], ArrayBuffer[Int])]()
+      keyed.foreach { case (key, (d, tf)) =>
+        if (dlMap.contains(d)) {
+          val (ks, tfs) = perDoc.getOrElseUpdate(d, (ArrayBuffer.empty, ArrayBuffer.empty))
+          ks += key
+          tfs += tf
+        }
       }
-    }.toDF("key", "docId", "tf", "dl", "excluded")
+      perDoc.iterator.map { case (d, (ks, tfs)) =>
+        ClauseDocRow(d, dlMap(d), excluded.contains(d), ks.toSeq, tfs.toSeq)
+      }
+    }
     // df = live docs containing the phrase (same contract as
     // phraseTopK), counted before NOT and the doc filter narrow the rows
     val (live, phraseDfs) =
-      if (phrases.isEmpty) (rows, Nil)
+      if (phrases.isEmpty) (docs, Nil)
       else {
-        val (ck, Row(counts @ _*)) =
-          checkpointWithCount(rows, phraseKeys.map(k => count_if(col("key") === k)): _*)
-        (docFilter.fold(ck)(f =>
-          ck.join(index.docs.where(f).select("docId"), Seq("docId"), "left_semi")),
-          counts.tail.map(_.asInstanceOf[Long].toDouble))
+        val (ck, Row(counts @ _*)) = checkpointWithCount(docs.toDF(),
+          phraseKeys.map(k => count_if(array_contains(col("keys"), k))): _*)
+        val kept = docFilter.fold(ck)(f =>
+          ck.join(index.docs.where(f).select("docId"), Seq("docId"), "left_semi"))
+        (kept.as[ClauseDocRow], counts.tail.map(_.asInstanceOf[Long].toDouble))
       }
 
-    // clause rows: (clause, docId, tscore, isMust); per-key boosts
-    // (`term^N` / boosted expansions / boosted phrases) scale the
-    // contribution
-    val dfOf = typedlit(qTerms.flatMap(t => meta.dfs.get(t).map(t -> _.toDouble)).toMap ++
-      phraseKeys.zip(phraseDfs))
-    val clausesOf = typedlit(
-      (plainTerms.map(t => (t, ("t:" + t, mustTermSet(t)))) ++
-        mustGroups.zipWithIndex.flatMap { case (g, i) =>
-          g.distinct.map(t => (t, (s"g:$i", true)))
-        } ++
-        phraseKeys.zip(phrases).map { case (k, (_, isMust)) => (k, (k, isMust)) }
-      ).groupMap(_._1)(_._2))
+    // each key's clauses as (ordinal, isMust): a term is its own clause
+    // and one per MUST group holding it, a phrase key its own clause.
+    // The ordinal ranks the clause label in UTF-8 byte order (Spark's
+    // string order; for plain terms, the term order the test-scope
+    // oracle sums in), so every doc sums in one fixed (label, tscore)
+    // order and its score is bit-reproducible
+    val labelled = plainTerms.map(t => (t, "t:" + t, mustTermSet(t))) ++
+      mustGroups.zipWithIndex.flatMap { case (g, i) => g.distinct.map(t => (t, s"g:$i", true)) } ++
+      phraseKeys.zip(phrases).map { case (k, (_, isMust)) => (k, k, isMust) }
+    val ordinal = labelled.map(_._2).distinct
+      .sortWith((a, b) => java.util.Arrays.compareUnsigned(
+        a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0)
+      .zipWithIndex.toMap
+    val clausesOf = labelled.groupMap(_._1)(l => (ordinal(l._2), l._3))
+      .map { case (k, cs) => k -> cs.toArray }
+    // per-key df and boost (`term^N` / boosted expansions / boosted phrases)
+    val dfOf = qTerms.flatMap(t => meta.dfs.get(t).map(t -> _.toDouble)).toMap ++
+      phraseKeys.zip(phraseDfs)
     val boostOf = pq.boosts ++ phraseKeys.zip(phraseClauses.map(_.boost))
-    val boostCol =
-      if (boostOf.isEmpty) lit(1.0)
-      else coalesce(element_at(typedlit(boostOf), col("key")), lit(1.0))
-    val allRows = live.where(!col("excluded"))
-      .withColumn("c", explode(element_at(clausesOf, col("key"))))
-      .select(
-        col("c._1").as("clause"),
-        col("docId"),
-        (boostCol * scorer.contributionCol(
-          col("tf").cast("double"), element_at(dfOf, col("key")), col("dl"), stats)).as("tscore"),
-        col("c._2").as("isMust"))
-
     val nMustClauses = mustTermSet.size + pq.mustPhrases.size + mustGroups.size
-    // docFactor inputs are order-free sums over per-clause dfs
+    // the doc factor depends on the matched clause count alone
     val queryDfs = qTerms.map(t => meta.dfs.getOrElse(t, 0L).toDouble) ++ phraseDfs
+    val docFactors = Array.tabulate(ordinal.size + 1)(scorer.docFactor(_, queryDfs, st))
 
-    // clause-match counts are over DISTINCT clause labels: a group
-    // matching through two member terms is still ONE matched clause
-    // (its rows still each add score — Lucene sums the rewritten
-    // disjunction's sub-scorers)
-    val perDoc = allRows.groupBy("docId")
-      .agg(sort_array(collect_list(
-        struct(col("clause"), col("tscore"), col("isMust")))).as("cs"))
-      .withColumn("nMatched", size(array_distinct(
-        transform(col("cs"), x => x.getField("clause")))))
-      .withColumn("nMust",
-        size(array_distinct(transform(
-          filter(col("cs"), x => x.getField("isMust")),
-          x => x.getField("clause")))))
-      .withColumn("rawScore",
-        aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("tscore")))
-      .drop("cs")
-    // every MUST clause matched; matched SHOULD clauses = matched
-    // clauses minus matched MUST ones
-    val filtered = perDoc.where(col("nMust") === nMustClauses &&
-      col("nMatched") - col("nMust") >= minShouldMatch)
-    // doc-level factor (coord · queryNorm for the legacy scorer; 1 for
-    // BM25) as a CODEGEN'D column — a row-at-a-time Scala UDF would
-    // break WholeStageCodegen on the matched-doc frame (one row per
-    // hit); docFactorCol replicates docFactor's arithmetic order
-    // bit-for-bit (asserted by the oracle ≡ WAND identity tests and the
-    // tfidf_legacy oracle)
-    val scored = filtered.select(col("docId"),
-      (col("rawScore") * scorer.docFactorCol(col("nMatched"), queryDfs, stats)).as("score"),
-      col("nMatched"))
+    // clause-match counts are over DISTINCT clauses: a group matching
+    // through two member terms is still ONE matched clause (its rows
+    // still each add score — Lucene sums the rewritten disjunction's
+    // sub-scorers); every MUST clause matched, and matched SHOULD
+    // clauses = matched clauses minus matched MUST ones
+    val scored = live.flatMap { r =>
+      if (r.excluded) None
+      else {
+        val cs = r.keys.iterator.zip(r.tfs.iterator).flatMap { case (key, tf) =>
+          val tscore = boostOf.getOrElse(key, 1.0) *
+            scorer.contribution(tf.toDouble, dfOf(key), r.dl, st)
+          clausesOf(key).iterator.map { case (o, isMust) => (o, tscore, isMust) }
+        }.toArray.sortWith((a, b) =>
+          a._1 < b._1 || (a._1 == b._1 && java.lang.Double.compare(a._2, b._2) < 0))
+        var sum = 0.0; var nMatched = 0; var nMust = 0; var prev = -1
+        cs.foreach { case (o, tscore, isMust) =>
+          sum += tscore
+          if (o != prev) {
+            nMatched += 1
+            if (isMust) nMust += 1
+            prev = o
+          }
+        }
+        if (nMust != nMustClauses || nMatched - nMust < minShouldMatch) None
+        else Some((r.docId, sum * docFactors(nMatched), nMatched))
+      }
+    }.toDF("docId", "score", "nMatched")
     (scored, shards, meta.dfs)
   }
 

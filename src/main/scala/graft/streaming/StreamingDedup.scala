@@ -141,13 +141,7 @@ object StreamingDedup {
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        val toks = graft.analysis.Analyzer.rawTokens(text).toArray
-        val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-        var i = 0
-        while (i + 2 < toks.length) {
-          seen += s"${toks(i)} ${toks(i + 1)} ${toks(i + 2)}"
-          i += 1
-        }
+        val seen = graft.analysis.Analyzer.shingles(text)
         if (seen.isEmpty) Iterator.empty
         else {
           // minhash signature over direct shingle hashes

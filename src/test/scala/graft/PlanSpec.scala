@@ -99,14 +99,17 @@ class PlanSpec extends AnyFunSuite {
       || plan.contains("LeftSemi"), plan.take(3000))
   }
 
-  /** Shuffle exchanges of a query's final AQE plan (run first). */
+  /** Shuffle exchanges of a query's final plan (run first): AQE's final
+    * plan, or the plan itself when AQE found nothing to adapt in it (no
+    * operator that needs a distribution, as over a checkpoint). */
   private def shuffleExchanges(df: org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     df.collect()
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => fail(s"AQE did not plan the query:\n$p")
+      case p => p
     }
     (new AdaptiveSparkPlanHelper {}).collect(plan) { case e: ShuffleExchangeExec => e }
   }
@@ -173,15 +176,42 @@ class PlanSpec extends AnyFunSuite {
     assert(fplan.contains("BroadcastHashJoin"), fplan.take(2000))
   }
 
-  test("whole-stage codegen covers the scoring pipeline") {
+  // the phrase mix's final plan reads the checkpointed doc rows; the
+  // checkpoint job's own cogroup is pinned shuffle-free by Round4Spec's
+  // AQE-on job cap (AQE runs each shuffle stage as a job of its own)
+  test("cached index: the clause scorer plans no shuffle") {
+    val cached = diskIndex.cache()
+    try {
+      val s = new Searcher(spark, cached)
+      for ((name, df) <- Seq(
+          "scoredDocs" -> s.scoredDocs(Seq("merge")),
+          "phrase mix" -> s.search("+\"alpha beta\" gamma", 5))) {
+        val ex = shuffleExchanges(df)
+        assert(ex.isEmpty, s"$name: ${ex.mkString("\n")}")
+      }
+    } finally cached.unpersist()
+  }
+
+  test("match-set semi-joins follow the session broadcast threshold") {
     val s = new Searcher(spark, diskIndex)
-    val df = s.scoredDocs(Seq("merge"), graft.query.BM25())
-    df.collect() // AQE finalizes the plan only at execution
-    // "*(n)" is the WholeStageCodegen marker in plan toString; the
-    // BM25 arithmetic must live inside a codegen'd Project stage
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("*("), plan.take(1500))
-    assert("\\*\\(\\d+\\) Project \\[.*ln".r.findFirstIn(plan).isDefined
-      || plan.contains("WholeStageCodegen"), plan.take(1500))
+    val queries: Seq[() => org.apache.spark.sql.DataFrame] = Seq(
+      () => s.facetCounts(Seq("id7", "merge"), "lang", 5),
+      () => s.constantScoreTopK(org.apache.spark.sql.functions.col("term").startsWith("id1"), 50))
+    def run(q: () => org.apache.spark.sql.DataFrame) = {
+      val df = q()
+      (df.collect().toSeq, planOf(df))
+    }
+    val atDefault = queries.map(run)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val atOne =
+      try queries.map(run)
+      finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    for (((want, _), (got, plan)) <- atDefault.zip(atOne)) {
+      assert(want.nonEmpty)
+      assert(got === want)
+      assert(plan.contains("SortMergeJoin"), plan.take(3000))
+    }
   }
 }

@@ -171,10 +171,12 @@ class Round4Spec extends AnyFunSuite {
     // With AQE on, the shard cogroup of a cached index has no shuffle
     // stage to materialize, so the scaffold's shapes hold the same caps
     // (measured before the cached index was shard-partitioned: 4 jobs
-    // for topK and dismax, 5 for the positional shapes)
+    // for topK and dismax, 5 for the positional shapes). The phrase mix
+    // folds each doc in its shard: metadata, checkpoint and final job,
+    // with no shuffle stage (measured before the fold left SQL: 4)
     assertCaps("AQE on", jobCounts(aqe = true), Seq("topK" -> 2, "dismaxTopK" -> 2,
       "phraseTopK" -> 3, "multiPhraseTopK" -> 3, "nearTopK" -> 3, "spanNotTopK" -> 3,
-      "spanFirstTopK" -> 3))
+      "spanFirstTopK" -> 3, "search phrase mix" -> 3))
     idx.unpersist()
   }
 

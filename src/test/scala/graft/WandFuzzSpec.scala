@@ -40,23 +40,30 @@ class WandFuzzSpec extends AnyFunSuite {
       Seq("alpha"), Seq("rare1"), Seq("alpha", "beta"),
       Seq("alpha", "rare2"), Seq("gamma", "delta", "eps"),
       Seq("alpha", "beta", "gamma", "theta"), Seq("zzz_missing", "kappa"))
+    // the scorers whose docFactor is not 1 (coord · queryNorm)
+    val legacy = Seq[Scorer](LegacyTfIdf, Boosted(LegacyTfIdf, 0.21))
     for {
       terms <- queryPool
       k <- Seq(1, 3, 10)
-      scorer <- Seq[Scorer](BM25(), LegacyTfIdf,
-        Boosted(BM25(), 3.7), Boosted(LegacyTfIdf, 0.21))
+      scorer <- Seq[Scorer](BM25(), legacy(0), Boosted(BM25(), 3.7), legacy(1))
       requireAll <- Seq(false, true)
     } {
       val tag = s"seed=$seed shard=$shardSize terms=$terms k=$k " +
         s"scorer=${scorer.name} and=$requireAll"
       val exact = ExhaustiveOracle.topK(idx, terms, k, scorer, requireAll).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
-      val wand = s.topK(terms, k, scorer, requireAll).collect()
-        .map(r => (r.getLong(0), r.getDouble(1)))
-      assert(wand.map(_._1).toSeq === exact.map(_._1).toSeq, tag)
-      wand.zip(exact).foreach { case (w, e) =>
-        assert(math.abs(w._2 - e._2) <= 1e-12 * math.max(1.0, math.abs(e._2)), tag)
+      def assertExact(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+        val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
+        assert(got.map(_._1).toSeq === exact.map(_._1).toSeq, s"$path $tag")
+        got.zip(exact).foreach { case (g, e) =>
+          assert(math.abs(g._2 - e._2) <= 1e-12 * math.max(1.0, math.abs(e._2)), s"$path $tag")
+        }
       }
+      assertExact(s.topK(terms, k, scorer, requireAll), "wand")
+      // the clause scorer's doc fold, docFactor ≠ 1 branch
+      if (k == 10 && legacy.contains(scorer))
+        assertExact(s.scoredDocs(terms, scorer, requireAll)
+          .orderBy($"score".desc, $"docId").limit(k).select("docId", "score"), "scoredDocs")
     }
     idx.unpersist()
   }

@@ -4,16 +4,47 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.build.InvertedIndex
+import graft.model.CorpusStats
 
 /** Test-scope cross-validation oracles for the pruned query paths:
   * corpus-wide decode, positional explode and relational joins — no
   * shard cogroup, no Wand kernel. Built only on the public surface
   * (`Searcher.matches` / `matchesWithPositions` / `docFreqs`, the
-  * index's docs, deletes and stats, `Scorer.contributionCol` /
-  * `docFactorCol`); live dl is computed here as docs anti-joined with
-  * the tombstones, independent of the production dl side it checks.
-  * Do not use at scale. */
+  * index's docs, deletes and stats); live dl is computed here as docs
+  * anti-joined with the tombstones, independent of the production dl
+  * side it checks. Each scorer formula is written here a second time,
+  * as Catalyst Columns (`contributionCol`, `docFactorCol`), independent
+  * of the engine's one Scala definition in `Scorer`. Do not use at
+  * scale. */
 object ExhaustiveOracle {
+
+  /** `Scorer.contribution` as a Column. */
+  private def contributionCol(scorer: Scorer, tf: Column, df: Column, dl: Column,
+      stats: CorpusStats): Column = scorer match {
+    case Boosted(inner, boost) => contributionCol(inner, tf, df, dl, stats) * lit(boost)
+    case BM25(k1, b) =>
+      val n = lit(stats.numDocs.toDouble)
+      val idfC = log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
+      idfC * tf / (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / lit(stats.avgDocLen)))
+    case LegacyTfIdf =>
+      val n = lit(stats.numDocs.toDouble)
+      val idfC = lit(1.0) + log(n / (df + lit(1.0)))
+      sqrt(tf) * idfC * idfC
+  }
+
+  /** `Scorer.docFactor` as a Column over the matched-term count:
+    * queryNorm is a driver-side constant, coord = nMatched/|q| divides
+    * first, then multiplies by queryNorm. */
+  private def docFactorCol(scorer: Scorer, nMatched: Column, queryDfs: Seq[Double],
+      stats: CorpusStats): Column = scorer match {
+    case Boosted(inner, _) => docFactorCol(inner, nMatched, queryDfs, stats)
+    case _: BM25 => lit(1.0)
+    case LegacyTfIdf =>
+      val n = stats.numDocs.toDouble
+      val sumSq = queryDfs.map { df => val i = LegacyTfIdf.idf(df, n); i * i }.sum
+      val queryNorm = if (sumSq > 0) 1.0 / math.sqrt(sumSq) else 1.0
+      (nMatched.cast("double") / lit(queryDfs.length.toDouble)) * lit(queryNorm)
+  }
 
   private def searcher(index: InvertedIndex) =
     new Searcher(index.docs.sparkSession, index)
@@ -34,7 +65,7 @@ object ExhaustiveOracle {
       .join(liveDl(index, docFilter), Seq("docId"))
       .withColumn("tscore",
         coalesce(element_at(typedlit(boosts), col("term")), lit(1.0)) *
-          scorer.contributionCol(col("tf").cast("double"),
+          contributionCol(scorer, col("tf").cast("double"),
             element_at(typedlit(dfs.map { case (t, d) => t -> d.toDouble }), col("term")),
             col("dl"), index.stats))
       .groupBy("docId")
@@ -63,7 +94,7 @@ object ExhaustiveOracle {
           x => array_contains(typedlit(required), x.getField("term")))).as("nMust"))
       .where(col("nMust") === required.length &&
         col("nMatched") - col("nMust") >= minShouldMatch)
-      .select(col("docId"), (sumOf(col("cs")) * scorer.docFactorCol(col("nMatched"),
+      .select(col("docId"), (sumOf(col("cs")) * docFactorCol(scorer, col("nMatched"),
         qTerms.map(t => dfs.getOrElse(t, 0L).toDouble), index.stats)).as("score"))
     (if (mustNot.isEmpty) scored
      else scored.join(s.matches(mustNot.distinct).toDF().select("docId"), Seq("docId"), "left_anti"))
@@ -82,7 +113,7 @@ object ExhaustiveOracle {
     val live = matched.join(liveDl(index), Seq("docId")).localCheckpoint()
     val df = live.count().toDouble
     live
-      .withColumn("score", scorer.contributionCol(
+      .withColumn("score", contributionCol(scorer,
         col("tf").cast("double"), lit(df), col("dl"), index.stats))
       .orderBy(desc("score"), asc("docId")).limit(k)
       .select("docId", "score")
