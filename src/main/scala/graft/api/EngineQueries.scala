@@ -18,36 +18,38 @@ import graft.query.{BM25, LegacyTfIdf, Searcher}
   */
 object EngineQueries {
 
-  private val cache = TrieMap.empty[String, InvertedIndex]
-  private val cacheLock = new Object
+  /** Values built once per JVM per key. The first build of a key is
+    * serialized: TrieMap's getOrElseUpdate evaluates its thunk
+    * non-atomically, so two concurrent first calls would both build
+    * (double-caching Spark blocks, or leaking a temp root). */
+  private final class Memo[V] {
+    private val built = TrieMap.empty[String, V]
+    def apply(key: String)(build: => V): V =
+      built.getOrElse(key, synchronized(built.getOrElseUpdate(key, build)))
+  }
+
+  private val indexes = new Memo[InvertedIndex]
 
   /** Build (or fetch) the index over `dir`/documents.parquet.
     * doc_id is already dense in the testdata → used as docId directly;
     * the code-corpus path (IndexBuilder.fromCodeDocs) exercises the
-    * two-level dense assignment instead. First-build serialized per
-    * JVM (getOrElseUpdate's thunk is non-atomic — two concurrent first
-    * calls would both build and double-cache the Spark blocks). */
+    * two-level dense assignment instead. */
   def index(spark: SparkSession, dir: String): InvertedIndex =
-    cache.get(dir) match {
-      case Some(idx) => idx
-      case None => cacheLock.synchronized {
-        cache.getOrElseUpdate(dir, {
-          val idx = IndexBuilder.fromText(
-            spark, TextPipeline.documents(spark, dir), "doc_id", "text",
-            untokenized = Seq("lang", "source"),
-            IndexConfig(shardSizeDocs = 1024)).cache()
-          // ONE materialization action: the cached index's termStats
-          // aggregates over its cache-marked postings (never the build
-          // lineage), so scanning it populates the postings cache en
-          // route AND materializes the dictionary
-          // (the reference maintains the term dictionary at write
-          // time; dict_terms then reads the cache) — the separate
-          // postings.count() pass this replaces was a second cold
-          // full-pipeline action for the same blocks
-          idx.termStats.count()
-          idx
-        })
-      }
+    indexes(dir) {
+      val idx = IndexBuilder.fromText(
+        spark, TextPipeline.documents(spark, dir), "doc_id", "text",
+        untokenized = Seq("lang", "source"),
+        IndexConfig(shardSizeDocs = 1024)).cache()
+      // ONE materialization action: the cached index's termStats
+      // aggregates over its cache-marked postings (never the build
+      // lineage), so scanning it populates the postings cache en
+      // route AND materializes the dictionary
+      // (the reference maintains the term dictionary at write
+      // time; dict_terms then reads the cache) — the separate
+      // postings.count() pass this replaces was a second cold
+      // full-pipeline action for the same blocks
+      idx.termStats.count()
+      idx
     }
 
   def searcher(spark: SparkSession, dir: String): Searcher =
@@ -356,22 +358,16 @@ object EngineQueries {
     * tombstone path. Oracle: full recompute over the live corpus only.
     * Applied once per JVM per dir (an applied index is a snapshot,
     * like the base index). */
-  private val appliedCache = TrieMap.empty[String, InvertedIndex]
-  private val appliedLock = new Object
+  private val appliedIndexes = new Memo[InvertedIndex]
 
   private def appliedIndex(s: SparkSession, dir: String): InvertedIndex =
-    appliedCache.get(dir) match {
-      case Some(idx) => idx
-      case None => appliedLock.synchronized {
-        appliedCache.getOrElseUpdate(dir, {
-          // cache-marked, NOT eagerly counted: the first query's own
-          // postings scan (collectMeta) materializes the cache en
-          // route — an eager count() here was one extra full
-          // decode+re-encode pass inside the same timed query
-          graft.build.Deletes.applied(
-            s, index(s, dir).withDeletes(deleteSet(s, dir))).cache()
-        })
-      }
+    appliedIndexes(dir) {
+      // cache-marked, NOT eagerly counted: the first query's own
+      // postings scan (collectMeta) materializes the cache en
+      // route — an eager count() here was one extra full
+      // decode+re-encode pass inside the same timed query
+      graft.build.Deletes.applied(
+        s, index(s, dir).withDeletes(deleteSet(s, dir))).cache()
     }
 
   def bm25AfterDelete(s: SparkSession, dir: String): DataFrame =
@@ -385,35 +381,29 @@ object EngineQueries {
     * post-update index. Oracle: full recompute over the updated
     * corpus. Built once per JVM per dir (segment root on temp disk,
     * reclaimed at exit). */
-  private val updatedCache = TrieMap.empty[String, InvertedIndex]
-  private val updatedLock = new Object
+  private val updatedIndexes = new Memo[InvertedIndex]
 
   private def updatedIndex(s: SparkSession, dir: String): InvertedIndex =
-    updatedCache.get(dir) match {
-      case Some(idx) => idx
-      case None => updatedLock.synchronized {
-        updatedCache.getOrElseUpdate(dir, {
-          import graft.streaming.StreamingIndexer
-          val rootPath = java.nio.file.Files.createTempDirectory("graft_upd_root")
-          deleteAtExit(rootPath)
-          val root = rootPath.toString
-          val docs = TextPipeline.documents(s, dir)
-            .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-          StreamingIndexer.append(s, root, docs, "doc_id", "text",
-            cfg = IndexConfig(shardSizeDocs = 1024))
-          val old = docs.where(col("doc_id") % 10 === 7)
-          StreamingIndexer.updateDocuments(s, root,
-            old.select(col("doc_id")),
-            old.select((col("doc_id") + 100000L).as("doc_id"),
-              concat(col("text"), lit(" graftupdated")).as("text")),
-            "doc_id", "text")
-          StreamingIndexer.compact(s, root)
-          // cache-marked only — loadMerged now resolves to the
-          // compacted snapshot (plain parquet reads), and the first
-          // query's scan populates the cache without a separate pass
-          StreamingIndexer.loadMerged(s, root).cache()
-        })
-      }
+    updatedIndexes(dir) {
+      import graft.streaming.StreamingIndexer
+      val rootPath = java.nio.file.Files.createTempDirectory("graft_upd_root")
+      deleteAtExit(rootPath)
+      val root = rootPath.toString
+      val docs = TextPipeline.documents(s, dir)
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      StreamingIndexer.append(s, root, docs, "doc_id", "text",
+        cfg = IndexConfig(shardSizeDocs = 1024))
+      val old = docs.where(col("doc_id") % 10 === 7)
+      StreamingIndexer.updateDocuments(s, root,
+        old.select(col("doc_id")),
+        old.select((col("doc_id") + 100000L).as("doc_id"),
+          concat(col("text"), lit(" graftupdated")).as("text")),
+        "doc_id", "text")
+      StreamingIndexer.compact(s, root)
+      // cache-marked only — loadMerged now resolves to the
+      // compacted snapshot (plain parquet reads), and the first
+      // query's scan populates the cache without a separate pass
+      StreamingIndexer.loadMerged(s, root).cache()
     }
 
   def bm25AfterUpdate(s: SparkSession, dir: String): DataFrame =
@@ -423,13 +413,9 @@ object EngineQueries {
   /** Persisted-index roots for the SQL surface, one per scale dir —
     * match_query() reads a committed on-disk snapshot, so the index
     * is written once per JVM (same build-once/query-many shape as
-    * `index`). First-build is SERIALIZED per dir (TrieMap
-    * getOrElseUpdate evaluates its thunk non-atomically — two
-    * concurrent first calls would both write an index and leak an
-    * orphan temp dir), and every temp root is registered for deletion
-    * at JVM exit. */
-  private val sqlRoots = TrieMap.empty[String, String]
-  private val sqlRootsLock = new Object
+    * `index`), and every temp root is registered for deletion at JVM
+    * exit. */
+  private val sqlRoots = new Memo[String]
 
   /** ONE shutdown hook draining a concurrent queue of temp roots — a
     * hook-per-root would accumulate one live Thread object per created
@@ -455,17 +441,12 @@ object EngineQueries {
   /** Persisted snapshot root for `dir` (written on first use) with
     * the TVF registered — shared by every SQL-surface query. */
   private def ensureSqlRoot(s: SparkSession, dir: String): String = {
-    val root = sqlRoots.get(dir) match {
-      case Some(r) => r
-      case None => sqlRootsLock.synchronized {
-        sqlRoots.getOrElseUpdate(dir, {
-          val outPath = java.nio.file.Files.createTempDirectory("graft_sqlidx")
-          deleteAtExit(outPath)
-          val out = outPath.toString
-          graft.table.IndexTables.write(s, index(s, dir), out)
-          out
-        })
-      }
+    val root = sqlRoots(dir) {
+      val outPath = java.nio.file.Files.createTempDirectory("graft_sqlidx")
+      deleteAtExit(outPath)
+      val out = outPath.toString
+      graft.table.IndexTables.write(s, index(s, dir), out)
+      out
     }
     graft.sql.MatchQuery.register(s)
     root

@@ -18,13 +18,9 @@ import graft.model.{CodeDoc, CorpusStats, Posting}
   *   lists (replaces the reference's single-row-per-term layout,
   *   hbasene HBaseIndexStore.java:215-240, which cannot scale past one
   *   region server per hot term).
-  * @param buildPartitions shuffle parallelism of the posting groupBy
-  *   (≙ "number of reduces = number of index partitions",
-  *   create/mapred/BuildTableIndex.java:50-53).
   */
 final case class IndexConfig(
     shardSizeDocs: Long = 1L << 20,
-    buildPartitions: Int = 0, // 0 = leave to spark.sql.shuffle.partitions
     /** Store the raw content column in the docs table. The reference
       * does NOT store analyzed fields (content was indexed, not
       * stored — AbstractHBaseneTest.java:99-113); at corpus scale the
@@ -38,12 +34,13 @@ final case class IndexConfig(
       * must tokenize with the SAME analyzer it was built with. */
     analyzer: graft.analysis.TextAnalyzer = Analyzer)
 
-/** The built index: four logical tables (SURVEY.md §1.6) plus an
-  * optional tombstone set.
+/** The built index: two stored tables (SURVEY.md §1.6), the views
+  * derived from them, and an optional tombstone set.
   *
   *   docs      — (docId, dl, content_sha256, + source columns)
   *   postings  — (field, term, shard, df, cf, maxTf, blob)
-  *   termStats — (field, term, df, cf, maxTf)   [global, shards merged]
+  *   termStats — (field, term, df, cf, maxTf): the term dictionary,
+  *               always `termStatsOf(postings)` (shards merged)
   *   stats     — broadcastable corpus stats (N, avgdl)
   *   deletes   — (docId) tombstones: docs excluded from every query
   *               path at read time (Lucene delete semantics — the
@@ -60,18 +57,18 @@ final class InvertedIndex private (
     statsThunk: () => CorpusStats,
     val config: IndexConfig,
     val deletes: Option[DataFrame],
-    /** termStats and corpus stats derive from docs and postings
-      * (`InvertedIndex.derived`) — `cache()` re-derives them from the
-      * cached frames. */
+    /** Corpus stats derive from docs (`InvertedIndex.derived`) —
+      * `cache()` re-derives them from the cached frame. */
     derived: Boolean,
     /** Set by `cache()`: docs plus its shard column, hash-partitioned
       * on it and cached; `docs` is this frame without the column. */
     cachedShardDocs: Option[DataFrame]) {
 
-  def this(docs: DataFrame, postings: DataFrame, termStats: DataFrame,
+  def this(docs: DataFrame, postings: DataFrame,
       statsThunk: () => CorpusStats, config: IndexConfig,
       deletes: Option[DataFrame] = None) =
-    this(docs, postings, termStats, statsThunk, config, deletes, false, None)
+    this(docs, postings, InvertedIndex.termStatsOf(postings), statsThunk, config, deletes,
+      false, None)
 
   /** Corpus stats are LAZY: computed on first query, not at build
     * time — the build/write path derives them from the written docs
@@ -110,11 +107,12 @@ final class InvertedIndex private (
     * doc-range shard, are hash-partitioned on the shard into the
     * session's default parallelism and cached, so the shard cogroup of
     * every query on it reads both sides where they sit — no exchange.
-    * A derived index re-derives termStats and corpus stats from the
-    * cached frames (never from the build lineage); tombstones carry
-    * over. `docs` keeps its columns, so applying deletes or writing the
-    * cached index writes the same tables. On a cached index, re-marks
-    * its frames for caching and returns it. */
+    * The dictionary is aggregated from the cached postings and cached
+    * too; a derived index re-derives corpus stats from the cached docs
+    * (never from the build lineage); tombstones carry over. `docs`
+    * keeps its columns, so applying deletes or writing the cached index
+    * writes the same tables. On a cached index, re-marks its frames for
+    * caching and returns it. */
   def cache(): InvertedIndex = cachedShardDocs match {
     case Some(sd) =>
       sd.cache(); postings.cache(); termStats.cache(); this
@@ -124,10 +122,9 @@ final class InvertedIndex private (
         .repartition(n, col("shard")).cache()
       val sd = docsWithShard.repartition(n, col(InvertedIndex.ShardCol)).cache()
       val d = sd.drop(InvertedIndex.ShardCol)
-      val (ts, st) =
-        if (derived) (InvertedIndex.termStatsOf(p), () => InvertedIndex.corpusStatsOf(d))
-        else (termStats, statsThunk)
-      new InvertedIndex(d, p, ts.cache(), st, config, deletes, derived, Some(sd))
+      val st = if (derived) () => InvertedIndex.corpusStatsOf(d) else statsThunk
+      new InvertedIndex(d, p, InvertedIndex.termStatsOf(p).cache(), st, config, deletes,
+        derived, Some(sd))
   }
 
   def unpersist(): Unit =
@@ -135,14 +132,14 @@ final class InvertedIndex private (
 }
 
 object InvertedIndex {
-  def apply(docs: DataFrame, postings: DataFrame, termStats: DataFrame,
-      stats: CorpusStats, config: IndexConfig): InvertedIndex =
-    new InvertedIndex(docs, postings, termStats, () => stats, config)
+  /** An index over stored tables with known corpus stats. */
+  def apply(docs: DataFrame, postings: DataFrame, stats: CorpusStats,
+      config: IndexConfig): InvertedIndex =
+    new InvertedIndex(docs, postings, () => stats, config)
 
-  /** An index whose dictionary and corpus stats derive from its own
-    * tables: termStats from the postings (`termStatsOf`), corpus stats
-    * lazily on first query from the docs' dl column (`corpusStatsOf`)
-    * — no extra pass over the corpus at build time. */
+  /** An index whose corpus stats derive from its own docs table,
+    * lazily on first query from the dl column (`corpusStatsOf`) — no
+    * extra pass over the corpus at build time. */
   def derived(docs: DataFrame, postings: DataFrame, config: IndexConfig): InvertedIndex =
     new InvertedIndex(docs, postings, termStatsOf(postings), () => corpusStatsOf(docs), config,
       None, true, None)
@@ -185,7 +182,7 @@ object InvertedIndex {
   *   Dataset[doc] → dense docIDs → mapPartitions(tokenize, doc-local
   *   tf/pos aggregation, encode partial posting segments) →
   *   mergeSegmentRows by (field, term, docRangeShard) →
-  *   postings/docs/termStats/stats.
+  *   postings/docs (termStats and stats derive from them).
   *
   * Everything is DataFrame/Dataset; the only wide shuffles are the
   * docID range partitioning (code path) and the segment merge.
@@ -593,8 +590,7 @@ object IndexBuilder {
       cfg: IndexConfig): DataFrame = {
     val spark = partials.sparkSession
     import spark.implicits._
-    val nPart = if (cfg.buildPartitions > 0) cfg.buildPartitions
-      else spark.sessionState.conf.numShufflePartitions
+    val nPart = spark.sessionState.conf.numShufflePartitions
     val firstDocUdf = udf((b: Array[Byte]) => PostingsCodec.blobFirstMinDoc(b))
     val sorted = partials.withColumn("firstDoc", firstDocUdf(col("blob")))
       .repartition(nPart, col("field"), col("term"), col("shard"))
@@ -824,8 +820,7 @@ object IndexBuilder {
       spark: SparkSession,
       ds: Dataset[CodeDoc],
       cfg: IndexConfig = IndexConfig()): InvertedIndex = {
-    val nPart = if (cfg.buildPartitions > 0) cfg.buildPartitions
-      else spark.sessionState.conf.numShufflePartitions
+    val nPart = spark.sessionState.conf.numShufflePartitions
     val keyed = ds.toDF()
       .withColumn("docKey",
         concat_ws("", col("repo"), lit("/"), col("path"), lit("@"), col("commit")))

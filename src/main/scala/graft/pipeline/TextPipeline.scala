@@ -802,8 +802,9 @@ object TextPipeline {
 
   /** IVF-style ANN over a PRE-SUPPLIED coarse partition (the `label`
     * column): search only the query's partition. This is the
-    * oracle-checked surface (SQL-expressible); `ivfKmeansTopK` below is
-    * the same search shape with a real, engine-built quantizer. */
+    * oracle-checked surface (SQL-expressible); `ivfWrite` + `ivfQuery`
+    * below are the same search shape with a real, engine-built
+    * quantizer. */
   def ivfTopK(emb: DataFrame, queryVecId: Long, k: Int): DataFrame = {
     val qLabel = emb.where(col("vec_id") === queryVecId)
       .select("label").head().getInt(0)
@@ -871,29 +872,6 @@ object TextPipeline {
       best
     }
 
-  /** IVF ANN with an engine-built quantizer: cluster with seeded
-    * k-means, then exact-search only the nProbe clusters whose
-    * centroids are nearest the query vector. nProbe = nClusters
-    * degrades gracefully to exact brute force (recall 1.0); at scale
-    * the assignment column is precomputed once and the probed scan is
-    * a partition-pruned read, so per-query cost is ~nProbe/nClusters
-    * of the corpus. */
-  def ivfKmeansTopK(
-      emb: DataFrame,
-      queryVecId: Long,
-      k: Int,
-      nClusters: Int = 8,
-      nIter: Int = 3,
-      nProbe: Int = 1): DataFrame = {
-    val cents = kmeansCentroids(emb, nClusters, nIter)
-    val q = queryVec(emb, queryVecId)
-    val probe = clustersByDistance(cents, q)
-      .take(math.min(nProbe, cents.length)).toSeq
-    val assignU = nearestUdf(cents)
-    cosineTopKVec(emb.where(assignU(col("embedding")).isin(probe: _*)), q, k,
-      excludeId = Some(queryVecId))
-  }
-
   /** Rank cluster ids by squared distance of their centroid to q. */
   private def clustersByDistance(cents: Array[Array[Double]], q: Array[Double]): Array[Int] =
     cents.zipWithIndex.map { case (ctr, c) =>
@@ -924,7 +902,8 @@ object TextPipeline {
   /** Query a persisted IVF layout: rank centroids by distance to the
     * query vector (k-row driver read), then cosine top-k over ONLY the
     * nProbe nearest clusters — the scan must show a cluster partition
-    * filter (asserted in AnnSpec). */
+    * filter (asserted in AnnSpec). nProbe = nClusters is exact brute
+    * force (recall 1.0). */
   def ivfQuery(
       spark: SparkSession,
       root: String,

@@ -60,15 +60,24 @@ object StreamingIndexer {
               "monotonically) or ingest into a fresh index root.")
         }
         writeIngestConfig(root, cfg)
-        val idx = IndexBuilder.fromText(spark, batch, idCol, textCol,
-          untokenized, cfg)
-        TableFormat.write(spark, idx.docs, root, s"docs-b$batchId",
-          snapshotId = batchId + 1)
-        TableFormat.write(spark, idx.postings, root, s"postings-b$batchId",
-          snapshotId = batchId + 1)
-        ()
+        writeSegment(spark, root, batchId,
+          IndexBuilder.fromText(spark, batch, idCol, textCol, untokenized, cfg))
       }
     }
+
+  /** Commit `idx` as segment `batchId`: tables `docs-b<id>` and
+    * `postings-b<id>`, written as two concurrent chains
+    * (`TableFormat.concurrently`). A batch is visible only when BOTH
+    * manifests exist (`completeBatches`), so a crash mid-pair leaves an
+    * invisible half segment. */
+  private def writeSegment(spark: SparkSession, root: String, batchId: Long,
+      idx: InvertedIndex): Unit = {
+    TableFormat.concurrently(
+      TableFormat.write(spark, idx.docs, root, s"docs-b$batchId", snapshotId = batchId + 1),
+      TableFormat.write(spark, idx.postings, root, s"postings-b$batchId",
+        snapshotId = batchId + 1))
+    ()
+  }
 
   /** Persist the build config alongside the segments: the shard width
     * is baked into every stored posting row, so a reader MUST use the
@@ -142,8 +151,8 @@ object StreamingIndexer {
       .sortBy(_.stripPrefix(prefix).toLong)
 
   /** Batch ids with BOTH docs and postings manifests committed. A
-    * crash between a batch's two table writes (the sequential window
-    * in `writer`) leaves a HALF segment: no load or compaction may
+    * crash between a batch's two table commits (`writeSegment`) leaves
+    * a HALF segment: no load or compaction may
     * consume it — replaying the batch completes it first (streaming
     * processes batches in order, so a later batch cannot commit while
     * an earlier one is half-written). */
@@ -185,26 +194,8 @@ object StreamingIndexer {
       latestCompactionInfo(root).map(_.batch + 1).getOrElse(0L))
     val batchId = math.max(used.maxOption.map(_ + 1L).getOrElse(0L), floor)
     writeIngestConfig(root, effCfg)
-    val idx = IndexBuilder.fromText(spark, docs, idCol, textCol, untokenized, effCfg)
-    // the two segment tables are independent — write them as
-    // concurrent Spark jobs (same two-chain shape as IndexTables.write)
-    // so the docs write's driver tail (footer lineage, commit) overlaps
-    // the postings build instead of serializing before it. Completeness
-    // semantics are unchanged: a batch is visible only when BOTH
-    // manifests exist (completeBatches), so a crash mid-pair still
-    // leaves an invisible half segment either way.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fDocs = pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = { TableFormat.write(spark, idx.docs, root,
-          s"docs-b$batchId", snapshotId = batchId + 1); () }
-      })
-      val fPost = pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = { TableFormat.write(spark, idx.postings, root,
-          s"postings-b$batchId", snapshotId = batchId + 1); () }
-      })
-      fDocs.get(); fPost.get()
-    } finally pool.shutdown()
+    writeSegment(spark, root, batchId,
+      IndexBuilder.fromText(spark, docs, idCol, textCol, untokenized, effCfg))
     batchId
   }
 
@@ -254,8 +245,7 @@ object StreamingIndexer {
 
   /** Committed delete-table sequence numbers, ascending. */
   def deleteSeqs(root: String): Seq[Long] =
-    if (!Files.isDirectory(Paths.get(root))) Seq.empty
-    else segmentTables(root, "deletes-d").map(_.stripPrefix("deletes-d").toLong)
+    segmentTables(root, "deletes-d").map(_.stripPrefix("deletes-d").toLong)
 
   /** Highest delete seq a compaction snapshot has PHYSICALLY applied
     * (−1 = none / pre-deletes snapshot). Missing marker is safe: the
@@ -283,11 +273,11 @@ object StreamingIndexer {
     }
 
   /** Compact all committed segment snapshots into ONE persisted
-    * docs/postings/termStats/stats snapshot set under
+    * docs/postings/stats.json snapshot under
     * `root/compacted-<latestBatch>` (the reference's segment merge /
     * Lucene optimize, as a batch job): postings merge by blob
-    * concatenation (re-encoding fragmented or interleaved runs),
-    * termStats and corpus stats derive from the written tables. The
+    * concatenation (re-encoding fragmented or interleaved runs), and
+    * corpus stats derive from the written docs. The
     * result loads with `IndexTables.load` — query cost no longer grows
     * with the number of ingested micro-batches. Compaction is
     * INCREMENTAL: loadMerged bases on the previous compaction plus
@@ -309,7 +299,7 @@ object StreamingIndexer {
     val merged = mergeSnapshot(spark, root, base.map(_.dir), batches, cfg)
     // deletes newer than the base compaction are applied PHYSICALLY:
     // deleted docs/postings rows are gone from the written snapshot
-    // and stats/termStats reflect the post-delete corpus
+    // and its stats and dictionary reflect the post-delete corpus
     val applied =
       if (pendingDels.isEmpty) merged
       else graft.build.Deletes.appliedWith(spark, merged,
@@ -341,8 +331,8 @@ object StreamingIndexer {
 
   private val CompactionName = "^compacted-([0-9]+)(?:-d([0-9]+))?$".r
 
-  /** Newest compaction snapshot whose manifests are ALL committed
-    * (docs + postings + termStats manifests and stats.json) — a
+  /** Newest compaction snapshot whose files are ALL committed
+    * (docs + postings manifests and stats.json) — a
     * half-written compaction is invisible, exactly like a half-written
     * segment. Ordered by (batch, delSeq): a deletes-only compaction
     * of the same batch set supersedes its base. */
@@ -436,9 +426,9 @@ object StreamingIndexer {
     val newBatches = completeBatches(root).filter(_ >= minBatch)
     // Fast path: everything is inside the newest compaction — its
     // committed tables ARE the merged index (postings one row per key,
-    // termStats/stats derived from the written tables at compact
-    // time), so re-running the merge shuffle + termStats groupBy over
-    // them is a full-pass no-op; load the snapshot directly.
+    // stats derived from the written docs at compact time), so
+    // re-running the merge shuffle over them is a full-pass no-op;
+    // load the snapshot directly.
     val idx =
       if (newBatches.isEmpty && base.nonEmpty)
         IndexTables.load(spark, s"$root/${base.get.dir}")

@@ -7,86 +7,66 @@ import org.apache.spark.sql.{SparkSession}
 import graft.build.{IndexConfig, InvertedIndex}
 import graft.model.CorpusStats
 
-/** Persisted index = four committed tables under one root:
-  * docs, postings, termStats, plus stats.json. Each table is a
-  * manifest-gated stage → a killed build resumes by skipping committed
-  * stages (north rule: resumable DAG of checkpointed snapshots).
+/** Persisted index = two committed tables under one root, docs and
+  * postings, plus stats.json. Each table is a manifest-gated stage → a
+  * killed build resumes by skipping committed stages (north rule:
+  * resumable DAG of checkpointed snapshots). The term dictionary is
+  * never written: every index derives it from its postings
+  * (`InvertedIndex.termStatsOf`). A `termStats` table left by earlier
+  * versions is ignored.
   */
 object IndexTables {
 
-  private val Tables = Seq("docs", "postings", "termStats")
+  private val Tables = Seq("docs", "postings")
   private val StatsFile = "stats.json"
 
-  /** Write all index tables; stages already committed are skipped.
-    * termStats/stats derive from the WRITTEN postings/docs (no
-    * recompute of the build pipeline).
-    *
-    * The two stage CHAINS are independent — (docs → stats.json) and
-    * (postings → termStats) — so they are submitted as concurrent
-    * Spark jobs from two driver threads: the scheduler interleaves
-    * their tasks across idle cores and the per-stage driver tails
-    * (job setup, footer lineage, commit) overlap with the other
-    * chain's real work instead of serializing after it. Dependency
-    * order WITHIN each chain is preserved, so crash-resume semantics
-    * are unchanged (each stage is still manifest-gated).
-    * Returns total rows written. */
+  /** Write the index tables; stages already committed are skipped.
+    * The two chains — docs → stats.json, and postings — run as
+    * concurrent Spark jobs (`TableFormat.concurrently`). Returns total
+    * rows written. */
   def write(spark: SparkSession, idx: InvertedIndex, root: String): Long = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fDocs = pool.submit(new java.util.concurrent.Callable[TableFormat.Manifest] {
-        def call(): TableFormat.Manifest = {
-          val needStats = !Files.exists(Paths.get(root, StatsFile))
-          // corpus stats ride the docs WRITE job as observed metrics —
-          // no second scan of the docs table (at corpus scale that
-          // second pass re-reads the whole table just for (N, avgdl)).
-          // Resume path (docs already committed → no write job runs)
-          // falls back to a dl-column-pruned scan of the stored table.
-          val obs =
-            if (needStats && !TableFormat.isCommitted(root, "docs"))
-              Some(org.apache.spark.sql.Observation())
-            else None
-          val docsDf = obs match {
-            case Some(o) => idx.docs.observe(o,
-              InvertedIndex.corpusStatsCols.head, InvertedIndex.corpusStatsCols.tail: _*)
-            case None => idx.docs
-          }
-          val m = TableFormat.write(spark, docsDf, root, "docs")
-          if (needStats) {
-            // observed metrics can overcount under speculative/retried
-            // tasks (accumulator semantics); the manifest rowCount from
-            // the committed parquet footers is EXACT — trust the
-            // observation only when its count matches, else rescan
-            val observed = obs.map { o =>
-              val row = o.get
-              CorpusStats(row("n").asInstanceOf[Long],
-                Option(row("avgdl")).map(_.asInstanceOf[Double]).getOrElse(0.0))
-            }.filter(_.numDocs == m.rowCount)
-            val st = observed.getOrElse(
-              InvertedIndex.corpusStatsOf(TableFormat.read(spark, root, "docs")))
-            TableFormat.commitJson(root, StatsFile,
-              Seq("numDocs" -> st.numDocs.toString, "avgDocLen" -> st.avgDocLen.toString) ++
-                configFields(idx.config), replace = false)
-          }
-          m
-        }
-      })
-      val fPost = pool.submit(new java.util.concurrent.Callable[(TableFormat.Manifest, TableFormat.Manifest)] {
-        def call(): (TableFormat.Manifest, TableFormat.Manifest) = {
-          val mPost = TableFormat.write(spark, idx.postings, root, "postings")
-          val mStats = if (TableFormat.isCommitted(root, "termStats")) {
-            TableFormat.readManifest(root, "termStats")
-          } else {
-            TableFormat.write(spark,
-              InvertedIndex.termStatsOf(TableFormat.read(spark, root, "postings")),
-              root, "termStats")
-          }
-          (mPost, mStats)
-        }
-      })
-      val mDocs = fDocs.get()
-      val (mPost, mStats) = fPost.get()
-      mDocs.rowCount + mPost.rowCount + mStats.rowCount
-    } finally pool.shutdown()
+    val (mDocs, mPost) = TableFormat.concurrently(writeDocsAndStats(spark, idx, root),
+      TableFormat.write(spark, idx.postings, root, "postings"))
+    mDocs.rowCount + mPost.rowCount
+  }
+
+  /** The docs table, then stats.json from the WRITTEN docs (no
+    * recompute of the build pipeline). */
+  private def writeDocsAndStats(spark: SparkSession, idx: InvertedIndex,
+      root: String): TableFormat.Manifest = {
+    val needStats = !Files.exists(Paths.get(root, StatsFile))
+    // corpus stats ride the docs WRITE job as observed metrics —
+    // no second scan of the docs table (at corpus scale that
+    // second pass re-reads the whole table just for (N, avgdl)).
+    // Resume path (docs already committed → no write job runs)
+    // falls back to a dl-column-pruned scan of the stored table.
+    val obs =
+      if (needStats && !TableFormat.isCommitted(root, "docs"))
+        Some(org.apache.spark.sql.Observation())
+      else None
+    val docsDf = obs match {
+      case Some(o) => idx.docs.observe(o,
+        InvertedIndex.corpusStatsCols.head, InvertedIndex.corpusStatsCols.tail: _*)
+      case None => idx.docs
+    }
+    val m = TableFormat.write(spark, docsDf, root, "docs")
+    if (needStats) {
+      // observed metrics can overcount under speculative/retried
+      // tasks (accumulator semantics); the manifest rowCount from
+      // the committed parquet footers is EXACT — trust the
+      // observation only when its count matches, else rescan
+      val observed = obs.map { o =>
+        val row = o.get
+        CorpusStats(row("n").asInstanceOf[Long],
+          Option(row("avgdl")).map(_.asInstanceOf[Double]).getOrElse(0.0))
+      }.filter(_.numDocs == m.rowCount)
+      val st = observed.getOrElse(
+        InvertedIndex.corpusStatsOf(TableFormat.read(spark, root, "docs")))
+      TableFormat.commitJson(root, StatsFile,
+        Seq("numDocs" -> st.numDocs.toString, "avgDocLen" -> st.avgDocLen.toString) ++
+          configFields(idx.config), replace = false)
+    }
+    m
   }
 
   /** Parse ONLY stats.json — (stats, config) without touching any
@@ -120,7 +100,7 @@ object IndexTables {
       .map(s => (s.toLong, TableFormat.jsonField(text, "analyzer")))
 
   /** Cheap filesystem fingerprint of a committed snapshot: (mtime,
-    * size) of the three table manifests plus stats.json (four stat
+    * size) of the two table manifests plus stats.json (three stat
     * calls — no data I/O). An in-place rewrite commits new manifests;
     * size rides along because mtime alone has filesystem-dependent
     * granularity (1 s on some filesystems) and a rewrite landing
@@ -138,7 +118,7 @@ object IndexTables {
         else "-1"
       }.mkString(",")
 
-  /** Every file of a complete snapshot is committed: the three table
+  /** Every file of a complete snapshot is committed: the two table
     * manifests and stats.json. */
   private[graft] def isComplete(root: String): Boolean =
     Tables.forall(TableFormat.isCommitted(root, _)) && Files.exists(Paths.get(root, StatsFile))
@@ -148,7 +128,6 @@ object IndexTables {
     InvertedIndex(
       TableFormat.read(spark, root, "docs"),
       TableFormat.read(spark, root, "postings"),
-      TableFormat.read(spark, root, "termStats"),
       stats,
       cfg)
   }

@@ -107,10 +107,27 @@ object TableFormat {
       .foreach(deleteRecursively)
   }
 
-  /** Names of the tables committed under `root` (one per manifest). */
+  /** Names of the tables committed under `root` (one per manifest);
+    * none when `root` does not exist yet. */
   private[graft] def committedTables(root: String): Seq[String] =
-    listChildren(Paths.get(root)).map(_.getFileName.toString)
+    if (!Files.isDirectory(Paths.get(root))) Nil
+    else listChildren(Paths.get(root)).map(_.getFileName.toString)
       .collect { case n if n.endsWith(ManifestSuffix) => n.stripSuffix(ManifestSuffix) }
+
+  /** Run two independent write chains as concurrent Spark jobs: `b` on
+    * a second driver thread, `a` on this one. The scheduler interleaves
+    * their tasks across idle cores, and each chain's driver tail (job
+    * set-up, footer lineage, manifest commit) overlaps the other's work
+    * instead of following it. Order within each chain is kept and every
+    * table stays manifest-gated, so crash-resume is unchanged. Returns
+    * both results once both chains finish. */
+  private[graft] def concurrently[A, B](a: => A, b: => B): (A, B) = {
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val fb = pool.submit(new java.util.concurrent.Callable[B] { def call(): B = b })
+      (a, fb.get())
+    } finally pool.shutdown()
+  }
 
   /** Directory children, with the Files.list stream CLOSED (each open
     * stream holds a directory fd; deep recursion / many rewrites in a
@@ -198,8 +215,8 @@ object TableFormat {
 
   /** Snapshot-id allocation: the driver is the table format's single
     * writer (manifest commits are driver-side atomic renames), but one
-    * driver may write INDEPENDENT tables concurrently (IndexTables
-    * runs its two stage chains on two threads) — so ids are reserved
+    * driver may write INDEPENDENT tables concurrently (`concurrently`
+    * runs two write chains on two threads) — so ids are reserved
     * under a JVM lock, seeded from the on-disk maximum. */
   private val allocLock = new Object
   private val reservedIds = scala.collection.mutable.Map.empty[String, Long]

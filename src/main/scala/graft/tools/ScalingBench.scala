@@ -152,8 +152,8 @@ object ScalingBench {
         }
         val t0 = System.nanoTime()
         val idx = IndexBuilder.fromParquetTable(spark, corpusPath, cfg)
-        // the real build: write all index tables (docs, postings,
-        // termStats, stats) as committed snapshots
+        // the real build: commit the index (docs and postings tables,
+        // stats.json) as snapshots
         IndexTables.write(spark, idx, out)
         val sec = (System.nanoTime() - t0) / 1e9
         nDocs = TableFormat.readManifest(out, "docs").rowCount

@@ -4,11 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.TextPipeline
 
-/** IVF ANN with the engine-built k-means quantizer: determinism,
-  * brute-force degradation (nProbe = nClusters ⇒ exact), and recall
-  * monotonicity in nProbe (probing more clusters can only help —
-  * candidate sets are nested). The label-partition `ivfTopK` remains
-  * the oracle-checked surface; these gates cover the real quantizer.
+/** IVF ANN with the engine-built k-means quantizer over a persisted
+  * layout: determinism, brute-force degradation (nProbe = nClusters ⇒
+  * exact), and recall monotonicity in nProbe (probing more clusters can
+  * only help — candidate sets are nested). The label-partition
+  * `ivfTopK` remains the oracle-checked surface; these gates cover the
+  * real quantizer.
   */
 class AnnSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -24,13 +25,6 @@ class AnnSpec extends AnyFunSuite {
     val b = TextPipeline.kmeansCentroids(emb, 6, 3)
     assert(a.map(_.toSeq).toSeq === b.map(_.toSeq).toSeq)
     assert(a.length === 6 && a.forall(_.length === 64))
-  }
-
-  test("nProbe = nClusters degrades to exact brute force") {
-    val exact = topIds(TextPipeline.cosineTopK(emb, 0L, 10))
-    val ivf = topIds(TextPipeline.ivfKmeansTopK(emb, 0L, 10,
-      nClusters = 6, nIter = 2, nProbe = 6))
-    assert(ivf === exact)
   }
 
   test("persisted IVF layout: partition-pruned probe, exact at full probe") {
@@ -55,10 +49,13 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("recall@10 is monotone in nProbe and reaches 1.0 at full probe") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    TextPipeline.ivfWrite(emb, root, nClusters = 6, nIter = 2)
+    val q = TextPipeline.queryVec(emb, 0L)
     val exact = topIds(TextPipeline.cosineTopK(emb, 0L, 10)).toSet
     def recall(nProbe: Int): Double = {
-      val got = topIds(TextPipeline.ivfKmeansTopK(emb, 0L, 10,
-        nClusters = 6, nIter = 2, nProbe = nProbe)).toSet
+      val got = topIds(TextPipeline.ivfQuery(spark, root, q, 10, nProbe,
+        excludeId = Some(0L))).toSet
       got.intersect(exact).size.toDouble / exact.size
     }
     val r1 = recall(1); val r3 = recall(3); val r6 = recall(6)

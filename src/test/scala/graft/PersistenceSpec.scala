@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.build.{IndexBuilder, IndexConfig}
+import graft.build.{IndexBuilder, IndexConfig, InvertedIndex}
 import graft.model.CodeDoc
 import graft.query.Searcher
 import graft.table.{IndexTables, TableFormat}
@@ -26,6 +26,9 @@ class PersistenceSpec extends AnyFunSuite {
     val idx = IndexBuilder.fromCodeDocs(spark, corpus(200).toDS(),
       IndexConfig(shardSizeDocs = 64))
     IndexTables.write(spark, idx, dir)
+    // the committed snapshot is the two tables plus stats.json
+    assert(TableFormat.committedTables(dir).toSet === Set("docs", "postings"))
+    assert(Files.exists(Paths.get(dir, "stats.json")))
     val loaded = IndexTables.load(spark, dir)
     assert(loaded.stats === idx.stats)
     assert(loaded.config.shardSizeDocs === 64)
@@ -65,7 +68,6 @@ class PersistenceSpec extends AnyFunSuite {
     // full resume
     IndexTables.write(spark, idx, dir)
     assert(TableFormat.isCommitted(dir, "postings"))
-    assert(TableFormat.isCommitted(dir, "termStats"))
     // the crashed write's leftovers are reclaimed, not leaked
     assert(children().count(_.startsWith("postings.snap-")) === 1, children())
     assert(!children().exists(_.startsWith("_tmp_")), children())
@@ -86,16 +88,6 @@ class PersistenceSpec extends AnyFunSuite {
     assert(java.lang.Double.doubleToRawLongBits(rescanned.avgDocLen)
       === java.lang.Double.doubleToRawLongBits(idx.stats.avgDocLen))
 
-    // kill-point: the termStats manifest lost → the resume rewrites the
-    // same rows and reclaims the unreferenced old data dir
-    def termStatsRows() =
-      TableFormat.read(spark, dir, "termStats").collect().toSeq.sortBy(_.toString)
-    val termStatsBefore = termStatsRows()
-    Files.delete(Paths.get(dir, "termStats.manifest.json"))
-    IndexTables.write(spark, idx, dir)
-    assert(termStatsRows() === termStatsBefore)
-    assert(children().count(_.startsWith("termStats.snap-")) === 1, children())
-
     // a no-replace commit onto an existing file yields to it: the
     // committed bytes stay and no temp file is left behind
     val statsBytes = Files.readAllBytes(Paths.get(dir, "stats.json")).toSeq
@@ -103,6 +95,64 @@ class PersistenceSpec extends AnyFunSuite {
       Seq("numDocs" -> "1", "avgDocLen" -> "2.0"), replace = false)
     assert(Files.readAllBytes(Paths.get(dir, "stats.json")).toSeq === statsBytes)
     assert(!children().exists(_.startsWith("_tmp_")), children())
+  }
+
+  test("build + write: the job count and the one single-task job are pinned") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val source = Files.createTempDirectory("graft_pin_src").resolve("t").toString
+    graft.tools.CodeCorpus.generate(spark, 1000L, 10, 7L, 4).write.parquet(source)
+    val dir = Files.createTempDirectory("graft_pin").toString
+    // job id → its stage ids; stage id → (name, tasks) for each stage
+    // that ran (a skipped stage is never submitted)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
+    val ran = new java.util.concurrent.ConcurrentHashMap[Int, (String, Int)]()
+    @volatile var drained = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case "build" => jobs.put(j.jobId, j.stageIds); ()
+          case "marker" => drained = true
+          case _ => ()
+        }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
+        ran.put(s.stageInfo.stageId, (s.stageInfo.name, s.stageInfo.numTasks)); ()
+      }
+    }
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("build", "build")
+      IndexTables.write(spark, IndexBuilder.fromParquetTable(spark, source,
+        IndexConfig(shardSizeDocs = 64, storeContent = false)), dir)
+      // the bus delivers in order: once the marker job's start arrived,
+      // every earlier event has too
+      sc.setJobGroup("marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (System.nanoTime() < deadline && !drained) Thread.sleep(20)
+      assert(drained, "listener bus did not drain")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    }
+    val stagesRun = jobs.asScala.toSeq.sortBy(_._1).map { case (_, ids) =>
+      ids.flatMap(id => Option(ran.get(id)))
+    }
+    val report = stagesRun.map(_.map { case (n, t) => s"$n×$t" }.mkString(" + "))
+      .mkString("; ")
+    assert(TableFormat.readManifest(dir, "docs").rowCount === 1000)
+    // measured 6; 9 while the write also committed a termStats table
+    assert(stagesRun.size <= 6, report)
+    // the source's schema read is the only job whose stages all run one
+    // task (the termStats table added two: a schema read of the written
+    // postings, and its own write, coalesced by AQE to one task)
+    val singleTask = stagesRun.filter(st => st.nonEmpty && st.forall(_._2 == 1))
+    assert(singleTask.size === 1, report)
+    assert(singleTask.head.forall(_._1.startsWith("parquet at IndexBuilder.scala")), report)
+    info(report)
   }
 
   test("lineage: manifest row counts match data") {
@@ -123,8 +173,40 @@ class PersistenceSpec extends AnyFunSuite {
     val idx = IndexBuilder.fromCodeDocs(spark, corpus(50).toDS(),
       IndexConfig(shardSizeDocs = 64))
     IndexTables.write(spark, idx, dir)
-    val ids = Seq("docs", "postings", "termStats")
+    val ids = Seq("docs", "postings")
       .map(t => TableFormat.readManifest(dir, t).snapshotId)
-    assert(ids.distinct.length === 3)
+    assert(ids.distinct.length === 2)
+  }
+
+  test("a leftover termStats table is ignored; every dictionary is termStatsOf(postings)") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    val idx = IndexBuilder.fromCodeDocs(spark, corpus(120).toDS(),
+      IndexConfig(shardSizeDocs = 32))
+    val clean = Files.createTempDirectory("graft_clean").toString
+    val legacy = Files.createTempDirectory("graft_legacy").toString
+    IndexTables.write(spark, idx, clean)
+    IndexTables.write(spark, idx, legacy)
+    // what earlier versions also committed: the dictionary as a table,
+    // here with one planted row no postings row backs
+    val planted = InvertedIndex.termStatsOf(idx.postings)
+      .union(Seq(("content", "zzplanted", 7L, 7L, 7)).toDF("field", "term", "df", "cf", "maxTf"))
+    TableFormat.write(spark, planted, legacy, "termStats")
+    assert(TableFormat.isCommitted(legacy, "termStats"))
+    val a = IndexTables.load(spark, clean)
+    val b = IndexTables.load(spark, legacy)
+    for (i <- Seq(a, b)) assert(rows(i.termStats) === rows(InvertedIndex.termStatsOf(i.postings)))
+    val (sa, sb) = (new Searcher(spark, a), new Searcher(spark, b))
+    assert(rows(sb.termEnum("", 1000)) === rows(sa.termEnum("", 1000)))
+    assert(rows(sb.termEnum("z", 10)).isEmpty)
+    assert(sb.docFreqs(Seq("merge", "pkg1", "zzplanted")) ===
+      sa.docFreqs(Seq("merge", "pkg1", "zzplanted")))
+    def hits(s: Searcher) = s.search("pkg*", 200).collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+    assert(hits(sb).nonEmpty && hits(sb) === hits(sa))
+    assert(sb.totalHits(Seq("merge")) === 120 && sa.totalHits(Seq("merge")) === 120)
+    // built, cached and tombstoned indexes: the same identity
+    val cached = b.cache()
+    for (i <- Seq(idx, cached, cached.withDeletes(Seq(3L).toDF("id")), cached.undeleteAll()))
+      assert(rows(i.termStats) === rows(InvertedIndex.termStatsOf(i.postings)))
+    cached.unpersist()
   }
 }

@@ -450,6 +450,25 @@ class StreamingSpec extends AnyFunSuite {
       .map(_.getLong(0)).toSet === Set(2000L))
   }
 
+  test("append into a root that does not exist yet creates it and adopts cfg") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_fresh").resolve("fresh/root").toString
+    assert(!Files.exists(java.nio.file.Paths.get(root)))
+    assert(StreamingIndexer.completeBatches(root).isEmpty)
+    assert(StreamingIndexer.deleteSeqs(root).isEmpty)
+    val missing = intercept[IllegalArgumentException](StreamingIndexer.loadMerged(spark, root))
+    assert(missing.getMessage.contains("no committed segments"), missing.getMessage)
+    val cfg = IndexConfig(shardSizeDocs = 8)
+    assert(StreamingIndexer.append(spark, root, (0L until 20L).map(mkDoc).toDF("doc_id", "text"),
+      "doc_id", "text", cfg = cfg) === 0L)
+    assert(StreamingIndexer.completeBatches(root) === Seq(0L))
+    val merged = StreamingIndexer.loadMerged(spark, root)
+    assert(merged.config.shardSizeDocs === 8)
+    assert(merged.stats.numDocs === 20)
+    assert(new Searcher(spark, merged).search("id7 id12", 10).collect()
+      .map(_.getLong(0)).toSet === Set(7L, 12L))
+  }
+
   test("streaming minhash near-dup edges: bucket owners, star edges, cross-batch state") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

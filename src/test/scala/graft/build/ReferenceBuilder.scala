@@ -125,17 +125,14 @@ object ReferenceBuilder {
         col("p.maxTf").as("maxTf"), col("p.blob").as("blob"))
   }
 
-  /** `prod` with its postings and termStats rebuilt by the reference
-    * from its own docs table (same docIds, same corpus stats). */
+  /** `prod` with its postings rebuilt by the reference from its own
+    * docs table (same docIds, same corpus stats). */
   def index(
       prod: InvertedIndex,
       tokenized: Seq[String],
-      untokenized: Seq[String]): InvertedIndex = {
-    val p = postings(prod.docs, tokenized, untokenized, prod.config)
-    val termStats = p.groupBy("field", "term").agg(
-      sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"))
-    new InvertedIndex(prod.docs, p, termStats, () => prod.stats, prod.config)
-  }
+      untokenized: Seq[String]): InvertedIndex =
+    new InvertedIndex(prod.docs, postings(prod.docs, tokenized, untokenized, prod.config),
+      () => prod.stats, prod.config)
 
   /** Hash-aggregation segment merge: collect each (field, term, shard)
     * group's partial blobs ordered by first docId, then merge them. */
@@ -144,12 +141,8 @@ object ReferenceBuilder {
       cfg: IndexConfig): DataFrame = {
     val spark = partials.sparkSession
     import spark.implicits._
-    val in =
-      if (cfg.buildPartitions > 0)
-        partials.repartition(cfg.buildPartitions, col("field"), col("term"), col("shard"))
-      else partials
     val firstDocUdf = udf((b: Array[Byte]) => PostingsCodec.blobFirstMinDoc(b))
-    in.withColumn("firstDoc", firstDocUdf(col("blob")))
+    partials.withColumn("firstDoc", firstDocUdf(col("blob")))
       .groupBy("field", "term", "shard")
       .agg(
         sum("df").as("df"), sum("cf").as("cf"), max("maxTf").as("maxTf"),

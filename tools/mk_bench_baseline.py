@@ -28,7 +28,7 @@ print(f"Corpus: deterministic synthetic source-code corpus (CodeCorpus, "
       f"(/root/repo/BASELINE.md); these are the engine's own "
       f"measurements per the driver protocol.\n")
 print("Build = full table → committed index snapshots (docs, postings, "
-      "termStats, stats) including all writes; fresh JVM per "
+      "stats.json) including all writes; fresh JVM per "
       "measurement; min of repetitions per level (run-to-run variance "
       "on this shared VM measured at ±40%, ~10% hypervisor steal "
       "observed under load).\n")
