@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
 import graft.codec.PostingsCodec
-import graft.model.{CodeDoc, CorpusStats, Posting}
+import graft.model.{CodeDoc, CorpusStats, Phases, Posting}
 
 /** Build configuration.
   *
@@ -40,7 +40,8 @@ final case class IndexConfig(
   *   docs      — (docId, dl, content_sha256, + source columns)
   *   postings  — (field, term, shard, df, cf, maxTf, blob)
   *   termStats — (field, term, df, cf, maxTf): the term dictionary,
-  *               always `termStatsOf(postings)` (shards merged)
+  *               `termStatsOf(postings)` (shards merged); on a cached
+  *               index, the driver-side dictionary's rows (`cache()`)
   *   stats     — broadcastable corpus stats (N, avgdl)
   *   deletes   — (docId) tombstones: docs excluded from every query
   *               path at read time (Lucene delete semantics — the
@@ -53,7 +54,6 @@ final case class IndexConfig(
 final class InvertedIndex private (
     val docs: DataFrame,
     val postings: DataFrame,
-    val termStats: DataFrame,
     statsThunk: () => CorpusStats,
     val config: IndexConfig,
     val deletes: Option[DataFrame],
@@ -62,13 +62,27 @@ final class InvertedIndex private (
     derived: Boolean,
     /** Set by `cache()`: docs plus its shard column, hash-partitioned
       * on it and cached; `docs` is this frame without the column. */
-    cachedShardDocs: Option[DataFrame]) {
+    cachedShardDocs: Option[DataFrame],
+    /** Set by `cache()`: the driver-side dictionary of the cached
+      * postings, shared by tombstoned copies. */
+    dictSlot: Option[TermDictionary.Slot]) {
 
   def this(docs: DataFrame, postings: DataFrame,
       statsThunk: () => CorpusStats, config: IndexConfig,
       deletes: Option[DataFrame] = None) =
-    this(docs, postings, InvertedIndex.termStatsOf(postings), statsThunk, config, deletes,
-      false, None)
+    this(docs, postings, statsThunk, config, deletes, false, None, None)
+
+  private lazy val mergedTermStats = InvertedIndex.termStatsOf(postings)
+
+  /** The merged term dictionary (field, term, df, cf, maxTf). On a
+    * cached index the first use fetches the driver-side dictionary
+    * (`cache()`). */
+  def termStats: DataFrame = dictSlot.fold(mergedTermStats)(_.termStats)
+
+  /** The driver-side dictionary of a cached index within its bound
+    * (`cache()`), fetched on first use; None on any other index, which
+    * reads its dictionary from the postings per query. */
+  private[graft] def dictionary: Option[TermDictionary] = dictSlot.flatMap(_.dictionary)
 
   /** Corpus stats are LAZY: computed on first query, not at build
     * time — the build/write path derives them from the written docs
@@ -91,9 +105,11 @@ final class InvertedIndex private (
   def undeleteAll(): InvertedIndex =
     if (deletes.isEmpty) this else withDeleteSet(None)
 
+  /** The same index with another tombstone set: tables, stats and the
+    * dictionary carry over (df stays stale until a physical apply). */
   private def withDeleteSet(del: Option[DataFrame]): InvertedIndex =
-    new InvertedIndex(docs, postings, termStats, statsThunk, config, del, derived,
-      cachedShardDocs)
+    new InvertedIndex(docs, postings, statsThunk, config, del, derived,
+      cachedShardDocs, dictSlot)
 
   /** `docs` with its doc-range shard in column `InvertedIndex.ShardCol`:
     * on a cached index the cached frame, hash-partitioned on it like
@@ -107,28 +123,55 @@ final class InvertedIndex private (
     * doc-range shard, are hash-partitioned on the shard into the
     * session's default parallelism and cached, so the shard cogroup of
     * every query on it reads both sides where they sit — no exchange.
-    * The dictionary is aggregated from the cached postings and cached
-    * too; a derived index re-derives corpus stats from the cached docs
+    * A derived index re-derives corpus stats from the cached docs
     * (never from the build lineage); tombstones carry over. `docs`
     * keeps its columns, so applying deletes or writing the cached index
-    * writes the same tables. On a cached index, re-marks its frames for
-    * caching and returns it. */
+    * writes the same tables.
+    *
+    * The cached index also keeps its term dictionary on the driver
+    * (`TermDictionary`): each posting row's (field, term, shard, df,
+    * cf, maxTf), no blob, sorted by (field, term, shard). Its first use
+    * — `termStats`, or the first query — fetches it by ONE bounded
+    * collect on the cached postings, which also materializes their
+    * cache. Query metadata (term dfs and shard sets), `docFreqs`,
+    * `termEnum` and every multi-term expansion then read it with no
+    * Spark job. BOUND: the driver budget is the session's
+    * `spark.sql.autoBroadcastJoinThreshold` at `cache()` time, charged
+    * `TermDictionary.RowBytes` (128) bytes per posting row — 81,920
+    * rows at the 10 MiB default — and the collect takes at most one
+    * row more. FALLBACK: a dictionary over the bound (or a disabled
+    * threshold) is not held; the cached index then aggregates
+    * `termStats` over its cached postings and caches it, and each query
+    * collects its metadata from the postings, as an uncached index
+    * does. `unpersist()` drops the dictionary.
+    *
+    * On a cached index, re-marks its frames for caching and returns it;
+    * a dictionary dropped by `unpersist()` is fetched again on next use. */
   def cache(): InvertedIndex = cachedShardDocs match {
     case Some(sd) =>
-      sd.cache(); postings.cache(); termStats.cache(); this
+      sd.cache(); postings.cache(); dictSlot.foreach(_.rearm()); this
     case None =>
-      val n = postings.sparkSession.sparkContext.defaultParallelism
+      val spark = postings.sparkSession
+      val n = spark.sparkContext.defaultParallelism
       val p = postings.withColumn("shard", InvertedIndex.nonNullShard(col("shard")))
         .repartition(n, col("shard")).cache()
       val sd = docsWithShard.repartition(n, col(InvertedIndex.ShardCol)).cache()
       val d = sd.drop(InvertedIndex.ShardCol)
       val st = if (derived) () => InvertedIndex.corpusStatsOf(d) else statsThunk
-      new InvertedIndex(d, p, InvertedIndex.termStatsOf(p).cache(), st, config, deletes,
-        derived, Some(sd))
+      val maxRows = math.min(spark.sessionState.conf.autoBroadcastJoinThreshold /
+        TermDictionary.RowBytes, Int.MaxValue - 1L).toInt
+      new InvertedIndex(d, p, st, config, deletes, derived, Some(sd),
+        Some(new TermDictionary.Slot(p, maxRows)))
   }
 
-  def unpersist(): Unit =
-    (Seq(docs, postings, termStats) ++ cachedShardDocs).foreach(_.unpersist())
+  /** Unpersist the cached frames and drop the driver-side dictionary. */
+  def unpersist(): Unit = {
+    (Seq(docs, postings) ++ cachedShardDocs).foreach(_.unpersist())
+    dictSlot match {
+      case Some(slot) => slot.release()
+      case None => mergedTermStats.unpersist(); ()
+    }
+  }
 }
 
 object InvertedIndex {
@@ -141,8 +184,7 @@ object InvertedIndex {
     * lazily on first query from the dl column (`corpusStatsOf`) — no
     * extra pass over the corpus at build time. */
   def derived(docs: DataFrame, postings: DataFrame, config: IndexConfig): InvertedIndex =
-    new InvertedIndex(docs, postings, termStatsOf(postings), () => corpusStatsOf(docs), config,
-      None, true, None)
+    new InvertedIndex(docs, postings, () => corpusStatsOf(docs), config, None, true, None, None)
 
   /** Shard column of `docsWithShard` — a name no source table uses, so
     * a source column called `shard` keeps its values. */
@@ -190,6 +232,12 @@ object InvertedIndex {
 object IndexBuilder {
 
   val TokenizedField = "content"
+
+  /** Job description of the jobs a build entry point launches itself:
+    * the source's schema read and the docId assignment. The build's
+    * tokenize and merge are lazy; they run in the job that first reads
+    * the postings (`IndexTables.PostingsPhase` for a write). */
+  private[graft] val BuildPhase = "graft build: source + docIds"
 
   /** Growable unboxed int buffer for per-(doc, term) positions —
     * ArrayBuffer[Int] would box every position. */
@@ -727,8 +775,10 @@ object IndexBuilder {
       path: String,
       fileRows: Seq[(String, Long)],
       cfg: IndexConfig = IndexConfig()): InvertedIndex =
-    build(spark, tableWithIds(spark, path, fileRows, cfg.analyzer),
-      Seq(TokenizedField), Seq("path", "lang"), cfg)
+    Phases.described(spark, BuildPhase) {
+      build(spark, tableWithIds(spark, path, fileRows, cfg.analyzer),
+        Seq(TokenizedField), Seq("path", "lang"), cfg)
+    }
 
   /** The annotated code-corpus docs DataFrame (docId from file-offset
     * metadata, docKey, sha256, dl) — the input of the parquet-table
@@ -819,7 +869,7 @@ object IndexBuilder {
   def fromCodeDocs(
       spark: SparkSession,
       ds: Dataset[CodeDoc],
-      cfg: IndexConfig = IndexConfig()): InvertedIndex = {
+      cfg: IndexConfig = IndexConfig()): InvertedIndex = Phases.described(spark, BuildPhase) {
     val nPart = spark.sessionState.conf.numShufflePartitions
     val keyed = ds.toDF()
       .withColumn("docKey",

@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, count, lit}
 
 /** Core data model for the graft inverted-index engine.
@@ -86,5 +86,21 @@ object Checkpoints {
   private[graft] def bcastIfFits(df: DataFrame, n: Long, bytesPerRow: Long): DataFrame = {
     val t = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     if (t > 0 && n * bytesPerRow <= t) broadcast(df) else df.hint("merge")
+  }
+}
+
+private[graft] object Phases {
+
+  /** Run `body` with the Spark jobs it launches described as `phase`
+    * (the `spark.job.description` local property: the stage jobs AQE
+    * submits for a query carry it too, where their call site is only
+    * AQE's own), restoring the caller's description after. Local
+    * properties are per thread: a thread started inside `body` inherits
+    * the description. */
+  private[graft] def described[T](spark: SparkSession, phase: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val was = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(phase)
+    try body finally sc.setJobDescription(was)
   }
 }

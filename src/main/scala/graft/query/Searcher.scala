@@ -62,13 +62,15 @@ final class Searcher(
 
   private def stats = index.stats
 
-  /** Per-query posting METADATA — collected ONCE per query (term dfs +
-    * the touched doc-range shard set together) instead of one job for
-    * docFreqs plus another for touched-shard discovery. The collect
-    * reads (term, shard, df) only — parquet column pruning keeps the
-    * blob pages untouched — and its size is the query's (term, shard)
-    * row count (≤ Σ_term ceil(N/shardSize)), a few MB even for a
-    * corpus-wide term at 10^12 docs with 2^20-doc shards. */
+  /** Per-query posting METADATA — read ONCE per query (term dfs + the
+    * touched doc-range shard set together): the query terms'
+    * (term, shard, df) rows. A cached index within its dictionary bound
+    * looks them up in its driver-side dictionary (`InvertedIndex.cache`)
+    * with no Spark job; any other index collects them from the postings
+    * — (term, shard, df) only, so parquet column pruning keeps the blob
+    * pages untouched — and the collect's size is the query's
+    * (term, shard) row count (≤ Σ_term ceil(N/shardSize)), a few MB even
+    * for a corpus-wide term at 10^12 docs with 2^20-doc shards. */
   private final class QueryMeta(rows: Array[(String, Long, Long)]) {
     /** Global df per term (Σ over shards == termStats df). */
     val dfs: Map[String, Long] =
@@ -99,10 +101,13 @@ final class Searcher(
   }
 
   private def collectMeta(terms: Seq[String]): QueryMeta =
-    new QueryMeta(index.postings
-      .where(col("field") === field && col("term").isin(terms: _*))
-      .select("term", "shard", "df")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))))
+    new QueryMeta(index.dictionary match {
+      case Some(d) => d.shardRows(field, terms)
+      case None => index.postings
+        .where(col("field") === field && col("term").isin(terms: _*))
+        .select("term", "shard", "df")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    })
 
   /** Restrict a DataFrame with a `shard` column to the given shard set
     * WITHOUT launching a job: a literal In-filter for small sets (stays
@@ -239,12 +244,9 @@ final class Searcher(
       }
     }
 
-  /** df per query term from the global dictionary (reference A10). */
-  def docFreqs(terms: Seq[String]): Map[String, Long] =
-    index.termStats
-      .where(col("field") === field && col("term").isin(terms: _*))
-      .select("term", "df").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+  /** df per query term from the global dictionary (reference A10);
+    * terms absent from it have no entry. */
+  def docFreqs(terms: Seq[String]): Map[String, Long] = collectMeta(terms).dfs
 
   /** Every hit of a term query as (docId, score, nMatched): the
     * all-hits form of `topK` (same arguments, same scores) on the one
@@ -744,7 +746,9 @@ final class Searcher(
   /** Constant-score query (Lucene ConstantScoreQuery /
     * ConstantScoreRangeQuery — the 3.0-era CONSTANT_SCORE rewrite of
     * every MultiTermQuery): docs matching ANY dictionary term under
-    * `pred` at score = `boost`, docId order — matching as a FILTER,
+    * `pred` (a predicate over the postings' columns, evaluated per
+    * posting row: a term matches in the shards whose row passes it) at
+    * score = `boost`, docId order — matching as a FILTER,
     * deliberately skipping the per-term idf arithmetic and its
     * TooManyClauses cap (the whole reason the rewrite exists). The
     * match set decodes only the predicate terms' postings; tombstones
@@ -754,35 +758,51 @@ final class Searcher(
       k: Int,
       boost: Double = 1.0,
       docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    // the predicate pushes straight into the POSTINGS scan — no
-    // dictionary collect, no expansion list on the driver: a
-    // constant-score query has no per-term state, so an arbitrarily
-    // wide predicate streams through one decode + distinct
     val prows = index.postings.where(col("field") === field && pred)
-    // one metadata collect, AGGREGATED in Spark: the driver receives a
-    // single (shard set, Σ df) row — never per-(term, shard) rows. The
-    // open-ended predicate is the whole point of the constant-score
-    // rewrite, so its expansion can be vocabulary-sized: a broad
-    // predicate over a 100-TB corpus has millions of matching terms ×
-    // their shards, but the DISTINCT shard set is bounded by
-    // ceil(N/shardSize) (~10^6 longs at 10^12 docs) regardless of how
-    // many terms match. Columns only — blob pages stay untouched.
-    val metaRow = prows
-      .agg(collect_set("shard").as("shards"), sum("df").as("totDf"))
-      .collect().head
-    if (metaRow.isNullAt(1)) return emptyHits
-    val shards = metaRow.getSeq[Long](0).toArray.sorted
-    val totDf = metaRow.getLong(1)
-    val matched = prows.as[PostingRow].flatMap { r =>
-      new PostingsCodec.BlobView(r.blob).allDocTfs.map(_._1)
-    }.toDF("docId").distinct()
-    // bounded match set (Σ df known) broadcasts into a semi-join
-    // against the live side — the second corpus-sized shuffle the
-    // first cut paid (matched ⋈ live both exchanged) disappears; same
-    // gate as facetCounts
-    pruneShards(dlWithShard(docFilter), shards).select("docId")
-      .join(bcastIfFits(matched, totDf, 16L), Seq("docId"), "left_semi")
-      .withColumn("score", lit(boost))
+    val matched = index.dictionary.filter(_ => Searcher.filtersTermsOnly(prows)) match {
+      // a cached index within its dictionary bound, under a predicate
+      // that every posting row of a term passes or fails alike: the
+      // predicate runs over the driver-side dictionary (a local
+      // relation, no job) and its terms' live docs are gathered on the
+      // shard scaffold — one job, no exchange on the cached index
+      case Some(d) =>
+        val terms = d.termStats.where(col("field") === field && pred)
+          .select("term").collect().map(_.getString(0)).toSeq
+        val shards = collectMeta(terms).shards
+        if (shards.isEmpty) return emptyHits
+        perShard[Long](terms, shards, docFilter) { (rows, dlMap) =>
+          rows.iterator.flatMap(r => new PostingsCodec.BlobView(r.blob).allDocTfs.map(_._1))
+            .filter(dlMap.contains).distinct
+        }.toDF("docId")
+      // otherwise the predicate pushes straight into the POSTINGS scan
+      // — no expansion list on the driver: a constant-score query has
+      // no per-term state, so an arbitrarily wide predicate streams
+      // through one decode + distinct. ONE metadata collect,
+      // AGGREGATED in Spark: the driver receives a single
+      // (shard set, Σ df) row — never per-(term, shard) rows. The
+      // open-ended predicate is the whole point of the constant-score
+      // rewrite, so its expansion can be vocabulary-sized: a broad
+      // predicate over a 100-TB corpus has millions of matching terms
+      // × their shards, but the DISTINCT shard set is bounded by
+      // ceil(N/shardSize) (~10^6 longs at 10^12 docs) regardless of
+      // how many terms match. Columns only — blob pages stay untouched.
+      case None =>
+        val metaRow = prows
+          .agg(collect_set("shard").as("shards"), sum("df").as("totDf"))
+          .collect().head
+        if (metaRow.isNullAt(1)) return emptyHits
+        val shards = metaRow.getSeq[Long](0).toArray.sorted
+        val docIds = prows.as[PostingRow].flatMap { r =>
+          new PostingsCodec.BlobView(r.blob).allDocTfs.map(_._1)
+        }.toDF("docId").distinct()
+        // bounded match set (Σ df known) broadcasts into a semi-join
+        // against the live side — the second corpus-sized shuffle the
+        // first cut paid (matched ⋈ live both exchanged) disappears;
+        // same gate as facetCounts
+        pruneShards(dlWithShard(docFilter), shards).select("docId")
+          .join(bcastIfFits(docIds, metaRow.getLong(1), 16L), Seq("docId"), "left_semi")
+    }
+    matched.withColumn("score", lit(boost))
       .orderBy(asc("docId")).limit(k)
       .select("docId", "score")
   }
@@ -861,9 +881,7 @@ final class Searcher(
   /** Ordered term-dictionary scan from a given term (reference C1/A6,
     * HBaseTermEnum.skipTo). */
   def termEnum(fromTerm: String, limit: Int): DataFrame =
-    index.termStats
-      .where(col("field") === field && col("term") >= fromTerm)
-      .orderBy(asc("term"))
+    inDictionaryOrder(col("field") === field && col("term") >= fromTerm, asc("term"))
       .limit(limit)
       .select("term", "df", "cf")
 
@@ -872,12 +890,21 @@ final class Searcher(
     * keyspace, not one field (HBaseTermEnum.java:86-100;
     * TestHBaseTermEnum.java:61-72 asserts multiple fields appear). */
   def termEnumAll(fromField: String, fromTerm: String, limit: Int): DataFrame =
-    index.termStats
-      .where(col("field") > fromField
-        || (col("field") === fromField && col("term") >= fromTerm))
-      .orderBy(asc("field"), asc("term"))
+    inDictionaryOrder(col("field") > fromField
+        || (col("field") === fromField && col("term") >= fromTerm),
+      asc("field"), asc("term"))
       .limit(limit)
       .select("field", "term", "df", "cf")
+
+  /** The merged dictionary rows under `pred` in (field, term) order
+    * (`order` spells it): a driver-side dictionary holds its rows in
+    * that order already, so a limit over them plans as a local relation
+    * (no job); any other dictionary is ordered in Spark. */
+  private def inDictionaryOrder(pred: Column, order: Column*): DataFrame =
+    index.dictionary match {
+      case Some(d) => d.termStats.where(pred)
+      case None => index.termStats.where(pred).orderBy(order: _*)
+    }
 
   /** Expand dictionary terms matching a predicate, term-ascending,
     * bounded: the scale contract of every Lucene MultiTermQuery the
@@ -885,12 +912,11 @@ final class Searcher(
     * rewrite throws TooManyClauses past the clause cap). `q` is the
     * (predicate, label) pair of one of the per-kind functions below.
     * The collect is ≤ maxExpansions+1 strings — driver-bounded by
-    * construction. */
+    * construction — and, over a driver-side dictionary, runs no job. */
   private def expandTerms(q: (Column, String), maxExpansions: Int): Seq[String] = {
     val (pred, label) = q
-    val ts = index.termStats
-      .where(col("field") === field && pred)
-      .orderBy(asc("term")).limit(maxExpansions + 1)
+    val ts = inDictionaryOrder(col("field") === field && pred, asc("term"))
+      .limit(maxExpansions + 1)
       .select("term").collect().map(_.getString(0)).toSeq
     require(ts.length <= maxExpansions,
       s"$label expands to more than maxExpansions=$maxExpansions terms " +
@@ -1358,6 +1384,18 @@ final class Searcher(
 }
 
 object Searcher {
+
+  /** Whether the filter on top of `rows` reads only the `field` and
+    * `term` columns: then all posting rows of one term pass it or fail
+    * it alike, and the merged dictionary rows decide it as the postings
+    * would. A filter on df, cf, maxTf or shard is decided per posting
+    * row, which the merged rows cannot do. */
+  private def filtersTermsOnly(rows: DataFrame): Boolean =
+    rows.queryExecution.analyzed match {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.references.forall(a => a.name == "field" || a.name == "term")
+      case _ => false
+    }
 
   /** One fresh TermIterator per (term, shard) posting row for a
     * positional kernel — no df and no score bound: positional kernels

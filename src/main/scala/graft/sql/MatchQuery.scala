@@ -45,7 +45,8 @@ object MatchQuery {
     * compaction at the same path) changes its manifests' timestamps,
     * so the stale entry simply stops being hit instead of serving old
     * data for the JVM lifetime. Stale entries are evicted and
-    * unpersisted on replacement (same root, new version). */
+    * unpersisted on replacement (same root, new version), which also
+    * drops their driver-side dictionary. */
   private val indexCache = TrieMap.empty[String, (String, InvertedIndex)]
 
   private def loadCached(spark: SparkSession, root: String): InvertedIndex = {

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{SparkSession}
 
 import graft.build.{IndexConfig, InvertedIndex}
-import graft.model.CorpusStats
+import graft.model.{CorpusStats, Phases}
 
 /** Persisted index = two committed tables under one root, docs and
   * postings, plus stats.json. Each table is a manifest-gated stage → a
@@ -22,13 +22,21 @@ object IndexTables {
 
   /** Write the index tables; stages already committed are skipped.
     * The two chains — docs → stats.json, and postings — run as
-    * concurrent Spark jobs (`TableFormat.concurrently`). Returns total
-    * rows written. */
+    * concurrent Spark jobs (`TableFormat.concurrently`), each described
+    * by its phase (`DocsPhase`, `PostingsPhase`). Returns total rows written. */
   def write(spark: SparkSession, idx: InvertedIndex, root: String): Long = {
-    val (mDocs, mPost) = TableFormat.concurrently(writeDocsAndStats(spark, idx, root),
-      TableFormat.write(spark, idx.postings, root, "postings"))
+    val (mDocs, mPost) = TableFormat.concurrently(
+      Phases.described(spark, DocsPhase)(writeDocsAndStats(spark, idx, root)),
+      Phases.described(spark, PostingsPhase)(
+        TableFormat.write(spark, idx.postings, root, "postings")))
     mDocs.rowCount + mPost.rowCount
   }
+
+  /** Job descriptions of `write`'s two chains. A built index's postings
+    * are lazy, so its tokenize (the merge shuffle's map side) and merge
+    * jobs run inside the postings write. */
+  private[graft] val DocsPhase = "graft write: docs + stats"
+  private[graft] val PostingsPhase = "graft write: postings (tokenize + merge)"
 
   /** The docs table, then stats.json from the WRITTEN docs (no
     * recompute of the build pipeline). */

@@ -98,51 +98,16 @@ class PersistenceSpec extends AnyFunSuite {
   }
 
   test("build + write: the job count and the one single-task job are pinned") {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
     val source = Files.createTempDirectory("graft_pin_src").resolve("t").toString
     graft.tools.CodeCorpus.generate(spark, 1000L, 10, 7L, 4).write.parquet(source)
     val dir = Files.createTempDirectory("graft_pin").toString
-    // job id → its stage ids; stage id → (name, tasks) for each stage
-    // that ran (a skipped stage is never submitted)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
-    val ran = new java.util.concurrent.ConcurrentHashMap[Int, (String, Int)]()
-    @volatile var drained = false
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case "build" => jobs.put(j.jobId, j.stageIds); ()
-          case "marker" => drained = true
-          case _ => ()
-        }
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-        ran.put(s.stageInfo.stageId, (s.stageInfo.name, s.stageInfo.numTasks)); ()
-      }
-    }
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("build", "build")
+    val (_, jobs) = JobCounts.withAqe(spark, "build", aqe = true) {
       IndexTables.write(spark, IndexBuilder.fromParquetTable(spark, source,
         IndexConfig(shardSizeDocs = 64, storeContent = false)), dir)
-      // the bus delivers in order: once the marker job's start arrived,
-      // every earlier event has too
-      sc.setJobGroup("marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (System.nanoTime() < deadline && !drained) Thread.sleep(20)
-      assert(drained, "listener bus did not drain")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     }
-    val stagesRun = jobs.asScala.toSeq.sortBy(_._1).map { case (_, ids) =>
-      ids.flatMap(id => Option(ran.get(id)))
-    }
-    val report = stagesRun.map(_.map { case (n, t) => s"$n×$t" }.mkString(" + "))
-      .mkString("; ")
+    val stagesRun = jobs.map(_.stages)
+    val report = jobs.map(j => s"[${j.description}] " +
+      j.stages.map { case (n, t) => s"$n×$t" }.mkString(" + ")).mkString("; ")
     assert(TableFormat.readManifest(dir, "docs").rowCount === 1000)
     // measured 6; 9 while the write also committed a termStats table
     assert(stagesRun.size <= 6, report)
@@ -152,6 +117,13 @@ class PersistenceSpec extends AnyFunSuite {
     val singleTask = stagesRun.filter(st => st.nonEmpty && st.forall(_._2 == 1))
     assert(singleTask.size === 1, report)
     assert(singleTask.head.forall(_._1.startsWith("parquet at IndexBuilder.scala")), report)
+    // every job names its phase, AQE's stage jobs included (their call
+    // site is AQE's own): the build's source read, the docs write with
+    // its stats, and the postings write that runs tokenize and merge
+    assert(jobs.map(_.description).toSet ===
+      Set(IndexBuilder.BuildPhase, IndexTables.DocsPhase, IndexTables.PostingsPhase), report)
+    assert(jobs.filter(_.description == IndexBuilder.BuildPhase).map(_.stages) ===
+      Seq(singleTask.head), report)
     info(report)
   }
 

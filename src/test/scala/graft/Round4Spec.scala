@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.build.{IndexBuilder, IndexConfig}
+import graft.build.{IndexBuilder, IndexConfig, InvertedIndex}
 import graft.codec.PostingsCodec
 import graft.model.{CodeDoc, CorpusStats, Posting}
 import graft.query.{BM25, ExhaustiveOracle, Searcher, TermIterator, Wand}
@@ -83,101 +83,286 @@ class Round4Spec extends AnyFunSuite {
     assert(ci.decodedPosBlocks < ci.decodedBlocks)
   }
 
-  test("topK runs at most 2 jobs (one metadata collect + one main job)") {
-    val idx = IndexBuilder.fromCodeDocs(spark, corpus(11L, 200).toDS(),
-      IndexConfig(shardSizeDocs = 64)).cache()
-    idx.postings.count(); idx.docs.count(); idx.stats // warm + force lazy stats
-    val s = new Searcher(spark, idx)
+  /** (shape, run) of every job-pinned query shape over `s`; each run
+    * returns its answer. */
+  private def pinShapes(s: Searcher, idx: InvertedIndex): Seq[(String, () => Any)] = {
+    import org.apache.spark.sql.functions.col
     val dels = Seq(3L, 70L, 140L).toDF("docId")
-    // (shape, max jobs, run): each cap is the count measured before the
-    // pruned query paths shared one shard cogroup; the small-set delete
-    // apply is one action below that measurement (one bounded collect
-    // replaced a count followed by a collect); the field-sorted and
-    // boolean phrase-mix caps are the counts measured before topK and
-    // the all-hits scorer each became one path; the positional caps
-    // (phrase, multi-phrase, NEAR, spanNot, spanFirst), the phrase mix
-    // and groupedTopK hold once the phrase df is observed on the match
-    // set's checkpoint job and each query collects its metadata once
-    // (measured before: 4, 4, 4, 4, 5, 6 and 6 jobs); field sort, the
-    // phrase mix and groupedTopK drop one more job each once the
-    // clause scorer reads every clause in one shard pass with no dl
-    // broadcast (measured before: 4, 4 and 5 jobs)
-    val pins: Seq[(String, Int, () => Unit)] = Seq(
-      ("topK", 2, () => s.topK(Seq("alpha", "rare2"), 5).collect()),
-      ("sortedTopK", 3, () => s.sortedTopK(Seq("alpha", "rare2"), "path", true, 5).collect()),
-      ("search phrase mix", 3, () => s.search("+\"alpha beta\" gamma", 5).collect()),
-      ("phraseTopK", 3, () => s.phraseTopK(Seq("alpha", "beta"), 5).collect()),
-      ("multiPhraseTopK", 3, () =>
-        s.multiPhraseTopK(Seq(Seq("alpha"), Seq("beta", "gamma")), 5).collect()),
-      ("nearTopK", 3, () => s.nearTopK("alpha", "beta", 3, 5).collect()),
-      ("spanNotTopK", 3, () => s.spanNotTopK("alpha", "beta", 5, 1, 1).collect()),
-      ("spanFirstTopK", 3, () => s.spanFirstTopK("alpha", 3, 5).collect()),
-      ("groupedTopK", 4, () => s.groupedTopK(Seq("alpha", "rare2"), "path", 2).collect()),
-      ("dismaxTopK", 2, () => s.dismaxTopK(Seq("alpha", "beta"), 5, 0.3).collect()),
-      ("Deletes.appliedWith small set", 1, () =>
-        graft.build.Deletes.appliedWith(spark, idx, dels)))
-    pins.foreach(_._3()) // warm codegen paths
-    val sc = spark.sparkContext
+    def rows(df: => org.apache.spark.sql.DataFrame): () => Any = () => df.collect().toSeq
+    Seq(
+      "topK" -> rows(s.topK(Seq("alpha", "rare2"), 5)),
+      "sortedTopK" -> rows(s.sortedTopK(Seq("alpha", "rare2"), "path", true, 5)),
+      "search phrase mix" -> rows(s.search("+\"alpha beta\" gamma", 5)),
+      "phraseTopK" -> rows(s.phraseTopK(Seq("alpha", "beta"), 5)),
+      "multiPhraseTopK" -> rows(s.multiPhraseTopK(Seq(Seq("alpha"), Seq("beta", "gamma")), 5)),
+      "nearTopK" -> rows(s.nearTopK("alpha", "beta", 3, 5)),
+      "spanNotTopK" -> rows(s.spanNotTopK("alpha", "beta", 5, 1, 1)),
+      "spanFirstTopK" -> rows(s.spanFirstTopK("alpha", 3, 5)),
+      "groupedTopK" -> rows(s.groupedTopK(Seq("alpha", "rare2"), "path", 2)),
+      "dismaxTopK" -> rows(s.dismaxTopK(Seq("alpha", "beta"), 5, 0.3)),
+      "Deletes.appliedWith small set" -> (() => {
+        graft.build.Deletes.appliedWith(spark, idx, dels); Nil
+      }),
+      "prefixTopK" -> rows(s.prefixTopK("ga", 5)),
+      "wildcardTopK" -> rows(s.wildcardTopK("*ta", 5)),
+      "fuzzyTopK" -> rows(s.fuzzyTopK("alpah", 5)),
+      "rangeTopK" -> rows(s.rangeTopK(Some("d"), Some("f"), 5)),
+      "regexpTopK" -> rows(s.regexpTopK("(beta|eta)", 5)),
+      "constantScoreTopK" -> rows(s.constantScoreTopK(col("term").startsWith("ra"), 5)),
+      "termEnum" -> rows(s.termEnum("d", 5)),
+      "docFreqs" -> (() => s.docFreqs(Seq("alpha", "rare2", "zzz_missing"))))
+  }
 
-    /** Jobs each pin launched, run under its own job group. */
-    def jobCounts(aqe: Boolean): Map[String, Int] = {
-      val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-          if (g != null) jobs.merge(g, 1, (a, b) => a + b)
-          ()
-        }
-      }
-      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
-      sc.addSparkListener(listener)
-      try {
-        pins.foreach { case (name, _, run) =>
-          sc.setJobGroup(name, name)
-          run()
-        }
-        // the bus delivers in order: once the marker job's start arrived,
-        // every earlier job start has too
-        sc.setJobGroup("marker", "marker")
-        sc.parallelize(Seq(1), 1).count()
-        val deadline = System.nanoTime() + 10_000_000_000L
-        while (System.nanoTime() < deadline && !jobs.containsKey("marker")) Thread.sleep(20)
-        assert(jobs.containsKey("marker"), "listener bus did not drain")
-        pins.map { case (name, _, _) =>
-          name -> Option(jobs.get(name)).map(_.intValue).getOrElse(0)
-        }.toMap
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
+  /** Jobs each pin shape launched, each run under its own job group. */
+  private def jobCounts(shapes: Seq[(String, () => Any)], aqe: Boolean): Map[String, Int] =
+    shapes.map { case (name, run) =>
+      name -> JobCounts.withAqe(spark, name, aqe)(run())._2.size
+    }.toMap
+
+  /** Every pin over its cap, named in one failure. */
+  private def assertCaps(label: String, counts: Map[String, Int],
+      caps: Seq[(String, Int)]): Unit = {
+    val over = caps.flatMap { case (name, cap) =>
+      if (counts(name) > cap) Some(s"$name launched ${counts(name)} jobs (cap $cap)")
+      else None
     }
+    assert(over.isEmpty, s"$label: " + over.mkString("; "))
+  }
 
-    /** Every pin over its cap, named in one failure. */
-    def assertCaps(label: String, counts: Map[String, Int], caps: Seq[(String, Int)]): Unit = {
-      val over = caps.flatMap { case (name, cap) =>
-        if (counts(name) > cap) Some(s"$name launched ${counts(name)} jobs (cap $cap)")
-        else None
-      }
-      assert(over.isEmpty, s"$label: " + over.mkString("; "))
-    }
+  /** The pin corpus, uncached. */
+  private def pinIndex: InvertedIndex =
+    IndexBuilder.fromCodeDocs(spark, corpus(11L, 200).toDS(), IndexConfig(shardSizeDocs = 64))
 
-    // AQE submits each shuffle-stage materialization as its own job
-    // inside the ONE main query — those are not extra driver actions.
-    // With AQE off the job count equals the action count being asserted
-    // (topK: 1 metadata collect + 1 main query).
-    assertCaps("AQE off", jobCounts(aqe = false), pins.map(p => (p._1, p._2)))
-    // With AQE on, the shard cogroup of a cached index has no shuffle
-    // stage to materialize, so the scaffold's shapes hold the same caps
-    // (measured before the cached index was shard-partitioned: 4 jobs
-    // for topK and dismax, 5 for the positional shapes). The phrase mix
-    // folds each doc in its shard: metadata, checkpoint and final job,
-    // with no shuffle stage (measured before the fold left SQL: 4)
-    assertCaps("AQE on", jobCounts(aqe = true), Seq("topK" -> 2, "dismaxTopK" -> 2,
-      "phraseTopK" -> 3, "multiPhraseTopK" -> 3, "nearTopK" -> 3, "spanNotTopK" -> 3,
-      "spanFirstTopK" -> 3, "search phrase mix" -> 3))
+  /** `idx.cache()` with the dictionary's driver budget (the session
+    * broadcast threshold at `cache()`) set to `bytes`. */
+  private def cachedWithBudget(idx: InvertedIndex, bytes: Long): InvertedIndex = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, bytes.toString)
+    try idx.cache() finally spark.conf.set(key, was)
+  }
+
+  /** AQE-off caps of a cached index that collects its metadata per
+    * query (no driver-side dictionary). Each cap of the original shapes
+    * is the count measured before the pruned query paths shared one
+    * shard cogroup; the small-set delete apply is one action below that
+    * measurement (one bounded collect replaced a count followed by a
+    * collect); the field-sorted and boolean phrase-mix caps are the
+    * counts measured before topK and the all-hits scorer each became
+    * one path; the positional caps (phrase, multi-phrase, NEAR,
+    * spanNot, spanFirst), the phrase mix and groupedTopK hold once the
+    * phrase df is observed on the match set's checkpoint job and each
+    * query collects its metadata once (measured before: 4, 4, 4, 4, 5,
+    * 6 and 6 jobs); field sort, the phrase mix and groupedTopK drop one
+    * more job each once the clause scorer reads every clause in one
+    * shard pass with no dl broadcast (measured before: 4, 4 and 5
+    * jobs). An expansion adds its dictionary scan to the metadata
+    * collect and the main job; constantScoreTopK's aggregated metadata
+    * collect precedes the semi-join's broadcast job and the main job. */
+  private val collectingCapsAqeOff = Seq("topK" -> 2, "sortedTopK" -> 3,
+    "search phrase mix" -> 3, "phraseTopK" -> 3, "multiPhraseTopK" -> 3, "nearTopK" -> 3,
+    "spanNotTopK" -> 3, "spanFirstTopK" -> 3, "groupedTopK" -> 4, "dismaxTopK" -> 2,
+    "Deletes.appliedWith small set" -> 1, "prefixTopK" -> 3, "wildcardTopK" -> 3,
+    "fuzzyTopK" -> 3, "rangeTopK" -> 3, "regexpTopK" -> 3, "constantScoreTopK" -> 3,
+    "termEnum" -> 1, "docFreqs" -> 1)
+
+  /** AQE-on caps of the same. AQE submits each shuffle-stage
+    * materialization as its own job inside the ONE main query; the
+    * shard cogroup of a cached index has none, so the scaffold's shapes
+    * hold the AQE-off caps (measured before the cached index was
+    * shard-partitioned: 4 jobs for topK and dismax, 5 for the
+    * positional shapes). The phrase mix folds each doc in its shard:
+    * metadata, checkpoint and final job, with no shuffle stage
+    * (measured before the fold left SQL: 4). */
+  private val collectingCapsAqeOn = Seq("topK" -> 2, "dismaxTopK" -> 2,
+    "phraseTopK" -> 3, "multiPhraseTopK" -> 3, "nearTopK" -> 3, "spanNotTopK" -> 3,
+    "spanFirstTopK" -> 3, "search phrase mix" -> 3)
+
+  test("topK runs one job: a cached index reads its query metadata on the driver") {
+    val idx = pinIndex.cache()
+    idx.postings.count(); idx.docs.count(); idx.stats // warm + force lazy stats
+    assert(idx.dictionary.nonEmpty)
+    val shapes = pinShapes(new Searcher(spark, idx), idx)
+    shapes.foreach(_._2()) // warm codegen paths
+    // every metadata collect and dictionary scan of the collecting caps
+    // reads the driver-side dictionary instead: topK, dismax and every
+    // expansion run their main job alone, the positional shapes their
+    // checkpoint and final job, and termEnum / docFreqs run none.
+    // constantScoreTopK gathers its terms' live docs on the shard
+    // scaffold: one job
+    assertCaps("AQE off", jobCounts(shapes, aqe = false), Seq("topK" -> 1, "sortedTopK" -> 2,
+      "search phrase mix" -> 2, "phraseTopK" -> 2, "multiPhraseTopK" -> 2, "nearTopK" -> 2,
+      "spanNotTopK" -> 2, "spanFirstTopK" -> 2, "groupedTopK" -> 3, "dismaxTopK" -> 1,
+      "Deletes.appliedWith small set" -> 1, "prefixTopK" -> 1, "wildcardTopK" -> 1,
+      "fuzzyTopK" -> 1, "rangeTopK" -> 1, "regexpTopK" -> 1, "constantScoreTopK" -> 1,
+      "termEnum" -> 0, "docFreqs" -> 0))
+    assertCaps("AQE on", jobCounts(shapes, aqe = true), Seq("topK" -> 1, "dismaxTopK" -> 1,
+      "phraseTopK" -> 2, "multiPhraseTopK" -> 2, "nearTopK" -> 2, "spanNotTopK" -> 2,
+      "spanFirstTopK" -> 2, "search phrase mix" -> 2, "prefixTopK" -> 1, "wildcardTopK" -> 1,
+      "fuzzyTopK" -> 1, "rangeTopK" -> 1, "regexpTopK" -> 1, "constantScoreTopK" -> 1,
+      "termEnum" -> 0, "docFreqs" -> 0))
     idx.unpersist()
+  }
+
+  test("a cached index over its dictionary bound answers alike from per-query collects") {
+    val uncached = pinIndex
+    val inBound = uncached.cache()
+    // 1 KiB of driver budget holds 8 dictionary rows; the index has more
+    val over = cachedWithBudget(uncached, 1024L)
+    try {
+      assert(inBound.dictionary.nonEmpty && over.dictionary.isEmpty)
+      val (si, so) = (new Searcher(spark, inBound), new Searcher(spark, over))
+      val (want, got) = (pinShapes(si, inBound), pinShapes(so, over))
+      got.foreach(_._2())
+      for (((name, w), (_, g)) <- want.zip(got)) assert(g() == w(), name)
+      assert(so.termEnum("", 1000).collect().toSeq === si.termEnum("", 1000).collect().toSeq)
+      assert(so.termEnumAll("", "", 1000).collect().toSeq ===
+        si.termEnumAll("", "", 1000).collect().toSeq)
+      def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+      assert(sorted(over.termStats) === sorted(inBound.termStats))
+      assertCaps("AQE off", jobCounts(got, aqe = false), collectingCapsAqeOff)
+      assertCaps("AQE on", jobCounts(got, aqe = true), collectingCapsAqeOn)
+    } finally { inBound.unpersist(); over.unpersist() }
+  }
+
+  test("constantScoreTopK decides a df or shard predicate per posting row, cached or not") {
+    import org.apache.spark.sql.functions.{col, min}
+    val uncached = pinIndex
+    val cached = uncached.cache()
+    try {
+      assert(cached.dictionary.nonEmpty)
+      // the least df of a shard row whose term's merged df is larger:
+      // that row passes df <= t and its merged row does not, so
+      // deciding the predicate on merged rows would lose its hits
+      val t = uncached.postings.select(col("field"), col("term"), col("df").as("rowDf"))
+        .join(uncached.termStats, Seq("field", "term")).where(col("df") > col("rowDf"))
+        .agg(min("rowDf")).head.getLong(0)
+      val (sc, su) = (new Searcher(spark, cached), new Searcher(spark, uncached))
+      for (pred <- Seq(col("term").startsWith("ra"), col("df") <= t, col("shard") === 1L,
+          col("term").startsWith("ra") && col("cf") > 2L)) {
+        val want = su.constantScoreTopK(pred, 300).collect().toSeq
+        assert(want.nonEmpty, pred)
+        assert(sc.constantScoreTopK(pred, 300).collect().toSeq === want, pred)
+      }
+    } finally cached.unpersist()
+  }
+
+  test("the driver-side dictionary: tombstoned copies carry it, unpersist drops it") {
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    val uncached = IndexBuilder.fromCodeDocs(spark, corpus(17L, 150).toDS(),
+      IndexConfig(shardSizeDocs = 32))
+    val cached = uncached.cache()
+    val dict = cached.dictionary.get
+    assert(dict.size === cached.postings.count())
+    assert(sorted(cached.termStats) === sorted(InvertedIndex.termStatsOf(uncached.postings)))
+    val dels = Seq(3L, 40L, 41L, 120L).toDF("docId")
+    val tomb = cached.withDeletes(dels)
+    assert(tomb.dictionary.get eq dict)
+    assert(tomb.undeleteAll().dictionary.get eq dict)
+    // the tombstoned copy answers from the carried dictionary: df stays
+    // stale (corpus-wide) until a physical apply, like the uncached path
+    val terms = Seq("alpha", "beta", "rare1", "zzz_missing")
+    val st = new Searcher(spark, tomb)
+    val (dfs, jobs) = JobCounts.withAqe(spark, "tombstoned docFreqs", aqe = true)(st.docFreqs(terms))
+    assert(jobs.isEmpty)
+    assert(dfs === new Searcher(spark, uncached.withDeletes(dels)).docFreqs(terms))
+    for (q <- Seq(Seq("alpha", "rare1"), Seq("beta", "gamma"))) {
+      val want = ExhaustiveOracle.topK(uncached.withDeletes(dels), q, 10).collect().toSeq
+      val got = st.topK(q, 10).collect().toSeq
+      assert(got.map(_.getLong(0)) === want.map(_.getLong(0)), q)
+    }
+    // a physical apply, cached, builds a fresh dictionary from its
+    // rewritten postings: post-delete df
+    val applied = graft.build.Deletes.applied(spark, tomb).cache()
+    val ad = applied.dictionary.get
+    assert(!(ad eq dict))
+    val appliedStats = sorted(InvertedIndex.termStatsOf(
+      graft.build.Deletes.applied(spark, uncached.withDeletes(dels)).postings))
+    assert(sorted(applied.termStats) === appliedStats)
+    assert(appliedStats !== sorted(cached.termStats))
+    assert(new Searcher(spark, applied).docFreqs(terms) !== dfs)
+    applied.unpersist()
+    assert(applied.dictionary.isEmpty)
+    // unpersist drops the dictionary of the index and of its copies;
+    // queries still answer, from the postings
+    cached.unpersist()
+    assert(cached.dictionary.isEmpty && tomb.dictionary.isEmpty)
+    assert(st.docFreqs(terms) === dfs)
+    assert(sorted(cached.termStats) === sorted(InvertedIndex.termStatsOf(uncached.postings)))
+    // caching again fetches it again
+    val again = cached.cache()
+    assert(again.dictionary.nonEmpty && !(again.dictionary.get eq dict))
+    again.unpersist()
+  }
+
+  test("concurrent first queries on a cached index fetch its dictionary once") {
+    val idx = pinIndex.cache()
+    try {
+      idx.postings.count()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      val (dfs, jobs) = JobCounts(spark, "concurrent first queries") {
+        try {
+          val fs = (0 until 4).map(_ => pool.submit(new java.util.concurrent.Callable[Map[String, Long]] {
+            def call(): Map[String, Long] = new Searcher(spark, idx).docFreqs(Seq("alpha", "rare2"))
+          }))
+          fs.map(_.get())
+        } finally pool.shutdown()
+      }
+      assert(dfs.distinct.size === 1 && dfs.head.size === 2)
+      // the one bounded collect of the dictionary; docFreqs itself runs none
+      assert(jobs.size === 1, jobs)
+    } finally idx.unpersist()
+  }
+
+  test("more than 1,024 shards: the semi-join shard pruning ≡ the exhaustive oracle") {
+    import org.apache.spark.sql.functions.col
+    // one doc per shard; "alpha beta" opens ~9 in 10 docs, so the phrase,
+    // the boolean mix and the term queries all touch over 1,024 shards
+    val n = 1200
+    val docs = corpus(23L, n).zipWithIndex.map { case (d, i) =>
+      d.copy(content = (if (i % 10 == 3) "beta alpha " else "alpha beta ") + d.content)
+    }
+    val uncached = IndexBuilder.fromCodeDocs(spark, docs.toDS(), IndexConfig(shardSizeDocs = 1))
+    val cached = uncached.cache()
+    def ranked(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+    def assertSame(tag: String, got: Seq[(Long, Double)], want: Seq[(Long, Double)]): Unit = {
+      assert(want.nonEmpty, tag)
+      assert(got.map(_._1) === want.map(_._1), tag)
+      got.zip(want).foreach { case ((_, a), (_, b)) =>
+        assert(math.abs(a - b) <= 1e-12 * math.max(1.0, math.abs(b)), tag)
+      }
+    }
+    try {
+      val phraseShards = new Searcher(spark, uncached).postingRows(Seq("alpha", "beta"))
+        .groupBy("shard").count().where(col("count") === 2).count()
+      assert(phraseShards > 1024, s"$phraseShards shards hold both phrase terms")
+      val expansion = uncached.termStats.where(col("field") === "content" &&
+        col("term").startsWith("e")).select("term").collect().map(_.getString(0)).toSeq
+      assert(expansion.toSet === Set("eps", "eta"))
+      val phraseAll = ranked(ExhaustiveOracle.multiPhraseTopK(uncached,
+        Seq(Seq("alpha"), Seq("beta")), n)).toMap
+      val gammaAll = ranked(ExhaustiveOracle.topK(uncached, Seq("gamma"), n)).toMap
+      val mix = phraseAll.toSeq.map { case (d, sc) => (d, sc + gammaAll.getOrElse(d, 0.0)) }
+        .sortBy { case (d, sc) => (-sc, d) }
+      val constant = ranked(ExhaustiveOracle.topK(uncached, expansion, n))
+        .map(_._1).sorted.take(10).map(d => (d, 1.0))
+      for ((name, idx) <- Seq("uncached" -> uncached, "cached" -> cached)) {
+        val s = new Searcher(spark, idx)
+        val topK = s.topK(Seq("alpha", "gamma"), 10)
+        assertSame(s"$name topK", ranked(topK),
+          ranked(ExhaustiveOracle.topK(uncached, Seq("alpha", "gamma"), 10)))
+        assert(topK.queryExecution.executedPlan.toString.contains("LeftSemi"), name)
+        assertSame(s"$name phraseTopK", ranked(s.phraseTopK(Seq("alpha", "beta"), 10)),
+          ranked(ExhaustiveOracle.multiPhraseTopK(uncached, Seq(Seq("alpha"), Seq("beta")), 10)))
+        val got = ranked(s.search("+\"alpha beta\" gamma", n))
+        assertSame(s"$name search mix", got.sortBy { case (d, sc) => (-sc, d) }, mix)
+        assertSame(s"$name prefixTopK", ranked(s.prefixTopK("e", 10)),
+          ranked(ExhaustiveOracle.topK(uncached, expansion, 10)))
+        assertSame(s"$name constantScoreTopK",
+          ranked(s.constantScoreTopK(col("term").startsWith("e"), 10)), constant)
+      }
+    } finally cached.unpersist()
   }
 
   test("cached index ≡ uncached with more shards than partitions and with fewer") {
