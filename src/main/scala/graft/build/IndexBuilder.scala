@@ -234,7 +234,9 @@ object IndexBuilder {
   val TokenizedField = "content"
 
   /** Job description of the jobs a build entry point launches itself:
-    * the source's schema read and the docId assignment. The build's
+    * `fromCodeDocs`' docId assignment, and the source's schema inference
+    * where no footer gave the schema (`fromParquetTable` reads it from
+    * the footers it opens for the docId offsets). The build's
     * tokenize and merge are lazy; they run in the job that first reads
     * the postings (`IndexTables.PostingsPhase` for a write). */
   private[graft] val BuildPhase = "graft build: source + docIds"
@@ -745,10 +747,11 @@ object IndexBuilder {
     // local-FS fallback path: no catalog manifest, so per-file row
     // counts come from the parquet footers; with a real catalog use
     // fromTableSnapshot / fromParquetManifest instead, which skip
-    // footer I/O entirely
-    val fileRows = graft.table.TableFormat.footerRowCounts(java.nio.file.Paths.get(path))
-      .map(f => (f.file, f.rows))
-    fromParquetManifest(spark, path, fileRows, cfg)
+    // footer I/O entirely. The same footers give the source schema, so
+    // the source read runs no schema-inference job
+    val footers = graft.table.TableFormat.footers(spark, java.nio.file.Paths.get(path))
+    fromFiles(spark, path, footers.map(f => (f.lineage.file, f.lineage.rows)),
+      footers.headOption.flatMap(_.schema), cfg)
   }
 
   /** Build from a TableFormat-committed snapshot: the manifest already
@@ -775,8 +778,18 @@ object IndexBuilder {
       path: String,
       fileRows: Seq[(String, Long)],
       cfg: IndexConfig = IndexConfig()): InvertedIndex =
+    fromFiles(spark, path, fileRows, None, cfg)
+
+  /** `fromParquetManifest` with the source schema when the caller
+    * already knows it (None: Spark infers it in a job). */
+  private def fromFiles(
+      spark: SparkSession,
+      path: String,
+      fileRows: Seq[(String, Long)],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      cfg: IndexConfig): InvertedIndex =
     Phases.described(spark, BuildPhase) {
-      build(spark, tableWithIds(spark, path, fileRows, cfg.analyzer),
+      build(spark, tableWithIds(spark, path, fileRows, schema, cfg.analyzer),
         Seq(TokenizedField), Seq("path", "lang"), cfg)
     }
 
@@ -793,11 +806,13 @@ object IndexBuilder {
     * files), the manifest itself should live as a distributed catalog
     * table and the prefix sum run as the two-level distributed pattern
     * (assignDocIds); the Seq-manifest entry points here are for
-    * catalogs that fit on the driver. */
+    * catalogs that fit on the driver. `schema`: the source's schema
+    * when the caller knows it; None lets Spark infer it (a job). */
   private[graft] def tableWithIds(
       spark: SparkSession,
       path: String,
       fileRows: Seq[(String, Long)],
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
       analyzer: graft.analysis.TextAnalyzer = Analyzer): DataFrame = {
     import spark.implicits._
     var off = 0L
@@ -805,7 +820,7 @@ object IndexBuilder {
       val o = (name, off); off += n; o
     }
     val offsetsDf = offsets.toDF("_graft_file", "_graft_base")
-    spark.read.parquet(path)
+    graft.table.TableFormat.readParquet(spark, schema, Seq(path))
       .withColumn("_graft_file", col("_metadata.file_name"))
       .withColumn("_graft_ridx", col("_metadata.row_index"))
       // LEFT join + raise_error, not inner: an inner join would

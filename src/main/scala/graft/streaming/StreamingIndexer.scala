@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.build.{IndexBuilder, IndexConfig, InvertedIndex}
+import graft.model.Phases
 import graft.table.{IndexTables, TableFormat}
 
 /** Incremental index ingestion on Structured Streaming.
@@ -20,7 +21,11 @@ import graft.table.{IndexTables, TableFormat}
   * (a re-delivered batchId finds its manifests committed and
   * skips — same idempotence the resume path uses).
   *
-  * `loadMerged` unions all segments: postings merge by pure block
+  * `loadMerged` reads the newest compaction plus every newer segment:
+  * each table kind of the root (segment docs, segment postings,
+  * delete tables) is ONE parquet scan with the schema taken from the
+  * tables' footers (`TableFormat.readTables`), so the load launches no
+  * Spark job. Postings merge by pure block
   * concatenation when batches carry NON-OVERLAPPING docId ranges
   * (true for monotone id assignment upstream, e.g. an append-only
   * table with increasing ids); interleaved ranges are detected at
@@ -28,6 +33,13 @@ import graft.table.{IndexTables, TableFormat}
   * and handled by decode-sort-re-encode compaction.
   */
 object StreamingIndexer {
+
+  /** Job descriptions of the batch write entry points (`append`,
+    * `delete`, `compact`); `compact`'s table writes run under
+    * `IndexTables`' write phases. */
+  private[graft] val AppendPhase = "graft streaming: append"
+  private[graft] val DeletePhase = "graft streaming: delete"
+  private[graft] val CompactPhase = "graft streaming: compact"
 
   /** Attach the indexer to a streaming DataFrame with columns
     * (idCol: long-castable, textCol: string, untokenized...: string).
@@ -183,7 +195,7 @@ object StreamingIndexer {
       idCol: String,
       textCol: String,
       untokenized: Seq[String] = Nil,
-      cfg: IndexConfig = IndexConfig()): Long = {
+      cfg: IndexConfig = IndexConfig()): Long = Phases.described(spark, AppendPhase) {
     val effCfg = ingestConfigOr(root, cfg)
     val used = segmentTables(root, "docs-b").map(_.stripPrefix("docs-b").toLong) ++
       segmentTables(root, "postings-b").map(_.stripPrefix("postings-b").toLong)
@@ -231,12 +243,13 @@ object StreamingIndexer {
     * absorbed them. Returns the delete sequence number. Sequence
     * allocation assumes the root's single-writer discipline (same as
     * segment/compaction ids). */
-  def delete(spark: SparkSession, root: String, ids: DataFrame): Long = {
-    val seq = deleteSeqs(root).lastOption.getOrElse(-1L) + 1L
-    val norm = ids.select(col(ids.columns.head).cast("long").as("docId"))
-    TableFormat.write(spark, norm, root, s"deletes-d$seq")
-    seq
-  }
+  def delete(spark: SparkSession, root: String, ids: DataFrame): Long =
+    Phases.described(spark, DeletePhase) {
+      val seq = deleteSeqs(root).lastOption.getOrElse(-1L) + 1L
+      val norm = ids.select(col(ids.columns.head).cast("long").as("docId"))
+      TableFormat.write(spark, norm, root, s"deletes-d$seq")
+      seq
+    }
 
   def deleteIds(spark: SparkSession, root: String, ids: Seq[Long]): Long = {
     import spark.implicits._
@@ -284,7 +297,7 @@ object StreamingIndexer {
     * only the newer segments. Superseded segments are reclaimed by
     * `pruneSegments` once the compacted manifests are committed. */
   def compact(spark: SparkSession, root: String,
-      cfg: IndexConfig = IndexConfig()): InvertedIndex = {
+      cfg: IndexConfig = IndexConfig()): InvertedIndex = Phases.described(spark, CompactPhase) {
     // ONE snapshot of the complete-batch set AND the delete-table set
     // drives the merge, the delete application and the compaction
     // name — a second listing could see a batch/delete that committed
@@ -303,8 +316,7 @@ object StreamingIndexer {
     val applied =
       if (pendingDels.isEmpty) merged
       else graft.build.Deletes.appliedWith(spark, merged,
-        pendingDels.map(sq => TableFormat.read(spark, root, s"deletes-d$sq"))
-          .reduce(_ union _))
+        TableFormat.readTables(spark, root, pendingDels.map(sq => s"deletes-d$sq")))
     // output versioned by (newest segment, newest delete) IN THIS
     // SNAPSHOT: re-running on the same sets is an idempotent no-op
     // (manifest-gated); new batches OR new deletes produce a FRESH
@@ -443,8 +455,7 @@ object StreamingIndexer {
     val pending = deleteSeqs(root).filter(_ > baseApplied)
     if (pending.isEmpty) idx
     else idx.withDeletes(
-      pending.map(sq => TableFormat.read(spark, root, s"deletes-d$sq"))
-        .reduce(_ union _))
+      TableFormat.readTables(spark, root, pending.map(sq => s"deletes-d$sq")))
   }
 
   /** Merge a FIXED snapshot of (compaction base, complete batch ids) —
@@ -453,7 +464,13 @@ object StreamingIndexer {
     * merged. Only COMPLETE batches may appear in `batches`: a
     * half-written segment (docs committed, postings crashed) must not
     * contribute its docs — they would double-count once the batch
-    * replays, or be phantom rows with no postings otherwise. */
+    * replays, or be phantom rows with no postings otherwise.
+    *
+    * Each table kind is read as few scans as possible: the base's table
+    * (one scan) and the segments' tables of that kind (one scan per
+    * distinct schema, `TableFormat.readTables`), all with footer
+    * schemas — no schema-inference job, whatever the segment count.
+    * Past 32 segments Spark lists the segments' files in one job. */
   private def mergeSnapshot(
       spark: SparkSession,
       root: String,
@@ -468,12 +485,12 @@ object StreamingIndexer {
     // can have a different column ORDER than raw segment tables (e.g.
     // after a delete-applying rewrite), and a positional union would
     // silently misalign columns instead of failing
-    val docParts = base.map(TableFormat.read(spark, _, "docs")).toSeq ++
-      batches.map(id => TableFormat.read(spark, root, s"docs-b$id"))
-    val docs = docParts.reduce(_ unionByName _)
-    val postParts = base.map(TableFormat.read(spark, _, "postings")).toSeq ++
-      batches.map(id => TableFormat.read(spark, root, s"postings-b$id"))
-    val partials = postParts.reduce(_ unionByName _)
-    InvertedIndex.derived(docs, IndexBuilder.mergeSegmentRows(partials, effCfg), effCfg)
+    def kind(table: String): DataFrame =
+      (base.map(TableFormat.read(spark, _, table)).toSeq ++
+        Option.when(batches.nonEmpty)(
+          TableFormat.readTables(spark, root, batches.map(id => s"$table-b$id"))))
+        .reduce(_ unionByName _)
+    val partials = kind("postings")
+    InvertedIndex.derived(kind("docs"), IndexBuilder.mergeSegmentRows(partials, effCfg), effCfg)
   }
 }

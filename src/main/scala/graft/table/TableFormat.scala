@@ -3,7 +3,10 @@ package graft.table
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.SchemaShim
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-style table layout we own (SURVEY.md §7.0 — no Iceberg
   * runtime ships in this sandbox): immutable Parquet data directories
@@ -74,7 +77,7 @@ object TableFormat {
       .parquet(tmp.toString)
     // lineage: per-file row counts straight from the parquet footers
     // (driver-side metadata reads — no Spark job)
-    val fileRows = footerRowCounts(tmp)
+    val fileRows = footers(spark, tmp).map(_.lineage)
     val total = fileRows.map(_.rows).sum
     Files.move(tmp, dataDir, StandardCopyOption.ATOMIC_MOVE)
     val m = Manifest(table, snap, dataDir.toString, total, fileRows)
@@ -142,28 +145,75 @@ object TableFormat {
     Files.deleteIfExists(p)
   }
 
-  /** Row count per data file from parquet footer metadata, sorted by
-    * file name — read CONCURRENTLY: a serial loop is O(#files) driver
-    * latency appended to every snapshot commit. */
-  private[graft] def footerRowCounts(dir: Path): Seq[FileLineage] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val files = listChildren(dir)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(files.size, 16)))
+  /** Spark's row schema (JSON) in a parquet footer's key-value
+    * metadata: every file Spark writes carries it. */
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** One data file's footer: its lineage (row count) and the Spark row
+    * schema it carries, if any. */
+  private[graft] final case class Footer(lineage: FileLineage, schema: Option[StructType])
+
+  /** Data files of a parquet dir, by name: `.parquet` files that Spark's
+    * listing would not skip as hidden (`_`/`.` prefix). A path that is
+    * not a local directory has none. */
+  private def dataFiles(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else listChildren(dir).filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getFileName.toString)
+
+  /** The one parquet footer reader. `conf` is the SparkContext's shared
+    * Hadoop configuration (building a fresh one costs ~10 ms). The
+    * schema is the one Spark's own inference takes from this footer,
+    * nullable as the file source makes every read schema; None when the
+    * footer lacks Spark's row metadata. */
+  private def readFooter(conf: Configuration, file: Path): Footer = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new org.apache.hadoop.fs.Path(file.toString), conf)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
-      files.map { p =>
-        pool.submit(new java.util.concurrent.Callable[FileLineage] {
-          def call(): FileLineage = {
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new org.apache.hadoop.fs.Path(p.toString), conf)
-            val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try FileLineage(p.getFileName.toString, reader.getRecordCount)
-            finally reader.close()
-          }
-        })
-      }.map(_.get()).sortBy(_.file)
-    } finally pool.shutdown()
+      val meta = Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey))
+      val schema = meta.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption).collect {
+        case s: StructType => SchemaShim.asNullable(s)
+      }
+      Footer(FileLineage(file.getFileName.toString, reader.getRecordCount), schema)
+    } finally reader.close()
+  }
+
+  /** `f` over `items` on up to 16 driver threads, results in order: a
+    * serial loop of footer reads is O(#files) driver latency. */
+  private def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    if (items.size <= 1) items.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(items.size, 16))
+      try items.map { a =>
+        pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(a) })
+      }.map(_.get())
+      finally pool.shutdown()
+    }
+
+  /** Every data file's footer of parquet dir `dir`, sorted by file
+    * name, read concurrently on the driver — no Spark job. */
+  private[graft] def footers(spark: SparkSession, dir: Path): Seq[Footer] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    inParallel(dataFiles(dir))(readFooter(conf, _))
+  }
+
+  /** The schema Spark would infer for parquet dir `dir`, from
+    * ONE data file's footer on the driver (Spark's own inference, with
+    * schema merging off, also reads one file's row metadata — but in a
+    * Spark job). None when the dir holds no parquet file or its footer
+    * carries no Spark row metadata. */
+  private def footerSchema(conf: Configuration, dir: String): Option[StructType] =
+    dataFiles(Paths.get(dir)).headOption.flatMap(readFooter(conf, _).schema)
+
+  /** Parquet data at `dirs`, read as ONE file scan with `schema`, or
+    * with Spark's schema inference (a Spark job) when it is unknown. */
+  private[graft] def readParquet(spark: SparkSession, schema: Option[StructType],
+      dirs: Seq[String]): DataFrame = schema match {
+    case Some(s) => spark.read.schema(s).parquet(dirs: _*)
+    case None => spark.read.parquet(dirs: _*)
   }
 
   private def commitManifest(root: String, m: Manifest): Boolean = {
@@ -233,6 +283,34 @@ object TableFormat {
     next
   }
 
+  /** Committed `table` of `root`. Its schema comes from one data
+    * file's footer (Spark's row metadata), so the read launches no
+    * Spark job; a table whose footer lacks that metadata, or that holds
+    * no parquet file, falls back to Spark's schema inference — its job,
+    * result and errors. */
   def read(spark: SparkSession, root: String, table: String): DataFrame =
-    spark.read.parquet(readManifest(root, table).dataPath)
+    readTables(spark, root, Seq(table))
+
+  /** Committed `tables` of ONE root as one DataFrame: the tables'
+    * footers are read concurrently on the driver, tables with the same
+    * exact schema are read as ONE file scan, and those groups (in the
+    * order of their first table) are combined by `unionByName` — so
+    * groups whose columns differ only in order still line up, and
+    * groups with different column sets fail here as a union of
+    * per-table reads would. A table with no footer schema is read on
+    * its own, with inference. Past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) dirs
+    * in one scan, Spark lists their files in one Spark job. */
+  private[graft] def readTables(spark: SparkSession, root: String,
+      tables: Seq[String]): DataFrame = {
+    require(tables.nonEmpty, s"no tables to read under $root")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dirs = tables.map(readManifest(root, _).dataPath)
+    val schemas = inParallel(dirs)(footerSchema(conf, _))
+    val byDir = dirs.zip(schemas)
+    schemas.distinct.flatMap {
+      case None => byDir.collect { case (d, None) => readParquet(spark, None, Seq(d)) }
+      case s => Seq(readParquet(spark, s, byDir.collect { case (d, `s`) => d }))
+    }.reduce(_ unionByName _)
+  }
 }

@@ -97,7 +97,7 @@ class PersistenceSpec extends AnyFunSuite {
     assert(!children().exists(_.startsWith("_tmp_")), children())
   }
 
-  test("build + write: the job count and the one single-task job are pinned") {
+  test("build + write: the job count is pinned and no job is a lone schema read") {
     val source = Files.createTempDirectory("graft_pin_src").resolve("t").toString
     graft.tools.CodeCorpus.generate(spark, 1000L, 10, 7L, 4).write.parquet(source)
     val dir = Files.createTempDirectory("graft_pin").toString
@@ -109,22 +109,81 @@ class PersistenceSpec extends AnyFunSuite {
     val report = jobs.map(j => s"[${j.description}] " +
       j.stages.map { case (n, t) => s"$n×$t" }.mkString(" + ")).mkString("; ")
     assert(TableFormat.readManifest(dir, "docs").rowCount === 1000)
-    // measured 6; 9 while the write also committed a termStats table
-    assert(stagesRun.size <= 6, report)
-    // the source's schema read is the only job whose stages all run one
-    // task (the termStats table added two: a schema read of the written
-    // postings, and its own write, coalesced by AQE to one task)
-    val singleTask = stagesRun.filter(st => st.nonEmpty && st.forall(_._2 == 1))
-    assert(singleTask.size === 1, report)
-    assert(singleTask.head.forall(_._1.startsWith("parquet at IndexBuilder.scala")), report)
+    // measured 5; 6 while the source's schema was inferred in a job,
+    // 9 while the write also committed a termStats table
+    assert(stagesRun.size <= 5, report)
+    // the source schema comes from the footers the build opens for its
+    // docId offsets: no job whose stages all run one task (the schema
+    // read was one, and the termStats table added two)
+    assert(!stagesRun.exists(st => st.nonEmpty && st.forall(_._2 == 1)), report)
     // every job names its phase, AQE's stage jobs included (their call
-    // site is AQE's own): the build's source read, the docs write with
-    // its stats, and the postings write that runs tokenize and merge
+    // site is AQE's own): the docs write with its stats, and the
+    // postings write that runs tokenize and merge; the build itself
+    // launches none
     assert(jobs.map(_.description).toSet ===
-      Set(IndexBuilder.BuildPhase, IndexTables.DocsPhase, IndexTables.PostingsPhase), report)
-    assert(jobs.filter(_.description == IndexBuilder.BuildPhase).map(_.stages) ===
-      Seq(singleTask.head), report)
+      Set(IndexTables.DocsPhase, IndexTables.PostingsPhase), report)
     info(report)
+  }
+
+  test("footer schemas equal Spark's inferred schemas for every table graft writes") {
+    import graft.streaming.StreamingIndexer
+    def dataDir(root: String, table: String) = TableFormat.readManifest(root, table).dataPath
+    def footerSchema(dir: String) =
+      TableFormat.footers(spark, Paths.get(dir)).headOption.flatMap(_.schema)
+    def same(dir: String): Unit =
+      assert(footerSchema(dir) === Some(spark.read.parquet(dir).schema), dir)
+    // a Spark-written source table and the build's tables
+    val source = Files.createTempDirectory("graft_schema_src").resolve("t").toString
+    graft.tools.CodeCorpus.generate(spark, 200L, 10, 3L, 2).write.parquet(source)
+    same(source)
+    val built = Files.createTempDirectory("graft_schema_build").toString
+    IndexTables.write(spark, IndexBuilder.fromParquetTable(spark, source,
+      IndexConfig(shardSizeDocs = 64)), built)
+    Seq("docs", "postings").foreach(t => same(dataDir(built, t)))
+    // segments, delete tables, and compactions with and without a
+    // delete-applying rewrite
+    val root = Files.createTempDirectory("graft_schema_seg").toString
+    val cfg = IndexConfig(shardSizeDocs = 32)
+    def docs(r: Range) = r.map(i => (i.toLong, s"merge sort id$i")).toDF("doc_id", "text")
+    StreamingIndexer.append(spark, root, docs(0 until 30), "doc_id", "text", cfg = cfg)
+    StreamingIndexer.append(spark, root, docs(30 until 60), "doc_id", "text", cfg = cfg)
+    Seq("docs-b0", "postings-b0", "docs-b1", "postings-b1").foreach(t => same(dataDir(root, t)))
+    StreamingIndexer.compact(spark, root, cfg)
+    val plain = s"$root/${StreamingIndexer.latestCompactionInfo(root).get.dir}"
+    StreamingIndexer.deleteIds(spark, root, Seq(4L, 44L))
+    same(dataDir(root, "deletes-d0"))
+    StreamingIndexer.compact(spark, root, cfg)
+    val rewritten = s"$root/${StreamingIndexer.latestCompactionInfo(root).get.dir}"
+    assert(rewritten != plain)
+    for (c <- Seq(plain, rewritten); t <- Seq("docs", "postings")) same(dataDir(c, t))
+
+    // a parquet file without Spark's row metadata reads through the
+    // inference fallback (its one job) with the inferred schema
+    val other = Files.createTempDirectory("graft_schema_plain").toString
+    TableFormat.write(spark, docs(0 until 3), other, "plain")
+    val plainDir = dataDir(other, "plain")
+    TableFormat.listChildren(Paths.get(plainDir)).foreach(Files.delete)
+    val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 doc_id; optional binary text (STRING); }")
+    val out = org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$plainDir/part-0.parquet"), spark.sparkContext.hadoopConfiguration)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(out).withType(msg).build()
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
+    try (0 until 3).foreach(i => w.write(groups.newGroup().append("doc_id", i.toLong).append("text", s"t$i")))
+    finally w.close()
+    assert(footerSchema(plainDir).isEmpty)
+    val (read, jobs) = JobCounts(spark, "fallback")(TableFormat.read(spark, other, "plain"))
+    assert(jobs.size === 1)
+    assert(read.schema === spark.read.parquet(plainDir).schema)
+    assert(read.schema.fieldNames.toSeq === Seq("doc_id", "text"))
+    assert(read.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ===
+      (0 until 3).map(i => (i.toLong, s"t$i")))
+    // a Spark-written table of the same columns reads with no job, and
+    // the two read together as a union of both
+    TableFormat.write(spark, docs(3 until 5), other, "spark")
+    val (_, sparkJobs) = JobCounts(spark, "footer")(TableFormat.read(spark, other, "spark"))
+    assert(sparkJobs.isEmpty)
+    assert(TableFormat.readTables(spark, other, Seq("plain", "spark")).count() === 5)
   }
 
   test("lineage: manifest row counts match data") {

@@ -469,6 +469,119 @@ class StreamingSpec extends AnyFunSuite {
       .map(_.getLong(0)).toSet === Set(7L, 12L))
   }
 
+  /** File scans of `df`'s physical plan (planned, not run). */
+  private def fileScans(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.size
+
+  test("loadMerged reads each table kind of the root as one scan, with footer schemas: no Spark job") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_scan").toString
+    val cfg = IndexConfig(shardSizeDocs = 32)
+    for (b <- 0 until 5)
+      StreamingIndexer.append(spark, root,
+        (b * 20L until b * 20L + 20L).map(mkDoc).toDF("doc_id", "text"), "doc_id", "text", cfg = cfg)
+    for (ids <- Seq(Seq(3L), Seq(25L, 26L), Seq(99L))) StreamingIndexer.deleteIds(spark, root, ids)
+    val (merged, jobs) = JobCounts(spark, "loadMerged")(StreamingIndexer.loadMerged(spark, root, cfg))
+    assert(jobs.isEmpty, jobs)
+    assert(fileScans(merged.postings) === 1)
+    assert(fileScans(merged.docs) === 1)
+    assert(fileScans(merged.deletes.get) === 1)
+    val live = (0L until 100L).filterNot(Set(3L, 25L, 26L, 99L))
+    val fresh = IndexBuilder.fromText(spark, live.map(mkDoc).toDF("doc_id", "text"),
+      "doc_id", "text", Nil, cfg)
+    def top(idx: graft.build.InvertedIndex) = new Searcher(spark, idx)
+      .search("merge gamma3 id25 id42", 200).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // stats stay stale until compaction (tombstones only hide hits), so
+    // compare ids here and scores after the compaction applies them
+    assert(top(merged).map(_._1).toSet === top(fresh).map(_._1).toSet)
+
+    // with a compaction base: the base's tables are one more scan
+    StreamingIndexer.compact(spark, root, cfg)
+    StreamingIndexer.append(spark, root, (100L until 120L).map(mkDoc).toDF("doc_id", "text"),
+      "doc_id", "text", cfg = cfg)
+    StreamingIndexer.append(spark, root, (120L until 140L).map(mkDoc).toDF("doc_id", "text"),
+      "doc_id", "text", cfg = cfg)
+    val (based, baseJobs) = JobCounts(spark, "loadMerged base")(StreamingIndexer.loadMerged(spark, root, cfg))
+    assert(baseJobs.isEmpty, baseJobs)
+    assert(fileScans(based.postings) === 2)
+    val compacted = StreamingIndexer.compact(spark, root, cfg)
+    val fresh2 = IndexBuilder.fromText(spark, (live ++ (100L until 140L)).map(mkDoc)
+      .toDF("doc_id", "text"), "doc_id", "text", Nil, cfg)
+    assert(top(compacted) === top(fresh2))
+    assert(top(based).map(_._1).toSet === top(fresh2).map(_._1).toSet)
+  }
+
+  test("a root of more segments than the listing threshold answers as a fresh build of its live docs") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_many").toString
+    val cfg = IndexConfig(shardSizeDocs = 16)
+    val segments = 34
+    assert(segments > spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    for (b <- 0 until segments) {
+      val idx = IndexBuilder.fromText(spark,
+        (b * 3L until b * 3L + 3L).map(mkDoc).toDF("doc_id", "text"), "doc_id", "text", Nil, cfg)
+      graft.table.TableFormat.write(spark, idx.docs, root, s"docs-b$b", b + 1L)
+      graft.table.TableFormat.write(spark, idx.postings, root, s"postings-b$b", b + 1L)
+    }
+    StreamingIndexer.deleteIds(spark, root, Seq(4L, 50L))
+    StreamingIndexer.deleteIds(spark, root, Seq(77L))
+    val merged = StreamingIndexer.loadMerged(spark, root, cfg)
+    assert(StreamingIndexer.completeBatches(root).size === segments)
+    assert(fileScans(merged.postings) === 1 && fileScans(merged.docs) === 1)
+    // compaction applies the deletes physically, so its scores equal a
+    // fresh build's; the merged view's hits are the same documents
+    val live = (0L until segments * 3L).filterNot(Set(4L, 50L, 77L))
+    val fresh = IndexBuilder.fromText(spark, live.map(mkDoc).toDF("doc_id", "text"),
+      "doc_id", "text", Nil, cfg)
+    def top(idx: graft.build.InvertedIndex, q: String) = new Searcher(spark, idx)
+      .search(q, 200).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val compacted = StreamingIndexer.compact(spark, root, cfg)
+    for (q <- Seq("merge gamma3", "id50 id51 spark", "+alpha -gamma2")) {
+      assert(top(merged, q).map(_._1).toSet === top(fresh, q).map(_._1).toSet, q)
+      assert(top(compacted, q) === top(fresh, q), q)
+    }
+    // without tombstones the merged view's scores equal a fresh build's
+    val undeleted = IndexBuilder.fromText(spark, (0L until segments * 3L).map(mkDoc)
+      .toDF("doc_id", "text"), "doc_id", "text", Nil, cfg)
+    assert(top(merged.undeleteAll(), "merge gamma3") === top(undeleted, "merge gamma3"))
+  }
+
+  test("a segment whose docs carry an extra column still fails at loadMerged") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_cols").toString
+    val cfg = IndexConfig(shardSizeDocs = 32)
+    StreamingIndexer.append(spark, root, (0L until 10L).map(mkDoc).toDF("doc_id", "text"),
+      "doc_id", "text", cfg = cfg)
+    StreamingIndexer.append(spark, root,
+      (10L until 20L).map(i => (i, s"merge id$i", "scala")).toDF("doc_id", "text", "lang"),
+      "doc_id", "text", Seq("lang"), cfg)
+    // the segments' docs read as two scans (one per schema), and their
+    // union fails as the union of one read per segment did
+    val e = intercept[org.apache.spark.sql.catalyst.ExtendedAnalysisException](
+      StreamingIndexer.loadMerged(spark, root, cfg))
+    assert(e.getMessage.contains("NUM_COLUMNS_MISMATCH"), e.getMessage)
+  }
+
+  test("every job of an append + delete + compact cycle carries a graft description") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_desc").toString
+    val cfg = IndexConfig(shardSizeDocs = 32)
+    StreamingIndexer.append(spark, root, (0L until 30L).map(mkDoc).toDF("doc_id", "text"),
+      "doc_id", "text", cfg = cfg)
+    val (_, jobs) = JobCounts(spark, "cycle") {
+      StreamingIndexer.append(spark, root, (30L until 60L).map(mkDoc).toDF("doc_id", "text"),
+        "doc_id", "text", cfg = cfg)
+      StreamingIndexer.deleteIds(spark, root, Seq(7L, 40L))
+      StreamingIndexer.compact(spark, root, cfg)
+    }
+    val descs = jobs.map(_.description)
+    assert(descs.toSet === Set(StreamingIndexer.AppendPhase, StreamingIndexer.DeletePhase,
+      StreamingIndexer.CompactPhase, graft.table.IndexTables.DocsPhase,
+      graft.table.IndexTables.PostingsPhase), descs)
+  }
+
   test("streaming minhash near-dup edges: bucket owners, star edges, cross-batch state") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
